@@ -128,19 +128,18 @@ final class GraftEventStoreProvider(
   /** A store that has never been written to is a valid empty store —
     * the reference returns an empty result stream, not an error, so a
     * fresh deployment can query before the first event lands. In
-    * snapshot mode the read resolves the live manifest; an un-sealed
-    * or still-schemaless store falls back to the same typed empty
-    * frame as a missing legacy directory. */
+    * snapshot mode the read resolves the live manifest with one
+    * listing, reusing the session's memoized scan while the manifest
+    * is unchanged ([[SnapshotEventStore.read]]); an un-sealed or
+    * still-schemaless store falls back to the same typed empty frame
+    * as a missing legacy directory. */
   private def readOrEmpty(path: String, schema: StructType): DataFrame = {
     def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       schema.add("dt", StringType).add("hour", IntegerType))
-    if (snapshotMode) {
-      if (SnapshotEventStore.currentSnapshot(spark, path).isEmpty) empty
-      else {
-        val df = SnapshotEventStore.read(spark, path)
-        if (df.columns.isEmpty) empty else df
-      }
-    } else {
+    if (snapshotMode)
+      SnapshotEventStore.readIfSealed(spark, path)
+        .filter(_.columns.nonEmpty).getOrElse(empty)
+    else {
       val p = new Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) EventStore.read(spark, path)

@@ -370,10 +370,12 @@ object EventStore {
   /** Drop the whole store — the reference's `clear()` /
     * `clearAdmin()` (FirehoseEventStoreProvider.java:103, 115).
     * Metadata-only (directory delete, no scan); the path itself is
-    * removed, and the next write recreates it. */
+    * removed, and the next write recreates it. A snapshot store's
+    * memoized scans go with it ([[SnapshotEventStore.read]]). */
   def clearAll(spark: SparkSession, path: String): Unit = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root)) fs.delete(root, true)
+    SnapshotEventStore.forget(path)
   }
 }

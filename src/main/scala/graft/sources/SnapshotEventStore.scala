@@ -1,7 +1,12 @@
 package graft.sources
 
+import java.lang.ref.SoftReference
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Snapshot-isolated face of the dt/hour event store — the LAST
@@ -22,8 +27,17 @@ import org.apache.spark.sql.functions._
   * Iceberg/Delta manifest discipline over the same physical layout:
   *
   *  - a MANIFEST (`_graft_snapshots/snap_<N>`, one store-relative
-  *    file path per line) is the table: readers resolve max N once
-  *    and scan exactly those files, never a directory listing;
+  *    file path per line) is the table: readers resolve max N from
+  *    one listing of `_graft_snapshots` and scan exactly those files,
+  *    never a directory listing;
+  *  - the resolved scan is MEMOIZED per session and store, keyed by
+  *    the live manifest's identity (N, file name, length, modification
+  *    time): a reader whose live manifest is unchanged reuses the
+  *    scan instead of re-reading the manifest and having Spark
+  *    re-list its files (the Structured Streaming file-sink reader's
+  *    discipline: resolve the metadata log, do not list). Any publish
+  *    or [[EventStore.clearAll]] invalidates the entry; memory is one
+  *    file list per session and store ([[read]]);
   *  - every write verb lands files INVISIBLY first (a dot-prefixed
   *    temp root, then per-file rename into the live partition dirs —
   *    new unique names, nothing overwritten), and publishes a new
@@ -98,27 +112,44 @@ object SnapshotEventStore {
   private def leaseKey(path: String): String =
     "evsnap__" + path.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
 
+  /** A published manifest as the `_graft_snapshots` listing shows it:
+    * snapshot `n` and the file that holds it — the full form when both
+    * exist, as [[manifestLines]] prefers. A published manifest is never
+    * rewritten, so equal (n, name, length, modification time) means an
+    * equal file list; a store dropped and rebuilt that republishes the
+    * same `n` writes a new file. */
+  private final case class Manifest(n: Long, name: String, len: Long,
+      mtime: Long)
+
+  /** Every snapshot on disk (full checkpoints AND deltas), one per
+    * number, sorted — ONE `listStatus`, no existence probe. */
+  private def manifests(spark: SparkSession, path: String): Seq[Manifest] = {
+    val d = snapDir(path)
+    val listed =
+      try fsOf(spark, d).listStatus(d).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    // staged `.snap_<N>.tmp` names match neither prefix
+    listed.flatMap { s =>
+      val name = s.getPath.getName
+      val num =
+        if (name.startsWith(SnapPrefix)) Some(name.drop(SnapPrefix.length))
+        else if (name.startsWith(DeltaPrefix)) Some(name.drop(DeltaPrefix.length))
+        else None
+      num.flatMap(x => scala.util.Try(x.toLong).toOption)
+        .map(Manifest(_, name, s.getLen, s.getModificationTime))
+    }.groupMapReduce(_.n)(identity) { (a, b) =>
+      if (a.name.startsWith(SnapPrefix)) a else b
+    }.values.toSeq.sortBy(_.n)
+  }
+
   /** Snapshot numbers on disk (full checkpoints AND deltas), sorted. */
   private def snapshotNumbers(spark: SparkSession,
-      path: String): Seq[Long] = {
-    val d = snapDir(path)
-    val fs = fsOf(spark, d)
-    if (!fs.exists(d)) return Seq.empty
-    fs.listStatus(d).toSeq.map(_.getPath.getName)
-      .filter(n => !n.endsWith(".tmp"))
-      .flatMap { n =>
-        val num =
-          if (n.startsWith(SnapPrefix)) Some(n.drop(SnapPrefix.length))
-          else if (n.startsWith(DeltaPrefix)) Some(n.drop(DeltaPrefix.length))
-          else None
-        num.flatMap(s => scala.util.Try(s.toLong).toOption)
-      }
-      .distinct.sorted
-  }
+      path: String): Seq[Long] =
+    manifests(spark, path).map(_.n)
 
   /** Live snapshot number, if the store has been sealed. */
   def currentSnapshot(spark: SparkSession, path: String): Option[Long] =
-    snapshotNumbers(spark, path).lastOption
+    manifests(spark, path).lastOption.map(_.n)
 
   private def rawLines(spark: SparkSession, p: Path): Seq[String] = {
     val fs = fsOf(spark, p)
@@ -266,14 +297,13 @@ object SnapshotEventStore {
     * on a just-swept store must not throw) — and so every NON-empty
     * read resolves one declared schema instead of sampling a file
     * (see [[read]]'s evolved-store contract). */
-  private def schemaTag(spark: SparkSession, path: String,
-      n: Long): Option[String] =
-    headerLines(spark, path, n).find(_.startsWith("#schema="))
-      .map(_.drop("#schema=".length))
+  private def schemaTag(lines: Seq[String]): Option[String] =
+    lines.find(_.startsWith("#schema=")).map(_.drop("#schema=".length))
 
   private def schemaTagOf(spark: SparkSession,
       path: String): Option[String] =
-    currentSnapshot(spark, path).flatMap(n => schemaTag(spark, path, n))
+    currentSnapshot(spark, path).flatMap(n =>
+      schemaTag(headerLines(spark, path, n)))
 
   private def parseSchema(
       json: String): Option[org.apache.spark.sql.types.StructType] =
@@ -338,9 +368,11 @@ object SnapshotEventStore {
       }
   }
 
+  /** The empty frame of a snapshot whose `#schema=` header is `header`
+    * — the resolved snapshot's own, never a re-read of the live one. */
   private def typedEmpty(spark: SparkSession,
-      path: String): DataFrame =
-    schemaTagOf(spark, path).flatMap(parseSchema)
+      header: Option[String]): DataFrame =
+    header.flatMap(parseSchema)
       .map(s => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
       .getOrElse(spark.emptyDataFrame)
@@ -493,10 +525,82 @@ object SnapshotEventStore {
       .parquet(rels.map(f => s"$path/$f"): _*)
   }
 
-  /** Snapshot-isolated read: resolve the live manifest once, scan
-    * exactly its files under the carried schema ([[scanFiles]]).
-    * `basePath` keeps dt/hour as partition columns, so time
-    * predicates prune partitions exactly as on the raw store.
+  /** One memoized scan: the manifest it was resolved from and the
+    * relation Spark built over that manifest's files. The relation
+    * refers back to its session, so it is held softly — a strong
+    * reference would pin the weakly-keyed session forever; the JVM
+    * drops a soft one only under memory pressure, and a dropped one
+    * is a miss. */
+  private final case class Resolved(manifest: Manifest,
+      scan: SoftReference[HadoopFsRelation])
+
+  /** Per session (weakly keyed), per store path: the one scan last
+    * resolved. See [[read]] for the contract. */
+  private val resolved =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Resolved]]()
+
+  private def resolvedIn(
+      spark: SparkSession): ConcurrentHashMap[String, Resolved] =
+    resolved.synchronized {
+      resolved.computeIfAbsent(spark,
+        _ => new ConcurrentHashMap[String, Resolved]())
+    }
+
+  /** Drop `path`'s memoized scan in every session —
+    * [[EventStore.clearAll]] deleted the store, and a rebuilt one
+    * starts its snapshot numbers over. */
+  private[sources] def forget(path: String): Unit =
+    resolved.synchronized(resolved.values.forEach(_.remove(path)))
+
+  /** Snapshot `m`'s scan. A hit — this session last resolved exactly
+    * `m` for this store — is a fresh plan over the memoized relation:
+    * no manifest read, no file listing, and new attribute ids, so two
+    * reads stay two relations in a join. A miss reads the manifest
+    * once (file list and `#schema=` header together), scans its files
+    * ([[scanFiles]]; Spark lists them), and makes that relation the
+    * store's entry. An empty snapshot is its own header's typed empty
+    * frame and clears the entry. */
+  private def scanOf(spark: SparkSession, path: String,
+      m: Manifest): DataFrame = {
+    val byStore = resolvedIn(spark)
+    Option(byStore.get(path)).filter(_.manifest == m)
+      .flatMap(r => Option(r.scan.get)) match {
+      case Some(rel) => spark.baseRelationToDataFrame(rel)
+      case None =>
+        val lines = manifestLines(spark, path, m.n)
+        val header = schemaTag(lines)
+        val files = lines.filterNot(_.startsWith("#"))
+        if (files.isEmpty) {
+          byStore.remove(path)
+          typedEmpty(spark, header)
+        } else {
+          val df = scanFiles(spark, path, files, header)
+          df.queryExecution.analyzed.collectFirst {
+            case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+          }.foreach(r => byStore.put(path, Resolved(m, new SoftReference(r))))
+          df
+        }
+    }
+  }
+
+  /** Snapshot-isolated read: resolve the live manifest, scan exactly
+    * its files under the carried schema ([[scanFiles]]). `basePath`
+    * keeps dt/hour as partition columns, so time predicates prune
+    * partitions exactly as on the raw store.
+    *
+    * MEMOIZED per (session, store, live manifest): a reader makes one
+    * `_graft_snapshots` listing, and when the live manifest's identity
+    * (number, file name, length, modification time) is the one this
+    * session resolved last, it reuses that scan — no manifest read
+    * and none of Spark's file listing, which on a store past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files is
+    * a Spark job. Safe because a published manifest never changes and
+    * the files it names are never overwritten, nor retired while it
+    * is live. Every write verb publishes a new manifest, so the next
+    * read misses and re-resolves; [[EventStore.clearAll]] drops the
+    * store's entries, and a rebuilt store's manifests are new files
+    * either way. Memory: one file list per session and store.
+    *
     * Readers hold no lease, so a concurrent retire can delete a
     * DELTA chain's ancestor mid-resolve (the flat format's single
     * never-deleted live file had no such window) — the resolve
@@ -507,19 +611,21 @@ object SnapshotEventStore {
     * lazily, so a retire that deletes this snapshot's replaced files
     * AFTER read() returns still fails the in-flight scan (which is
     * why every retiring caller keeps the default one-cycle
-    * `keepSnapshots = 1` reader grace). */
-  def read(spark: SparkSession, path: String): DataFrame = {
+    * `keepSnapshots = 1` reader grace). A memoized scan changes
+    * nothing here: it is only served while its snapshot is live. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    readIfSealed(spark, path).getOrElse(throw new IllegalStateException(
+      s"no snapshot published for event store '$path' — seal it " +
+        "once with SnapshotEventStore.init"))
+
+  /** [[read]], or None when the store has no published snapshot —
+    * one listing answers both, so a caller that serves an un-sealed
+    * store as empty need not list first. */
+  def readIfSealed(spark: SparkSession, path: String): Option[DataFrame] = {
     var attempt = 0
     while (true) {
-      val n = currentSnapshot(spark, path).getOrElse(throw
-        new IllegalStateException(
-          s"no snapshot published for event store '$path' — seal it " +
-            "once with SnapshotEventStore.init"))
-      try {
-        val files = manifestFiles(spark, path, n)
-        return if (files.isEmpty) typedEmpty(spark, path)
-        else scanFiles(spark, path, files, schemaTag(spark, path, n))
-      } catch {
+      try return manifests(spark, path).lastOption.map(scanOf(spark, path, _))
+      catch {
         case e: java.io.FileNotFoundException =>
           attempt += 1
           if (attempt > 5) throw e
@@ -538,25 +644,22 @@ object SnapshotEventStore {
     * snapshot (the [[VersionedTable.readVersion]] contract at store
     * level). The schema is the SNAPSHOT'S OWN header — a column
     * appended after snapshot `n` does not appear in its time-travel
-    * read. Readers hold no lease, so a retire can race the resolve;
-    * both the upfront probe and the manifest read itself translate
-    * that to the loud retired message instead of a raw
+    * read, and an empty snapshot is typed by its own header. Memoized
+    * like [[read]], in the same single entry per session and store.
+    * Readers hold no lease, so a retire can race the resolve; both
+    * the upfront listing and the manifest read itself translate that
+    * to the loud retired message instead of a raw
     * FileNotFoundException. */
   def readSnapshot(spark: SparkSession, path: String,
       n: Long): DataFrame = {
     def retired() = throw new IllegalArgumentException(
       s"snapshot $n of store '$path' is retired or never existed — " +
         s"live snapshot is ${currentSnapshot(spark, path)}")
-    val fs = fsOf(spark, snapDir(path))
-    if (!fs.exists(fullPath(path, n)) && !fs.exists(deltaPath(path, n)))
-      retired()
+    val m = manifests(spark, path).find(_.n == n).getOrElse(retired())
     // the FileNotFound catch also covers a racing retire deleting a
     // DELTA chain's ancestor mid-resolve
-    val (files, header) =
-      try (manifestFiles(spark, path, n), schemaTag(spark, path, n))
-      catch { case _: java.io.FileNotFoundException => retired() }
-    if (files.isEmpty) typedEmpty(spark, path)
-    else scanFiles(spark, path, files, header)
+    try scanOf(spark, path, m)
+    catch { case _: java.io.FileNotFoundException => retired() }
   }
 
   /** Reclaim ORPHANS: data files in the live partition directories

@@ -1,17 +1,38 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.GraftEventStoreProvider
-import graft.model.EventAdapter
+import graft.model.{EventAdapter, KeycloakEvent}
 import graft.sources.Tables
 
 /** The provider facade: the reference EventStoreProvider journey —
   * log events, query them back, expire old ones — through one object. */
 class ProviderSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** A snapshot-mode provider over a fresh base, and its event store. */
+  private def snapshotProvider(
+      prefix: String): (GraftEventStoreProvider, String) = {
+    val f = graft.api.GraftEventStoreProviderFactory.fromConfig(Map(
+      "enabled" -> "true",
+      "basePath" -> Files.createTempDirectory(prefix).toString,
+      "storeMode" -> "snapshot"))
+    (f.create(spark), f.settings.eventsPath)
+  }
+
+  /** One LOGIN per hour for `hours` hours from 2024-01-01, ids
+    * `idBase` onwards. */
+  private def hourly(hours: Int, idBase: Int): Seq[KeycloakEvent] =
+    (0 until hours).map(h => KeycloakEvent(s"e${idBase + h}", "LOGIN", "r",
+      "realm", "client", s"u$h", "s", "10.0.0.1", None,
+      1704067200000L + h * 3600000L, "{}"))
 
   test("log → query → retention round trip (user + admin)") {
     import spark.implicits._
@@ -263,5 +284,67 @@ class ProviderSpec extends AnyFunSuite {
       spark.conf.unset("spark.graft.eventStore.enabled")
       spark.conf.unset("spark.graft.eventStore.basePath")
     }
+  }
+
+  test("storeMode=snapshot: clear() and a fresh append republish the same snapshot, never the old files") {
+    import spark.implicits._
+    val (p, store) = snapshotProvider("graft_snap_clear_")
+    def ids() = p.createQuery().toDF.select("id").as[String].collect().toSet
+    p.onEvents(hourly(6, 100).toDS())
+    val n = graft.sources.SnapshotEventStore.currentSnapshot(spark, store)
+    assert(ids() == hourly(6, 100).map(_.id).toSet)
+    p.clear()
+    // same hours, same-width ids: the rebuilt store's manifest has
+    // the cleared one's number
+    p.onEvents(hourly(6, 200).toDS())
+    assert(graft.sources.SnapshotEventStore
+      .currentSnapshot(spark, store) == n)
+    assert(ids() == hourly(6, 200).map(_.id).toSet,
+      "a cleared store's scan was served after the rebuild")
+  }
+
+  test("storeMode=snapshot: a warm query runs only its own jobs, no file listing") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val (p, _) = snapshotProvider("graft_snap_warm_")
+    // one file per hour, past the file count from which Spark lists a
+    // scan's files with a job
+    val threshold = spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    p.onEvents(hourly(threshold + 8, 0).toDS().coalesce(1))
+
+    val started = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add((e.properties.getProperty("spark.jobGroup.id"),
+          Option(e.properties.getProperty("spark.job.description"))
+            .getOrElse("")))
+    }
+    /** Descriptions of the jobs `body` ran under job group `group`. A
+      * marker job run after it is delivered to the listener after
+      * every event `body` posted. */
+    def jobsOf(group: String)(body: => Unit): Seq[String] = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!started.asScala.exists(_._1 == s"$group-marker") &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20L)
+      started.asScala.filter(_._1 == group).map(_._2).toSeq
+    }
+    def listing(d: String) = d.startsWith("Listing leaf files")
+
+    sc.addSparkListener(listener)
+    try {
+      val cold = jobsOf("graft-provider-cold")(p.createQuery().toDF.collect())
+      val warm = jobsOf("graft-provider-warm")(p.createQuery().toDF.collect())
+      assert(cold.exists(listing),
+        s"the first query after a publish lists the store's files: $cold")
+      assert(warm.nonEmpty && !warm.exists(listing),
+        s"a warm query re-listed the store: $warm")
+      assert(warm.size == cold.count(d => !listing(d)),
+        s"a warm query must run exactly the query's own jobs: $cold vs $warm")
+    } finally sc.removeSparkListener(listener)
   }
 }

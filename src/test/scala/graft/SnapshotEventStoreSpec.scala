@@ -2,8 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.sources.SnapshotEventStore
@@ -34,6 +40,12 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
       }
     }.toDF("id", "eventtype", "realmid", "userid", "time")
   }
+
+  /** The relation a snapshot read scans. */
+  private def relationOf(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation]
+    }.get
 
   private def freshDir(): String = {
     val dir = Files.createTempDirectory("graft_snap_").toString
@@ -503,5 +515,133 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
     assert(back.filter(col("extra").isNotNull).count() == 8L,
       "pre-seal rows must keep their adopted-column values")
     assert(back.count() == 10L)
+  }
+
+  test("memoized read: an unchanged store serves one relation and identical rows") {
+    val dir = freshDir()
+    SnapshotEventStore.init(spark, dir)
+    SnapshotEventStore.append(events(4, 10), dir)
+    val a = SnapshotEventStore.read(spark, dir)
+    val b = SnapshotEventStore.read(spark, dir)
+    assert(relationOf(b) eq relationOf(a),
+      "a second read of an unchanged store re-resolved its scan")
+    def rows(df: DataFrame) = df.orderBy("id").collect().toSeq
+    assert(rows(a).size == 40 && rows(b) == rows(a))
+    // a time-travel read of the live snapshot shares the entry
+    val live = SnapshotEventStore.currentSnapshot(spark, dir).get
+    assert(relationOf(SnapshotEventStore.readSnapshot(spark, dir, live))
+      eq relationOf(a))
+  }
+
+  test("memoized read: append, compact, clearExpired and clearRealm are each seen by the next read") {
+    val dir = freshDir()
+    SnapshotEventStore.init(spark, dir)
+    SnapshotEventStore.append(events(4, 9), dir)
+    def seen(expect: Long)(verb: => Any): Unit = {
+      val before = relationOf(SnapshotEventStore.read(spark, dir))
+      verb
+      val after = SnapshotEventStore.read(spark, dir)
+      assert(relationOf(after) ne before, "a write verb's publish was not seen")
+      assert(after.count() == expect)
+    }
+    seen(72L)(SnapshotEventStore.append(events(4, 9, idOffset = 1000L), dir))
+    seen(72L)(SnapshotEventStore.compact(spark, dir, maxFilesPerPartition = 1))
+    // hour 0 leaves: 2 appends × 9 rows
+    seen(54L)(SnapshotEventStore.clearExpired(spark, dir, Base + 3600000L))
+    // realm-1 is 3 of every hour's 9 rows
+    seen(36L)(SnapshotEventStore.clearRealm(spark, dir, "realm-1"))
+  }
+
+  test("memoized read: a store deleted and rebuilt under the same snapshot number is re-resolved") {
+    val dir = freshDir()
+    def build(idOffset: Long): Long = {
+      SnapshotEventStore.init(spark, dir)
+      SnapshotEventStore.append(events(4, 10, idOffset), dir)
+      SnapshotEventStore.currentSnapshot(spark, dir).get
+    }
+    def ids() = SnapshotEventStore.read(spark, dir).select("id").collect()
+      .map(_.getString(0).toLong).toSet
+    val n = build(1000L)
+    assert(ids() == (1000L until 1040L).toSet)
+    // a raw delete bypasses EventStore.clearAll, so nothing drops the
+    // entry: the rebuilt manifest has the old one's number and length
+    // (same partitions, same-width ids) but is a new file. Sleeping
+    // past a coarse filesystem clock keeps its modification time new.
+    Thread.sleep(1100L)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(root, true)
+    assert(build(2000L) == n)
+    assert(ids() == (2000L until 2040L).toSet,
+      "a rebuilt store served the deleted store's scan")
+  }
+
+  test("memoized read: a new session resolves its own scan") {
+    val dir = freshDir()
+    SnapshotEventStore.init(spark, dir)
+    SnapshotEventStore.append(events(2, 5), dir)
+    val mine = relationOf(SnapshotEventStore.read(spark, dir))
+    val other: SparkSession = spark.newSession()
+    val theirs = relationOf(SnapshotEventStore.read(other, dir))
+    assert(theirs ne mine)
+    assert(theirs.sparkSession eq other)
+    assert(relationOf(SnapshotEventStore.read(other, dir)) eq theirs)
+    assert(relationOf(SnapshotEventStore.read(spark, dir)) eq mine,
+      "one session's entry must not evict another's")
+  }
+
+  test("memoized read: two reads of one store join on id unambiguously") {
+    val dir = freshDir()
+    SnapshotEventStore.init(spark, dir)
+    SnapshotEventStore.append(events(2, 10), dir)
+    val reads = Seq.fill(3)(SnapshotEventStore.read(spark, dir))
+    def ids(df: DataFrame) = df.queryExecution.analyzed.output.map(_.exprId).toSet
+    reads.combinations(2).foreach { case Seq(a, b) =>
+      assert((ids(a) & ids(b)).isEmpty, "two reads share attribute ids")
+      assert(a.join(b, a("id") === b("id")).count() == 20L)
+    }
+  }
+
+  test("memoized read: concurrent readers racing an append see the old snapshot or the new one") {
+    val dir = freshDir()
+    SnapshotEventStore.init(spark, dir)
+    SnapshotEventStore.append(events(4, 10), dir)
+    assert(SnapshotEventStore.read(spark, dir).count() == 40L)
+    val seen = new ConcurrentLinkedQueue[Long]()
+    @volatile var appended = false
+    // each reader keeps reading until the append has published, then
+    // reads once more
+    def reader(): Unit = {
+      var last = false
+      while (!last) {
+        last = appended
+        seen.add(SnapshotEventStore.read(spark, dir).count())
+      }
+    }
+    graft.Par.run(() => reader(), () => reader(), () => reader(), () => {
+      SnapshotEventStore.append(events(4, 10, idOffset = 1000L), dir)
+      appended = true
+    })
+    val counts = seen.asScala.toSeq
+    assert(counts.forall(Set(40L, 80L)), s"a reader saw an unpublished state: $counts")
+    assert(counts.count(_ == 80L) >= 3, s"every reader's last read sees the append: $counts")
+  }
+
+  test("readSnapshot of an empty snapshot is typed by that snapshot's own header") {
+    val dir = freshDir()
+    SnapshotEventStore.init(spark, dir)
+    SnapshotEventStore.append(events(1, 4), dir, keepSnapshots = 5)
+    // sweep everything: an empty snapshot that still carries the schema
+    SnapshotEventStore.clearExpired(spark, dir, Base + 3600000L,
+      keepSnapshots = 5)
+    val empty = SnapshotEventStore.currentSnapshot(spark, dir).get
+    SnapshotEventStore.append(events(1, 4, idOffset = 100L)
+      .withColumn("extra", lit("x")), dir, keepSnapshots = 5)
+    assert(SnapshotEventStore.read(spark, dir).columns.contains("extra"))
+    val back = SnapshotEventStore.readSnapshot(spark, dir, empty)
+    assert(back.count() == 0L)
+    assert(back.columns.toSeq ==
+      Seq("id", "eventtype", "realmid", "userid", "time", "dt", "hour"),
+      s"the empty snapshot took the live schema: ${back.columns.mkString(",")}")
   }
 }
