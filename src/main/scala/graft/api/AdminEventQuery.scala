@@ -77,7 +77,7 @@ final class AdminEventQuery private (
       resourcePathValue.map(col("resourcepath") === _),
       fromTime.map(col("time") >= _),
       toTime.map(col("time") <= _),
-      // over an EventStore-backed frame the time range also implies
+      // over a dt/hour-partitioned store the time range also implies
       // dt/hour partition bounds → planning-time directory pruning
       PartitionPruning.timeRangePredicate(events, fromTime, toTime)
     ).flatten

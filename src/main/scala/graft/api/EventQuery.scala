@@ -77,7 +77,7 @@ final class EventQuery private (
       ip.map(col("ipaddress") === _),
       fromTime.map(col("time") >= _),
       toTime.map(col("time") <= _),
-      // over an EventStore-backed frame the time range also implies
+      // over a dt/hour-partitioned store the time range also implies
       // dt/hour partition bounds → planning-time directory pruning
       PartitionPruning.timeRangePredicate(events, fromTime, toTime)
     ).flatten
@@ -106,7 +106,7 @@ final class EventQuery private (
 
 object EventQuery {
   /** @param events a KeycloakEvent-shaped DataFrame (e.g.
-    *   EventAdapter.keycloakEvents or EventStore.read). */
+    *   EventAdapter.keycloakEvents or SnapshotEventStore.read). */
   def apply(events: DataFrame): EventQuery =
     new EventQuery(events, Vector.empty, None, None, None, None, None,
       None, None, None, asc = false)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 
-import graft.api.GraftEventStoreProviderFactory.StoreMode
 import graft.model.{KeycloakAdminEvent, KeycloakEvent}
 import graft.sources.{EventStore, SnapshotEventStore}
 import graft.streaming.StreamingIngest
@@ -23,94 +22,73 @@ import graft.streaming.StreamingIngest
   * | clear/clearAdmin/clearExpired (:102-121 | clearExpired (real,       |
   * |   — declared no-ops, S3 lifecycle)     |   partition-pruned)        |
   *
-  * Batch `onEvents` appends directly to the partitioned store;
-  * `startIngest` attaches the Structured-Streaming path for a
-  * continuous JSON-lines source (the Firehose analog).
+  * Both stores are [[SnapshotEventStore]]s: reads resolve immutable
+  * snapshots, maintenance never deletes what a pinned reader can see,
+  * streaming ingest is exactly-once (the batch id commits atomically
+  * with the manifest), and retention/realm purges are snapshot
+  * isolated. The reference gets this class of isolation from
+  * Glue/Athena metadata (terraform/main.tf:84-96).
   *
-  * `storeMode` selects the store DISCIPLINE every verb runs on
-  * (config key `storeMode`, FirehoseEventStoreProviderFactory.java's
-  * config-driven store wiring re-expressed):
+  * Batch `onEvents` appends directly to the store; `startIngest`
+  * attaches the Structured-Streaming path for a continuous JSON-lines
+  * source (the Firehose analog).
   *
-  *   - [[StoreMode.Legacy]] — the dt/hour directory store; maintenance
-  *     is [[EventStore]]'s swap-in (crash-safe for the writer; a
-  *     reader racing a sweep can observe the rename window);
-  *   - [[StoreMode.Snapshot]] — [[SnapshotEventStore]]'s manifests:
-  *     reads resolve immutable snapshots, maintenance never deletes
-  *     what a pinned reader can see, streaming ingest is exactly-once
-  *     (the batch id commits atomically with the manifest), and
-  *     retention/realm purges are the same verbs snapshot-isolated.
-  *     The reference gets this class of isolation from Glue/Athena
-  *     metadata (terraform/main.tf:84-96); here it is one config key.
-  *
-  * The two disciplines are mutually exclusive per path and the legacy
-  * verbs REFUSE on a sealed store (EventStore.requireNotSealed), so a
-  * mis-configured provider fails loudly instead of corrupting
-  * manifests.
+  * Opening a provider ADOPTS a plain dt/hour directory written before
+  * the store had manifests: a store that is un-sealed and holds
+  * partition directories is sealed once with [[SnapshotEventStore
+  * .init]], which first finishes interrupted directory swaps. A
+  * sealed or empty store is left as it is.
   */
 final class GraftEventStoreProvider(
     spark: SparkSession,
     eventsPath: String,
-    adminEventsPath: String,
-    storeMode: StoreMode = StoreMode.Legacy) {
-  import spark.implicits._
+    adminEventsPath: String) {
 
-  private def snapshotMode: Boolean = storeMode == StoreMode.Snapshot
-
-  /** Snapshot-mode append: seal the store on first write (a fresh
-    * path inits to an empty snapshot), then land through the manifest
-    * discipline. */
-  private def appendSnapshot(df: DataFrame, path: String): Unit = {
-    if (SnapshotEventStore.currentSnapshot(spark, path).isEmpty)
-      SnapshotEventStore.init(spark, path)
-    SnapshotEventStore.append(df, path)
+  Seq(eventsPath, adminEventsPath).foreach { path =>
+    def holdsPartitions = {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      try fs.listStatus(root).exists(s =>
+        s.isDirectory && s.getPath.getName.startsWith("dt="))
+      catch { case _: java.io.FileNotFoundException => false }
+    }
+    if (SnapshotEventStore.currentSnapshot(spark, path).isEmpty &&
+      holdsPartitions) SnapshotEventStore.init(spark, path)
   }
 
   /** Append a batch of user events (typed). */
   def onEvents(events: Dataset[KeycloakEvent]): Unit =
-    if (snapshotMode) appendSnapshot(events.toDF(), eventsPath)
-    else EventStore.write(events.toDF(), eventsPath)
+    SnapshotEventStore.append(events.toDF(), eventsPath)
 
   /** Append a batch of admin events (typed). */
   def onAdminEvents(events: Dataset[KeycloakAdminEvent]): Unit =
-    if (snapshotMode) appendSnapshot(events.toDF(), adminEventsPath)
-    else EventStore.write(events.toDF(), adminEventsPath)
+    SnapshotEventStore.append(events.toDF(), adminEventsPath)
 
   /** Attach a streaming JSON-lines source (reference wire format) to
-    * the user-event store. Snapshot mode upgrades the sink to the
-    * exactly-once manifest commit ([[StreamingIngest
-    * .toSnapshotEventStore]]); legacy mode is the plain partitioned
-    * parquet sink. */
+    * the user-event store through the exactly-once manifest commit
+    * ([[StreamingIngest.toSnapshotEventStore]]). */
   def startIngest(jsonLines: Dataset[String], checkpoint: String): StreamingQuery =
-    if (snapshotMode)
-      StreamingIngest.toSnapshotEventStore(
-        StreamingIngest.fromJsonLines(jsonLines), eventsPath, checkpoint)
-    else StreamingIngest.toPartitionedSink(
+    StreamingIngest.toSnapshotEventStore(
       StreamingIngest.fromJsonLines(jsonLines), eventsPath, checkpoint)
 
   /** Drain the source's current backlog into the store, then stop
     * (Trigger.AvailableNow) — the scheduled-ingest deployment mode.
     * Caller awaits termination. */
   def drainBacklog(jsonLines: Dataset[String], checkpoint: String): StreamingQuery =
-    if (snapshotMode)
-      StreamingIngest.toSnapshotEventStore(
-        StreamingIngest.fromJsonLines(jsonLines), eventsPath, checkpoint,
-        availableNow = true)
-    else StreamingIngest.drainAvailableNow(
-      StreamingIngest.fromJsonLines(jsonLines), eventsPath, checkpoint)
+    StreamingIngest.toSnapshotEventStore(
+      StreamingIngest.fromJsonLines(jsonLines), eventsPath, checkpoint,
+      availableNow = true)
 
-  /** Attach the source with ID-KEYED redelivery safety. Legacy mode
-    * UPSERTS by event id (replayed ids replace their earlier copies);
-    * snapshot mode anti-joins each micro-batch against the live
-    * snapshot before the exactly-once append
-    * ([[StreamingIngest.toSnapshotUpsertSink]]) — the batch watermark
-    * alone covers only Spark's own replays, not a source retrying an
-    * id in a later batch or a pipeline restarted after checkpoint
-    * loss, which are exactly the cases this mode exists for. */
+  /** Attach the source with ID-KEYED redelivery safety: each
+    * micro-batch is anti-joined against the live snapshot before the
+    * exactly-once append ([[StreamingIngest.toSnapshotUpsertSink]]),
+    * so an id lands once and keeps its first payload. The batch
+    * watermark alone covers only Spark's own replays, not a source
+    * retrying an id in a later batch or a pipeline restarted after
+    * checkpoint loss, which are exactly the cases this mode exists
+    * for. */
   def startIngestUpsert(jsonLines: Dataset[String], checkpoint: String): StreamingQuery =
-    if (snapshotMode)
-      StreamingIngest.toSnapshotUpsertSink(
-        StreamingIngest.fromJsonLines(jsonLines), eventsPath, checkpoint)
-    else StreamingIngest.toUpsertSink(
+    StreamingIngest.toSnapshotUpsertSink(
       StreamingIngest.fromJsonLines(jsonLines), eventsPath, checkpoint)
 
   /** Fluent user-event query over the store (EventQuery semantics of
@@ -127,76 +105,51 @@ final class GraftEventStoreProvider(
 
   /** A store that has never been written to is a valid empty store —
     * the reference returns an empty result stream, not an error, so a
-    * fresh deployment can query before the first event lands. In
-    * snapshot mode the read resolves the live manifest with one
-    * listing, reusing the session's memoized scan while the manifest
-    * is unchanged ([[SnapshotEventStore.read]]); an un-sealed or
-    * still-schemaless store falls back to the same typed empty frame
-    * as a missing legacy directory. */
-  private def readOrEmpty(path: String, schema: StructType): DataFrame = {
-    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      schema.add("dt", StringType).add("hour", IntegerType))
-    if (snapshotMode)
-      SnapshotEventStore.readIfSealed(spark, path)
-        .filter(_.columns.nonEmpty).getOrElse(empty)
-    else {
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) EventStore.read(spark, path)
-      else empty
-    }
-  }
+    * fresh deployment can query before the first event lands. The
+    * read resolves the live manifest with one listing, reusing the
+    * session's memoized scan while the manifest is unchanged
+    * ([[SnapshotEventStore.read]]); an un-sealed or still-schemaless
+    * store reads as the typed empty frame. */
+  private def readOrEmpty(path: String, schema: StructType): DataFrame =
+    SnapshotEventStore.readIfSealed(spark, path)
+      .filter(_.columns.nonEmpty)
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        schema.add("dt", StringType).add("hour", IntegerType)))
 
-  /** Mode-routed retention sweep: a store with nothing to sweep (or
-    * never written) returns 0 in both modes. */
-  private def routeClearExpired(path: String, olderThanMs: Long): Int =
-    if (snapshotMode) {
-      if (SnapshotEventStore.currentSnapshot(spark, path).isEmpty) 0
-      else SnapshotEventStore.clearExpired(spark, path, olderThanMs)
-    } else EventStore.clearExpired(spark, path, olderThanMs)
-
-  private def routeClearRealm(path: String, realmId: String,
-      olderThanMs: Option[Long]): Int =
-    if (snapshotMode) {
-      if (SnapshotEventStore.currentSnapshot(spark, path).isEmpty) 0
-      else SnapshotEventStore.clearRealm(spark, path, realmId, olderThanMs)
-    } else EventStore.clearRealm(spark, path, realmId, olderThanMs)
+  /** A maintenance verb on one store: a never-written store has
+    * nothing to maintain and returns 0. */
+  private def ifSealed(path: String)(verb: (SparkSession, String) => Int): Int =
+    if (SnapshotEventStore.currentSnapshot(spark, path).isEmpty) 0
+    else verb(spark, path)
 
   /** Delete user events older than the cutoff (epoch ms). The
     * reference declares this a no-op and delegates to S3 lifecycle
     * (FirehoseEventStoreProvider.java:102-121); a standalone engine
-    * owns it: partition-pruned directory drops + one boundary-hour
-    * rewrite (legacy) or the metadata-only manifest sweep (snapshot).
-    * Returns whole partitions dropped. */
+    * owns it: whole hours leave the manifest metadata-only and one
+    * boundary hour is rewritten. Returns whole partitions dropped. */
   def clearExpired(olderThanMs: Long): Int =
-    routeClearExpired(eventsPath, olderThanMs)
+    ifSealed(eventsPath)(SnapshotEventStore.clearExpired(_, _, olderThanMs))
 
   /** Delete admin events older than the cutoff (epoch ms). */
   def clearExpiredAdmin(olderThanMs: Long): Int =
-    routeClearExpired(adminEventsPath, olderThanMs)
+    ifSealed(adminEventsPath)(
+      SnapshotEventStore.clearExpired(_, _, olderThanMs))
 
   /** Compact fragmented hour partitions of the user-event store —
     * streaming micro-batches land one file per trigger per task, the
-    * small-file problem at scale. Routed by mode (the snapshot verb
-    * leaves replaced files one reader-grace cycle; legacy swaps
-    * directories). Returns partitions compacted. */
+    * small-file problem at scale. Replaced files stay on disk for one
+    * reader-grace cycle. Returns partitions compacted. */
   def compactEvents(maxFilesPerPartition: Int = 4): Int =
-    if (snapshotMode) {
-      if (SnapshotEventStore.currentSnapshot(spark, eventsPath).isEmpty) 0
-      else SnapshotEventStore.compact(spark, eventsPath, maxFilesPerPartition)
-    } else EventStore.compact(spark, eventsPath, maxFilesPerPartition)
+    ifSealed(eventsPath)(
+      SnapshotEventStore.compact(_, _, maxFilesPerPartition))
 
   /** Compact the admin-event store. */
   def compactAdminEvents(maxFilesPerPartition: Int = 4): Int =
-    if (snapshotMode) {
-      if (SnapshotEventStore.currentSnapshot(spark, adminEventsPath).isEmpty) 0
-      else SnapshotEventStore.compact(spark, adminEventsPath, maxFilesPerPartition)
-    } else EventStore.compact(spark, adminEventsPath, maxFilesPerPartition)
+    ifSealed(adminEventsPath)(
+      SnapshotEventStore.compact(_, _, maxFilesPerPartition))
 
   /** Drop the whole user-event store — `clear()`
-    * (FirehoseEventStoreProvider.java:103). Legal in BOTH modes: it
-    * drops the manifests with the data (a whole-store reset, not a
-    * half-discipline mutation). */
+    * (FirehoseEventStoreProvider.java:103), manifests with the data. */
   def clear(): Unit = EventStore.clearAll(spark, eventsPath)
 
   /** Delete every user event of one realm — `clear(realm)`
@@ -204,12 +157,13 @@ final class GraftEventStoreProvider(
     * rewrite (realmid is not a partition column); returns partitions
     * touched. */
   def clear(realmId: String): Int =
-    routeClearRealm(eventsPath, realmId, None)
+    ifSealed(eventsPath)(SnapshotEventStore.clearRealm(_, _, realmId))
 
   /** Delete one realm's user events with time < olderThanMs —
     * `clear(realm, olderThan)` (FirehoseEventStoreProvider.java:109). */
   def clear(realmId: String, olderThanMs: Long): Int =
-    routeClearRealm(eventsPath, realmId, Some(olderThanMs))
+    ifSealed(eventsPath)(
+      SnapshotEventStore.clearRealm(_, _, realmId, Some(olderThanMs)))
 
   /** Drop the whole admin-event store — `clearAdmin()`
     * (FirehoseEventStoreProvider.java:115). */
@@ -218,11 +172,13 @@ final class GraftEventStoreProvider(
   /** Delete every admin event of one realm — `clearAdmin(realm)`
     * (FirehoseEventStoreProvider.java:118). */
   def clearAdmin(realmId: String): Int =
-    routeClearRealm(adminEventsPath, realmId, None)
+    ifSealed(adminEventsPath)(
+      SnapshotEventStore.clearRealm(_, _, realmId))
 
   /** Delete one realm's admin events with time < olderThanMs —
     * `clearAdmin(realm, olderThan)`
     * (FirehoseEventStoreProvider.java:121). */
   def clearAdmin(realmId: String, olderThanMs: Long): Int =
-    routeClearRealm(adminEventsPath, realmId, Some(olderThanMs))
+    ifSealed(adminEventsPath)(
+      SnapshotEventStore.clearRealm(_, _, realmId, Some(olderThanMs)))
 }

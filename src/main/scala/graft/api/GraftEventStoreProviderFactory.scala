@@ -14,7 +14,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Where the reference resolves AWS client endpoints, this resolves
   * store paths and the ingest mode; retention — a no-op delegated to
   * S3 lifecycle in the reference — is a first-class keyed setting
-  * here because a standalone engine owns its own sweep.
+  * here because a standalone engine owns its own sweep. Keys it does
+  * not know are ignored, `storeMode` among them: every provider runs
+  * on [[graft.sources.SnapshotEventStore]].
   */
 object GraftEventStoreProviderFactory {
 
@@ -23,27 +25,14 @@ object GraftEventStoreProviderFactory {
   /** How [[ingest]] attaches a JSON-lines source to the store. */
   sealed trait IngestMode
   object IngestMode {
-    /** Continuous append (at-least-once; duplicates possible on
-      * checkpoint loss). */
+    /** Continuous append (exactly-once per checkpoint; duplicates
+      * possible on checkpoint loss). */
     case object Append extends IngestMode
-    /** Continuous upsert by event id (safe under redelivery). */
+    /** Continuous upsert by event id (safe under redelivery;
+      * insert-if-absent: a replayed id keeps its first payload). */
     case object Upsert extends IngestMode
     /** Drain the current backlog then stop (scheduled-batch mode). */
     case object Drain extends IngestMode
-  }
-
-  /** Which store discipline the provider's verbs run on. */
-  sealed trait StoreMode
-  object StoreMode {
-    /** The dt/hour directory store with [[graft.sources.EventStore]]'s
-      * swap-in maintenance — readers racing a sweep can observe the
-      * rename window (disclosed). */
-    case object Legacy extends StoreMode
-    /** The snapshot-isolated manifest store
-      * ([[graft.sources.SnapshotEventStore]]): every read resolves an
-      * immutable snapshot, maintenance never deletes what a pinned
-      * reader can see, and streaming ingest is exactly-once. */
-    case object Snapshot extends StoreMode
   }
 
   /** Resolved configuration (all defaults applied). */
@@ -52,8 +41,7 @@ object GraftEventStoreProviderFactory {
       eventsPath: String,
       adminEventsPath: String,
       retentionMs: Option[Long],
-      ingestMode: IngestMode,
-      storeMode: StoreMode = StoreMode.Legacy)
+      ingestMode: IngestMode)
 
   private val DefaultBasePath = "/tmp/graft-event-store"
 
@@ -88,13 +76,6 @@ object GraftEventStoreProviderFactory {
         case Some(other) =>
           System.err.println(s"[graft] unknown ingestMode '$other', using append")
           IngestMode.Append
-      },
-      storeMode = get(config, "storeMode").map(_.toLowerCase) match {
-        case Some("snapshot") => StoreMode.Snapshot
-        case Some("legacy") | None => StoreMode.Legacy
-        case Some(other) =>
-          System.err.println(s"[graft] unknown storeMode '$other', using legacy")
-          StoreMode.Legacy
       })
     new GraftEventStoreProviderFactory(settings)
   }
@@ -120,7 +101,7 @@ final class GraftEventStoreProviderFactory private (
     if (!isSupported) throw new IllegalStateException(
       s"$ProviderId is disabled; set enabled=true to opt in")
     new GraftEventStoreProvider(spark, settings.eventsPath,
-      settings.adminEventsPath, settings.storeMode)
+      settings.adminEventsPath)
   }
 
   /** Attach a JSON-lines source using the CONFIGURED ingest mode. */

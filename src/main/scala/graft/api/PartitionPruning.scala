@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Derives dt/hour PARTITION predicates from an epoch-ms time range.
   *
-  * A `time >= f` row filter over an EventStore-backed frame pushes to
+  * A `time >= f` row filter over a store-backed frame pushes to
   * parquet as a row-group filter, but Spark cannot infer from it that
   * whole dt/hour directories are out of range — the scan still lists
   * and opens every partition. The reference got directory-level
@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * The derived predicates are implied by the row predicate (every row
   * in a pruned partition violates `time >= f` / `time <= t`), so
   * adding them never changes results. Calendar math is UTC epoch
-  * arithmetic, matching EventStore.withPartitionColumns; dt compares
-  * lexicographically (yyyy-MM-dd is order-isomorphic).
+  * arithmetic, matching [[graft.sources.EventStore
+  * .withPartitionColumns]]; dt compares lexicographically
+  * (yyyy-MM-dd is order-isomorphic).
   */
 object PartitionPruning {
 

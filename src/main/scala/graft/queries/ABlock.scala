@@ -131,8 +131,8 @@ object ABlock {
 
     // A8: retention sweep — what survives clearExpiredEvents(olderThan)
     // (declared no-op in FirehoseEventStoreProvider.java:102-121; we
-    // implement it for real in EventStore, spec-covered; this query
-    // verifies the survivor predicate).
+    // implement it for real in SnapshotEventStore.clearExpired,
+    // spec-covered; this query verifies the survivor predicate).
     "a8_retention_sweep" -> ((s, d) =>
       ke(s, d)
         .filter(col("time") >= T1)
@@ -163,40 +163,54 @@ object ABlock {
 
     // A12: the PHYSICAL compaction path — events land fragmented (two
     // appends → ≥2 files per hour partition), compact() rewrites every
-    // oversized partition to one file, and the oracle pins that the
-    // compacted store still answers the per-partition counts exactly.
+    // oversized partition to one file and publishes a snapshot without
+    // the replaced files (still on disk under reader grace), and the
+    // oracle pins that the compacted store still answers the
+    // per-partition counts exactly.
     // The store holds the [T0, T1) two-day slice: the capability is
     // partition-grain, so ~48 hour-partitions prove it at 1/15th the
     // one-time write cost of the full month (the write happens once
     // per sf dir; the READ is the measured operation).
     "a12_compacted_read" -> ((s, d) => {
-      val store = "/tmp/graft_a12_store_" + storeKey(s, d)
+      val store = "/tmp/graft_a12s_store_" + storeKey(s, d)
       cachedStore(s, store) { st =>
         val slice = ke(s, d).filter(col("time") >= T0 && col("time") < T1)
-        graft.sources.EventStore.write(slice.filter(col("time") % 2 === 0), st)
-        graft.sources.EventStore.write(slice.filter(col("time") % 2 =!= 0), st)
-        graft.sources.EventStore.compact(s, st, maxFilesPerPartition = 1)
+        graft.sources.SnapshotEventStore.init(s, st)
+        graft.sources.SnapshotEventStore.append(
+          slice.filter(col("time") % 2 === 0), st)
+        graft.sources.SnapshotEventStore.append(
+          slice.filter(col("time") % 2 =!= 0), st)
+        graft.sources.SnapshotEventStore.compact(s, st,
+          maxFilesPerPartition = 1)
       }
-      graft.sources.EventStore.read(s, store)
+      graft.sources.SnapshotEventStore.read(s, store)
         .groupBy(col("dt").cast("string").as("dt"), col("hour").cast("int").as("hour"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("dt"), col("hour"))
     }),
 
-    // A14: the PHYSICAL schema-evolution path — old partitions written
-    // before a column existed, new partitions carry it; a mergeSchema
-    // read reconciles, surfacing null for pre-evolution rows. The
-    // oracle derives the same split from the mid-slice boundary.
+    // A14: the PHYSICAL schema-evolution path across ADOPTION — the
+    // first half lands as a plain dt/hour directory written before the
+    // store had manifests, opening a provider over it adopts it (the
+    // seal derives the `#schema=` header from the files' footers),
+    // and the second half carries a new column through the snapshot
+    // append. The read resolves the merged carried schema, surfacing
+    // null for pre-evolution rows. The oracle derives the same split
+    // from the mid-slice boundary.
     "a14_evolved_read" -> ((s, d) => {
-      val store = "/tmp/graft_a14_store_" + storeKey(s, d)
+      val store = "/tmp/graft_a14s_store_" + storeKey(s, d)
       cachedStore(s, store) { st =>
         val slice = ke(s, d).filter(col("time") >= T0 && col("time") < T1)
-        graft.sources.EventStore.write(slice.filter(col("time") < TMid), st)
-        graft.sources.EventStore.write(
+        graft.sources.EventStore.withPartitionColumns(
+          slice.filter(col("time") < TMid))
+          .write.partitionBy("dt", "hour").parquet(s"$st/events")
+        new graft.api.GraftEventStoreProvider(s, s"$st/events",
+          s"$st/admin-events")
+        graft.sources.SnapshotEventStore.append(
           slice.filter(col("time") >= TMid)
-            .withColumn("channel", upper(col("eventtype"))), st)
+            .withColumn("channel", upper(col("eventtype"))), s"$st/events")
       }
-      graft.sources.EventStore.read(s, store, mergeSchema = true)
+      graft.sources.SnapshotEventStore.read(s, s"$store/events")
         .groupBy(col("eventtype"))
         .agg(count(lit(1)).as("n"),
           count(col("channel")).as("n_evolved"))
@@ -208,7 +222,7 @@ object ABlock {
     // carries it, and the snapshot read resolves the MERGED carried
     // schema (the `#schema=` header every publish forwards) instead
     // of sampling a file: pre-evolution rows surface null exactly as
-    // the legacy mergeSchema read, proven by A14's oracle verbatim.
+    // over an adopted store, proven by A14's oracle verbatim.
     "a14b_evolved_snapshot_read" -> ((s, d) => {
       val store = "/tmp/graft_a14b_store_" + storeKey(s, d)
       cachedStore(s, store) { st =>
@@ -247,12 +261,13 @@ object ABlock {
 
     // A11 promoted into the gate: the provider facade END-TO-END over
     // a physical store — config map → factory (enable gate) → provider
-    // → typed onEvents append → createQuery builder → toDF. The oracle
-    // replays the same filters over the raw events; ProviderSpec
-    // covers the config/gate/ingest-mode matrix.
+    // → typed onEvents append (which seals the fresh store and
+    // publishes) → createQuery builder over the live snapshot → toDF.
+    // The oracle replays the same filters over the raw events;
+    // ProviderSpec covers the config/gate/ingest-mode matrix.
     "a11_provider_roundtrip" -> ((s, d) => {
       import s.implicits._
-      val base = "/tmp/graft_a11_store_" + storeKey(s, d)
+      val base = "/tmp/graft_a11s_store_" + storeKey(s, d)
       cachedStore(s, base) { st =>
         graft.api.GraftEventStoreProviderFactory.fromConfig(
           Map("enabled" -> "true", "basePath" -> st)).create(s)
@@ -273,22 +288,18 @@ object ABlock {
           col("time"))
     }),
 
-    // A19: the provider facade in SNAPSHOT mode — a11's exact
+    // A19: the provider facade under MAINTENANCE — a11's exact
     // end-to-end path (config map → factory → provider → typed
-    // onEvents → createQuery → toDF) with ONE config key flipped
-    // (`storeMode=snapshot`), so every verb rides the manifest
-    // discipline: the append seals + publishes, the query resolves
-    // the live snapshot, and a maintenance COMPACTION runs between
-    // write and read to prove the query result is manifest-defined
-    // (the replaced fragmented files are still on disk under reader
-    // grace — a directory read would double-count). Oracle: a11's
-    // SQL verbatim — the one-string-proves-two-disciplines rule.
+    // onEvents → createQuery → toDF) over two fragmenting appends,
+    // with a COMPACTION between write and read to prove the query
+    // result is manifest-defined (the replaced fragmented files are
+    // still on disk under reader grace — a directory read would
+    // double-count). Oracle: a11's SQL verbatim.
     "a19_provider_snapshot" -> ((s, d) => {
       import s.implicits._
       val base = "/tmp/graft_a19_store_" + storeKey(s, d)
       def cfg(bp: String) = graft.api.GraftEventStoreProviderFactory
-        .fromConfig(Map("enabled" -> "true", "basePath" -> bp,
-          "storeMode" -> "snapshot"))
+        .fromConfig(Map("enabled" -> "true", "basePath" -> bp))
       cachedStore(s, base) { st =>
         val p = cfg(st).create(s)
         val slice = ke(s, d).filter(col("time") >= T0 && col("time") < T1)
@@ -312,19 +323,20 @@ object ABlock {
     // (FirehoseEventStoreProvider.java:106-109, no-ops there). The
     // two-day slice lands realmid-clustered, clearRealm rewrites ONLY
     // the partitions containing matching rows (realmid is not a
-    // partition column), and the oracle pins the exact survivor set:
-    // realm-1 keeps nothing before TMid, every other realm keeps all.
-    // Idempotent on the cached store: a second call finds no matching
-    // rows and touches nothing.
+    // partition column) keeping the clustering, and the oracle pins
+    // the exact survivor set: realm-1 keeps nothing before TMid, every
+    // other realm keeps all. Idempotent on the cached store: a second
+    // call finds no matching rows and publishes nothing.
     "a16_realm_clear" -> ((s, d) => {
-      val store = "/tmp/graft_a16_store_" + storeKey(s, d)
+      val store = "/tmp/graft_a16s_store_" + storeKey(s, d)
       cachedStore(s, store) { st =>
-        graft.sources.EventStore.write(
+        graft.sources.SnapshotEventStore.append(
           ke(s, d).filter(col("time") >= T0 && col("time") < T1), st,
           sortWithin = Seq("realmid"))
       }
-      graft.sources.EventStore.clearRealm(s, store, "realm-1", Some(TMid))
-      graft.sources.EventStore.read(s, store)
+      graft.sources.SnapshotEventStore.clearRealm(s, store, "realm-1",
+        Some(TMid), sortWithin = Seq("realmid"))
+      graft.sources.SnapshotEventStore.read(s, store)
         .groupBy(col("realmid"))
         .agg(count(lit(1)).as("n"), min(col("time")).as("min_time"))
         .orderBy(col("realmid"))
@@ -380,18 +392,18 @@ object ABlock {
     }),
 
     // A13: the PHYSICAL pruned read — events land in a real dt/hour
-    // partitioned store, then the builder's time range derives
+    // partitioned snapshot store, then the builder's time range derives
     // partition predicates (PartitionPruning) so the scan lists only
     // in-range directories (the [TMid, T1] probe prunes the slice's
     // first half at planning time). The oracle is the plain time
     // filter: pruning must be invisible in the results.
     "a13_pruned_read" -> ((s, d) => {
-      val store = "/tmp/graft_a13_store_" + storeKey(s, d)
+      val store = "/tmp/graft_a13s_store_" + storeKey(s, d)
       cachedStore(s, store) { st =>
-        graft.sources.EventStore.write(
+        graft.sources.SnapshotEventStore.append(
           ke(s, d).filter(col("time") >= T0 && col("time") < T1), st)
       }
-      EventQuery(graft.sources.EventStore.read(s, store))
+      EventQuery(graft.sources.SnapshotEventStore.read(s, store))
         .fromDate(TMid).toDate(T1)
         .orderByAscTime
         .toDF

@@ -134,11 +134,11 @@ object CBlock {
     // C1/C6/C7 physically: the JSON wire form of a two-day event
     // slice is drained through the REAL Structured-Streaming path
     // (file source → fromJsonLines → Trigger.AvailableNow →
-    // dt/hour-partitioned sink) once per sf dir; the measured query
-    // reads the streamed store back, and the oracle pins that the
-    // streaming pipeline lost and invented nothing.
+    // exactly-once snapshot-store sink) once per sf dir; the measured
+    // query reads the streamed store back, and the oracle pins that
+    // the streaming pipeline lost and invented nothing.
     "c7_streamed_ingest" -> ((s, d) => {
-      val base = "/tmp/graft_c7_" + ABlock.storeKey(s, d)
+      val base = "/tmp/graft_c7s_" + ABlock.storeKey(s, d)
       val p = new org.apache.hadoop.fs.Path(base)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) {
@@ -147,13 +147,13 @@ object CBlock {
           .filter(col("time") >= SliceT0 && col("time") < SliceT1)
         graft.streaming.StreamingIngest.toJsonLines(slice)
           .write.text(s"$base/in")
-        val q = graft.streaming.StreamingIngest.drainAvailableNow(
+        val q = graft.streaming.StreamingIngest.toSnapshotEventStore(
           graft.streaming.StreamingIngest.fromJsonLines(
             s.readStream.textFile(s"$base/in")),
-          s"$base/store", s"$base/ck")
+          s"$base/store", s"$base/ck", availableNow = true)
         assert(q.awaitTermination(300000), "c7 drain did not terminate")
       }
-      graft.sources.EventStore.read(s, s"$base/store")
+      graft.sources.SnapshotEventStore.read(s, s"$base/store")
         .groupBy(col("eventtype"))
         .agg(count(lit(1)).as("n"),
           min(col("time")).as("min_time"), max(col("time")).as("max_time"))
@@ -162,15 +162,17 @@ object CBlock {
 
     // C8: upsert-sink replay idempotence, physically. The two-day
     // slice is split at its midpoint and played through
-    // StreamingIngest.upsertBatch (the foreachBatch body of
-    // toUpsertSink) as b1, b2 — then b2 AGAIN and b1 AGAIN, the
-    // at-least-once redelivery pattern the sink exists to absorb
-    // (checkpoint loss replays whole batches, out of order). The
-    // measured query reads the final store back at id level; the
-    // oracle is the once-played slice — equal iff the replays
-    // duplicated, dropped, and altered nothing.
+    // StreamingIngest.upsertSnapshotBatch (the foreachBatch body of
+    // toSnapshotUpsertSink) as b1@0, b2@1 — then b2 AGAIN under a new
+    // batch id (a source retry after checkpoint loss: only the id
+    // screen can stop it) and b1 AGAIN under a covered id (Spark's own
+    // replay: the batch watermark stops it), the at-least-once
+    // redelivery pattern the sink exists to absorb. The measured query
+    // reads the final store back at id level; the oracle is the
+    // once-played slice — equal iff the replays duplicated, dropped,
+    // and altered nothing.
     "c8_upsert_replay" -> ((s, d) => {
-      val base = "/tmp/graft_c8_" + ABlock.storeKey(s, d)
+      val base = "/tmp/graft_c8s_" + ABlock.storeKey(s, d)
       val p = new org.apache.hadoop.fs.Path(base)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) {
@@ -181,12 +183,15 @@ object CBlock {
         val b1 = slice.filter(col("time") < mid)
         val b2 = slice.filter(col("time") >= mid)
         val store = s"$base/store"
-        graft.streaming.StreamingIngest.upsertBatch(b1, store)
-        graft.streaming.StreamingIngest.upsertBatch(b2, store)
-        graft.streaming.StreamingIngest.upsertBatch(b2, store) // replayed
-        graft.streaming.StreamingIngest.upsertBatch(b1, store) // replayed, out of order
+        def play(b: DataFrame, batchId: Long): Unit =
+          graft.streaming.StreamingIngest.upsertSnapshotBatch(
+            b, store, batchId, streamId = "c8")
+        play(b1, 0L)
+        play(b2, 1L)
+        play(b2, 2L) // replayed under a new id: the id screen
+        play(b1, 1L) // replayed under a covered id: the watermark
       }
-      graft.sources.EventStore.read(s, s"$base/store")
+      graft.sources.SnapshotEventStore.read(s, s"$base/store")
         .select(col("id"), col("eventtype"), col("realmid"), col("realmname"),
           col("clientid"), col("userid"), col("sessionid"), col("ipaddress"),
           col("error"), col("time"), col("detailsjson"))

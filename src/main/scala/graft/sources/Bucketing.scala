@@ -741,7 +741,7 @@ object Bucketing {
   }
 
   /** Event-store layout for user-centric workloads: dt/hour PARTITIONS
-    * (time-range directory pruning, like [[EventStore.write]]) plus
+    * (time-range directory pruning, like [[SnapshotEventStore.append]]) plus
     * userid BUCKETS inside each partition — per-user aggregations,
     * sessionization, and event↔event self-joins on userid read
     * pre-clustered buckets instead of shuffling the fact table each

@@ -9,22 +9,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 import org.apache.spark.sql.functions._
 
-/** Snapshot-isolated face of the dt/hour event store — the LAST
-  * reader-vs-writer window in the engine, closed.
+/** The dt/hour event store's one discipline: snapshot manifests.
   *
-  * [[EventStore]]'s maintenance verbs (compact / clearExpired /
-  * clearRealm) swap partition DIRECTORIES via aside→in→drop
-  * ([[EventStore.swapIn]]): crash-safe for the writer, but a
-  * path-based reader racing the swap can (a) list the store during
-  * the rename window and silently MISS a partition, or (b) list
-  * before the swap and then scan file paths the swap just renamed
-  * away — at 100 TB with retention sweeping while dashboards serve,
-  * both fire. The reference never sees this only because its readers
-  * go through Glue/Athena's snapshot-isolated metadata
-  * (terraform/main.tf:84-96); a standalone engine must own it.
+  * A directory-defined store — readers list partition directories,
+  * maintenance swaps them by rename — leaves a reader racing a sweep
+  * two windows: it can (a) list during a rename and silently MISS a
+  * partition, or (b) list before the swap and then scan file paths
+  * the swap just renamed away. At 100 TB with retention sweeping
+  * while dashboards serve, both fire. The reference never sees this
+  * only because its readers go through Glue/Athena's
+  * snapshot-isolated metadata (terraform/main.tf:84-96); a standalone
+  * engine must own it.
   *
   * This is that metadata layer re-expressed minimally — the
-  * Iceberg/Delta manifest discipline over the same physical layout:
+  * Iceberg/Delta manifest discipline over the dt/hour layout
+  * ([[EventStore]]):
   *
   *  - a MANIFEST (`_graft_snapshots/snap_<N>`, one store-relative
   *    file path per line) is the table: readers resolve max N from
@@ -67,16 +66,17 @@ import org.apache.spark.sql.functions._
   * scan is handed the file list WITH `basePath`, so dt/hour stay
   * partition columns and time predicates prune as before.
   *
-  * Contract: a store maintained through this face must be READ
-  * through it ([[read]]) — the physical directories legitimately
-  * hold replaced-but-not-yet-retired files a raw directory read
-  * would double-count. A legacy store adopts the discipline with one
-  * [[init]] call; a streaming sink joins it by appending through
-  * [[append]] in `foreachBatch`.
+  * Contract: the store must be READ through this face ([[read]]) —
+  * the physical directories legitimately hold replaced-but-not-yet-
+  * retired files a raw directory read would double-count. A plain
+  * dt/hour directory (one written before the store had manifests)
+  * is adopted by [[init]], which the first [[append]] or
+  * [[appendBatch]] runs on an un-sealed store; a streaming sink joins
+  * by appending through [[appendBatch]] in `foreachBatch`.
   */
 object SnapshotEventStore {
 
-  private[sources] val SnapDirName = "_graft_snapshots"
+  private val SnapDirName = "_graft_snapshots"
   private val SnapPrefix = "snap_"
 
   /** DELTA manifests (the Delta-log shape behind the same API): a
@@ -311,8 +311,8 @@ object SnapshotEventStore {
       .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption
 
   /** Header for the NEXT manifest: the carried schema MERGED with the
-    * batch's — an append that ADDS a column (the [[EventStore.read]]
-    * `mergeSchema` scenario, A14) widens the store schema, and an
+    * batch's — an append that ADDS a column (the A14 schema-evolution
+    * scenario) widens the store schema, and an
     * append that carries FEWER columns (a source that stopped sending
     * an optional attribute) must not narrow it: files already live
     * under the old schema and their columns stay readable. Field
@@ -462,7 +462,8 @@ object SnapshotEventStore {
     !name.startsWith("_") && !name.startsWith(".")
 
   /** Store-relative data-file paths currently in the live partition
-    * directories (the legacy, directory-defined view). */
+    * directories (the directory-defined view: what [[init]] adopts
+    * and what [[vacuumOrphans]] checks against the manifests). */
   private def listLive(spark: SparkSession, path: String): Seq[String] = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
@@ -477,10 +478,38 @@ object SnapshotEventStore {
     } yield s"${dt.getPath.getName}/${hour.getPath.getName}/${f.getPath.getName}"
   }
 
+  /** Finish the partition swaps a crashed directory-swap sweep left
+    * in an un-sealed directory, so adoption does not drop them: such a
+    * sweep renamed an hour aside (`dt=D/.hour=H.old`) before renaming
+    * its rewrite in, and a crash between the two leaves the hour's
+    * only copy under the dot name [[listLive]] skips. An aside whose
+    * live partition is missing is renamed back. Everything else
+    * dot-prefixed — a completed swap's aside, a `.hour=H.rewrite`
+    * or root `.compact_tmp` staging dir — is never adopted and left
+    * as it is. */
+  private def restoreAsides(spark: SparkSession, path: String): Unit = {
+    val root = new Path(path)
+    val fs = fsOf(spark, root)
+    if (!fs.exists(root)) return
+    for (dt <- fs.listStatus(root)
+         if dt.isDirectory && dt.getPath.getName.startsWith("dt=");
+         aside <- fs.listStatus(dt.getPath)
+         if aside.isDirectory && aside.getPath.getName.startsWith(".hour=") &&
+           aside.getPath.getName.endsWith(".old")) {
+      val live = new Path(dt.getPath,
+        aside.getPath.getName.stripPrefix(".").stripSuffix(".old"))
+      if (!fs.exists(live)) fs.rename(aside.getPath, live)
+    }
+  }
+
   /** Seal the store's current directory state as the next snapshot —
-    * how a legacy [[EventStore]]-maintained store adopts the
-    * discipline (and how a fresh one starts: init on the empty
-    * directory, then [[append]]).
+    * how a fresh store starts (init on the empty directory) and how a
+    * plain dt/hour directory written before the store had manifests
+    * is ADOPTED: on an un-sealed store, interrupted directory swaps
+    * are finished first ([[restoreAsides]]), then every data file in
+    * the partition directories becomes the first snapshot. [[append]]
+    * and [[appendBatch]] run it on an un-sealed store, and the
+    * provider runs it when it opens an un-sealed store holding data.
     *
     * The seal PUBLISHES a `#schema=` header derived from the adopted
     * files' merged parquet footers: without it the first append's
@@ -489,10 +518,11 @@ object SnapshotEventStore {
     * silently dropping every column that exists only in the adopted
     * pre-seal files (the exact vanish the explicit-schema read was
     * built to prevent). An init over an empty directory has no files
-    * to derive from and publishes headerless, as before — the first
-    * append's header takes over. */
+    * to derive from and publishes headerless — the first append's
+    * header takes over. */
   def init(spark: SparkSession, path: String): Long =
     Bucketing.withIndexLease(spark, leaseKey(path), "snapInit") {
+      if (currentSnapshot(spark, path).isEmpty) restoreAsides(spark, path)
       val files = listLive(spark, path)
       val header =
         if (files.isEmpty) Seq.empty[String]
@@ -510,10 +540,10 @@ object SnapshotEventStore {
     * on an EVOLVED store (appends added a column, the A14 scenario)
     * parquet inference would otherwise resolve to whichever file it
     * samples and the new column could silently vanish from a scan.
-    * Pre-header manifests (an [[init]]-sealed legacy store that was
-    * never appended to) fall back to `mergeSchema`, the legacy read's
-    * reconciliation. `basePath` keeps dt/hour partition columns and
-    * planning-time pruning either way. */
+    * Headerless manifests (written by an [[init]] that predates the
+    * adoption header) fall back to `mergeSchema` reconciliation.
+    * `basePath` keeps dt/hour partition columns and planning-time
+    * pruning either way. */
   private def scanFiles(spark: SparkSession, path: String,
       rels: Seq[String],
       header: Option[String]): DataFrame = {
@@ -709,31 +739,52 @@ object SnapshotEventStore {
     moved
   }
 
-  /** Append a batch: land under an invisible temp root, move into the
-    * live tree, publish prev+new. A crash before publish leaves only
+  /** The live snapshot under the caller's lease, sealing an
+    * un-sealed store first. The seal goes through [[init]], NOT a bare
+    * publish: init derives the `#schema=` header from any adopted
+    * files' merged parquet footers — a headerless seal would let the
+    * first append's batch-only schema header silently drop columns
+    * that exist only in the pre-seal files (the A20 vanish init
+    * prevents). The lease is re-entrant, so the nested init shares the
+    * caller's, and two writers on a fresh store cannot both seal it. */
+  private def sealedSnapshot(spark: SparkSession, path: String): Long =
+    currentSnapshot(spark, path).getOrElse(init(spark, path))
+
+  /** The shared body of [[append]] and [[appendBatch]], under their
+    * lease: land under an invisible temp root, move into the live
+    * tree, publish snapshot `n`'s files plus the new ones with `tags`
+    * as the batch watermarks. A crash before publish leaves only
     * unreferenced orphans — the prior snapshot is untouched. */
+  private def land(events: DataFrame, path: String, n: Long,
+      tags: Map[String, Long], maxRecordsPerFile: Int,
+      sortWithin: Seq[String], keepSnapshots: Int): Long = {
+    val spark = events.sparkSession
+    requireCompatibleSchema(events, spark, path)
+    val prev = manifestFiles(spark, path, n)
+    val tmp = new Path(path, ".snap_append_tmp")
+    val fs = fsOf(spark, tmp)
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    EventStore.write(events, tmp.toString, maxRecordsPerFile, sortWithin)
+    val moved = moveIntoLive(spark, tmp, new Path(path))
+    val snap = publish(spark, path, prev ++ moved,
+      headerFor(tags) ++ schemaHeader(events, spark, path),
+      prevFiles = Some(prev))
+    retire(spark, path, keepSnapshots)
+    snap
+  }
+
+  /** Append a batch and publish it as the next snapshot. Auto-seals an
+    * un-sealed store under the same lease ([[init]] adopts whatever
+    * the directory already holds). */
   def append(events: DataFrame, path: String,
       maxRecordsPerFile: Int = 1000000,
       sortWithin: Seq[String] = Nil,
       keepSnapshots: Int = 1): Long = {
     val spark = events.sparkSession
     Bucketing.withIndexLease(spark, leaseKey(path), "snapAppend") {
-      val n = currentSnapshot(spark, path).getOrElse(throw
-        new IllegalStateException(
-          s"snapshot append to un-sealed store '$path' — init first"))
-      requireCompatibleSchema(events, spark, path)
-      val prev = manifestFiles(spark, path, n)
-      val tmp = new Path(path, ".snap_append_tmp")
-      val fs = fsOf(spark, tmp)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      EventStore.write(events, tmp.toString, maxRecordsPerFile, sortWithin)
-      val moved = moveIntoLive(spark, tmp, new Path(path))
-      val snap = publish(spark, path, prev ++ moved,
-        headerFor(currentBatchTags(spark, path)) ++
-          schemaHeader(events, spark, path),
-        prevFiles = Some(prev))
-      retire(spark, path, keepSnapshots)
-      snap
+      val n = sealedSnapshot(spark, path)
+      land(events, path, n, committedBatches(spark, path, n),
+        maxRecordsPerFile, sortWithin, keepSnapshots)
     }
   }
 
@@ -747,9 +798,9 @@ object SnapshotEventStore {
     * crash window between "files landed" and "batch recorded".
     * Stronger than the index loops' sink-first at-least-once (those
     * replay to a recoverable duplicate; this never creates one).
-    * Auto-seals an un-init'd store (the streaming sink IS the
-    * store's first writer in the foreachBatch posture). Returns the
-    * published (or already-covering) snapshot. */
+    * Auto-seals an un-sealed store like [[append]] (the streaming
+    * sink IS the store's first writer in the foreachBatch posture).
+    * Returns the published (or already-covering) snapshot. */
   def appendBatch(events: DataFrame, path: String, batchId: Long,
       maxRecordsPerFile: Int = 1000000,
       sortWithin: Seq[String] = Nil,
@@ -759,32 +810,11 @@ object SnapshotEventStore {
       "streamId must not contain newlines (it lives in the manifest)")
     val spark = events.sparkSession
     Bucketing.withIndexLease(spark, leaseKey(path), "snapAppendBatch") {
-      // auto-seal through init(), NOT a bare publish: init derives the
-      // #schema= header from any adopted legacy files' merged parquet
-      // footers — a headerless seal would let this append's
-      // batch-only schema header silently drop columns that exist
-      // only in the pre-seal files (the A20 vanish init prevents).
-      // The lease is re-entrant, so the nested init shares this one.
-      if (currentSnapshot(spark, path).isEmpty) init(spark, path)
-      val n = currentSnapshot(spark, path).get
-      val tags = currentBatchTags(spark, path)
+      val n = sealedSnapshot(spark, path)
+      val tags = committedBatches(spark, path, n)
       if (tags.get(streamId).exists(_ >= batchId)) n
-      else {
-        requireCompatibleSchema(events, spark, path)
-        val prev = manifestFiles(spark, path, n)
-        val tmp = new Path(path, ".snap_append_tmp")
-        val fs = fsOf(spark, tmp)
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        EventStore.write(events, tmp.toString, maxRecordsPerFile,
-          sortWithin)
-        val moved = moveIntoLive(spark, tmp, new Path(path))
-        val snap = publish(spark, path, prev ++ moved,
-          headerFor(tags + (streamId -> batchId)) ++
-            schemaHeader(events, spark, path),
-          prevFiles = Some(prev))
-        retire(spark, path, keepSnapshots)
-        snap
-      }
+      else land(events, path, n, tags + (streamId -> batchId),
+        maxRecordsPerFile, sortWithin, keepSnapshots)
     }
   }
 
@@ -841,11 +871,13 @@ object SnapshotEventStore {
     snap
   }
 
-  /** Compact fragmented partitions ([[EventStore.compact]] semantics:
-    * any hour with more than `maxFilesPerPartition` manifest files is
-    * rewritten) — one job for all oversized partitions, snapshot
-    * flip, replaced files retained one cycle. Returns partitions
-    * compacted. */
+  /** Compact fragmented partitions: any hour with more than
+    * `maxFilesPerPartition` manifest files is rewritten (streaming
+    * micro-batches land one file per trigger per task — at an hourly
+    * grain that accumulates into the small-file problem that kills
+    * scan throughput at scale). One job for all oversized partitions,
+    * snapshot flip, replaced files retained one cycle. Returns
+    * partitions compacted. */
   def compact(spark: SparkSession, path: String,
       maxFilesPerPartition: Int = 4, keepSnapshots: Int = 1,
       maxRecordsPerFile: Int = 1000000,
@@ -865,7 +897,10 @@ object SnapshotEventStore {
       }
     }
 
-  /** Retention sweep ([[EventStore.clearExpired]] semantics): hours
+  /** Retention sweep — delete events with time < olderThanMs. The
+    * reference declares retention a no-op delegated to S3 lifecycle
+    * (FirehoseEventStoreProvider.java:102-121); a standalone engine
+    * owns it. Partition-pruned: hours
     * wholly before the cutoff leave the manifest METADATA-ONLY (no
     * scan, no delete — retire reclaims them a cycle later); the one
     * boundary hour is rewritten with its survivors. Returns whole
@@ -893,10 +928,16 @@ object SnapshotEventStore {
       }
     }
 
-  /** Realm purge ([[EventStore.clearRealm]] semantics): find touched
-    * partitions with one pushdown-pruned discovery pass over the
-    * SNAPSHOT, rewrite only those files keeping survivors (null
-    * realmid always survives). Returns partitions touched. */
+  /** Realm purge — delete every event of one realm (optionally only
+    * those with time < olderThanMs), the GDPR-style purge behind the
+    * reference's `clear(realm[, olderThan])` surface
+    * (FirehoseEventStoreProvider.java:106-109, declared no-ops there).
+    * realmid is not a partition column, so touched partitions are
+    * found with one pushdown-pruned discovery pass over the SNAPSHOT
+    * (on a store written with `sortWithin = realmid` clustering,
+    * row-group stats skip most files), and only those partitions'
+    * files are rewritten keeping survivors (null realmid belongs to
+    * no realm and always survives). Returns partitions touched. */
   def clearRealm(spark: SparkSession, path: String, realmId: String,
       olderThanMs: Option[Long] = None, keepSnapshots: Int = 1,
       maxRecordsPerFile: Int = 1000000,

@@ -5,16 +5,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-/** Structured-Streaming ingest: JSON-lines → typed events →
-  * dt/hour-partitioned parquet.
+/** Structured-Streaming ingest: JSON-lines → typed events → the
+  * snapshot event store.
   *
   * Re-expresses the reference's write path
   * (FirehoseEventStoreProvider.java:123-150: FlatEvent → JSON line →
   * Firehose; Firehose → Snappy parquet in S3 partitioned dt/hour,
   * terraform/main.tf:84-96). Here the "delivery stream" is any
   * streaming Dataset[String] of JSON lines (socket, Kafka, files —
-  * the transform is source-agnostic), and the sink is the same
-  * partitioned layout EventStore uses for batch.
+  * the transform is source-agnostic), and the sink is
+  * [[graft.sources.SnapshotEventStore]], the same store batch writers
+  * append to: every micro-batch commits through its manifests.
   */
 object StreamingIngest {
 
@@ -65,21 +66,6 @@ object StreamingIngest {
       .as("value")).as[String]
   }
 
-  /** Start the partitioned parquet sink (dt/hour, like EventStore):
-    * the streaming analog of the Firehose delivery stream. Partition
-    * columns come from EventStore's timezone-independent derivation,
-    * so batch and streaming writers agree in any session timezone. */
-  def toPartitionedSink(events: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
-    graft.sources.EventStore.withPartitionColumns(events)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("dt", "hour")
-      .start()
-
   /** C20: streaming ingest into the SNAPSHOT-isolated event store —
     * [[graft.sources.SnapshotEventStore.appendBatch]] per
     * micro-batch, which makes the loop EXACTLY-ONCE even across
@@ -87,10 +73,11 @@ object StreamingIngest {
     * atomically WITH the manifest (one rename), every later publish
     * carries the watermark forward, so a replay finds its id covered
     * and lands nothing — no crash window between "files landed" and
-    * "batch recorded", unlike the plain parquet sink (exactly-once
-    * only while its own `_spark_metadata` log describes the store —
-    * which the FIRST maintenance sweep invalidates) and stronger
-    * than the index loops' sink-first recoverable-duplicate posture.
+    * "batch recorded", unlike Spark's plain parquet sink (exactly-once
+    * only while its own `_spark_metadata` log describes the
+    * directory — which the FIRST maintenance sweep invalidates) and
+    * stronger than the index loops' sink-first recoverable-duplicate
+    * posture.
     * Concurrent maintenance (compact/retention on a schedule) and
     * concurrent readers compose by construction: writers serialize
     * on the store lease, readers resolve immutable snapshots. */
@@ -117,120 +104,33 @@ object StreamingIngest {
         ()
       }
       .option("checkpointLocation", checkpoint)
-    // availableNow = the drain deployment mode ([[drainAvailableNow]]
-    // over the snapshot store): process the backlog, then stop —
-    // exactly-once either way, the manifest watermark does not care
-    // about the trigger
+    // availableNow = the scheduled-ingest deployment mode: process
+    // everything the source holds NOW (across as many micro-batches
+    // as needed), then stop; each run resumes from the checkpoint and
+    // occupies the cluster only while there is backlog. Exactly-once
+    // either way — the manifest watermark does not care about the
+    // trigger
     (if (availableNow) base.trigger(Trigger.AvailableNow()) else base)
       .start()
   }
 
-  /** Batch-drain ingestion: process everything available on the
-    * source NOW (across as many micro-batches as needed), then stop —
-    * Trigger.AvailableNow. The scheduled-job deployment mode: each
-    * run resumes from the checkpoint with streaming exactly-once
-    * semantics but occupies the cluster only while there is backlog.
-    * Caller awaits termination. */
-  def drainAvailableNow(events: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
-    graft.sources.EventStore.withPartitionColumns(events)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("dt", "hour")
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Upsert one KeycloakEvent-shaped batch into a dt/hour-partitioned
-    * store: rows with an id already present in an affected partition
-    * are REPLACED, new ids appended; only the partitions the batch
-    * touches are rewritten (dynamic partition overwrite — untouched
-    * hours never move). Idempotent: replaying the same batch yields
-    * the same store state, which is what makes [[toUpsertSink]] safe
-    * under at-least-once delivery AND checkpoint loss (the plain
-    * append sink is exactly-once only while its checkpoint survives).
-    */
-  def upsertBatch(batch: DataFrame, path: String): Unit = {
-    val spark = batch.sparkSession
-    val withParts = graft.sources.EventStore.withPartitionColumns(batch)
-      .dropDuplicates("id")
-    val exists = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // an existing-but-empty directory is not a store yet
-      fs.exists(p) && fs.listStatus(p).nonEmpty
-    }
-    val merged = if (!exists) withParts else {
-      val affected = withParts.select(col("dt"), col("hour")).distinct()
-      // survivors: existing rows in affected partitions whose id is
-      // not superseded by the batch. localCheckpoint is EAGER — the
-      // survivors are materialized before anything below mutates the
-      // store, and the overwrite does not read its own target.
-      val survivors = spark.read.parquet(path)
-        .join(broadcast(affected), Seq("dt", "hour"), "left_semi")
-        .join(withParts.select(col("id")), Seq("id"), "left_anti")
-        .select(withParts.columns.map(col): _*)
-        .localCheckpoint(true)
-      // a store previously fed by the APPEND streaming sink carries a
-      // _spark_metadata log; the partition rewrite below invalidates
-      // it (it would reference replaced files), so drop it and let
-      // readers fall back to partition discovery — same contract as
-      // EventStore.compact/clearExpired
-      val metadataLog = new org.apache.hadoop.fs.Path(path, "_spark_metadata")
-      val fs = metadataLog.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(metadataLog)) fs.delete(metadataLog, true)
-      withParts.unionByName(survivors)
-    }
-    // session-global conf toggle: serialized under the same
-    // per-session monitor as Retrieval.withForcedBucketedScan — two
-    // overlapping callers (routine under graft.Par) could otherwise
-    // interleave save/restore and leave the session mode wrong
-    spark.sessionState.conf.synchronized {
-      val prevMode =
-        spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try merged.write.mode("overwrite").partitionBy("dt", "hour").parquet(path)
-      finally prevMode match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
-
-  /** Streaming upsert sink: [[upsertBatch]] per micro-batch via
-    * foreachBatch. Lands a plain hive-partitioned store (no streaming
-    * metadata log), deduplicated by event id even when the source
-    * replays — the reference's Firehose retry semantics made
-    * duplicate delivery a first-class concern. */
-  def toUpsertSink(events: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch((batch: DataFrame, _: Long) => upsertBatch(batch, path))
-      .option("checkpointLocation", checkpoint)
-      .start()
-
-  /** ID-KEYED redelivery safety for the SNAPSHOT store — the upsert
-    * contract ([[toUpsertSink]]'s "safe under at-least-once delivery
-    * AND checkpoint loss") on the manifest discipline. The batch
-    * watermark alone does NOT give this: it dedups Spark's own
-    * checkpoint replays (same stream, same batch id) but a
-    * source-level retry delivering an already-landed event id in a
-    * LATER batch — the Firehose retry shape — or a restarted pipeline
-    * after checkpoint LOSS (new stream identity by design) would land
-    * duplicates. Here each micro-batch is additionally anti-joined by
-    * id against the live snapshot before the exactly-once append, so
-    * both windows close: an id lands at most once for a SINGLE
-    * writing stream (the spec-pinned contract; with two concurrent
-    * streams writing the same ids to one store the screen resolves
-    * its snapshot outside the append lease, so a window exists where
-    * both anti-joins miss each other's in-flight ids — serialize
-    * writers per store for the strict claim). Events are
-    * immutable facts, so insert-if-absent IS the event-store upsert
-    * (the legacy sink's replace-by-id differs only for mutated
-    * payloads, which the reference wire format does not produce).
+  /** ID-KEYED redelivery safety for the snapshot store: safe under
+    * at-least-once delivery AND checkpoint loss. The batch watermark
+    * alone does NOT give this: it dedups Spark's own checkpoint
+    * replays (same stream, same batch id) but a source-level retry
+    * delivering an already-landed event id in a LATER batch — the
+    * Firehose retry shape — or a restarted pipeline after checkpoint
+    * LOSS (new stream identity by design) would land duplicates. Here
+    * each micro-batch ([[upsertSnapshotBatch]]) is additionally
+    * anti-joined by id against the live snapshot before the
+    * exactly-once append, so both windows close: an id lands at most
+    * once for a SINGLE writing stream (the spec-pinned contract; with
+    * two concurrent streams writing the same ids to one store the
+    * screen resolves its snapshot outside the append lease, so a
+    * window exists where both anti-joins miss each other's in-flight
+    * ids — serialize writers per store for the strict claim). Events
+    * are immutable facts, so insert-if-absent IS the event-store
+    * upsert: a replayed id keeps its FIRST payload.
     * Cost: the screen's snapshot side is pre-filtered to the BATCH'S
     * OWN id range before the anti-join — ids outside
     * [min(batch), max(batch)] cannot match any batch row, so the
@@ -250,43 +150,56 @@ object StreamingIngest {
     events.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val deduped = batch.dropDuplicates(idCol)
-        // an un-sealed store SEALS FIRST (init snapshots whatever the
-        // directory already holds — the legacy-adoption posture), so
-        // the anti-join below sees adopted rows too: skipping it for
-        // batch 0 would let a crashed legacy pipeline's redelivered
-        // last batch land twice, exactly the duplicate this sink
-        // exists to prevent
-        if (graft.sources.SnapshotEventStore
-          .currentSnapshot(spark, path).isEmpty)
-          graft.sources.SnapshotEventStore.init(spark, path)
-        val existing = graft.sources.SnapshotEventStore
-          .read(spark, path)
-        // the batch's id range, one batch-sized aggregate: snapshot
-        // ids OUTSIDE it cannot match any batch row, so the range
-        // filter below preserves the anti-join result exactly while
-        // letting parquet min/max stats (id-sorted files under
-        // `sortWithin = Seq("id")`) skip everything else
-        val bounds =
-          if (existing.columns.isEmpty) null
-          else deduped.agg(min(col(idCol)), max(col(idCol))).head()
-        val fresh =
-          if (existing.columns.isEmpty) deduped // empty sealed store
-          else if (bounds.isNullAt(0)) deduped  // empty batch
-          else deduped.join(
-            existing
-              .filter(col(idCol)
-                .between(lit(bounds.get(0)), lit(bounds.get(1))))
-              .select(col(idCol).as("__landed_id")),
-            col(idCol) === col("__landed_id"), "left_anti")
-        graft.sources.SnapshotEventStore.appendBatch(
-          fresh, path, batchId, sortWithin = sortWithin,
-          keepSnapshots = keepSnapshots, streamId = sid)
+        upsertSnapshotBatch(batch, path, batchId, sid, idCol,
+          sortWithin, keepSnapshots)
         ()
       }
       .option("checkpointLocation", checkpoint)
       .start()
+  }
+
+  /** One micro-batch of [[toSnapshotUpsertSink]]: drop in-batch id
+    * duplicates, screen out ids the live snapshot already holds, and
+    * land the rest through the exactly-once
+    * [[graft.sources.SnapshotEventStore.appendBatch]] under
+    * (`streamId`, `batchId`). Returns the published (or
+    * already-covering) snapshot. */
+  def upsertSnapshotBatch(batch: DataFrame, path: String, batchId: Long,
+      streamId: String, idCol: String = "id",
+      sortWithin: Seq[String] = Nil,
+      keepSnapshots: Int = 1): Long = {
+    val spark = batch.sparkSession
+    val deduped = batch.dropDuplicates(idCol)
+    // an un-sealed store SEALS FIRST (init adopts whatever the
+    // directory already holds), so the anti-join below sees adopted
+    // rows too: skipping it for batch 0 would let a crashed earlier
+    // pipeline's redelivered last batch land twice, exactly the
+    // duplicate this sink exists to prevent
+    if (graft.sources.SnapshotEventStore
+      .currentSnapshot(spark, path).isEmpty)
+      graft.sources.SnapshotEventStore.init(spark, path)
+    val existing = graft.sources.SnapshotEventStore
+      .read(spark, path)
+    // the batch's id range, one batch-sized aggregate: snapshot
+    // ids OUTSIDE it cannot match any batch row, so the range
+    // filter below preserves the anti-join result exactly while
+    // letting parquet min/max stats (id-sorted files under
+    // `sortWithin = Seq("id")`) skip everything else
+    val bounds =
+      if (existing.columns.isEmpty) null
+      else deduped.agg(min(col(idCol)), max(col(idCol))).head()
+    val fresh =
+      if (existing.columns.isEmpty) deduped // empty sealed store
+      else if (bounds.isNullAt(0)) deduped  // empty batch
+      else deduped.join(
+        existing
+          .filter(col(idCol)
+            .between(lit(bounds.get(0)), lit(bounds.get(1))))
+          .select(col(idCol).as("__landed_id")),
+        col(idCol) === col("__landed_id"), "left_anti")
+    graft.sources.SnapshotEventStore.appendBatch(
+      fresh, path, batchId, sortWithin = sortWithin,
+      keepSnapshots = keepSnapshots, streamId = streamId)
   }
 
   /** The full streaming ingestion-dedup loop over a PERSISTENT index

@@ -46,8 +46,8 @@ class EventQuerySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.execution.FileSourceScanExec
     val dir = java.nio.file.Files.createTempDirectory("graft_eq_store_").toString
-    graft.sources.EventStore.write(ke, dir)
-    val store = graft.sources.EventStore.read(spark, dir)
+    graft.sources.SnapshotEventStore.append(ke, dir)
+    val store = graft.sources.SnapshotEventStore.read(spark, dir)
 
     def numFiles(df: org.apache.spark.sql.DataFrame): Long = {
       df.collect()

@@ -2,30 +2,41 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.EventAdapter
-import graft.sources.{EventStore, Tables}
+import graft.sources.{EventStore, SnapshotEventStore, Tables}
 
-/** Partitioned write/read, planning-time partition pruning, and the
-  * partition-pruned retention sweep. */
+/** The dt/hour store layout through its snapshot face: partitioned
+  * appends, planning-time partition pruning, compaction, the
+  * partition-pruned retention sweep, realm purges, and the adoption
+  * of a plain dt/hour directory. */
 class EventStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshStore(): String = {
     val dir = Files.createTempDirectory("graft_store_").toString
     val ke = EventAdapter.keycloakEvents(Tables.events(spark, TestSpark.sf))
-    EventStore.write(ke, dir)
+    SnapshotEventStore.append(ke, dir)
     dir
   }
 
+  private def read(dir: String): DataFrame = SnapshotEventStore.read(spark, dir)
+
+  /** Live manifest files, store-relative (`dt=…/hour=…/part-…`). */
+  private def liveFiles(dir: String): Seq[String] =
+    SnapshotEventStore.manifestFiles(spark, dir,
+      SnapshotEventStore.currentSnapshot(spark, dir).get)
+
   test("write lands hive-partitioned dt/hour and reads back complete") {
     val dir = freshStore()
-    val back = EventStore.read(spark, dir)
+    val back = read(dir)
     val n = Tables.events(spark, TestSpark.sf).count()
     assert(back.count() == n)
     assert(back.columns.contains("dt") && back.columns.contains("hour"))
     val dtDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
+      .filterNot(_.getName.startsWith("_")) // _graft_snapshots
     assert(dtDirs.nonEmpty && dtDirs.forall(_.getName.startsWith("dt=")))
     assert(dtDirs.head.listFiles().exists(_.getName.startsWith("hour=")))
   }
@@ -33,7 +44,7 @@ class EventStoreSpec extends AnyFunSuite {
   test("dt/hour predicates prune partitions at planning time") {
     import org.apache.spark.sql.functions._
     val dir = freshStore()
-    val q = EventStore.read(spark, dir)
+    val q = read(dir)
       .filter(col("dt") === "2024-01-02" && col("hour") === 5)
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), plan.take(2000))
@@ -43,12 +54,11 @@ class EventStoreSpec extends AnyFunSuite {
     assert(scanned.contains("dt=2024-01-02") || plan.contains("dt#"),
       "partition filter not pushed")
     assert(q.count() ==
-      EventStore.read(spark, dir)
+      read(dir)
         .filter(col("dt") === "2024-01-02" && col("hour") === 5).count())
   }
 
   test("sortWithin layout prunes files on the clustered column") {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     // dense single-hour partition so within-partition clustering is
     // what decides file min/max ranges: 20k rows, one dt/hour, 40
@@ -67,7 +77,7 @@ class EventStoreSpec extends AnyFunSuite {
       lit("{}").as("detailsjson"))
 
     def scanRows(dir: String): Long = {
-      val q = EventStore.read(spark, dir).filter(col("userid") === "user-07")
+      val q = read(dir).filter(col("userid") === "user-07")
       assert(q.count() == 500)
       q.collect()
       q.queryExecution.executedPlan.collectLeaves()
@@ -75,9 +85,9 @@ class EventStoreSpec extends AnyFunSuite {
     }
 
     val plain = Files.createTempDirectory("graft_plain_").toString
-    EventStore.write(events, plain, maxRecordsPerFile = 500)
+    SnapshotEventStore.append(events, plain, maxRecordsPerFile = 500)
     val sorted = Files.createTempDirectory("graft_sorted_").toString
-    EventStore.write(events, sorted, maxRecordsPerFile = 500,
+    SnapshotEventStore.append(events, sorted, maxRecordsPerFile = 500,
       sortWithin = Seq("userid"))
 
     val (p, s) = (scanRows(plain), scanRows(sorted))
@@ -94,25 +104,22 @@ class EventStoreSpec extends AnyFunSuite {
       .limit(500)
     // fragment: many tiny appends (the streaming micro-batch pattern)
     (0 until 5).foreach { i =>
-      EventStore.write(ke.filter(col("id").cast("long") % 5 === i), dir)
+      SnapshotEventStore.append(ke.filter(col("id").cast("long") % 5 === i), dir)
     }
-    val before = EventStore.read(spark, dir)
+    val before = read(dir)
     val nBefore = before.count()
     val sumBefore = before.agg(sum(col("time"))).head.getLong(0)
 
-    val compacted = EventStore.compact(spark, dir, maxFilesPerPartition = 1)
+    val compacted = SnapshotEventStore.compact(spark, dir,
+      maxFilesPerPartition = 1)
     assert(compacted > 0)
-    val after = EventStore.read(spark, dir)
+    val after = read(dir)
     assert(after.count() == nBefore)
     assert(after.agg(sum(col("time"))).head.getLong(0) == sumBefore)
-    // every hour dir now holds exactly one data file
-    val root = new java.io.File(dir)
-    for (dt <- root.listFiles() if dt.isDirectory;
-         hour <- dt.listFiles() if hour.isDirectory) {
-      val files = hour.listFiles().filter(f =>
-        f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      assert(files.length == 1, s"${hour} has ${files.length} files")
-    }
+    // every hour partition of the live snapshot now holds exactly one
+    // data file (the replaced ones stay on disk for reader grace)
+    for ((part, files) <- liveFiles(dir).groupBy(_.split("/").take(2).toSeq))
+      assert(files.size == 1, s"$part has ${files.size} live files")
   }
 
   test("schema evolution: old partitions readable after a column is added") {
@@ -123,8 +130,8 @@ class EventStoreSpec extends AnyFunSuite {
       .limit(100)
       .withColumn("time", col("time") + 30L * 86400000L) // lands in new partitions
       .withColumn("devicetype", lit("mobile"))
-    EventStore.write(evolved, dir)
-    val all = EventStore.read(spark, dir, mergeSchema = true)
+    SnapshotEventStore.append(evolved, dir)
+    val all = read(dir)
     assert(all.columns.contains("devicetype"))
     val n = Tables.events(spark, TestSpark.sf).count()
     assert(all.count() == n + 100)
@@ -153,43 +160,24 @@ class EventStoreSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
-  test("no-op compact leaves the streaming metadata log in place") {
-    val dir = freshStore()
-    // simulate a streaming-sink store: plant a _spark_metadata dir
-    val meta = new java.io.File(dir, "_spark_metadata")
-    assert(meta.mkdir())
-    java.nio.file.Files.writeString(
-      new java.io.File(meta, "0").toPath, "{}")
-    val n = EventStore.compact(spark, dir, maxFilesPerPartition = 1000)
-    assert(n == 0)
-    assert(meta.exists(), "no-op compact must not detach the streaming sink")
-    // an actual compaction does drop it
-    val n2 = EventStore.compact(spark, dir, maxFilesPerPartition = 0)
-    assert(n2 > 0)
-    assert(!meta.exists())
-  }
-
   test("no-op clearExpired (cutoff at/before the first partition) touches nothing") {
     import org.apache.spark.sql.functions._
     val dir = freshStore()
-    // read minT before planting the metadata dir (a bogus log would
-    // hijack the read path — which is exactly why a no-op must not
-    // touch a real one)
-    val minT = EventStore.read(spark, dir).agg(min(col("time"))).head.getLong(0)
-    val meta = new java.io.File(dir, "_spark_metadata")
-    assert(meta.mkdir())
+    val minT = read(dir).agg(min(col("time"))).head.getLong(0)
+    val snap = SnapshotEventStore.currentSnapshot(spark, dir)
     // cutoff exactly at the earliest hour-partition start: nothing is
     // strictly older, so neither drop nor boundary rewrite applies
     val cutoff = (minT / 3600000L) * 3600000L
-    val dropped = EventStore.clearExpired(spark, dir, cutoff)
+    val dropped = SnapshotEventStore.clearExpired(spark, dir, cutoff)
     assert(dropped == 0)
-    assert(meta.exists(), "no-op sweep must not detach the streaming sink")
+    assert(SnapshotEventStore.currentSnapshot(spark, dir) == snap,
+      "a no-op sweep must publish nothing")
   }
 
   test("clearExpired drops whole old partitions and rewrites the boundary hour") {
     import org.apache.spark.sql.functions._
     val dir = freshStore()
-    val all = EventStore.read(spark, dir).cache()
+    val all = read(dir).cache()
     val minT = all.agg(min(col("time"))).head.getLong(0)
     // cutoff mid-hour, ~26h after the first event → whole partitions
     // below, one boundary hour rewritten
@@ -202,10 +190,10 @@ class EventStoreSpec extends AnyFunSuite {
       .filter((col("hs") + 1) * 3600000L <= cutoff).count()
     all.unpersist()
 
-    val dropped = EventStore.clearExpired(spark, dir, cutoff)
+    val dropped = SnapshotEventStore.clearExpired(spark, dir, cutoff)
     assert(dropped == expectedDropped,
       s"expected $expectedDropped whole partitions dropped, got $dropped")
-    val after = EventStore.read(spark, dir)
+    val after = read(dir)
     assert(after.count() == expectedSurvivors)
     assert(after.agg(min(col("time"))).head.getLong(0) >= cutoff)
   }
@@ -228,43 +216,43 @@ class EventStoreSpec extends AnyFunSuite {
       "clientid", "userid", "sessionid", "ipaddress", "error", "time",
       "detailsjson")
     val dir = Files.createTempDirectory("graft_realm_").toString
-    EventStore.write(df, dir, sortWithin = Seq("realmid"))
+    SnapshotEventStore.append(df, dir, sortWithin = Seq("realmid"))
     (dir, base)
   }
 
   test("clearRealm purges one realm, touches only its partitions, keeps null realms") {
     import org.apache.spark.sql.functions._
     val (dir, _) = realmStore()
-    val before = EventStore.read(spark, dir).cache()
+    val before = read(dir).cache()
     val nA = before.filter(col("realmid") === "realm-A").count()
     val nB = before.filter(col("realmid") === "realm-B").count()
     val nNull = before.filter(col("realmid").isNull).count()
     assert(nA > 0 && nB > 0 && nNull > 0)
     before.unpersist()
 
-    // crash posture: an orphaned temp root from an interrupted earlier
-    // purge is invisible to readers and cleaned on the next call
-    val tmp = new java.io.File(dir, ".clear_realm_tmp")
+    // crash posture: an orphaned rewrite root from an interrupted
+    // earlier purge is invisible to readers and cleaned on the next call
+    val tmp = new java.io.File(dir, ".snap_rewrite_tmp")
     assert(tmp.mkdir())
-    assert(EventStore.read(spark, dir).count() == nA + nB + nNull)
+    assert(read(dir).count() == nA + nB + nNull)
 
-    val touched = EventStore.clearRealm(spark, dir, "realm-A")
+    val touched = SnapshotEventStore.clearRealm(spark, dir, "realm-A")
     assert(touched == 2, s"realm-A lives in hours 0-1 only, touched $touched")
     assert(!tmp.exists())
-    val after = EventStore.read(spark, dir)
+    val after = read(dir)
     assert(after.filter(col("realmid") === "realm-A").count() == 0)
     assert(after.filter(col("realmid") === "realm-B").count() == nB)
     assert(after.filter(col("realmid").isNull).count() == nNull,
       "null-realm rows belong to no realm and must survive")
     // idempotent: nothing left to purge
-    assert(EventStore.clearRealm(spark, dir, "realm-A") == 0)
+    assert(SnapshotEventStore.clearRealm(spark, dir, "realm-A") == 0)
   }
 
   test("clearRealm with olderThan keeps the realm's newer rows") {
     import org.apache.spark.sql.functions._
     val (dir, base) = realmStore()
     val cutoff = base + 2 * 3600000L // start of hour 2
-    val before = EventStore.read(spark, dir).cache()
+    val before = read(dir).cache()
     val expectGone = before.filter(col("realmid") === "realm-B" &&
       col("time") < cutoff).count()
     val nB = before.filter(col("realmid") === "realm-B").count()
@@ -272,9 +260,10 @@ class EventStoreSpec extends AnyFunSuite {
     before.unpersist()
     assert(expectGone > 0 && expectGone < nB)
 
-    val touched = EventStore.clearRealm(spark, dir, "realm-B", Some(cutoff))
+    val touched = SnapshotEventStore.clearRealm(spark, dir, "realm-B",
+      Some(cutoff))
     assert(touched == 2, s"old realm-B rows live in hours 0-1, touched $touched")
-    val after = EventStore.read(spark, dir)
+    val after = read(dir)
     assert(after.filter(col("realmid") === "realm-B").count() == nB - expectGone)
     assert(after.filter(col("realmid") === "realm-B")
       .agg(min(col("time"))).head.getLong(0) >= cutoff)
@@ -296,58 +285,56 @@ class EventStoreSpec extends AnyFunSuite {
       "clientid", "userid", "sessionid", "ipaddress", "error", "time",
       "detailsjson")
     val dir = Files.createTempDirectory("graft_realmx_").toString
-    EventStore.write(df, dir)
-    assert(EventStore.clearRealm(spark, dir, "realm-X") == 2)
-    // hour=0 directory is gone entirely, not rewritten empty
-    val dtDir = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("dt=")).head
-    assert(!dtDir.listFiles().exists(_.getName == "hour=0"))
-    val after = EventStore.read(spark, dir)
+    SnapshotEventStore.append(df, dir)
+    assert(SnapshotEventStore.clearRealm(spark, dir, "realm-X") == 2)
+    // hour 0 left the live snapshot entirely, not rewritten empty
+    assert(!liveFiles(dir).exists(_.contains("/hour=0/")))
+    val after = read(dir)
     assert(after.count() == 15 && after.filter(col("realmid") === "realm-X").count() == 0)
 
     EventStore.clearAll(spark, dir)
     assert(!new java.io.File(dir).exists())
-    // clearing an absent store is a no-op, and it reads back empty via
-    // the provider's empty-store path — here just: no crash
+    // clearing an absent store is a no-op, and a provider reads it
+    // back as a store with nothing to purge
     EventStore.clearAll(spark, dir)
-    assert(EventStore.clearRealm(spark, dir, "realm-X") == 0)
+    val p = new graft.api.GraftEventStoreProvider(spark, dir, s"$dir-admin")
+    assert(p.clear("realm-X") == 0)
   }
 
   test("interrupted swap recovers: no crash window loses rows") {
     import org.apache.hadoop.fs.Path
-    val dir = freshStore()
-    val total = EventStore.read(spark, dir).count()
+    // a plain dt/hour directory, written before the store had manifests
+    val dir = Files.createTempDirectory("graft_adopt_").toString + "/store"
+    val ke = EventAdapter.keycloakEvents(Tables.events(spark, TestSpark.sf))
+    EventStore.withPartitionColumns(ke)
+      .write.partitionBy("dt", "hour").parquet(dir)
+    val total = ke.count()
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dtDir = fs.listStatus(root)
+    val dtDirs = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("dt="))
-      .head.getPath
-    val part = fs.listStatus(dtDir)
+      .map(_.getPath)
+    def hours(dt: Path) = fs.listStatus(dt)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("hour="))
-      .head.getPath
+      .map(_.getPath)
 
-    // crash state A: old renamed aside, new not yet renamed in (the
-    // fresh copy still sits in an invisible temp). The partition is
-    // missing from discovery until recovery restores the aside copy.
-    val aside = new Path(dtDir, "." + part.getName + ".old")
-    fs.rename(part, aside)
-    assert(EventStore.read(spark, dir).count() < total)
-    assert(EventStore.recoverSwaps(spark, dir) == 1)
-    assert(EventStore.read(spark, dir).count() == total)
+    // crash state A: an hour renamed aside, its rewrite never renamed
+    // in — the hour's only copy is under the dot name
+    val partA = hours(dtDirs(0)).head
+    fs.rename(partA, new Path(dtDirs(0), "." + partA.getName + ".old"))
+    // crash state B: a swap completed but its aside not dropped
+    val partB = hours(dtDirs(1)).head
+    org.apache.hadoop.fs.FileUtil.copy(fs, partB, fs,
+      new Path(dtDirs(1), "." + partB.getName + ".old"), false,
+      spark.sparkContext.hadoopConfiguration)
+    // crash state C: an orphaned pre-swap rewrite and compaction temp
+    fs.mkdirs(new Path(dtDirs(0), ".hour=99.rewrite"))
+    fs.mkdirs(new Path(root, ".compact_tmp"))
 
-    // crash state B: swap completed but aside not dropped → recovery
-    // just cleans the leftover, keeping the live partition
-    fs.mkdirs(new Path(aside, "stale"))
-    assert(EventStore.recoverSwaps(spark, dir) == 0)
-    assert(!fs.exists(aside))
-    assert(EventStore.read(spark, dir).count() == total)
-
-    // crash state C: an orphaned pre-swap .rewrite temp is dropped;
-    // a subsequent sweep runs clean and the store stays complete
-    val rewriteTmp = new Path(dtDir, "." + part.getName + ".rewrite")
-    fs.mkdirs(rewriteTmp)
-    assert(EventStore.recoverSwaps(spark, dir) == 0)
-    assert(!fs.exists(rewriteTmp))
-    assert(EventStore.read(spark, dir).count() == total)
+    // adoption restores A, and neither B's stale copy nor C's temps
+    // are adopted
+    SnapshotEventStore.init(spark, dir)
+    assert(read(dir).count() == total)
+    assert(fs.exists(partA))
   }
 }

@@ -17,13 +17,12 @@ import graft.sources.Tables
 class ProviderSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** A snapshot-mode provider over a fresh base, and its event store. */
+  /** A provider over a fresh base, and its event store. */
   private def snapshotProvider(
       prefix: String): (GraftEventStoreProvider, String) = {
     val f = graft.api.GraftEventStoreProviderFactory.fromConfig(Map(
       "enabled" -> "true",
-      "basePath" -> Files.createTempDirectory(prefix).toString,
-      "storeMode" -> "snapshot"))
+      "basePath" -> Files.createTempDirectory(prefix).toString))
     (f.create(spark), f.settings.eventsPath)
   }
 
@@ -170,18 +169,7 @@ class ProviderSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.api.GraftEventStoreProviderFactory
-    import GraftEventStoreProviderFactory.StoreMode
     import graft.sources.SnapshotEventStore
-
-    // the config path: default legacy, case-insensitive snapshot,
-    // junk falls back loudly-but-safely (the reference's resolve
-    // discipline)
-    assert(GraftEventStoreProviderFactory.fromConfig(Map.empty)
-      .settings.storeMode == StoreMode.Legacy)
-    assert(GraftEventStoreProviderFactory.fromConfig(
-      Map("storeMode" -> "Snapshot")).settings.storeMode == StoreMode.Snapshot)
-    assert(GraftEventStoreProviderFactory.fromConfig(
-      Map("storeMode" -> "carrier-pigeon")).settings.storeMode == StoreMode.Legacy)
 
     val base = Files.createTempDirectory("graft_snap_provider_").toString
     val f = GraftEventStoreProviderFactory.fromConfig(Map(
@@ -216,12 +204,6 @@ class ProviderSpec extends AnyFunSuite {
       .select(col("realmid")).head.getString(0)
     assert(p.clear(someRealm) > 0)
     assert(p.events.filter(col("realmid") === someRealm).count() == 0)
-
-    // and the legacy verbs REFUSE on the sealed path — the provider
-    // cannot be tricked into half-discipline maintenance
-    intercept[IllegalStateException] {
-      graft.sources.EventStore.compact(spark, s"$base/events")
-    }
   }
 
   test("storeMode=snapshot: streaming ingest through the facade is exactly-once") {
@@ -346,5 +328,50 @@ class ProviderSpec extends AnyFunSuite {
       assert(warm.size == cold.count(d => !listing(d)),
         s"a warm query must run exactly the query's own jobs: $cold vs $warm")
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("storeMode set to legacy, set to snapshot, or absent yields the same snapshot-sealed provider") {
+    import spark.implicits._
+    import graft.api.GraftEventStoreProviderFactory
+    import graft.sources.SnapshotEventStore
+    for (mode <- Seq(Some("legacy"), Some("snapshot"), None)) {
+      val base = Files.createTempDirectory("graft_mode_").toString
+      val f = GraftEventStoreProviderFactory.fromConfig(Map(
+        "enabled" -> "true", "basePath" -> base) ++
+        mode.map("storeMode" -> _))
+      assert(f.settings == GraftEventStoreProviderFactory.fromConfig(Map(
+        "enabled" -> "true", "basePath" -> base)).settings)
+      val p = f.create(spark)
+      p.onEvents(hourly(3, 0).toDS())
+      assert(SnapshotEventStore.currentSnapshot(spark, s"$base/events")
+        .isDefined, s"storeMode=$mode: the append did not seal the store")
+      assert(p.createQuery().toDF.count() == 3L)
+    }
+  }
+
+  test("opening a provider adopts a plain dt/hour store, restoring an hour a crashed swap left aside") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    import graft.sources.{EventStore, SnapshotEventStore}
+    val base = Files.createTempDirectory("graft_adopt_").toString
+    val store = s"$base/events"
+    val rows = hourly(6, 0)
+    EventStore.withPartitionColumns(rows.toDF())
+      .write.partitionBy("dt", "hour").parquet(store)
+    // a directory-swap sweep crashed after renaming hour 2 aside
+    val dt = new Path(store, "dt=2024-01-01")
+    val fs = dt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(dt, "hour=2"), new Path(dt, ".hour=2.old")))
+
+    def ids(p: GraftEventStoreProvider) =
+      p.createQuery().toDF.select("id").as[String].collect().toSet
+    val p1 = new GraftEventStoreProvider(spark, store, s"$base/admin")
+    assert(ids(p1) == rows.map(_.id).toSet)
+    val n = SnapshotEventStore.currentSnapshot(spark, store)
+    assert(n.isDefined)
+    // a sealed store is not adopted again: nothing is published
+    val p2 = new GraftEventStoreProvider(spark, store, s"$base/admin")
+    assert(SnapshotEventStore.currentSnapshot(spark, store) == n)
+    assert(ids(p2) == rows.map(_.id).toSet)
   }
 }

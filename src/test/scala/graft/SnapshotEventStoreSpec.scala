@@ -346,31 +346,6 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
       "the refusal must fire before files move into the live tree")
   }
 
-  test("legacy EventStore verbs refuse on a sealed store; clearAll stays legal") {
-    val dir = freshDir()
-    SnapshotEventStore.init(spark, dir)
-    SnapshotEventStore.append(events(2, 3), dir)
-    val e = intercept[IllegalStateException] {
-      graft.sources.EventStore.write(events(1, 1, idOffset = 500L), dir)
-    }
-    assert(e.getMessage.contains("SnapshotEventStore"),
-      s"the refusal must name the snapshot face: ${e.getMessage}")
-    intercept[IllegalStateException] {
-      graft.sources.EventStore.compact(spark, dir)
-    }
-    intercept[IllegalStateException] {
-      graft.sources.EventStore.clearExpired(spark, dir, Base + 10 * 3600000L)
-    }
-    intercept[IllegalStateException] {
-      graft.sources.EventStore.clearRealm(spark, dir, "realm-1")
-    }
-    // nothing mutated: the manifests still define the same rows
-    assert(SnapshotEventStore.read(spark, dir).count() == 6L)
-    // the whole-store reset drops manifests WITH the data — legal
-    graft.sources.EventStore.clearAll(spark, dir)
-    assert(SnapshotEventStore.currentSnapshot(spark, dir).isEmpty)
-  }
-
   test("manifest sizing receipt: flat-list publish + resolve stay cheap to 1e5 files") {
     // the disclosed A17 sizing constraint, MEASURED: every publish
     // rewrites the full live-file list and every resolve re-reads it.
@@ -499,10 +474,12 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
 
   test("appendBatch auto-seal adopts a legacy store's full schema: pre-seal-only columns survive a narrower append") {
     val dir = freshDir()
-    // a legacy EventStore-maintained store whose files carry a column
-    // ('extra') the streaming batches will NOT have
-    graft.sources.EventStore.write(
-      events(2, 4).withColumn("extra", concat(lit("x"), col("id"))), dir)
+    // a plain dt/hour directory, written before the store had
+    // manifests, whose files carry a column ('extra') the streaming
+    // batches will NOT have
+    graft.sources.EventStore.withPartitionColumns(
+      events(2, 4).withColumn("extra", concat(lit("x"), col("id"))))
+      .write.mode("append").partitionBy("dt", "hour").parquet(dir)
     // first streaming delivery auto-seals (no explicit init) with a
     // NARROWER batch schema — the seal must derive the #schema=
     // header from the adopted files' merged footers, or the explicit

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.EventAdapter
-import graft.sources.Tables
+import graft.sources.{SnapshotEventStore, Tables}
 import graft.streaming.StreamingIngest
 
 /** Restart-from-checkpoint: the ingest pipeline must resume exactly
@@ -32,19 +32,19 @@ class StreamingRestartSpec extends AnyFunSuite {
 
     def runOnce(): Unit = {
       val stream = spark.readStream.textFile(src)
-      val q = StreamingIngest.toPartitionedSink(
+      val q = StreamingIngest.toSnapshotEventStore(
         StreamingIngest.fromJsonLines(stream), out, ckpt)
       try q.processAllAvailable() finally q.stop()
     }
 
     writeFile("part-000.json", batch1)
     runOnce()
-    assert(spark.read.parquet(out).count() == batch1.size)
+    assert(SnapshotEventStore.read(spark, out).count() == batch1.size)
 
     // restart with a NEW query on the same checkpoint + a new file
     writeFile("part-001.json", batch2)
     runOnce()
-    val landed = spark.read.parquet(out)
+    val landed = SnapshotEventStore.read(spark, out)
     assert(landed.count() == lines.size, "no duplicates, nothing lost")
     assert(landed.select(col("id")).distinct().count() == lines.size)
   }

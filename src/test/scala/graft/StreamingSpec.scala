@@ -6,11 +6,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.EventAdapter
-import graft.sources.Tables
+import graft.sources.{SnapshotEventStore, Tables}
 import graft.streaming.{StreamOps, StreamingIngest}
 
 /** Structured-Streaming paths driven with MemoryStream: JSON-lines
-  * ingest → partitioned sink, windowed aggregation, dedup,
+  * ingest → snapshot event store, windowed aggregation, dedup,
   * sessionization, burst detection. */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -29,25 +29,23 @@ class StreamingSpec extends AnyFunSuite {
     val parsed = StreamingIngest.fromJsonLines(input.toDS())
     val out = Files.createTempDirectory("graft_stream_out_").toString
     val ckpt = Files.createTempDirectory("graft_stream_ckpt_").toString
-    val q = StreamingIngest.toPartitionedSink(parsed, out, ckpt)
+    val q = StreamingIngest.toSnapshotEventStore(parsed, out, ckpt)
     try {
       val lines = jsonLines()
       input.addData(lines)
       q.processAllAvailable()
-      val landed = spark.read.parquet(out)
+      val landed = SnapshotEventStore.read(spark, out)
       assert(landed.count() == lines.size)
       assert(landed.columns.toSet.contains("eventtype"))
       val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-        .filterNot(_.getName.startsWith("_")) // _spark_metadata
+        .filterNot(_.getName.startsWith("_")) // _graft_snapshots
       assert(dirs.nonEmpty && dirs.forall(_.getName.startsWith("dt=")))
 
-      // retention must work on a store with a streaming metadata log:
-      // readers would otherwise consult the stale _spark_metadata and
-      // crash on deleted files
+      // retention works on a store the stream is still attached to
       import org.apache.spark.sql.functions._
       val minT = landed.agg(min(col("time"))).head.getLong(0)
-      graft.sources.EventStore.clearExpired(spark, out, minT + 3600000L)
-      val after = spark.read.parquet(out)
+      SnapshotEventStore.clearExpired(spark, out, minT + 3600000L)
+      val after = SnapshotEventStore.read(spark, out)
       assert(after.count() < lines.size)
       assert(after.agg(min(col("time"))).head.getLong(0) >= minT + 3600000L)
     } finally q.stop()
@@ -152,49 +150,45 @@ class StreamingSpec extends AnyFunSuite {
     val lines = jsonLines()
 
     input.addData(lines.take(120))
-    val q1 = StreamingIngest.drainAvailableNow(
-      StreamingIngest.fromJsonLines(input.toDS()), out, ckpt)
+    val q1 = StreamingIngest.toSnapshotEventStore(
+      StreamingIngest.fromJsonLines(input.toDS()), out, ckpt,
+      availableNow = true)
     assert(q1.awaitTermination(60000), "drain 1 did not terminate")
-    assert(spark.read.parquet(out).count() == 120)
+    assert(SnapshotEventStore.read(spark, out).count() == 120)
 
     // second drain resumes from the checkpoint: only the new backlog
     input.addData(lines.drop(120))
-    val q2 = StreamingIngest.drainAvailableNow(
-      StreamingIngest.fromJsonLines(input.toDS()), out, ckpt)
+    val q2 = StreamingIngest.toSnapshotEventStore(
+      StreamingIngest.fromJsonLines(input.toDS()), out, ckpt,
+      availableNow = true)
     assert(q2.awaitTermination(60000), "drain 2 did not terminate")
-    val landed = spark.read.parquet(out)
+    val landed = SnapshotEventStore.read(spark, out)
     assert(landed.count() == lines.size)
     assert(landed.select("id").distinct().count() == lines.size)
   }
 
-  test("upsert sink replaces replayed ids and appends new ones") {
+  test("upsertSnapshotBatch is insert-if-absent: a replayed id keeps its first payload") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val input = MemoryStream[String](spark)
     val out = Files.createTempDirectory("graft_upsert_out_").toString
-    val ckpt = Files.createTempDirectory("graft_upsert_ckpt_").toString
     val t0 = 1704067200000L
-    def ev(id: String, err: String, t: Long) =
-      s"""{"id":"$id","type":"LOGIN","realmid":"r","userid":"u","time":$t,"error":"$err","detailsjson":"{}"}"""
-    val q = StreamingIngest.toUpsertSink(
-      StreamingIngest.fromJsonLines(input.toDS()), out, ckpt)
-    try {
-      input.addData(Seq(ev("e1", "v1", t0), ev("e2", "v1", t0 + 1000)))
-      q.processAllAvailable()
-      assert(spark.read.parquet(out).count() == 2)
-      // replay e2 with a new payload + a new id in another hour
-      input.addData(Seq(ev("e2", "v2", t0 + 1000), ev("e3", "v1", t0 + 3600000L)))
-      q.processAllAvailable()
-      val rows = spark.read.parquet(out)
-      assert(rows.count() == 3, "replayed id must not duplicate")
-      val e2 = rows.filter(col("id") === "e2").collect()
-      assert(e2.length == 1 && e2.head.getAs[String]("error") == "v2",
-        "replayed id must carry the latest payload")
-      // partitioned layout, no streaming metadata log (plain store)
-      val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      assert(dirs.nonEmpty && dirs.forall(_.getName.startsWith("dt=")))
-      assert(!new java.io.File(out, "_spark_metadata").exists())
-    } finally q.stop()
+    def batch(rows: (String, String, Long)*) =
+      rows.toDF("id", "error", "time")
+    def play(b: org.apache.spark.sql.DataFrame, batchId: Long) =
+      StreamingIngest.upsertSnapshotBatch(b, out, batchId, "s")
+    play(batch(("e1", "v1", t0), ("e2", "v1", t0 + 1000)), 0L)
+    // e2 redelivered with a new payload in a LATER batch, plus a new
+    // id in another hour: the id screen lands only e3
+    play(batch(("e2", "v2", t0 + 1000), ("e3", "v1", t0 + 3600000L)), 1L)
+    val rows = SnapshotEventStore.read(spark, out)
+    assert(rows.count() == 3, "replayed id must not duplicate")
+    val e2 = rows.filter(col("id") === "e2").collect()
+    assert(e2.length == 1 && e2.head.getAs[String]("error") == "v1",
+      "a replayed id keeps its first payload")
+    // a covered batch id lands nothing, even a new id
+    val n = SnapshotEventStore.currentSnapshot(spark, out)
+    assert(Some(play(batch(("e4", "v1", t0)), 1L)) == n)
+    assert(SnapshotEventStore.read(spark, out).count() == 3)
   }
 
   test("rate-source soak: continuous ingest lands a well-formed store") {
@@ -215,12 +209,12 @@ class StreamingSpec extends AnyFunSuite {
       // spread synthetic event times across hours
       (lit(t0) + col("value") * 60000L).as("time"),
       lit("{}").as("detailsjson"))
-    val q = StreamingIngest.toPartitionedSink(events, out, ckpt)
+    val q = StreamingIngest.toSnapshotEventStore(events, out, ckpt)
     try {
       q.awaitTermination(5000) // soak
       q.processAllAvailable()
     } finally q.stop()
-    val landed = spark.read.parquet(out)
+    val landed = SnapshotEventStore.read(spark, out)
     assert(landed.count() > 0, "no rows landed during the soak")
     assert(landed.columns.contains("dt") && landed.columns.contains("hour"))
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
