@@ -204,17 +204,17 @@ object ScaleProbe {
     // corpus, ADC joins per probed cell (~10×).
     "d132_match_positions", // build + serve + positions join
     "d136_residual_ivfpq",  // residual encode + per-cell ADC
-    // r18 additions. d137 is a versioned publish + rewrite (two
-    // bucketed writes) + two counts (~10×); d138 two index builds +
-    // per-family count/digest passes (~10×); d139 three term-filtered
-    // BM25 arms + the |q|×N dense leg + eval joins (~10×, the dense
-    // truth term dominates); d140 two half builds + the union merge
-    // (~10× write-side); d141 two term-filtered passes + a 3-doc
-    // term mine (~10×); d142 build + pruned serve + a positions
-    // window join on 5 doc ids (~10× build, serve bounded); d143 an
-    // even-half build + a map-only assignment pass over the odd half
-    // + nlist-sized aggregates (~10×).
-    "d137_versioned_read",  // versioned publish + rewrite + counts
+    // r18 additions. d137 is a bucketed write + a generation-swap
+    // compaction (two bucketed writes) + two counts (~10×); d138 two
+    // index builds + per-family count/digest passes (~10×); d139 three
+    // term-filtered BM25 arms + the |q|×N dense leg + eval joins (~10×,
+    // the dense truth term dominates); d140 two half builds + the union
+    // merge (~10× write-side); d141 two term-filtered passes + a 3-doc
+    // term mine (~10×); d142 build + pruned serve + a positions window
+    // join on 5 doc ids (~10× build, serve bounded); d143 an even-half
+    // build + a map-only assignment pass over the odd half + nlist-sized
+    // aggregates (~10×).
+    "d137_versioned_read",  // write + swap compaction + counts
     "d138_drift_directions", // two builds + count/digest passes
     "d139_retrieval_card",  // 3 lexical arms + dense leg + eval
     "d140_merged_bm25",     // two half builds + union merge + serve

@@ -708,7 +708,7 @@ object Dedup {
 
   private def indexMeta(spark: org.apache.spark.sql.SparkSession,
       name: String): (Int, Int, Int, Boolean, Int, String) = {
-    val m = Bucketing.stableTable(spark, s"${name}_meta").head()
+    val m = spark.table(s"${name}_meta").head()
     val md5Sig = m.getAs[Boolean]("md5_sig")
     // pre-family metas tokenized with the only family that existed:
     // ws — unlike the shh basis (which silently corrupts), the read
@@ -780,7 +780,7 @@ object Dedup {
     // large for AQE to broadcast.
     val candidates = screenBandRows(bSig, bands, numPerms / bands)
       .drop("band_id").as("a")
-      .join(Bucketing.stableTable(spark, s"${name}_bands").as("b"), Seq("band_hash"))
+      .join(spark.table(s"${name}_bands").as("b"), Seq("band_hash"))
       .filter(least(col("a.sz"), col("b.sz")).cast("double") >=
         lit(threshold) * greatest(col("a.sz"), col("b.sz")))
       .select(col("a.doc_id").as("batch_id"), col("b.doc_id").as("corpus_id"))
@@ -788,7 +788,7 @@ object Dedup {
     val nearFlagged = candidates
       .join(bSig.select(col("doc_id").as("batch_id"),
         hashedSet(col("sh"), md5Sig).as("shh_a")), Seq("batch_id"))
-      .join(Bucketing.stableTable(spark, s"${name}_docs")
+      .join(spark.table(s"${name}_docs")
         .select(col("doc_id").as("corpus_id"), col("shh").as("shh_b")),
         Seq("corpus_id"))
       .filter(SketchFunctions.jaccardSorted(col("shh_a"), col("shh_b")) >=
@@ -796,7 +796,7 @@ object Dedup {
       .select(col("batch_id"))
       .distinct()
     batch
-      .join(Bucketing.stableTable(spark, s"${name}_ch"),
+      .join(spark.table(s"${name}_ch"),
         md5(col(textCol)) === col("ch"), "left_anti")
       .join(nearFlagged, col(idCol) === col("batch_id"), "left_anti")
   }
@@ -872,7 +872,7 @@ object Dedup {
       // tables the anti-join reads (the reconcileBm25Index lesson)
       val missing = landed
         .filter(col(idCol).isNotNull && col(textCol).isNotNull)
-        .join(Bucketing.stableTable(spark, s"${name}_docs")
+        .join(spark.table(s"${name}_docs")
           .select(col("doc_id").as("__seen_id")),
           col(idCol) === col("__seen_id"), "left_anti")
         .localCheckpoint(true)
@@ -952,10 +952,11 @@ object Dedup {
     * so after K batches every screen opens K× the files), and
     * re-distincts `_ch` (per-batch appends are batch-distinct, not
     * globally distinct — harmless for anti-join semantics, but
-    * compaction is the natural place to shed the duplicates). Same
-    * staged drop+rename swap as [[graft.sources.Bucketing
-    * .compactBucketed]]: the live table is replaced only after its
-    * compacted copy fully exists. */
+    * compaction is the natural place to shed the duplicates). Each
+    * table is a [[graft.sources.Bucketing.compactBucketed]]
+    * generation swap: the live table is re-pointed only after its
+    * compacted copy fully exists, and a reader pinned before the swap
+    * keeps scanning the old files. */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
     Bucketing.withIndexLease(spark, name, "compactDedupIndex") {
@@ -1008,7 +1009,7 @@ object Dedup {
           s"families $geoms — merged band rows would mean two things; " +
           "reband or rebuild the odd one out first")
       val docsAll = sources
-        .map(s => Bucketing.stableTable(spark, s"${s}_docs"))
+        .map(s => spark.table(s"${s}_docs"))
         .reduce(_ unionByName _)
       val chk = docsAll.repartition(col("doc_id"))
         .agg(count(lit(1)).as("n"),
@@ -1022,13 +1023,13 @@ object Dedup {
       // `_meta` stays LAST, the existence readers key on
       graft.Par.run(
         () => Bucketing.writeBucketed(
-          sources.map(s => Bucketing.stableTable(spark, s"${s}_bands"))
+          sources.map(s => spark.table(s"${s}_bands"))
             .reduce(_ unionByName _),
           s"${target}_bands", "band_hash", numBuckets),
         () => Bucketing.writeBucketed(docsAll, s"${target}_docs", "doc_id",
           numBuckets),
         () => Bucketing.writeBucketed(
-          sources.map(s => Bucketing.stableTable(spark, s"${s}_ch"))
+          sources.map(s => spark.table(s"${s}_ch"))
             .reduce(_ unionByName _)
             .repartition(col("ch")) // LOAD-BEARING: see scaladoc
             .distinct(),
@@ -1076,13 +1077,13 @@ object Dedup {
     val hashKeys = live.select(md5(col(textCol)).as("ch")).distinct()
     val nDocs = live.agg(count(lit(1)).as("n_batch_docs"))
     val nBands = bandKeys.agg(count(lit(1)).as("n_batch_bands"))
-    val nKnownBands = Bucketing.stableTable(spark, s"${name}_bands")
+    val nKnownBands = spark.table(s"${name}_bands")
       .select(col("band_hash"))
       .join(broadcast(bandKeys), Seq("band_hash"), "left_semi")
       .distinct()
       .agg(count(lit(1)).as("n_known_bands"))
     val nHashes = hashKeys.agg(count(lit(1)).as("n_batch_hashes"))
-    val nKnownHashes = Bucketing.stableTable(spark, s"${name}_ch")
+    val nKnownHashes = spark.table(s"${name}_ch")
       .join(broadcast(hashKeys), Seq("ch"), "left_semi")
       .distinct() // appends can re-land a hash; the count is of the SET
       .agg(count(lit(1)).as("n_known_hashes"))
@@ -1116,7 +1117,7 @@ object Dedup {
     Bucketing.withIndexLeases(spark, target +: sources,
       "mergeUrlIndexes") {
       Bucketing.writeBucketed(
-        sources.map(s => Bucketing.stableTable(spark, s"${s}_url"))
+        sources.map(s => spark.table(s"${s}_url"))
           .reduce(_ unionByName _)
           .repartition(col("uh")) // the co-bucketed-union hazard again
           .distinct(),
@@ -1156,12 +1157,12 @@ object Dedup {
     val nRows = live.agg(count(lit(1)).as("n_batch_sigs"))
     val nSigs = sigKeys.agg(count(lit(1)).as("n_batch_distinct_sigs"))
     val nChunks = chunkKeys.agg(count(lit(1)).as("n_batch_chunks"))
-    val nKnownSigs = Bucketing.stableTable(spark, s"${name}_chunks")
+    val nKnownSigs = spark.table(s"${name}_chunks")
       .select(col("sim"))
       .join(broadcast(sigKeys), Seq("sim"), "left_semi")
       .distinct() // chunk rows repeat each sig maxDist+1 times
       .agg(count(lit(1)).as("n_known_sigs"))
-    val nKnownChunks = Bucketing.stableTable(spark, s"${name}_chunks")
+    val nKnownChunks = spark.table(s"${name}_chunks")
       .select(col("chunk_hash"))
       .join(broadcast(chunkKeys), Seq("chunk_hash"), "left_semi")
       .distinct()
@@ -1227,7 +1228,7 @@ object Dedup {
       // disjoint. Chunks repeat doc_id per doc, hence the inner
       // distincts; the repartition is the co-bucketed-union guard.
       val chk = sources.map(s =>
-        Bucketing.stableTable(spark, s"${s}_chunks")
+        spark.table(s"${s}_chunks")
           .select(col("doc_id")).distinct())
         .reduce(_ unionByName _)
         .repartition(col("doc_id"))
@@ -1248,19 +1249,19 @@ object Dedup {
       // independent writes, overlapped (guide §2.6); `_meta` last
       graft.Par.run(
         () => Bucketing.writeBucketed(
-          sources.map(s => Bucketing.stableTable(spark, s"${s}_chunks"))
+          sources.map(s => spark.table(s"${s}_chunks"))
             .reduce(_ unionByName _),
           s"${target}_chunks", "chunk_hash", numBuckets),
         () => if (withVChunks.nonEmpty)
           Bucketing.writeBucketed(
-            withVChunks.map(s => Bucketing.stableTable(spark, s"${s}_vchunks"))
+            withVChunks.map(s => spark.table(s"${s}_vchunks"))
               .reduce(_ unionByName _)
               .repartition(col("chunk_hash"))
               .distinct(),
             s"${target}_vchunks", "chunk_hash", numBuckets),
         () => if (withVFrames.nonEmpty)
           Bucketing.writeBucketed(
-            withVFrames.map(s => Bucketing.stableTable(spark, s"${s}_vframes"))
+            withVFrames.map(s => spark.table(s"${s}_vframes"))
               .reduce(_ unionByName _)
               .repartition(col("vid"))
               .distinct(),
@@ -1324,7 +1325,7 @@ object Dedup {
     require(numPerms % bands == 0,
       s"numPerms ($numPerms) must divide into bands ($bands)")
     val r = numPerms / bands
-    val sigRows = Bucketing.stableTable(spark, s"${name}_docs")
+    val sigRows = spark.table(s"${name}_docs")
       .select(col("doc_id"), col("sz"),
         SketchFunctions.md5Minhash30FromHashes(col("shh"), numPerms)
           .as("sig"))
@@ -1372,7 +1373,7 @@ object Dedup {
     bandsChoices.foreach(b => require(b >= 1 && numPerms % b == 0,
       s"bands $b must divide numPerms $numPerms"))
     // one signature pass, pinned: every geometry re-aggregates it
-    val sig = Bucketing.stableTable(spark, s"${name}_docs")
+    val sig = spark.table(s"${name}_docs")
       .select(col("doc_id"), col("sz"),
         SketchFunctions.md5Minhash30FromHashes(col("shh"), numPerms)
           .as("sig"))
@@ -1433,12 +1434,11 @@ object Dedup {
     * one: a takedown/right-to-be-forgotten request must remove a
     * document's near-dup EVIDENCE (its band rows and shingle-set
     * row) from the persistent index without a corpus rebuild. Rides
-    * [[graft.sources.Bucketing.compactBucketed]]'s staged
-    * drop/rename swap verbatim — the rewrite is an anti-join filter
-    * over each bucketed table, staged fully before the live table is
-    * touched, so a crash anywhere inside the swap recovers exactly
-    * like an interrupted compaction (same marker, same
-    * finishInterruptedSwap path).
+    * [[graft.sources.Bucketing.compactBucketed]]'s generation swap
+    * verbatim — the rewrite is an anti-join filter over each bucketed
+    * table, built completely in the next generation before the
+    * catalog re-points, so a crash anywhere inside it leaves the live
+    * generation serving, exactly like an interrupted compaction.
     *
     * CONTENT hashes are a separate decision, so they take the
     * removed docs' TEXTS and a flag: with `dropContentHashes =
@@ -1503,11 +1503,11 @@ object Dedup {
     * ids encoded in the file names) persist in the warehouse. This
     * re-registers all four tables from their surviving directories —
     * bucket specs restored from `<name>_meta`, which is registered
-    * first — after finishing any compaction swap a prior process
-    * died inside ([[graft.sources.Bucketing.finishInterruptedSwap]]:
-    * the durable marker + complete staging directory make the swap
-    * recoverable across restarts, not just within a session).
-    * Idempotent; no-op for tables the catalog already knows. */
+    * first. [[graft.sources.Bucketing.registerExisting]] resolves each
+    * table's live generation (and adopts the crash state an earlier
+    * release's staged compaction swap could leave). Idempotent; a
+    * table the catalog already knows is only re-pointed to its live
+    * generation. */
   def openDedupIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
     // an interrupted REBAND recovers FIRST (post-marker, the live
@@ -1520,7 +1520,6 @@ object Dedup {
     val (_, _, _, _, numBuckets, _) = indexMeta(spark, name)
     Seq(s"${name}_bands" -> "band_hash", s"${name}_docs" -> "doc_id",
       s"${name}_ch" -> "ch").foreach { case (table, bucketCol) =>
-      Bucketing.finishInterruptedSwap(spark, table)
       require(Bucketing.registerExisting(spark, table,
         Some((bucketCol, numBuckets))),
         s"dedup index '$name' is missing its $table table")
@@ -1548,13 +1547,13 @@ object Dedup {
     * the d97 oracle verifies no-collision holds at every gate SF). */
   def dedupIndexStats(spark: org.apache.spark.sql.SparkSession,
       name: String): DataFrame = {
-    val occ = Bucketing.stableTable(spark, s"${name}_bands")
+    val occ = spark.table(s"${name}_bands")
       .groupBy(col("band_hash")).agg(count(lit(1)).as("__n"))
       .agg(sum(col("__n")).as("n_band_rows"),
         count(lit(1)).as("n_distinct_bands"),
         max(col("__n")).as("max_band_occ"))
-    Bucketing.stableTable(spark, s"${name}_docs").agg(count(lit(1)).as("n_docs"))
-      .crossJoin(Bucketing.stableTable(spark, s"${name}_ch")
+    spark.table(s"${name}_docs").agg(count(lit(1)).as("n_docs"))
+      .crossJoin(spark.table(s"${name}_ch")
         .agg(count(lit(1)).as("n_content_hashes")))
       .crossJoin(occ)
   }
@@ -1584,7 +1583,7 @@ object Dedup {
 
   private def simIndexMeta(spark: org.apache.spark.sql.SparkSession,
       name: String): (Int, Int) = {
-    val m = Bucketing.stableTable(spark, s"${name}_meta").head()
+    val m = spark.table(s"${name}_meta").head()
     (m.getAs[Int]("max_dist"), m.getAs[Int]("num_buckets"))
   }
 
@@ -1633,7 +1632,7 @@ object Dedup {
     val live = batchSigs
       .filter(col("doc_id").isNotNull && col("sim").isNotNull)
     val flagged = simChunkRows(live, maxDist).as("a")
-      .join(Bucketing.stableTable(spark, s"${name}_chunks").as("b"), Seq("chunk_hash"))
+      .join(spark.table(s"${name}_chunks").as("b"), Seq("chunk_hash"))
       .filter(bit_count(col("a.sim").bitwiseXOR(col("b.sim"))) <= maxDist)
       .select(col("a.doc_id").as("doc_id"))
       .distinct()
@@ -1669,7 +1668,7 @@ object Dedup {
     Bucketing.withIndexLease(spark, name, "reconcileSimIndex") {
       val missing = landedSigs
         .filter(col("doc_id").isNotNull && col("sim").isNotNull)
-        .join(Bucketing.stableTable(spark, s"${name}_chunks").select(col("doc_id"))
+        .join(spark.table(s"${name}_chunks").select(col("doc_id"))
           .distinct().select(col("doc_id").as("__seen_id")),
           col("doc_id") === col("__seen_id"), "left_anti")
         .localCheckpoint(true)
@@ -1784,7 +1783,7 @@ object Dedup {
       !spark.catalog.tableExists(s"${name}_vframes")) return live
     val M = Multimodal.MaxSampledFrames
     val matches = simChunkRows(videoCompositeKey(live), maxDist).as("a")
-      .join(Bucketing.stableTable(spark, s"${name}_vchunks").as("b"), Seq("chunk_hash"))
+      .join(spark.table(s"${name}_vchunks").as("b"), Seq("chunk_hash"))
       .filter(bit_count(col("a.sim").bitwiseXOR(col("b.sim"))) <= maxDist)
       .select(expr(s"a.doc_id div $M").as("bvid"),
         expr(s"a.doc_id % $M").as("bfi"),
@@ -1797,7 +1796,7 @@ object Dedup {
     val bCounts = live.groupBy(col("doc_id").as("bvid"))
       .agg(count(lit(1)).as("nfb"))
     val flagged = tallies
-      .join(Bucketing.stableTable(spark, s"${name}_vframes").select(col("vid").as("cvid"),
+      .join(spark.table(s"${name}_vframes").select(col("vid").as("cvid"),
         col("nf").as("nfc")).distinct(), Seq("cvid"))
       .join(bCounts.hint("SHUFFLE_HASH"), Seq("bvid"))
       .filter(col("n") === col("nfb") && col("n") === col("nfc"))
@@ -1839,7 +1838,7 @@ object Dedup {
     require(maxDist >= 0 && maxDist <= 63,
       s"maxDist must be in [0, 63], got $maxDist")
     val (_, numBuckets) = simIndexMeta(spark, name)
-    val sigs = Bucketing.stableTable(spark, s"${name}_chunks")
+    val sigs = spark.table(s"${name}_chunks")
       .select(col("doc_id"), col("sim")).distinct()
     import spark.implicits._
     // the stage writes are independent (pre-marker leftovers are
@@ -1848,7 +1847,7 @@ object Dedup {
       () => Bucketing.writeBucketed(simChunkRows(sigs, maxDist),
         s"${name}_chunks_stage", "chunk_hash", numBuckets),
       () => if (spark.catalog.tableExists(s"${name}_vchunks")) {
-        val vsigs = Bucketing.stableTable(spark, s"${name}_vchunks")
+        val vsigs = spark.table(s"${name}_vchunks")
           .select(col("doc_id"), col("sim")).distinct()
         Bucketing.writeBucketed(simChunkRows(vsigs, maxDist),
           s"${name}_vchunks_stage", "chunk_hash", numBuckets)
@@ -1878,11 +1877,11 @@ object Dedup {
     // and stages survive until after all land
     graft.Par.run(
       () => Bucketing.writeBucketed(
-        Bucketing.stableTable(spark, s"${name}_chunks_stage"),
+        spark.table(s"${name}_chunks_stage"),
         s"${name}_chunks", "chunk_hash", numBuckets),
       () => if (hasVStage)
         Bucketing.writeBucketed(
-          Bucketing.stableTable(spark, s"${name}_vchunks_stage"),
+          spark.table(s"${name}_vchunks_stage"),
           s"${name}_vchunks", "chunk_hash", numBuckets),
       () => Bucketing.writeTable(spark.table(metaStage), s"${name}_meta"))
     Bucketing.deleteMarker(spark, rechunkMarker(name))
@@ -1941,16 +1940,13 @@ object Dedup {
     require(Bucketing.registerExisting(spark, s"${name}_meta", None),
       s"no persisted signature index named '$name' in the warehouse")
     val (_, numBuckets) = simIndexMeta(spark, name)
-    Bucketing.finishInterruptedSwap(spark, s"${name}_chunks")
     require(Bucketing.registerExisting(spark, s"${name}_chunks",
       Some(("chunk_hash", numBuckets))),
       s"signature index '$name' is missing its chunks table")
     // the video-frame side is OPTIONAL (lazily created on the first
     // appendVideoFramesToSimIndex) — re-register when present
-    Bucketing.finishInterruptedSwap(spark, s"${name}_vchunks")
     Bucketing.registerExisting(spark, s"${name}_vchunks",
       Some(("chunk_hash", numBuckets)))
-    Bucketing.finishInterruptedSwap(spark, s"${name}_vframes")
     Bucketing.registerExisting(spark, s"${name}_vframes",
       Some(("vid", numBuckets)))
   }
@@ -1969,7 +1965,7 @@ object Dedup {
   def simIndexStats(spark: org.apache.spark.sql.SparkSession,
       name: String): DataFrame = {
     val (maxDist, _) = simIndexMeta(spark, name)
-    Bucketing.stableTable(spark, s"${name}_chunks")
+    spark.table(s"${name}_chunks")
       .groupBy(col("chunk_hash")).agg(count(lit(1)).as("__n"))
       .agg(sum(col("__n")).as("n_chunk_rows"),
         count(lit(1)).as("n_distinct_chunks"),
@@ -1994,7 +1990,7 @@ object Dedup {
 
   private def urlIndexMeta(spark: org.apache.spark.sql.SparkSession,
       name: String): Int =
-    Bucketing.stableTable(spark, s"${name}_meta").head().getAs[Int]("num_buckets")
+    spark.table(s"${name}_meta").head().getAs[Int]("num_buckets")
 
   private def urlKeys(docs: DataFrame, urlCol: String): DataFrame =
     docs.filter(col(urlCol).isNotNull)
@@ -2028,7 +2024,7 @@ object Dedup {
       name: String): DataFrame = {
     val spark = batch.sparkSession
     batch.filter(col(urlCol).isNotNull)
-      .join(Bucketing.stableTable(spark, s"${name}_url"),
+      .join(spark.table(s"${name}_url"),
         md5(TextAnalysis.canonicalizeUrl(col(urlCol))) === col("uh"),
         "left_anti")
   }
@@ -2058,7 +2054,7 @@ object Dedup {
     Bucketing.withIndexLease(spark, name, "reconcileUrlIndex") {
       val numBuckets = urlIndexMeta(spark, name)
       val missing = urlKeys(landed, urlCol)
-        .join(Bucketing.stableTable(spark, s"${name}_url").select(col("uh").as("__seen")),
+        .join(spark.table(s"${name}_url").select(col("uh").as("__seen")),
           col("uh") === col("__seen"), "left_anti")
         .select(col("uh"))
         .localCheckpoint(true)
@@ -2104,7 +2100,6 @@ object Dedup {
     require(Bucketing.registerExisting(spark, s"${name}_meta", None),
       s"no persisted url index named '$name' in the warehouse")
     val numBuckets = urlIndexMeta(spark, name)
-    Bucketing.finishInterruptedSwap(spark, s"${name}_url")
     require(Bucketing.registerExisting(spark, s"${name}_url",
       Some(("uh", numBuckets))),
       s"url index '$name' is missing its url table")
@@ -2118,7 +2113,7 @@ object Dedup {
     * scan. */
   def urlIndexStats(spark: org.apache.spark.sql.SparkSession,
       name: String): DataFrame =
-    Bucketing.stableTable(spark, s"${name}_url").agg(count(lit(1)).as("n_urls"))
+    spark.table(s"${name}_url").agg(count(lit(1)).as("n_urls"))
 
   /** The shared positional gram pipeline under [[crossDocSpans]] and
     * [[gramProfile]]: one scan — tokenize, [[graft.functions

@@ -111,7 +111,7 @@ object OpsCard {
         s"indexOpsCard: unknown family '$other' — one of " +
           "dedup/ann/sim/bm25/url")
     }
-    countAndDigest(Bucketing.stableTable(spark, table).select(col(idc)).distinct(),
+    countAndDigest(spark.table(table).select(col(idc)).distinct(),
       col(idc), "n_items", "idx_digest")
   }
 
@@ -124,7 +124,7 @@ object OpsCard {
   }
 
   private def numBucketsOf(spark: SparkSession, e: Entry): Int =
-    Bucketing.stableTable(spark, s"${e.name}_meta").head().getAs[Int]("num_buckets")
+    spark.table(s"${e.name}_meta").head().getAs[Int]("num_buckets")
 
   /** SIDE-TABLE integrity for the sim family: `_vchunks`/`_vframes`
     * are what the media screens actually JOIN, they are lazily
@@ -151,13 +151,13 @@ object OpsCard {
       // of the XOR-collision space, exactly as n_items/n_landed sit
       // beside ids_digest_match
       val a = countAndDigest(
-        Bucketing.stableTable(spark, s"${e.name}_vchunks")
+        spark.table(s"${e.name}_vchunks")
           // integer DIV, not double division: a float round-trip
           // would corrupt vids above 2^53/M
           .select(expr(s"doc_id DIV $m").as("__vid")).distinct(),
         col("__vid"), "n", "d").head()
       val b = countAndDigest(
-        Bucketing.stableTable(spark, s"${e.name}_vframes")
+        spark.table(s"${e.name}_vframes")
           .select(col("vid")).distinct(),
         col("vid"), "n", "d").head()
       Some(a.getLong(0) == b.getLong(0) && a.getLong(1) == b.getLong(1))

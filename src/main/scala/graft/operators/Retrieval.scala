@@ -89,7 +89,7 @@ object Retrieval {
     * forced rebuild here would be pure cost, not safety). */
   private def bm25Meta(spark: SparkSession,
       name: String): (Int, String) = {
-    val row = Bucketing.stableTable(spark, s"${name}_meta").head()
+    val row = spark.table(s"${name}_meta").head()
     val tok =
       if (row.schema.fieldNames.contains("tokenizer"))
         row.getAs[String]("tokenizer")
@@ -408,7 +408,7 @@ object Retrieval {
     val t = s"${name}_postings_bydoc"
     if (spark.catalog.tableExists(t) ||
         Bucketing.registerExisting(spark, t, Some(("doc_id", numBuckets))))
-      Some(Bucketing.stableTable(spark, t))
+      Some(spark.table(t))
     else None
   }
 
@@ -444,10 +444,10 @@ object Retrieval {
     // target tables → overlapped.
     graft.Par.run(
       () => Bucketing.writeBucketed(
-        byDocProjection(Bucketing.stableTable(spark, s"${name}_postings")),
+        byDocProjection(spark.table(s"${name}_postings")),
         s"${name}_postings_bydoc", "doc_id", numBuckets),
       () => Bucketing.writeBucketed(
-        Bucketing.stableTable(spark, s"${name}_postings").groupBy(col("term"))
+        spark.table(s"${name}_postings").groupBy(col("term"))
           .agg(count(lit(1)).as("df_t")),
         s"${name}_df", "term", numBuckets))
     writeBm25Meta(spark, name, numBuckets, tokenizer)
@@ -464,7 +464,7 @@ object Retrieval {
     // paid a second driver round trip per build/append for the same
     // bytes (same column names, same types: long, long, int, string)
     Bucketing.writeTable(
-      Bucketing.stableTable(spark, s"${name}_docs")
+      spark.table(s"${name}_docs")
         .agg(count(lit(1)).as("n_docs"),
           coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
         .select(col("n_docs"), col("sum_dl"),
@@ -476,7 +476,7 @@ object Retrieval {
     * appends their postings and doc lengths as per-bucket files (no
     * rewrite of existing data), then refreshes the two derived
     * statistics tables — `_df` through [[Bucketing.compactBucketed]]'s
-    * crash-safe staged swap (union-sum with the batch's term counts:
+    * generation swap (union-sum with the batch's term counts:
     * vocabulary-sized work, never corpus-sized), `_meta` by
     * re-aggregating `_docs`. Caller contract, as with
     * [[graft.operators.Similarity.appendToAnnIndex]]: doc ids must be
@@ -552,12 +552,12 @@ object Retrieval {
   /** Maintenance pass for a BM25 index that has accreted appends:
     * rewrites the three bucketed tables to one file per bucket (each
     * [[appendToBm25Index]] adds a file per bucket; after K batches
-    * every serving scan opens K× the files). Same staged drop+rename
-    * swap as [[graft.sources.Bucketing.compactBucketed]] — the live
-    * table is replaced only after the compacted copy fully exists,
-    * and an interrupted swap finishes on the next verb or
-    * [[openBm25Index]]. `_df`/`_meta` are value-unchanged by
-    * compaction and stay. */
+    * every serving scan opens K× the files). Each table is a
+    * [[graft.sources.Bucketing.compactBucketed]] generation swap —
+    * the live table is re-pointed only after the compacted copy fully
+    * exists, and a reader pinned before the swap keeps scanning the
+    * old files. `_df`/`_meta` are value-unchanged by compaction and
+    * stay. */
   def compactBm25Index(spark: SparkSession, name: String): Unit =
     Bucketing.withIndexLease(spark, name, "compactBm25Index") {
       val (numBuckets, _) = bm25Meta(spark, name)
@@ -582,7 +582,7 @@ object Retrieval {
       name: String): DataFrame = {
     val spark = batch.sparkSession
     batch.join(
-      Bucketing.stableTable(spark, s"${name}_docs").select(col("doc_id").as("__bm_id")),
+      spark.table(s"${name}_docs").select(col("doc_id").as("__bm_id")),
       col(idCol) === col("__bm_id"), "left_anti")
   }
 
@@ -632,10 +632,10 @@ object Retrieval {
     if (nMissing > 0) appendToBm25Index(missing, idCol, textCol, name)
     // pass 2 reads the post-pass-1 tables fresh: pass 1's appends
     // carry complete postings, so they can never surface as holes
-    val holeIds = Bucketing.stableTable(spark, s"${name}_docs")
+    val holeIds = spark.table(s"${name}_docs")
       .filter(col("dl") > 0)
       .select(col("doc_id"))
-      .join(Bucketing.stableTable(spark, s"${name}_postings").select(col("doc_id"))
+      .join(spark.table(s"${name}_postings").select(col("doc_id"))
         .distinct(), Seq("doc_id"), "left_anti")
       .select(col("doc_id").as("__hole_id"))
     val holes = live
@@ -659,7 +659,7 @@ object Retrieval {
     // old index). One postings scan, the reconcile-verb cost class.
     if (nHoles > 0 || byDocTable(spark, name, numBuckets).isEmpty)
       Bucketing.writeBucketed(
-        byDocProjection(Bucketing.stableTable(spark, s"${name}_postings")),
+        byDocProjection(spark.table(s"${name}_postings")),
         s"${name}_postings_bydoc", "doc_id", numBuckets)
     nMissing + nHoles
     }
@@ -675,7 +675,7 @@ object Retrieval {
     Bucketing.withIndexLease(spark, name, "repairBm25Stats") {
       val (numBuckets, tokenizer) = bm25Meta(spark, name)
       Bucketing.compactBucketed(_ =>
-        Bucketing.stableTable(spark, s"${name}_postings").groupBy(col("term"))
+        spark.table(s"${name}_postings").groupBy(col("term"))
           .agg(count(lit(1)).as("df_t")))(
         spark, s"${name}_df", "term", numBuckets)
       writeBm25Meta(spark, name, numBuckets, tokenizer)
@@ -710,8 +710,7 @@ object Retrieval {
   }
 
   /** Re-registers a persisted BM25 index's tables from their
-    * warehouse directories in a fresh session, finishing any
-    * interrupted compact swap first ([[graft.operators.Dedup
+    * warehouse directories in a fresh session ([[graft.operators.Dedup
     * .openDedupIndex]]'s contract). */
   def openBm25Index(spark: SparkSession, name: String): Unit = {
     require(Bucketing.registerExisting(spark, s"${name}_meta", None),
@@ -719,14 +718,12 @@ object Retrieval {
     val (numBuckets, _) = bm25Meta(spark, name)
     Seq(("_postings", "term"), ("_df", "term"), ("_docs", "doc_id"))
       .foreach { case (suffix, bucketCol) =>
-        Bucketing.finishInterruptedSwap(spark, s"$name$suffix")
         require(Bucketing.registerExisting(spark, s"$name$suffix",
           Some((bucketCol, numBuckets))),
           s"BM25 index '$name' is missing its $name$suffix table")
       }
     // optional: indexes persisted before the doc-keyed projection
     // existed lack it (PRF mining falls back to the full-scan path)
-    Bucketing.finishInterruptedSwap(spark, s"${name}_postings_bydoc")
     Bucketing.registerExisting(spark, s"${name}_postings_bydoc",
       Some(("doc_id", numBuckets)))
     ()
@@ -777,7 +774,7 @@ object Retrieval {
           s"families $fams — merged postings would mean two things; " +
           "rebuild the odd one out first")
       val docsAll = sources
-        .map(s => Bucketing.stableTable(spark, s"${s}_docs"))
+        .map(s => spark.table(s"${s}_docs"))
         .reduce(_ unionByName _)
       // repartition for the SAME reason as the _df merge below:
       // count(DISTINCT) plans a keyed first stage, and a union of
@@ -795,7 +792,7 @@ object Retrieval {
       // `_meta` stays LAST, the existence readers key on
       graft.Par.run(
         () => Bucketing.writeBucketed(
-          sources.map(s => Bucketing.stableTable(spark, s"${s}_postings"))
+          sources.map(s => spark.table(s"${s}_postings"))
             .reduce(_ unionByName _),
           s"${target}_postings", "term", numBuckets),
         () => Bucketing.writeBucketed(docsAll, s"${target}_docs", "doc_id",
@@ -807,7 +804,7 @@ object Retrieval {
         () => Bucketing.writeBucketed(
           sources.zipWithIndex.map { case (s, i) =>
             byDocTable(spark, s, metas(i)._1).getOrElse(
-              byDocProjection(Bucketing.stableTable(spark, s"${s}_postings")))
+              byDocProjection(spark.table(s"${s}_postings")))
           }.reduce(_ unionByName _),
           s"${target}_postings_bydoc", "doc_id", numBuckets),
         // the explicit repartition is LOAD-BEARING: a union of
@@ -818,7 +815,7 @@ object Retrieval {
         // (observed on Spark 4.1.2; MergeDbgSpec-shape plan had
         // HashAggregate directly over Union, no Exchange)
         () => Bucketing.writeBucketed(
-          sources.map(s => Bucketing.stableTable(spark, s"${s}_df"))
+          sources.map(s => spark.table(s"${s}_df"))
             .reduce(_ unionByName _)
             .repartition(col("term"))
             .groupBy(col("term")).agg(sum(col("df_t")).as("df_t")),
@@ -990,7 +987,7 @@ object Retrieval {
       case None =>
         import spark.implicits._
         val fb = fbIds.map(_.toString).toDF("__fb_id")
-        Bucketing.stableTable(spark, s"${name}_postings")
+        spark.table(s"${name}_postings")
           .join(broadcast(fb),
             col("doc_id").cast("string") === col("__fb_id"), "left_semi")
     }
@@ -1052,11 +1049,11 @@ object Retrieval {
   private def bm25RawScoresFromIndex(spark: SparkSession, name: String,
       terms: Seq[String], k1: Double, b: Double,
       out: String): DataFrame = {
-    val post = Bucketing.stableTable(spark, s"${name}_postings")
+    val post = spark.table(s"${name}_postings")
       .filter(col("term").isin(terms: _*))
-    val dfT = Bucketing.stableTable(spark, s"${name}_df")
+    val dfT = spark.table(s"${name}_df")
       .filter(col("term").isin(terms: _*))
-    val stats = Bucketing.stableTable(spark, s"${name}_meta")
+    val stats = spark.table(s"${name}_meta")
       .select(col("n_docs"), col("sum_dl"))
     post.join(broadcast(dfT), Seq("term"))
       .join(broadcast(stats))
@@ -1176,11 +1173,11 @@ object Retrieval {
     requireQueryTerms("lmDirichletAgainstIndex", tokenizer, queryTerms)
     requireFamily("lmDirichletAgainstIndex", name,
       bm25Meta(spark, name)._2, tokenizer)
-    val post = Bucketing.stableTable(spark, s"${name}_postings")
+    val post = spark.table(s"${name}_postings")
       .filter(col("term").isin(queryTerms: _*))
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
     val cf = post.groupBy(col("term")).agg(sum(col("tf")).as("cf_t"))
-    val stats = Bucketing.stableTable(spark, s"${name}_meta")
+    val stats = spark.table(s"${name}_meta")
       .select(col("sum_dl").as("total_tokens"))
     scoreLmDirichlet(post, cf, stats, queryTerms.distinct.size, mu)
       .orderBy(col("ql").desc, col("doc_id"))
@@ -1281,16 +1278,16 @@ object Retrieval {
     requireQueryTerms("lmDirichletRanksAgainstIndex", tokenizer, termLits)
     if (termLits.isEmpty)
       return qt.select(col("query_id")).limit(0)
-        .crossJoin(Bucketing.stableTable(spark, s"${name}_postings")
+        .crossJoin(spark.table(s"${name}_postings")
           .select(col("doc_id").cast("long").as("doc_id")).limit(0))
         .select(col("query_id"), lit(0).cast("int").as("rank"),
           col("doc_id"), lit(0.0).as("ql"))
     val nq = qt.groupBy(col("query_id")).agg(count(lit(1)).as("__nq"))
-    val post = Bucketing.stableTable(spark, s"${name}_postings")
+    val post = spark.table(s"${name}_postings")
       .filter(col("term").isin(termLits: _*))
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
     val cf = post.groupBy(col("term")).agg(sum(col("tf")).as("cf_t"))
-    val stats = Bucketing.stableTable(spark, s"${name}_meta")
+    val stats = spark.table(s"${name}_meta")
       .select(col("sum_dl").as("total_tokens"))
     val perQuery = post.join(broadcast(cf), Seq("term"))
       .join(broadcast(stats))
@@ -1341,7 +1338,7 @@ object Retrieval {
     val termCounts = live
       .select(explode(tokensFor(tokenizer, col(textCol))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("__n"))
-      .join(Bucketing.stableTable(spark, s"${name}_df")
+      .join(spark.table(s"${name}_df")
         .select(col("term"), lit(1).as("__known")),
         Seq("term"), "left")
     val docsN = live.agg(count(lit(1)).as("n_batch_docs"))
@@ -1374,11 +1371,11 @@ object Retrieval {
     * anywhere) crossed broadcast-small. avgdl rounded to 4 decimals
     * (§6 rule). */
   def bm25IndexStats(spark: SparkSession, name: String): DataFrame = {
-    val nTerms = Bucketing.stableTable(spark, s"${name}_df")
+    val nTerms = spark.table(s"${name}_df")
       .agg(count(lit(1)).as("n_terms"))
-    val nPost = Bucketing.stableTable(spark, s"${name}_postings")
+    val nPost = spark.table(s"${name}_postings")
       .agg(count(lit(1)).as("n_postings"))
-    Bucketing.stableTable(spark, s"${name}_meta")
+    spark.table(s"${name}_meta")
       .crossJoin(broadcast(nTerms))
       .crossJoin(broadcast(nPost))
       .select(col("n_docs"), col("n_terms"), col("n_postings"),
@@ -1421,11 +1418,11 @@ object Retrieval {
       s"queryTerms must be distinct, got $queryTerms")
     require(topK >= 1, s"topK must be >= 1, got $topK")
     requireQueryTerms("bm25TopKAgainstIndex", tokenizer, queryTerms)
-    val post = Bucketing.stableTable(spark, s"${name}_postings")
+    val post = spark.table(s"${name}_postings")
       .filter(col("term").isin(queryTerms: _*))
-    val dfT = Bucketing.stableTable(spark, s"${name}_df")
+    val dfT = spark.table(s"${name}_df")
       .filter(col("term").isin(queryTerms: _*))
-    val stats = Bucketing.stableTable(spark, s"${name}_meta")
+    val stats = spark.table(s"${name}_meta")
       .select(col("n_docs"), col("sum_dl"))
     post.join(broadcast(dfT), Seq("term"))
       .join(broadcast(stats))
@@ -1482,15 +1479,15 @@ object Retrieval {
       // applies — hardcoded lits would force types a caller unioning
       // the empty-batch edge with the normal path only hits here
       return qt.select(col("query_id")).limit(0)
-        .crossJoin(Bucketing.stableTable(spark, s"${name}_postings")
+        .crossJoin(spark.table(s"${name}_postings")
           .select(col("doc_id").cast("long").as("doc_id")).limit(0))
         .select(col("query_id"), lit(0).cast("int").as("rank"),
           col("doc_id"), lit(0.0).as("bm25"))
-    val post = Bucketing.stableTable(spark, s"${name}_postings")
+    val post = spark.table(s"${name}_postings")
       .filter(col("term").isin(termLits: _*))
-    val dfT = Bucketing.stableTable(spark, s"${name}_df")
+    val dfT = spark.table(s"${name}_df")
       .filter(col("term").isin(termLits: _*))
-    val stats = Bucketing.stableTable(spark, s"${name}_meta")
+    val stats = spark.table(s"${name}_meta")
       .select(col("n_docs"), col("sum_dl"))
     val perQuery = post.join(broadcast(dfT), Seq("term"))
       .join(broadcast(stats))
@@ -1638,10 +1635,10 @@ object Retrieval {
     * terms' bucket-pruned postings and the one-row `_meta`. */
   private def indexPositions(spark: SparkSession, name: String,
       terms: Seq[String]): (DataFrame, DataFrame) = {
-    val pos = Bucketing.stableTable(spark, s"${name}_postings")
+    val pos = spark.table(s"${name}_postings")
       .filter(col("term").isin(terms: _*))
       .select(col("doc_id"), col("dl"), col("term"), col("positions"))
-    val stats = Bucketing.stableTable(spark, s"${name}_meta")
+    val stats = spark.table(s"${name}_meta")
       .select(col("n_docs"), col("sum_dl"))
     (pos, stats)
   }
@@ -1742,7 +1739,7 @@ object Retrieval {
       tokenizer: String = "ws"): DataFrame = {
     val top = bm25TopKAgainstIndex(spark, name, queryTerms, topK,
       k1, b, tokenizer).select(col("doc_id"), col("bm25"))
-    val pos = Bucketing.stableTable(spark, s"${name}_postings")
+    val pos = spark.table(s"${name}_postings")
       .filter(col("term").isin(queryTerms: _*))
       .select(col("doc_id"), col("term"), col("positions"))
     top.join(pos.hint("SHUFFLE_HASH"), Seq("doc_id"))

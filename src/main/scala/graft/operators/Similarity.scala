@@ -1338,23 +1338,23 @@ object Similarity {
       name: String, shard: String): Unit =
     graft.sources.Bucketing.withIndexLeases(spark, Seq(name, shard),
       "shardFromAnnIndex") {
-      val numBuckets = graft.sources.Bucketing
-        .stableTable(spark, s"${name}_meta").head().getAs[Int]("num_buckets")
+      val numBuckets = spark.table(s"${name}_meta").head()
+        .getAs[Int]("num_buckets")
       // three independent shard writes — overlapped (guide §2.6);
       // `_meta` stays LAST, the existence readers key on
       graft.Par.run(
         () => graft.sources.Bucketing.writeBucketed(
-          graft.sources.Bucketing.stableTable(spark, s"${name}_vectors")
+          spark.table(s"${name}_vectors")
             .limit(0),
           s"${shard}_vectors", "cell_id", numBuckets),
         () => graft.sources.Bucketing.writeTable(
-          graft.sources.Bucketing.stableTable(spark, s"${name}_cents"),
+          spark.table(s"${name}_cents"),
           s"${shard}_cents"),
         () => graft.sources.Bucketing.writeTable(
-          graft.sources.Bucketing.stableTable(spark, s"${name}_book"),
+          spark.table(s"${name}_book"),
           s"${shard}_book"))
       graft.sources.Bucketing.writeTable(
-        graft.sources.Bucketing.stableTable(spark, s"${name}_meta"),
+        spark.table(s"${name}_meta"),
         s"${shard}_meta")
     }
 
@@ -1412,7 +1412,7 @@ object Similarity {
             "from one shared geometry with shardFromAnnIndex")
       }
       val vecAll = sources
-        .map(s => graft.sources.Bucketing.stableTable(spark, s"${s}_vectors"))
+        .map(s => spark.table(s"${s}_vectors"))
         .reduce(_ unionByName _)
       val chk = vecAll
         .agg(count(lit(1)).as("n"),
@@ -1427,10 +1427,10 @@ object Similarity {
         () => graft.sources.Bucketing.writeBucketed(vecAll,
           s"${target}_vectors", "cell_id", numBuckets),
         () => graft.sources.Bucketing.writeTable(
-          graft.sources.Bucketing.stableTable(spark, s"${sources.head}_cents"),
+          spark.table(s"${sources.head}_cents"),
           s"${target}_cents"),
         () => graft.sources.Bucketing.writeTable(
-          graft.sources.Bucketing.stableTable(spark, s"${sources.head}_book"),
+          spark.table(s"${sources.head}_book"),
           s"${target}_book"))
       import spark.implicits._
       val g = geoms.head
@@ -1456,7 +1456,7 @@ object Similarity {
     graft.sources.Bucketing.withIndexLease(spark, name,
       "reconcileAnnIndex") {
       val missing = landed.filter(col(idCol).isNotNull)
-        .join(graft.sources.Bucketing.stableTable(spark, s"${name}_vectors")
+        .join(spark.table(s"${name}_vectors")
           .select(col("vec_id").as("__seen_id")),
           col(idCol).cast("long") === col("__seen_id"), "left_anti")
         .localCheckpoint(true)
@@ -1478,10 +1478,10 @@ object Similarity {
     * (cell_id, n_vecs, share) with share rounded to 4 decimals. */
   def annIndexStats(spark: org.apache.spark.sql.SparkSession,
       name: String): DataFrame = {
-    val counts = graft.sources.Bucketing.stableTable(spark, s"${name}_vectors")
+    val counts = spark.table(s"${name}_vectors")
       .groupBy(col("cell_id")).agg(count(lit(1)).as("__n"))
     val total = counts.agg(sum(col("__n")).as("__t"))
-    graft.sources.Bucketing.stableTable(spark, s"${name}_cents").select(col("cell_id"))
+    spark.table(s"${name}_cents").select(col("cell_id"))
       .join(broadcast(counts), Seq("cell_id"), "left")
       .crossJoin(broadcast(total))
       .select(col("cell_id"),
@@ -1517,12 +1517,10 @@ object Similarity {
   def annIngestDriftCard(spark: org.apache.spark.sql.SparkSession,
       name: String, batch: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    val cellCents = graft.sources.Bucketing
-      .stableTable(spark, s"${name}_cents").collect()
+    val cellCents = spark.table(s"${name}_cents").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toIndexedSeq))
       .sortBy(_._1).toIndexedSeq
-    val idx = graft.sources.Bucketing
-      .stableTable(spark, s"${name}_vectors")
+    val idx = spark.table(s"${name}_vectors")
       .groupBy(col("cell_id")).agg(count(lit(1)).as("__ni"))
     val bat = batch
       .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
@@ -1534,7 +1532,7 @@ object Similarity {
     def share(n: Column, t: Column): Column =
       round(when(t > 0, n.cast("double") / t.cast("double"))
         .otherwise(0.0), 4)
-    graft.sources.Bucketing.stableTable(spark, s"${name}_cents")
+    spark.table(s"${name}_cents")
       .select(col("cell_id"))
       .join(broadcast(idx), Seq("cell_id"), "left")
       .join(broadcast(bat), Seq("cell_id"), "left")
@@ -1578,11 +1576,11 @@ object Similarity {
     *
     * Crash safety — TWO tables must change together, so the write
     * order makes every window recoverable: (1) the new centroids
-    * stage durably under `_cents_stage`; (2) a filesystem marker
-    * (the [[graft.sources.Bucketing]] swap-marker discipline)
-    * declares the staged centroids the truth; (3) the vectors
-    * rewrite runs under its own compact swap; (4) the stage promotes
-    * over `_cents`; (5) marker, then stage, clear. Pre-marker a
+    * stage durably under `_cents_stage`; (2) a durable marker in the
+    * warehouse directory declares the staged centroids the truth;
+    * (3) the vectors rewrite is its own generation swap
+    * ([[graft.sources.Bucketing.compactBucketed]]); (4) the stage
+    * promotes over `_cents`; (5) marker, then stage, clear. Pre-marker a
     * leftover stage is simply dropped — the live index was never
     * touched. Post-marker, recovery ROLLS FORWARD: the rewrite is
     * idempotent (cell_id is recomputed from the stored vec against
@@ -1598,10 +1596,10 @@ object Similarity {
     graft.sources.Bucketing.withIndexLease(spark, name,
       "rebalanceAnnIndex") {
     finishInterruptedRebalance(spark, name)
-    val meta = graft.sources.Bucketing.stableTable(spark, s"${name}_meta").head()
+    val meta = spark.table(s"${name}_meta").head()
     val nlist = meta.getAs[Int]("nlist")
     val md5Sig = meta.getAs[Boolean]("md5_sig")
-    val contents = graft.sources.Bucketing.stableTable(spark, s"${name}_vectors")
+    val contents = spark.table(s"${name}_vectors")
     val sampleOrd =
       if (md5Sig) Dedup.md5Hash60(col("vec_id").cast("long").cast("string"))
       else xxhash64(col("vec_id").cast("long"))
@@ -1632,8 +1630,7 @@ object Similarity {
     var cellCents: IndexedSeq[(Long, IndexedSeq[Float])] = null
     var stagedBookCents: Option[IndexedSeq[IndexedSeq[Float]]] = None
     graft.Par.run(
-      () => metaRow = graft.sources.Bucketing
-        .stableTable(spark, s"${name}_meta").head(),
+      () => metaRow = spark.table(s"${name}_meta").head(),
       () => cellCents = spark.table(stage).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toIndexedSeq))
         .sortBy(_._1).toIndexedSeq,
@@ -1706,12 +1703,12 @@ object Similarity {
     graft.sources.Bucketing.withIndexLease(spark, name,
       "rebuildAnnIndex") {
     finishInterruptedRebalance(spark, name)
-    val meta = graft.sources.Bucketing.stableTable(spark, s"${name}_meta").head()
+    val meta = spark.table(s"${name}_meta").head()
     val nlist = meta.getAs[Int]("nlist")
     val m = meta.getAs[Int]("m")
     val ksub = meta.getAs[Int]("ksub")
     val md5Sig = meta.getAs[Boolean]("md5_sig")
-    val contents = graft.sources.Bucketing.stableTable(spark, s"${name}_vectors")
+    val contents = spark.table(s"${name}_vectors")
     val sampleOrd =
       if (md5Sig) Dedup.md5Hash60(col("vec_id").cast("long").cast("string"))
       else xxhash64(col("vec_id").cast("long"))
@@ -1753,9 +1750,9 @@ object Similarity {
 
   /** Retirement for the ANN index — [[graft.operators.Dedup
     * .retireFromDedupIndex]]'s takedown verb for vectors: removes
-    * the ids' (cell_id, codes, vec) rows in one crash-safe
-    * compact-with-filter rewrite (staged, swap-marked, restart-
-    * recoverable); centroids and codebooks are statistics over the
+    * the ids' (cell_id, codes, vec) rows in one compact-with-filter
+    * generation swap (the filtered copy is complete before the catalog
+    * re-points; a pinned reader keeps the old files); centroids and codebooks are statistics over the
     * historical corpus and deliberately stay — a takedown removes
     * the DOCUMENT, not the trained quantizer (re-training on
     * retirement would re-encode the entire index for every
@@ -1765,7 +1762,7 @@ object Similarity {
     val spark = ids.sparkSession
     graft.sources.Bucketing.withIndexLease(spark, name,
       "retireFromAnnIndex") {
-      val numBuckets = graft.sources.Bucketing.stableTable(spark, s"${name}_meta").head()
+      val numBuckets = spark.table(s"${name}_meta").head()
         .getAs[Int]("num_buckets")
       val rids = ids.filter(col(idCol).isNotNull)
         .select(col(idCol).cast("long").as("__rid")).distinct()
@@ -1784,11 +1781,8 @@ object Similarity {
     import graft.sources.Bucketing
     require(Bucketing.registerExisting(spark, s"${name}_meta", None),
       s"no persisted ANN index named '$name' in the warehouse")
-    val numBuckets = graft.sources.Bucketing.stableTable(spark, s"${name}_meta").head()
+    val numBuckets = spark.table(s"${name}_meta").head()
       .getAs[Int]("num_buckets")
-    // a prior process may have died inside retireFromAnnIndex's (or
-    // the rebalance's) compact swap — finish it before registering
-    Bucketing.finishInterruptedSwap(spark, s"${name}_vectors")
     require(Bucketing.registerExisting(spark, s"${name}_vectors",
       Some(("cell_id", numBuckets))),
       s"ANN index '$name' is missing its _vectors table")
@@ -1796,7 +1790,7 @@ object Similarity {
       require(Bucketing.registerExisting(spark, t, None),
         s"ANN index '$name' is missing its $t table")
     }
-    // ...and an interrupted REBALANCE rolls forward (marker set) or
+    // an interrupted REBALANCE rolls forward (marker set) or
     // clears its never-promoted stage (no marker)
     finishInterruptedRebalance(spark, name)
   }
@@ -1910,7 +1904,7 @@ object Similarity {
       .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qv"))
     val nq = qv.count() // bounded: an eval-sized probe batch
     require(nq >= 1, s"recall sweep over '$name': empty query batch")
-    val contents = graft.sources.Bucketing.stableTable(spark, s"${name}_vectors")
+    val contents = spark.table(s"${name}_vectors")
       .select(col("vec_id").as("neighbor_id"), col("vec").as("__cv"))
     val truth = contents
       .join(broadcast(qv), col("neighbor_id") =!= col("query_id"))
@@ -1996,14 +1990,11 @@ object Similarity {
     var cc: IndexedSeq[(Long, IndexedSeq[Float])] = null
     var bc: IndexedSeq[IndexedSeq[Float]] = null
     graft.Par.run(
-      () => meta = graft.sources.Bucketing
-        .stableTable(spark, s"${name}_meta").head(),
-      () => cc = graft.sources.Bucketing
-        .stableTable(spark, s"${name}_cents").collect()
+      () => meta = spark.table(s"${name}_meta").head(),
+      () => cc = spark.table(s"${name}_cents").collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toIndexedSeq))
         .sortBy(_._1).toIndexedSeq,
-      () => bc = graft.sources.Bucketing
-        .stableTable(spark, s"${name}_book").collect()
+      () => bc = spark.table(s"${name}_book").collect()
         .sortBy(_.getInt(0)).map(_.getSeq[Float](1).toIndexedSeq)
         .toIndexedSeq)
     AnnGeom(meta, cc, bc)
@@ -2032,7 +2023,7 @@ object Similarity {
     * the cell_id equi-join governs the result). */
   private def annAdcScored(spark: org.apache.spark.sql.SparkSession,
       name: String, q: DataFrame, probed: Seq[Long]): DataFrame =
-    graft.sources.Bucketing.stableTable(spark, s"${name}_vectors")
+    spark.table(s"${name}_vectors")
       .filter(col("cell_id").isin(probed: _*))
       .join(broadcast(q.select(col("query_id"), col("lut"),
         col("cell_id"))), Seq("cell_id"))
@@ -2049,7 +2040,7 @@ object Similarity {
       rankTopK(scored, k * shortlistFactor)
         .select(col("query_id"), col("neighbor_id")),
       queries,
-      graft.sources.Bucketing.stableTable(spark, s"${name}_vectors")
+      spark.table(s"${name}_vectors")
         .select(col("vec_id").as(idCol), col("vec").as(vecCol)),
       idCol, vecCol, k)
 
@@ -2096,7 +2087,7 @@ object Similarity {
         col("__probe").getField("cell_id").as("cell_id"))
     val probed = q.select(col("cell_id")).distinct().collect()
       .map(_.getLong(0)).toSeq
-    graft.sources.Bucketing.stableTable(spark, s"${name}_vectors")
+    spark.table(s"${name}_vectors")
       .filter(col("cell_id").isin(probed: _*))
       .join(broadcast(q), Seq("cell_id"))
       .filter(col("query_id") =!= col("vec_id"))

@@ -928,9 +928,9 @@ object TextAnalysis {
   def scoreWithNbModel(docs: DataFrame, idCol: String, textCol: String,
       name: String): DataFrame = {
     val spark = docs.sparkSession
-    val weights = graft.sources.Bucketing.stableTable(spark, s"${name}_weights")
+    val weights = spark.table(s"${name}_weights")
       .select(col("term"), col("w").as("__w"))
-    val meta = graft.sources.Bucketing.stableTable(spark, s"${name}_meta")
+    val meta = spark.table(s"${name}_meta")
     val toks = docs
       .filter(col(idCol).isNotNull && col(textCol).isNotNull)
       .select(col(idCol), explode(Dedup.tokens(col(textCol))).as("term"))

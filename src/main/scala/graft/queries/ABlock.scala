@@ -251,7 +251,7 @@ object ABlock {
       if (!s.catalog.tableExists(table))
         graft.sources.Bucketing.writeBucketedEvents(
           ke(s, d).filter(col("time") >= T0 && col("time") < T1), table)
-      graft.sources.Bucketing.read(s, table)
+      s.table(table)
         .groupBy(col("userid"))
         .agg(count(lit(1)).as("n"),
           countDistinct(col("dt")).as("n_days"),

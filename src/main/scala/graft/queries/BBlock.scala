@@ -539,8 +539,8 @@ object BBlock {
         graft.sources.Bucketing.writeBucketed(
           Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment")),
           ct, "c_custkey", 8)
-      graft.sources.Bucketing.read(s, ot)
-        .join(graft.sources.Bucketing.read(s, ct),
+      s.table(ot)
+        .join(s.table(ct),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),

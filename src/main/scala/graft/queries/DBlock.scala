@@ -2785,27 +2785,27 @@ object DBlock {
         .orderBy(col("doc_id"))
     }),
 
-    // D103: READER-vs-WRITER consistency — the snapshot-pointer
-    // contract (VersionedTable): a reader that resolved a generation
-    // BEFORE a maintenance rewrite keeps scanning its own immutable
-    // snapshot to completion while new readers see the new
-    // generation; no instant at which either observes a missing
-    // table. The entry runs the race in sequence — publish v1, PIN a
-    // reader on it, rewrite to v2 (a retention sweep), then count
-    // through BOTH handles — and the oracle re-derives both counts
-    // from the corpus, so a hash match proves the pinned snapshot
-    // really is the pre-rewrite corpus and the current one the
-    // post-rewrite corpus, not two reads of one mutating table.
+    // D103: READER-vs-WRITER consistency — the generation swap's
+    // reader contract: a reader that resolved a table BEFORE a
+    // maintenance rewrite keeps scanning its own immutable generation
+    // to completion while new readers see the new generation; no
+    // instant at which either observes a missing table. The entry
+    // runs the race in sequence — write the table, PIN a reader on
+    // it, compact it through a retention sweep (a generation swap),
+    // then count through BOTH handles — and the oracle re-derives both
+    // counts from the corpus, so a hash match proves the pinned
+    // snapshot really is the pre-rewrite corpus and the current one
+    // the post-rewrite corpus, not two reads of one mutating table.
     "d137_versioned_read" -> ((s, d) => {
-      import graft.sources.VersionedTable
+      import graft.sources.Bucketing
       val docs = Tables.documents(s, d)
         .filter(col("doc_id").isNotNull && col("text").isNotNull)
         .select(col("doc_id"), col("text"))
-      VersionedTable.publishBucketed(docs, "d137_vt", "doc_id", 8)
-      val pinned = VersionedTable.read(s, "d137_vt") // resolves v1
-      VersionedTable.rewriteBucketed(s, "d137_vt",
-        _.filter(col("doc_id") % 3 =!= 0), "doc_id", 8)
-      val cur = VersionedTable.read(s, "d137_vt") // resolves v2
+      Bucketing.writeBucketed(docs, "d137_vt", "doc_id", 8)
+      val pinned = s.table("d137_vt") // resolves the written generation
+      Bucketing.compactBucketed(_.filter(col("doc_id") % 3 =!= 0))(
+        s, "d137_vt", "doc_id", 8)
+      val cur = s.table("d137_vt") // resolves the swapped-in generation
       pinned.agg(count(lit(1)).as("n"))
         .select(lit("pinned_v1").as("snapshot"), col("n"))
         .unionByName(cur.agg(count(lit(1)).as("n"))

@@ -27,21 +27,6 @@ object Bucketing {
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Durable record that [[compactBucketed]]'s swap is between its
-    * drop and its rename — the one non-atomic window. Lives in the
-    * warehouse DIRECTORY (not the catalog), so it survives a process
-    * death even under the default in-memory catalog, letting the
-    * next call detect and finish the interrupted swap. */
-  private def swapMarker(spark: SparkSession, table: String) =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      s"${table.toLowerCase}__swap_pending")
-
-  /** Drop a table AND its leftover warehouse directory. A fresh
-    * session's in-memory catalog forgets managed tables but their
-    * directories persist, and a stale location fails the next CREATE
-    * with LOCATION_ALREADY_EXISTS. Also clears any pending-swap
-    * marker: a rebuild supersedes an interrupted compaction. */
   /** Public face of [[dropStale]] for index families with OPTIONAL
     * side tables (the sim index's lazily-created `_vchunks` /
     * `_vframes`): a rebuild must clear them explicitly — they are
@@ -52,14 +37,18 @@ object Bucketing {
   def dropTableAndDir(spark: SparkSession, table: String): Unit =
     dropStale(spark, table)
 
+  /** Drop a table AND its leftover warehouse directories. A fresh
+    * session's in-memory catalog forgets managed tables but their
+    * directories persist, and a stale location fails the next CREATE
+    * with LOCATION_ALREADY_EXISTS. Also clears a legacy swap crash
+    * state ([[adoptLegacySwap]]): a rebuild supersedes it. */
   private def dropStale(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     spark.sql(s"DROP TABLE IF EXISTS `${table}__gen_stage`")
+    adoptLegacySwap(spark, table)
     val loc = tableDir(spark, table)
     val fs = fsOf(spark, loc)
     if (fs.exists(loc)) fs.delete(loc, true)
-    val mk = swapMarker(spark, table)
-    if (fs.exists(mk)) fs.delete(mk, false)
     // sweep generation directories and pointers (see the
     // "generation-location swap" section below) — prefix-filtered
     // listing, not a full warehouse scan
@@ -70,17 +59,16 @@ object Bucketing {
   }
 
   // ---------------------------------------------------------------
-  // Generation-location swap — scan-time snapshot isolation for
-  // REWRITTEN tables (the window [[stableTable]]'s scaladoc names).
+  // Generation-location swap — the one way an existing table is
+  // replaced, whatever the new shape (compaction, reband, rebalance,
+  // retire sweep, rebuild, a re-shape with new columns or a new
+  // bucket spec).
   //
-  // A maintenance rewrite (compaction, reband, rebalance, retire
-  // sweep) used to replace a table via drop→rename: crash-safe for
-  // the writer, but a reader that resolved the table BEFORE the swap
-  // and is still scanning when the old files are deleted dies
-  // mid-query — at 100 TB with streaming loops compacting while
-  // dashboards serve, that fires daily. The fix is the
-  // [[VersionedTable]] pointer discipline applied to the table's
-  // LOCATION, with the catalog entry as the pointer:
+  // A reader that resolved a table BEFORE a rewrite must be able to
+  // scan it to completion, and no reader may ever find the name
+  // absent — at 100 TB with streaming loops compacting while
+  // dashboards serve, a rewrite that deleted the files under a live
+  // scan would fire daily. The catalog entry is the pointer:
   //
   //   - each rewrite builds generation g+1 COMPLETELY in a fresh
   //     directory `<table>__g<g+1>` (generation 0 is the legacy
@@ -89,18 +77,21 @@ object Bucketing {
   //     records the new generation FIRST (a restart resolves through
   //     it, so a crash after this point already serves the new
   //     generation via [[registerExisting]]);
-  //   - `ALTER TABLE .. SET LOCATION` repoints the catalog entry —
-  //     ONE atomic catalog op, so there is NO instant at which the
-  //     table is absent (the drop→rename resolve window is gone, not
-  //     just retried around);
+  //   - ONE `SessionCatalog.alterTable` call re-points the catalog
+  //     entry's location, schema and bucket spec together, so there
+  //     is NO instant at which the table is absent and a re-shape
+  //     needs no drop-and-recreate;
   //   - the generation BEFORE the replaced one retires; the replaced
   //     one stays on disk for one further rewrite, so a reader that
   //     resolved just before the flip keeps scanning immutable files
-  //     to completion — the VersionedTable reader grace, location-
-  //     level.
+  //     to completion (the reader grace).
   //
   // The table NAME never changes, so every call site (and every
   // serve path) inherits snapshot isolation with zero changes.
+  //
+  // Scope: the default in-memory catalog stores the whole altered
+  // definition, schema and bucket spec included. A Hive metastore
+  // catalog treats schema changes differently and is untested here.
   // ---------------------------------------------------------------
 
   private def genPtrPrefix(table: String) = s"${table.toLowerCase}__gptr_"
@@ -146,7 +137,7 @@ object Bucketing {
 
   /** Create-then-sweep pointer flip (max wins; a crash between the
     * two steps leaves two pointers, resolved to the max and swept by
-    * the next flip — the [[VersionedTable]] pointer discipline). */
+    * the next flip). */
   private def flipGenPointer(spark: SparkSession, table: String,
       next: Long): Unit = {
     val wh = new org.apache.hadoop.fs.Path(
@@ -162,48 +153,11 @@ object Bucketing {
       .foreach(fs.delete(_, false))
   }
 
-  /** Can `table` be replaced by a generation swap instead of a
-    * drop-and-recreate? Yes iff it exists in the catalog and neither
-    * its schema (names+types) nor its bucket layout changes — SET
-    * LOCATION moves only the data, so the catalog metadata must stay
-    * valid for the new files. A genuine re-shape (new columns, new
-    * bucket spec) takes the legacy full-replace path, disclosed as
-    * the one remaining reader window of that (rare, rebuild-class)
-    * verb. */
-  private def canGenerationSwap(spark: SparkSession, table: String,
-      schema: org.apache.spark.sql.types.StructType,
-      bucketSpec: Option[(String, Int)]): Boolean = {
-    if (!spark.catalog.tableExists(table)) return false
-    try {
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      val sameSchema = meta.schema.fields.map(f =>
-        (f.name.toLowerCase, f.dataType)).toSeq ==
-        schema.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq
-      val sameBuckets = (meta.bucketSpec, bucketSpec) match {
-        case (None, None) => true
-        case (Some(b), Some((c, n))) =>
-          b.numBuckets == n &&
-            b.bucketColumnNames.map(_.toLowerCase) == Seq(c.toLowerCase)
-        case _ => false
-      }
-      sameSchema && sameBuckets
-    } catch { case _: Exception => false }
-  }
-
-  /** The swap itself: build generation g+1 fully in its own
-    * directory (under a throwaway stage catalog name — external, so
-    * dropping the alias never touches the files), flip the durable
-    * pointer, repoint the live entry with ONE atomic ALTER, then
-    * retire generations `<= g-1` (down-walk, stops at the first
-    * absent — O(1) steady-state, self-healing after a crashed
-    * retire). The replaced generation g stays alive for in-flight
-    * scanners. */
   /** The generation encoded in `table`'s CURRENT catalog location —
     * what readers resolving the table right now actually scan. The
     * pointer can legitimately run AHEAD of this (a crash between
-    * [[flipGenPointer]] and the ALTER), so retire decisions must key
-    * off the served generation, never the pointer. */
+    * [[flipGenPointer]] and the re-point), so retire decisions must
+    * key off the served generation, never the pointer. */
   private def servedGenerationOf(spark: SparkSession,
       table: String): Long = {
     val name = new org.apache.hadoop.fs.Path(
@@ -216,6 +170,36 @@ object Bucketing {
     else 0L
   }
 
+  /** Re-points `table`'s live catalog entry at `loc` with ONE
+    * `SessionCatalog.alterTable` call that sets the location, the
+    * schema and the bucket spec together, then refreshes the
+    * session's cached relation. A DataFrame resolved before the call
+    * keeps its own relation and scans the old files. */
+  private def repoint(spark: SparkSession, table: String,
+      loc: org.apache.hadoop.fs.Path,
+      schema: org.apache.spark.sql.types.StructType,
+      bucketSpec: Option[(String, Int)]): Unit = {
+    val catalog = spark.sessionState.catalog
+    val meta = catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table))
+    catalog.alterTable(meta.copy(
+      storage = meta.storage.copy(locationUri = Some(loc.toUri)),
+      schema = schema,
+      bucketSpec = bucketSpec.map { case (c, n) =>
+        org.apache.spark.sql.catalyst.catalog.BucketSpec(n, Seq(c), Seq(c))
+      },
+      stats = None))
+    spark.catalog.refreshTable(table)
+  }
+
+  /** The swap itself: build generation g+1 fully in its own
+    * directory (under a throwaway stage catalog name — external, so
+    * dropping the alias never touches the files), flip the durable
+    * pointer, [[repoint]] the live entry to the stage's location,
+    * schema and bucket spec, then retire generations `<= g-1`
+    * (down-walk, stops at the first absent — O(1) steady-state,
+    * self-healing after a crashed retire). The replaced generation g
+    * stays alive for in-flight scanners. */
   private def generationSwap(df: DataFrame, table: String,
       bucketSpec: Option[(String, Int)]): Unit = {
     val spark = df.sparkSession
@@ -230,17 +214,20 @@ object Bucketing {
       .option("path", nextDir.toString)
     bucketSpec.fold(w)(bs =>
       w.bucketBy(bs._2, bs._1).sortBy(bs._1)).saveAsTable(stage)
+    // the schema as the parquet relation recorded it for the stage
+    // (nullability normalized), not the DataFrame's
+    val schema = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(stage)).schema
     // the retire floor derives from what the catalog SERVED until
     // this instant, not from the pointer: after a crash between a
-    // prior swap's pointer flip and its ALTER, the pointer reads g+1
-    // while the catalog still serves g — a pointer-derived floor
+    // prior swap's pointer flip and its re-point, the pointer reads
+    // g+1 while the catalog still serves g — a pointer-derived floor
     // would then retire g, deleting the directory in-flight readers
     // were promised one rewrite of grace on. servedGen keeps its
     // grace; only generations strictly below it retire.
     val servedGen = servedGenerationOf(spark, table)
     flipGenPointer(spark, table, next)
-    spark.sql(s"ALTER TABLE `$table` SET LOCATION '$nextDir'")
-    spark.catalog.refreshTable(table)
+    repoint(spark, table, nextDir, schema, bucketSpec)
     spark.sql(s"DROP TABLE IF EXISTS `$stage`") // external: files stand
     var g = math.min(servedGen, cur) - 1
     var walking = true
@@ -252,11 +239,24 @@ object Bucketing {
     }
   }
 
+  /** Replace `table` with `df`: a [[generationSwap]] when the table
+    * exists, whatever the new shape; otherwise create it fresh over
+    * any stale directories ([[dropStale]]). */
+  private def replace(df: DataFrame, table: String,
+      bucketSpec: Option[(String, Int)]): Unit =
+    if (df.sparkSession.catalog.tableExists(table))
+      generationSwap(df, table, bucketSpec)
+    else {
+      dropStale(df.sparkSession, table)
+      val w = df.write.mode("overwrite").format("parquet")
+      bucketSpec.fold(w)(bs =>
+        w.bucketBy(bs._2, bs._1).sortBy(bs._1)).saveAsTable(table)
+    }
+
   /** GENERATION-LEVEL TIME TRAVEL for a swap-maintained table — the
     * audit read ("what did the index hold before that compaction?")
-    * that [[VersionedTable.readVersion]] gives pointer tables and
-    * [[SnapshotEventStore.readSnapshot]] gives the event store, at
-    * location grain: reads generation `g`'s directory directly
+    * that [[SnapshotEventStore.readSnapshot]] gives the event store,
+    * at location grain: reads generation `g`'s directory directly
     * (g = 0 is the legacy managed directory). Valid for the live
     * generation and the one-rewrite grace generation; an already-
     * retired generation fails loudly naming the live one. Plain
@@ -294,8 +294,8 @@ object Bucketing {
       val live = generationOf(spark, table)
       // the keep-set follows what the CATALOG serves, not just the
       // pointer (the generationSwap retire-floor rule): after a crash
-      // between a swap's pointer flip and its ALTER the pointer runs
-      // ahead of the served generation — a pointer-only keep-set of
+      // between a swap's pointer flip and its re-point the pointer
+      // runs ahead of the served generation — a pointer-only keep-set of
       // {live, live-1} would then delete the served generation's
       // promised grace while preserving a never-served build. Keep
       // the pointer generation (what re-open resolves), the served
@@ -325,9 +325,10 @@ object Bucketing {
 
   /** Durable filesystem markers for MULTI-table maintenance verbs
     * (the ANN rebalance changes centroids AND assignments together):
-    * same warehouse-directory durability as [[swapMarker]], named by
-    * the caller, so an index family can declare "the staged state is
-    * now the truth" across a process death. */
+    * files in the warehouse DIRECTORY (not the catalog), named by the
+    * caller, so an index family can declare "the staged state is now
+    * the truth" across a process death, even under the default
+    * in-memory catalog. */
   private[graft] def createMarker(spark: SparkSession, tag: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), tag)
@@ -522,26 +523,22 @@ object Bucketing {
   def maintenanceMarkerExists(spark: SparkSession, tag: String): Boolean =
     markerExists(spark, tag)
 
-  /** Cross-restart half of the swap recovery: if a PRIOR PROCESS
-    * died inside [[compactBucketed]]'s drop→rename window (durable
-    * marker present, catalog — having not survived the restart —
-    * knows neither the live nor the staging table), finish the swap
-    * at the filesystem level: the staging directory holds the
-    * complete compacted copy (it is fully written before the marker
-    * appears), so it becomes the live directory. No-op otherwise.
-    * Idempotent. Callers then [[registerExisting]] to restore the
-    * catalog entry. */
-  def finishInterruptedSwap(spark: SparkSession, table: String): Unit = {
-    val tmp = s"${table}__compact_tmp"
-    val mk = swapMarker(spark, table)
+  /** Adopts the on-disk crash state of the staged drop-and-rename
+    * swap earlier releases ran for re-shaping compactions: a
+    * `<table>__swap_pending` marker means a process died between that
+    * swap's drop and its rename, and the `<table>__compact_tmp`
+    * directory beside it (complete before the marker was written)
+    * becomes the live directory. No-op without the marker;
+    * idempotent. Nothing writes either name any more, so this only
+    * ever meets a warehouse an earlier release crashed in. Callers
+    * run it while `table` is absent from the catalog. */
+  private def adoptLegacySwap(spark: SparkSession, table: String): Unit = {
+    val mk = tableDir(spark, s"${table}__swap_pending")
     val fs = fsOf(spark, mk)
     if (!fs.exists(mk)) return
-    if (spark.catalog.tableExists(table) || spark.catalog.tableExists(tmp))
-      return // in-session state: the catalog-based recovery path owns it
     val live = tableDir(spark, table)
-    val stage = tableDir(spark, tmp)
+    val stage = tableDir(spark, s"${table}__compact_tmp")
     if (fs.exists(stage)) {
-      // marker ⇒ staging is complete; prefer it over any live leftover
       if (fs.exists(live)) fs.delete(live, true)
       fs.rename(stage, live)
     }
@@ -551,7 +548,8 @@ object Bucketing {
   /** Re-registers a table from its surviving warehouse directory
     * after a restart (the default in-memory catalog forgets every
     * managed table; the parquet files — bucket ids encoded in their
-    * file names — persist). Schema is read from the files; the
+    * file names — persist), first adopting a legacy swap crash state
+    * ([[adoptLegacySwap]]). Schema is read from the files; the
     * bucket spec must be passed because parquet does not record it.
     * Returns false if the directory does not exist either. */
   def registerExisting(spark: SparkSession, table: String,
@@ -564,23 +562,20 @@ object Bucketing {
       // swapped this table since this session resolved it — our
       // catalog entry then pins a directory the writer retires one
       // rewrite later, and without this the reader's scans fail
-      // FOREVER (the old in-place swap kept the location constant;
-      // the generation swap must re-point on re-open instead). A
-      // reader that merely holds a resolved DataFrame still has the
-      // one-rewrite grace; re-opening through here (the openXxx
-      // verbs' path) realigns it to the live generation.
-      if (gen > 0L) {
+      // FOREVER. A reader that merely holds a resolved DataFrame
+      // still has the one-rewrite grace; re-opening through here (the
+      // openXxx verbs' path) re-points it to the live generation,
+      // with that generation's schema, so a re-shape by the other
+      // session is picked up too.
+      if (gen > 0L && servedGenerationOf(spark, table) != gen) {
         val live = genDirPath(spark, table, gen)
-        val cur = new org.apache.hadoop.fs.Path(
-          spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-        if (cur.getName != live.getName && fsOf(spark, live).exists(live)) {
-          spark.sql(s"ALTER TABLE `$table` SET LOCATION '$live'")
-          spark.catalog.refreshTable(table)
-        }
+        if (fsOf(spark, live).exists(live))
+          repoint(spark, table, live,
+            spark.read.parquet(live.toString).schema, bucketSpec)
       }
       return true
     }
+    adoptLegacySwap(spark, table)
     val loc = if (gen == 0L) tableDir(spark, table)
       else genDirPath(spark, table, gen)
     if (!fsOf(spark, loc).exists(loc)) return false
@@ -594,69 +589,19 @@ object Bucketing {
     true
   }
 
-  /** Write `df` as a bucketed+sorted managed table. Idempotent across
-    * sessions (see [[dropStale]]). When the table already exists with
-    * the same schema and bucket layout (a rebuild/reband/rebalance
-    * replacing content, the common maintenance shape), the replace is
-    * a generation-location swap: the table name is never absent from
-    * the catalog and a reader mid-scan keeps its old generation's
-    * files — scan-time snapshot isolation for every maintenance verb
-    * that funnels through here, zero call-site changes. A re-SHAPE
-    * (different columns or bucket spec) still drops and recreates. */
+  /** Write `df` as a bucketed+sorted table. Idempotent across
+    * sessions (see [[dropStale]]). When the table already exists the
+    * replace is a [[generationSwap]], whatever the new shape: the
+    * table name is never absent from the catalog and a reader
+    * mid-scan keeps its old generation's files — scan-time snapshot
+    * isolation for every maintenance verb that funnels through here,
+    * zero call-site changes. */
   def writeBucketed(
       df: DataFrame,
       table: String,
       bucketCol: String,
-      numBuckets: Int): Unit = {
-    val spec = Some((bucketCol, numBuckets))
-    if (canGenerationSwap(df.sparkSession, table, df.schema, spec))
-      generationSwap(df, table, spec)
-    else {
-      dropStale(df.sparkSession, table)
-      df.write
-        .mode("overwrite")
-        .format("parquet")
-        .bucketBy(numBuckets, bucketCol)
-        .sortBy(bucketCol)
-        .saveAsTable(table)
-    }
-  }
-
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
-  /** READER half of the reader-vs-writer contract on swap-maintained
-    * tables: [[compactBucketed]]'s drop→rename window is writer-safe
-    * (marker + lease) but a concurrent READER resolving the table
-    * inside it sees TABLE_OR_VIEW_NOT_FOUND for the few milliseconds
-    * the catalog is between names. This resolve retries while (and
-    * only while) the table's swap marker shows a swap in flight —
-    * a genuinely absent table still fails immediately and loudly,
-    * and the reader never MUTATES anything (rolling an interrupted
-    * swap forward is the next WRITER's job; a reader doing it would
-    * race the live writer it is waiting for).
-    *
-    * Scope: this closes the RESOLVE window for the legacy staged
-    * swap (now only the re-SHAPE fallback path — see
-    * [[compactBucketed]]). The scan-time window — a reader still
-    * scanning files a swap deletes — is closed by the
-    * generation-location swap for same-shape rewrites and by
-    * [[VersionedTable]] for pointer-resolved tables. */
-  def stableTable(spark: SparkSession, table: String,
-      maxWaitMs: Long = 30000L): DataFrame = {
-    val mk = swapMarker(spark, table)
-    val fs = fsOf(spark, mk)
-    val deadline = System.currentTimeMillis() + maxWaitMs
-    while (true) {
-      try return spark.table(table)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          if (System.currentTimeMillis() >= deadline || !fs.exists(mk))
-            throw e
-          Thread.sleep(50L)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      numBuckets: Int): Unit =
+    replace(df, table, Some((bucketCol, numBuckets)))
 
   /** APPEND to an existing bucketed table with a matching spec — new
     * rows land in new per-bucket files (no rewrite of existing data),
@@ -674,71 +619,29 @@ object Bucketing {
       .sortBy(bucketCol)
       .saveAsTable(table)
 
-  /** Write a small unbucketed managed table (drop-and-replace,
-    * idempotent across sessions like [[writeBucketed]], and like it
-    * a generation-location swap when the shape is unchanged — stats
-    * and meta tables are replaced on every append/maintenance verb,
-    * so their readers get the same never-absent guarantee). */
-  def writeTable(df: DataFrame, table: String): Unit = {
-    if (canGenerationSwap(df.sparkSession, table, df.schema, None))
-      generationSwap(df, table, None)
-    else {
-      dropStale(df.sparkSession, table)
-      df.write.mode("overwrite").format("parquet").saveAsTable(table)
-    }
-  }
+  /** Write a small unbucketed table, idempotent across sessions like
+    * [[writeBucketed]] and, like it, a [[generationSwap]] when the
+    * table exists — stats and meta tables are replaced on every
+    * append/maintenance verb, so their readers get the same
+    * never-absent guarantee. */
+  def writeTable(df: DataFrame, table: String): Unit =
+    replace(df, table, None)
 
   /** Rewrites a bucketed table accreted by [[appendBucketed]] back to
     * one file per bucket (every append adds a file per bucket; after
-    * K appends each bucketed scan opens K× the files). The rewrite is
-    * a generation-location swap (see [[generationSwap]]): the
-    * compacted copy is built COMPLETELY in the next generation's
-    * directory, the catalog entry repoints with one atomic ALTER, and
-    * the replaced generation's files survive one further rewrite for
-    * in-flight scanners — no instant at which the table is absent
-    * (the old drop→rename resolve window) and no deletion a pinned
-    * reader can observe (the old scan-time window). A transform that
-    * changes the SCHEMA (rare; retire sweeps keep it) falls back to
-    * the legacy staged drop→rename, still guarded by the durable
-    * [[swapMarker]]. Legacy crash states (a marker + staging left by
-    * the old mechanism, or by the fallback) are finished on entry. */
+    * K appends each bucketed scan opens K× the files), through
+    * `df`'s transform (a retire sweep's anti-join, a re-distinct).
+    * The rewrite is a [[generationSwap]] whatever the transform does
+    * to the schema: the compacted copy is built COMPLETELY in the
+    * next generation's directory, the catalog entry re-points in one
+    * call, and the replaced generation's files survive one further
+    * rewrite for in-flight scanners. */
   def compactBucketed(
       df: DataFrame => DataFrame = identity)(
       spark: SparkSession, table: String, bucketCol: String,
-      numBuckets: Int): Unit = {
-    finishInterruptedSwap(spark, table)
-    val tmp = s"${table}__compact_tmp"
-    val fs = fsOf(spark, swapMarker(spark, table))
-    if (!spark.catalog.tableExists(table)) {
-      require(spark.catalog.tableExists(tmp),
-        s"neither $table nor its compact staging exists")
-      spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-      fs.delete(swapMarker(spark, table), false)
-      return
-    }
-    val out = df(spark.table(table))
-    val spec = Some((bucketCol, numBuckets))
-    if (canGenerationSwap(spark, table, out.schema, spec)) {
-      generationSwap(out, table, spec)
-      return
-    }
-    dropStale(spark, tmp)
-    out.write
-      .format("parquet")
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(tmp)
-    fs.create(swapMarker(spark, table), true).close()
-    spark.sql(s"DROP TABLE `$table`")
-    // a table re-registered by [[registerExisting]] is external —
-    // DROP leaves its directory, and the rename below must find the
-    // live location free (no-op for managed tables, whose DROP
-    // already deleted it)
-    val liveDir = tableDir(spark, table)
-    if (fs.exists(liveDir)) fs.delete(liveDir, true)
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-    fs.delete(swapMarker(spark, table), false)
-  }
+      numBuckets: Int): Unit =
+    generationSwap(df(spark.table(table)), table,
+      Some((bucketCol, numBuckets)))
 
   /** Event-store layout for user-centric workloads: dt/hour PARTITIONS
     * (time-range directory pruning, like [[SnapshotEventStore.append]]) plus

@@ -46,7 +46,8 @@ import org.apache.spark.sql.functions._
   *    compaction/retention rewrite publishes a manifest WITHOUT the
   *    replaced files and leaves them on disk for one further
   *    maintenance cycle ([[retire]]'s `keepSnapshots` grace, the
-  *    [[VersionedTable]] reader contract at file grain);
+  *    one-rewrite reader grace of [[Bucketing]]'s generation swap at
+  *    file grain);
   *  - a whole-partition retention drop is METADATA-ONLY (the files
   *    leave the manifest; the directory is untouched until retire) —
   *    cheaper than the directory delete it replaces, and undoable
@@ -58,7 +59,7 @@ import org.apache.spark.sql.functions._
   * cycles (default 1). Size it to the longest query a store serves —
   * back-to-back maintenance with the default grace can outrun a
   * reader that resolved two cycles ago, exactly the disclosed
-  * [[VersionedTable]] contract.
+  * contract of [[Bucketing]]'s generation swap.
   *
   * Writers serialize through the single-writer lease
   * ([[Bucketing.withIndexLease]], keyed by the store path); readers
@@ -671,7 +672,7 @@ object SnapshotEventStore {
   /** TIME-TRAVEL read of an EXPLICIT snapshot — audit/debug ("what
     * did the store hold before that sweep?"), valid for any snapshot
     * not yet retired; a retired one fails loudly naming the live
-    * snapshot (the [[VersionedTable.readVersion]] contract at store
+    * snapshot (the [[Bucketing.readGeneration]] contract at store
     * level). The schema is the SNAPSHOT'S OWN header — a column
     * appended after snapshot `n` does not appear in its time-travel
     * read, and an empty snapshot is typed by its own header. Memoized

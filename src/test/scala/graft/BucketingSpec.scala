@@ -24,8 +24,8 @@ class BucketingSpec extends AnyFunSuite {
       Bucketing.writeBucketed(
         Tables.orders(spark, TestSpark.sf), "ord_bucketed", "o_orderkey", 4)
 
-      val joined = Bucketing.read(spark, "li_bucketed")
-        .join(Bucketing.read(spark, "ord_bucketed"),
+      val joined = spark.table("li_bucketed")
+        .join(spark.table("ord_bucketed"),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(sum(col("l_quantity")).as("q"))
@@ -64,7 +64,7 @@ class BucketingSpec extends AnyFunSuite {
       val ke = graft.model.EventAdapter.keycloakEvents(
         Tables.events(spark, TestSpark.sf))
       Bucketing.writeBucketedEvents(ke, "ev_bucketed", numBuckets = 4)
-      val store = Bucketing.read(spark, "ev_bucketed")
+      val store = spark.table("ev_bucketed")
 
       // per-user aggregation over bucketed layout: zero Exchange
       val perUser = store.groupBy(col("userid"))

@@ -1311,7 +1311,7 @@ class DedupSpec extends AnyFunSuite {
     } finally restoreSession()
   }
 
-  test("compaction crash inside the drop→rename window recovers in-session and across a restart") {
+  test("compaction crash inside the drop→rename window recovers across a restart") {
     import spark.implicits._
     val name = "t_idx_crash"
     val corpus = Seq(
@@ -1326,17 +1326,7 @@ class DedupSpec extends AnyFunSuite {
     val expected = Dedup.dedupAgainstIndex(probe, "doc_id", "text", name)
       .collect().map(_.getLong(0)).toSet
 
-    // IN-SESSION crash state: staging complete and registered, live
-    // dropped (the catalog-visible half of the window). The rename is
-    // exactly what a death between compactBucketed's drop and rename
-    // leaves behind within a session.
     val bands = s"${name}_bands"
-    spark.sql(s"ALTER TABLE `$bands` RENAME TO `${bands}__compact_tmp`")
-    Dedup.compactDedupIndex(spark, name) // must finish the swap, not die
-    val inSession = Dedup.dedupAgainstIndex(probe, "doc_id", "text", name)
-      .collect().map(_.getLong(0)).toSet
-    assert(inSession == expected, s"in-session recovery broke: $inSession")
-
     // CROSS-RESTART crash state: live directory gone, staging
     // directory complete, durable marker present — and the catalog
     // empty, because the process died. Fabricate it at the filesystem

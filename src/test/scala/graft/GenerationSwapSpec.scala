@@ -6,23 +6,53 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Retrieval}
 import graft.sources.Bucketing
 
-/** Scan-time snapshot isolation for maintained tables — the window
-  * [[graft.sources.Bucketing.stableTable]]'s scaladoc disclosed and
-  * deferred: a reader that resolved a table BEFORE a maintenance swap
-  * used to die mid-scan when the swap deleted the old files. Every
-  * rewrite through writeBucketed/writeTable/compactBucketed is now a
-  * generation-LOCATION swap (build the next generation in its own
-  * directory, one atomic ALTER repoints the catalog entry, the
+/** Scan-time snapshot isolation for maintained tables: a reader that
+  * resolved a table BEFORE a maintenance swap must not die mid-scan
+  * when the swap replaces the files. Every replace through
+  * writeBucketed/writeTable/compactBucketed is a generation-LOCATION
+  * swap (build the next generation in its own directory, one catalog
+  * alter re-points the entry's location, schema and bucket spec, the
   * replaced generation survives one further rewrite), so the table
   * name is never absent and no live scan's files are deleted under
-  * it. These specs drive the contract through the real index-family
-  * verbs — serve loops racing compactions. */
+  * it, whatever the new shape. These specs drive the contract through
+  * the real index-family verbs — serve loops racing compactions. */
 class GenerationSwapSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def docs(n: Int): DataFrame = {
     import spark.implicits._
     (1 to n).map(i => (i.toLong, s"doc number $i")).toDF("k", "s")
+  }
+
+  private def otherSession(): org.apache.spark.sql.SparkSession = {
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.warehouse.dir",
+        spark.conf.get("spark.sql.warehouse.dir"))
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+  }
+
+  private def use(s: org.apache.spark.sql.SparkSession): Unit = {
+    org.apache.spark.sql.SparkSession.setDefaultSession(s)
+    org.apache.spark.sql.SparkSession.setActiveSession(s)
+  }
+
+  private def assertNoShuffle(df: DataFrame): Unit = {
+    import org.apache.spark.sql.functions._
+    val s = df.sparkSession
+    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = df.groupBy(col("k")).agg(count(lit(1)))
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"),
+        s"generation swap lost the bucket layout:\n$plan")
+    } finally s.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
   test("writeBucketed replace: pinned reader keeps its snapshot, name never absent") {
@@ -36,7 +66,7 @@ class GenerationSwapSpec extends AnyFunSuite {
     assert(pinned.count() == 8,
       "a reader pinned before the swap must keep its snapshot")
     // the ONE-rewrite grace: after a second swap the pinned
-    // generation retires (the disclosed VersionedTable contract)
+    // generation retires (the disclosed reader contract)
     Bucketing.writeBucketed(docs(5), "gs_tbl", "k", 2)
     assert(spark.table("gs_tbl").count() == 5)
     // bucket layout survives the swaps: per-key agg plans no shuffle
@@ -221,6 +251,94 @@ class GenerationSwapSpec extends AnyFunSuite {
       org.apache.spark.sql.SparkSession.setDefaultSession(spark)
       org.apache.spark.sql.SparkSession.setActiveSession(spark)
     }
+  }
+
+  test("a pinned reader survives re-shapes by writeBucketed and compactBucketed") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    Bucketing.writeBucketed(docs(8), "gs_shape", "k", 2)
+    val pinned = spark.table("gs_shape")
+    assert(pinned.count() == 8)
+    // re-shape through writeBucketed: a new column AND a new bucket count
+    Bucketing.writeBucketed(
+      (1 to 4).map(i => (i.toLong, s"doc number $i", i * 2L))
+        .toDF("k", "s", "v"), "gs_shape", "k", 4)
+    assert(pinned.count() == 8,
+      "a reader pinned before a re-shape must keep its snapshot")
+    assert(pinned.columns.toSeq == Seq("k", "s"))
+    val reshaped = spark.table("gs_shape")
+    assert(reshaped.columns.toSeq == Seq("k", "s", "v"))
+    assert(reshaped.count() == 4)
+    assertNoShuffle(reshaped)
+    // re-shape through a schema-changing compaction transform
+    Bucketing.compactBucketed(
+      _.withColumn("w", col("v") + 1L).drop("s"))(spark, "gs_shape", "k", 4)
+    assert(reshaped.count() == 4,
+      "a reader pinned before a re-shaping compaction must keep its snapshot")
+    val compacted = spark.table("gs_shape")
+    assert(compacted.columns.toSeq == Seq("k", "v", "w"))
+    assert(compacted.agg(sum(col("w"))).head().getLong(0) == 24L)
+    assertNoShuffle(compacted)
+    // neither re-shape staged anything beside the generations
+    val wh = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val staged = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(wh).map(_.getPath.getName)
+      .filter(n => n.startsWith("gs_shape") &&
+        (n.contains("__swap_pending") || n.contains("__compact_tmp")))
+    assert(staged.isEmpty, s"staged swap leftovers: ${staged.toSeq}")
+    Bucketing.dropTableAndDir(spark, "gs_shape")
+  }
+
+  test("a cross-session re-open after re-shapes reads the new schema and rows") {
+    import spark.implicits._
+    Bucketing.writeBucketed(docs(5), "gs_xshape", "k", 2)
+    Bucketing.compactBucketed()(spark, "gs_xshape", "k", 2) // gen 1
+    val s2 = otherSession()
+    try {
+      // the OTHER session opens the table (resolves gen 1)…
+      assert(Bucketing.registerExisting(s2, "gs_xshape", Some(("k", 2))))
+      assert(s2.table("gs_xshape").count() == 5)
+      // …the writer session re-shapes it TWICE, retiring gen 1
+      use(spark)
+      Bucketing.writeBucketed(
+        (1 to 3).map(i => (i.toLong, i * 2L)).toDF("k", "v2"),
+        "gs_xshape", "k", 4)
+      Bucketing.writeBucketed(
+        (1 to 3).map(i => (i.toLong, i * 2L, i * 3L)).toDF("k", "v2", "v3"),
+        "gs_xshape", "k", 4)
+      // …and the reader's re-open picks up the writer's shape and rows
+      use(s2)
+      assert(Bucketing.registerExisting(s2, "gs_xshape", Some(("k", 4))))
+      val t = s2.table("gs_xshape")
+      assert(t.columns.toSeq == Seq("k", "v2", "v3"))
+      assert(t.orderBy("k").collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
+        Seq((1L, 2L, 3L), (2L, 4L, 6L), (3L, 6L, 9L)))
+      assertNoShuffle(t)
+    } finally use(spark)
+    Bucketing.dropTableAndDir(spark, "gs_xshape")
+  }
+
+  test("a crash between pointer create and sweep still resolves to max") {
+    Bucketing.writeBucketed(docs(3), "gs_ptrs", "k", 2)
+    Bucketing.compactBucketed()(spark, "gs_ptrs", "k", 2) // gen 1
+    Bucketing.compactBucketed()(spark, "gs_ptrs", "k", 2) // gen 2
+    // simulate the crash window: the OLD pointer resurfaces beside
+    // the new one (a flip died between create and sweep)
+    val wh = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val straggler = new org.apache.hadoop.fs.Path(wh, "gs_ptrs__gptr_1")
+    fs.create(straggler, true).close()
+    assert(Bucketing.generationOf(spark, "gs_ptrs") == 2L,
+      "two pointers on disk must resolve to the max generation")
+    // the next swap sweeps the straggler
+    Bucketing.compactBucketed()(spark, "gs_ptrs", "k", 2) // gen 3
+    assert(!fs.exists(straggler))
+    assert(Bucketing.generationOf(spark, "gs_ptrs") == 3L)
+    assert(spark.table("gs_ptrs").count() == 3)
+    Bucketing.dropTableAndDir(spark, "gs_ptrs")
   }
 
   test("readGeneration: grace generation readable, retired fails loudly naming live") {
