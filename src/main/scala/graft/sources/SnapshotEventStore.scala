@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, IntegerType,
+  StructField, StructType}
 
 /** The dt/hour event store's one discipline: snapshot manifests.
   *
@@ -37,11 +39,13 @@ import org.apache.spark.sql.functions._
   *    discipline: resolve the metadata log, do not list). Any publish
   *    or [[EventStore.clearAll]] invalidates the entry; memory is one
   *    file list per session and store ([[read]]);
-  *  - every write verb lands files INVISIBLY first (a dot-prefixed
-  *    temp root, then per-file rename into the live partition dirs —
-  *    new unique names, nothing overwritten), and publishes a new
-  *    manifest as the LAST step: rename-atomic, so a crash anywhere
-  *    leaves the prior snapshot intact plus unreferenced orphans;
+  *  - every write verb resolves the live manifest ONCE under its
+  *    lease (one listing, one read: [[Live]]), lands files INVISIBLY
+  *    (a dot-prefixed temp root, then per-file rename into the live
+  *    partition dirs — new unique names, nothing overwritten), and
+  *    publishes one new full manifest as the LAST step:
+  *    rename-atomic, so a crash anywhere leaves the prior snapshot
+  *    intact plus unreferenced orphans;
   *  - maintenance never deletes what a pinned reader can see: a
   *    compaction/retention rewrite publishes a manifest WITHOUT the
   *    replaced files and leaves them on disk for one further
@@ -73,32 +77,20 @@ import org.apache.spark.sql.functions._
   * dt/hour directory (one written before the store had manifests)
   * is adopted by [[init]], which the first [[append]] or
   * [[appendBatch]] runs on an un-sealed store; a streaming sink joins
-  * by appending through [[appendBatch]] in `foreachBatch`.
+  * by appending through [[appendBatch]] in `foreachBatch`. A store
+  * whose manifests an earlier release wrote as deltas (`snapd_<N>`)
+  * reads unchanged, and its first write verb rewrites them as full
+  * manifests ([[adoptLegacyDeltas]]).
   */
 object SnapshotEventStore {
 
   private val SnapDirName = "_graft_snapshots"
   private val SnapPrefix = "snap_"
 
-  /** DELTA manifests (the Delta-log shape behind the same API): a
-    * publish whose change set is small relative to the live list —
-    * every streaming micro-batch append against a large store —
-    * writes `snapd_<N>` holding the FULL headers plus `+<rel>` /
-    * `-<rel>` lines relative to snapshot N−1, instead of rewriting
-    * the whole list. Resolution walks the delta chain back to the
-    * nearest FULL checkpoint (`snap_<N>`); the chain is capped at
-    * [[CheckpointEvery]] (a full checkpoint is forced past it), so a
-    * resolve reads at most that many small files. Retire MATERIALIZES
-    * the oldest kept snapshot as a full checkpoint before deleting
-    * below it, so a retained delta can never lose its ancestors.
-    * Publish stays one atomic rename either way. */
+  /** The delta manifest earlier releases wrote: snapshot N's headers
+    * plus `+<rel>` / `-<rel>` lines against snapshot N−1. Read by
+    * [[manifestLines]], rewritten by [[adoptLegacyDeltas]]. */
   private val DeltaPrefix = "snapd_"
-
-  /** Max delta-chain length before a publish is forced to write a
-    * full checkpoint — bounds resolution at K small reads and keeps
-    * the crash-recovery walk short (the Delta log's checkpoint
-    * cadence). */
-  private val CheckpointEvery = 16
 
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -107,46 +99,39 @@ object SnapshotEventStore {
 
   private def fullPath(path: String, n: Long) =
     new Path(snapDir(path), s"$SnapPrefix$n")
-  private def deltaPath(path: String, n: Long) =
-    new Path(snapDir(path), s"$DeltaPrefix$n")
 
   private def leaseKey(path: String): String =
     "evsnap__" + path.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
 
   /** A published manifest as the `_graft_snapshots` listing shows it:
-    * snapshot `n` and the file that holds it — the full form when both
-    * exist, as [[manifestLines]] prefers. A published manifest is never
-    * rewritten, so equal (n, name, length, modification time) means an
-    * equal file list; a store dropped and rebuilt that republishes the
-    * same `n` writes a new file. */
+    * snapshot `n` and the file that holds it. A published manifest is
+    * never rewritten, so equal (n, name, length, modification time)
+    * means an equal file list; a store dropped and rebuilt that
+    * republishes the same `n` writes a new file. */
   private final case class Manifest(n: Long, name: String, len: Long,
       mtime: Long)
 
-  /** Every snapshot on disk (full checkpoints AND deltas), one per
-    * number, sorted — ONE `listStatus`, no existence probe. */
-  private def manifests(spark: SparkSession, path: String): Seq[Manifest] = {
+  /** Every manifest file in ONE `listStatus`, legacy deltas included,
+    * sorted by number, full before delta. */
+  private def listed(spark: SparkSession, path: String): Seq[Manifest] = {
     val d = snapDir(path)
-    val listed =
+    val statuses =
       try fsOf(spark, d).listStatus(d).toSeq
       catch { case _: java.io.FileNotFoundException => Seq.empty }
     // staged `.snap_<N>.tmp` names match neither prefix
-    listed.flatMap { s =>
+    statuses.flatMap { s =>
       val name = s.getPath.getName
-      val num =
-        if (name.startsWith(SnapPrefix)) Some(name.drop(SnapPrefix.length))
-        else if (name.startsWith(DeltaPrefix)) Some(name.drop(DeltaPrefix.length))
-        else None
-      num.flatMap(x => scala.util.Try(x.toLong).toOption)
+      Seq(SnapPrefix, DeltaPrefix).find(name.startsWith)
+        .flatMap(p => scala.util.Try(name.drop(p.length).toLong).toOption)
         .map(Manifest(_, name, s.getLen, s.getModificationTime))
-    }.groupMapReduce(_.n)(identity) { (a, b) =>
-      if (a.name.startsWith(SnapPrefix)) a else b
-    }.values.toSeq.sortBy(_.n)
+    }.sortBy(m => (m.n, m.name.startsWith(DeltaPrefix)))
   }
 
-  /** Snapshot numbers on disk (full checkpoints AND deltas), sorted. */
-  private def snapshotNumbers(spark: SparkSession,
-      path: String): Seq[Long] =
-    manifests(spark, path).map(_.n)
+  /** One manifest per snapshot number, sorted — the full form where a
+    * legacy delta of the same number is also present, as
+    * [[manifestLines]] prefers. */
+  private def manifests(spark: SparkSession, path: String): Seq[Manifest] =
+    listed(spark, path).distinctBy(_.n)
 
   /** Live snapshot number, if the store has been sealed. */
   def currentSnapshot(spark: SparkSession, path: String): Option[Long] =
@@ -160,98 +145,120 @@ object SnapshotEventStore {
     raw.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
-  /** Snapshot `n`'s HEADER lines from its single newest manifest
-    * file — full or delta, each carries the snapshot's COMPLETE
-    * headers by the format's design, so header reads (batch
-    * watermarks, the schema tag) never walk the delta chain. */
-  private def headerLines(spark: SparkSession, path: String,
-      n: Long): Seq[String] = {
-    val full = fullPath(path, n)
-    val p = if (fsOf(spark, full).exists(full)) full
-      else deltaPath(path, n)
-    rawLines(spark, p).filter(_.startsWith("#"))
-  }
-
-  /** Snapshot `n`'s logical manifest lines: headers + one
-    * store-relative file path per line. A FULL checkpoint is read
-    * verbatim; a DELTA carries its own complete headers and resolves
-    * its file list against snapshot n−1 (recursion bounded by
-    * [[CheckpointEvery]]). A snapshot that exists in NEITHER form
+  /** Snapshot `n`'s manifest lines: headers + one store-relative file
+    * path per line. A full manifest is read verbatim. A legacy delta
+    * carries its own complete headers and resolves its file list
+    * against snapshot n−1. A snapshot that exists in neither form
     * throws FileNotFoundException — retired, callers translate. */
   private def manifestLines(spark: SparkSession, path: String,
-      n: Long): Seq[String] = {
-    val full = fullPath(path, n)
-    val fs = fsOf(spark, full)
-    // prefer the full form: retire's materialization writes snap_<n>
-    // beside a stale snapd_<n> before deleting it — both present
-    // means the full one is the (newer, equivalent) truth
-    if (fs.exists(full)) return rawLines(spark, full)
-    val lines = rawLines(spark, deltaPath(path, n))
-    val headers = lines.filter(_.startsWith("#"))
-    val adds = lines.filter(_.startsWith("+")).map(_.drop(1))
-    val dels = lines.filter(_.startsWith("-")).map(_.drop(1)).toSet
-    val base = manifestFiles(spark, path, n - 1)
-    headers ++ (base.filterNot(dels) ++ adds).sorted
-  }
+      n: Long): Seq[String] =
+    try rawLines(spark, fullPath(path, n))
+    catch {
+      case _: java.io.FileNotFoundException =>
+        val lines = rawLines(spark, new Path(snapDir(path), s"$DeltaPrefix$n"))
+        val adds = lines.filter(_.startsWith("+")).map(_.drop(1))
+        val dels = lines.filter(_.startsWith("-")).map(_.drop(1)).toSet
+        lines.filter(_.startsWith("#")) ++
+          (manifestFiles(spark, path, n - 1).filterNot(dels) ++ adds).sorted
+    }
 
   private[graft] def manifestFiles(spark: SparkSession, path: String,
       n: Long): Seq[String] =
     manifestLines(spark, path, n).filterNot(_.startsWith("#"))
 
-  /** Every listed snapshot's FILE list in ONE forward fold (oldest →
-    * newest, each delta applied to its predecessor) instead of an
-    * independent chain walk per snapshot — the multi-snapshot verbs'
-    * (retire/vacuum/stats) resolution shape, O(N + chain) single-file
-    * reads. A snapshot whose manifest cannot be resolved — a dangling
-    * delta left by a crashed retire, or a gap under it — yields None
-    * and is SKIPPED by callers rather than wedging the verb forever
-    * (the next full checkpoint re-anchors the fold). */
-  private def foldChains(spark: SparkSession, path: String,
-      nums: Seq[Long]): Map[Long, Seq[String]] = {
-    val fs = fsOf(spark, snapDir(path))
-    var prevNum = -1L
-    var prevFiles: Option[Seq[String]] = None
-    nums.sorted.map { n =>
-      // tolerate ONLY the dangling-delta case (FileNotFound): any
-      // other read failure — a transient IO error on a perfectly
-      // healthy manifest — must ABORT the verb, not mark the snapshot
-      // unreferenced (vacuum/retire delete files computed from this
-      // map; swallowing a transient error here deletes live data)
-      val resolved: Option[Seq[String]] =
-        try Some {
-          val full = fullPath(path, n)
-          if (fs.exists(full))
-            rawLines(spark, full).filterNot(_.startsWith("#"))
-          else {
-            val lines = rawLines(spark, deltaPath(path, n))
-            val adds = lines.filter(_.startsWith("+")).map(_.drop(1))
-            val dels = lines.filter(_.startsWith("-")).map(_.drop(1)).toSet
-            val base =
-              if (prevNum == n - 1 && prevFiles.isDefined) prevFiles.get
-              else throw new java.io.FileNotFoundException(
-                s"delta $n has no resolvable base ${n - 1}")
-            (base.filterNot(dels) ++ adds).sorted
-          }
-        } catch { case _: java.io.FileNotFoundException => None }
-      prevNum = n
-      prevFiles = resolved
-      n -> resolved
-    }.collect { case (n, Some(f)) => n -> f }.toMap
-  }
+  /** Each of `nums`' file lists (retire/vacuum/stats). A snapshot
+    * that does not resolve — retired under a lease-free caller's
+    * listing, or a dangling legacy delta — is SKIPPED, never a wedge. */
+  private def readManifests(spark: SparkSession, path: String,
+      nums: Seq[Long]): Map[Long, Seq[String]] =
+    nums.flatMap { n =>
+      // tolerate ONLY FileNotFound: swallowing a transient IO error
+      // would mark a healthy snapshot's files unreferenced, and
+      // vacuum/retire delete files computed from this map
+      try Some(n -> manifestFiles(spark, path, n))
+      catch { case _: java.io.FileNotFoundException => None }
+    }.toMap
 
   /** Deletion guard for [[vacuumOrphans]]/[[retire]]: a verb about to
     * delete files must have RESOLVED the live snapshot — a live
-    * manifest that reads as a dangling delta (crash corruption, or a
-    * racing writer this lease should have excluded) makes every live
-    * file look unreferenced, and deleting on that view is data loss.
-    * Fail loud; a later full checkpoint (or manual repair) re-anchors
-    * the chain. */
+    * manifest that does not resolve (a legacy delta left dangling by a
+    * crash, or a racing writer this lease should have excluded) makes
+    * every live file look unreferenced, and deleting on that view is
+    * data loss. Fail loud; manual repair re-anchors the store. */
   private def requireLiveResolved(resolved: Map[Long, Seq[String]],
       nums: Seq[Long], path: String, verb: String): Unit =
     nums.lastOption.foreach(live => require(resolved.contains(live),
       s"$verb on store '$path': live snapshot $live did not resolve " +
         "(dangling delta or unreadable manifest) — refusing to delete " +
         "anything computed from an incomplete reference map"))
+
+  /** Write snapshot `n`'s manifest: stage to a dot-tmp name, then ONE
+    * atomic rename makes it visible — readers see the old complete
+    * manifest or the new complete one, never a torn read. */
+  private def writeManifest(spark: SparkSession, path: String, n: Long,
+      lines: Seq[String]): Unit = {
+    val d = snapDir(path)
+    val fs = fsOf(spark, d)
+    val tmp = new Path(d, s".$SnapPrefix$n.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(lines.mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    // the rename IS the commit — on filesystems where a failed rename
+    // returns false instead of throwing, ignoring it would report
+    // success while the landed files stay invisible orphans and the
+    // #batch watermark is never recorded (silent data loss under the
+    // exactly-once contract), so refuse loudly
+    require(fs.rename(tmp, fullPath(path, n)),
+      s"failed to publish snapshot $n of store '$path' — " +
+        s"rename($tmp) returned false; the prior snapshot is intact " +
+        "and the landed files are unreferenced orphans (vacuumOrphans " +
+        "reclaims them)")
+  }
+
+  /** Rewrite the legacy deltas in `all` as full manifests, under the
+    * writer lease: each delta that resolves becomes `snap_<n>`, in
+    * ascending order so each resolves against the full n−1 just
+    * written (readers prefer the full form, so a crash here is
+    * benign); then every delta is deleted — except a live one that
+    * does not resolve, which stays so that reads, [[retire]] and
+    * [[vacuumOrphans]] keep failing loudly ([[requireLiveResolved]]). */
+  private def adoptLegacyDeltas(spark: SparkSession, path: String,
+      all: Seq[Manifest]): Unit = {
+    val (deltas, fulls) = all.partition(_.name.startsWith(DeltaPrefix))
+    val dangling = deltas.filterNot(m => fulls.exists(_.n == m.n)).filterNot { m =>
+      try { writeManifest(spark, path, m.n, manifestLines(spark, path, m.n)); true }
+      catch { case _: java.io.FileNotFoundException => false }
+    }
+    deltas.filterNot(m => m.n == all.last.n && dangling.contains(m)).foreach(m =>
+      fsOf(spark, snapDir(path)).delete(new Path(snapDir(path), m.name), false))
+  }
+
+  /** The snapshot numbers on disk as a write verb sees them under its
+    * lease: one listing, legacy deltas adopted first. */
+  private def lockedNumbers(spark: SparkSession, path: String): Seq[Long] = {
+    val all = listed(spark, path)
+    if (!all.exists(_.name.startsWith(DeltaPrefix))) all.map(_.n)
+    else { adoptLegacyDeltas(spark, path, all); manifests(spark, path).map(_.n) }
+  }
+
+  /** The live snapshot as a write verb resolves it, once, under its
+    * lease: the snapshot numbers on disk, and the live one's files,
+    * batch watermarks and `#schema=` json. [[publish]] takes it and
+    * returns the next one. */
+  private[graft] final case class Live(snapshots: Seq[Long],
+      files: Seq[String], batches: Map[String, Long],
+      schema: Option[String]) {
+    /** The live snapshot number, 0 on an un-sealed store. */
+    def n: Long = snapshots.lastOption.getOrElse(0L)
+  }
+
+  private[graft] def liveOf(spark: SparkSession, path: String): Live = {
+    val nums = lockedNumbers(spark, path)
+    val lines = nums.lastOption.map(manifestLines(spark, path, _))
+      .getOrElse(Nil)
+    Live(nums, lines.filterNot(_.startsWith("#")), batchTags(lines),
+      schemaTag(lines))
+  }
 
   /** The streaming-commit tags carried by snapshot `n` — one
     * `#batch=<streamId>:<id>` header line PER STREAM, published
@@ -260,13 +267,18 @@ object SnapshotEventStore {
     * race. Keyed by stream identity, NOT the bare id: batch ids are
     * monotonic only within one checkpoint, so an un-keyed watermark
     * would silently DISCARD a new pipeline's restarted ids as
-    * replays — data loss where the old sink merely duplicated. The
-    * id parses from the LAST colon (stream ids are paths and may
-    * contain colons). */
+    * replays — data loss where the old sink merely duplicated. Every
+    * non-batch publish carries the live watermarks forward
+    * (maintenance must not lose the streaming commit points; a retire
+    * could otherwise delete the only manifest that remembered them,
+    * re-opening the replay window). The id parses from the LAST colon
+    * (stream ids are paths and may contain colons). */
   def committedBatches(spark: SparkSession, path: String,
       n: Long): Map[String, Long] =
-    headerLines(spark, path, n)
-      .filter(_.startsWith("#batch="))
+    batchTags(manifestLines(spark, path, n))
+
+  private def batchTags(lines: Seq[String]): Map[String, Long] =
+    lines.filter(_.startsWith("#batch="))
       .flatMap { l =>
         val body = l.drop("#batch=".length)
         val cut = body.lastIndexOf(':')
@@ -275,19 +287,6 @@ object SnapshotEventStore {
         else scala.util.Try(body.drop(cut + 1).toLong).toOption
           .map(body.take(cut) -> _)
       }.toMap
-
-  /** The live manifest's batch watermarks — carried FORWARD by every
-    * non-batch publish (maintenance must not lose the streaming
-    * commit points; a retire could otherwise delete the only
-    * manifest that remembered them, re-opening the replay window). */
-  private def currentBatchTags(spark: SparkSession,
-      path: String): Map[String, Long] =
-    currentSnapshot(spark, path)
-      .map(n => committedBatches(spark, path, n))
-      .getOrElse(Map.empty)
-
-  private def headerFor(tags: Map[String, Long]): Seq[String] =
-    tags.toSeq.sortBy(_._1).map { case (sid, n) => s"#batch=$sid:$n" }
 
   /** The store's row schema, carried as a `#schema=<json>` header by
     * every append and forwarded by every later publish — so a read
@@ -301,17 +300,15 @@ object SnapshotEventStore {
   private def schemaTag(lines: Seq[String]): Option[String] =
     lines.find(_.startsWith("#schema=")).map(_.drop("#schema=".length))
 
-  private def schemaTagOf(spark: SparkSession,
-      path: String): Option[String] =
-    currentSnapshot(spark, path).flatMap(n =>
-      schemaTag(headerLines(spark, path, n)))
+  private def parseSchema(json: String): Option[StructType] =
+    scala.util.Try(DataType.fromJson(json).asInstanceOf[StructType]).toOption
 
-  private def parseSchema(
-      json: String): Option[org.apache.spark.sql.types.StructType] =
-    scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption
+  private def dataFields(schema: Option[String]): Array[StructField] =
+    schema.flatMap(parseSchema)
+      .map(_.fields.filterNot(f => f.name == "dt" || f.name == "hour"))
+      .getOrElse(Array.empty)
 
-  /** Header for the NEXT manifest: the carried schema MERGED with the
+  /** Schema for the NEXT manifest: the carried one MERGED with the
     * batch's — an append that ADDS a column (the A14 schema-evolution
     * scenario) widens the store schema, and an
     * append that carries FEWER columns (a source that stopped sending
@@ -319,22 +316,16 @@ object SnapshotEventStore {
     * under the old schema and their columns stay readable. Field
     * order: existing data fields, then genuinely new ones, dt/hour
     * last. */
-  private def schemaHeader(events: DataFrame, spark: SparkSession,
-      path: String): Seq[String] = {
+  private def schemaHeader(events: DataFrame,
+      carried: Option[String]): String = {
     val newData = events.schema.fields
       .filterNot(f => f.name == "dt" || f.name == "hour")
-    val existingData = schemaTagOf(spark, path).flatMap(parseSchema)
-      .map(_.fields.filterNot(f => f.name == "dt" || f.name == "hour"))
-      .getOrElse(Array.empty[org.apache.spark.sql.types.StructField])
+    val existingData = dataFields(carried)
     val existingNames = existingData.map(_.name.toLowerCase).toSet
     val merged = existingData ++
       newData.filterNot(f => existingNames(f.name.toLowerCase))
-    val full = org.apache.spark.sql.types.StructType(merged ++ Seq(
-      org.apache.spark.sql.types.StructField("dt",
-        org.apache.spark.sql.types.DateType),
-      org.apache.spark.sql.types.StructField("hour",
-        org.apache.spark.sql.types.IntegerType)))
-    Seq(s"#schema=${full.json}")
+    StructType(merged ++ Seq(StructField("dt", DateType),
+      StructField("hour", IntegerType))).json
   }
 
   /** Refuses a TYPE conflict BEFORE any file lands: silently keeping
@@ -344,11 +335,9 @@ object SnapshotEventStore {
     * poisoned store with no error at the write that poisoned it.
     * Schema evolution ADDS columns; it never changes a column's
     * type. */
-  private def requireCompatibleSchema(events: DataFrame,
-      spark: SparkSession, path: String): Unit = {
-    val existingTypes = schemaTagOf(spark, path).flatMap(parseSchema)
-      .map(_.fields.filterNot(f => f.name == "dt" || f.name == "hour"))
-      .getOrElse(Array.empty[org.apache.spark.sql.types.StructField])
+  private def requireCompatibleSchema(events: DataFrame, path: String,
+      carried: Option[String]): Unit = {
+    val existingTypes = dataFields(carried)
       .map(f => f.name.toLowerCase -> f.dataType).toMap
     events.schema.fields
       .filterNot(f => f.name == "dt" || f.name == "hour")
@@ -378,85 +367,27 @@ object SnapshotEventStore {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
       .getOrElse(spark.emptyDataFrame)
 
-  /** Write manifest N+1: stage to a dot-tmp name, then ONE atomic
-    * rename makes it visible — readers see the old complete manifest
-    * or the new complete one, never a torn read. Returns N+1.
+  /** Publish `files` as the snapshot after `live`, with `batches` as
+    * its watermarks and `schema` as its `#schema=` header: one full
+    * manifest, staged and renamed ([[writeManifest]]). Returns the new
+    * live snapshot. (private[graft] for the receipt spec.)
     *
-    * SIZING, measured (SnapshotEventStoreSpec's receipts, local FS):
-    * a FULL checkpoint rewrites the live-file list — ~ms at 10³
-    * files, ~100 ms at 10⁵. Small changes against a large store
-    * (every streaming micro-batch append) publish as DELTAS instead:
-    * the WRITE drops to O(changes) bytes (~KB instead of the ~5 MB
-    * full list — the storage/IO term that accumulates per
-    * micro-batch), with a full checkpoint forced every
-    * [[CheckpointEvery]] publishes so a resolve reads at most that
-    * many small files. Publish LATENCY stays resolve-bound either
-    * way (the delta diff needs the previous list), and the live list
-    * still materializes in driver memory per resolve (~MB at 10⁵
-    * lines) — size retention/compaction so live files stay ≲10⁶.
-    * (private[graft] for the receipt spec.) */
-  /** Length of the delta chain ENDING at snapshot `n` (0 when `n` is
-    * a full checkpoint). Bounded walk — at most CheckpointEvery + 1
-    * existence probes. */
-  private def deltaChainLen(spark: SparkSession, path: String,
-      n: Long): Int = {
-    val fs = fsOf(spark, snapDir(path))
-    var g = n
-    var c = 0
-    while (g >= 1 && c <= CheckpointEvery &&
-      !fs.exists(fullPath(path, g)) && fs.exists(deltaPath(path, g))) {
-      c += 1; g -= 1
-    }
-    c
-  }
-
+    * SIZING, measured (SnapshotEventStoreSpec's receipt, local FS):
+    * every publish rewrites the live-file list — ~ms at 10³ files,
+    * ~100 ms at 10⁵ — and the live list materializes in driver
+    * memory per resolve (~MB at 10⁵ lines); size retention and
+    * compaction so live files stay ≲10⁶. */
   private[graft] def publish(spark: SparkSession, path: String,
-      files: Seq[String], header: Seq[String] = Nil,
-      prevFiles: Option[Seq[String]] = None): Long = {
-    val d = snapDir(path)
-    val fs = fsOf(spark, d)
-    fs.mkdirs(d)
-    val cur = currentSnapshot(spark, path).getOrElse(0L)
-    val next = cur + 1L
-    // DELTA when it is genuinely smaller than the full list and the
-    // chain stays under the checkpoint cadence; full otherwise (and
-    // always when anything about the previous resolve fails — a full
-    // checkpoint is self-contained and heals the chain). Callers that
-    // already resolved the previous list pass it in (`prevFiles`), so
-    // the hot append path pays ONE chain resolution, not two.
-    val delta: Option[Seq[String]] =
-      if (cur == 0L || deltaChainLen(spark, path, cur) >= CheckpointEvery)
-        None
-      else scala.util.Try {
-        val prev = prevFiles.getOrElse(manifestFiles(spark, path, cur))
-        val pSet = prev.toSet
-        val fSet = files.toSet
-        val adds = files.filterNot(pSet).sorted.map("+" + _)
-        val dels = prev.filterNot(fSet).sorted.map("-" + _)
-        if (adds.size + dels.size < files.size)
-          Some(header ++ adds ++ dels)
-        else None
-      }.toOption.flatten
-    val (tmp, dst, body) = delta match {
-      case Some(b) => (new Path(d, s".$DeltaPrefix$next.tmp"),
-        new Path(d, s"$DeltaPrefix$next"), b)
-      case None => (new Path(d, s".$SnapPrefix$next.tmp"),
-        new Path(d, s"$SnapPrefix$next"), header ++ files.sorted)
-    }
-    val out = fs.create(tmp, true)
-    try out.write(body.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // the rename IS the commit — on filesystems where a failed rename
-    // returns false instead of throwing, ignoring it would report
-    // success while the landed files stay invisible orphans and the
-    // #batch watermark is never recorded (silent data loss under the
-    // exactly-once contract), so refuse loudly
-    require(fs.rename(tmp, dst),
-      s"failed to publish snapshot $next of store '$path' — " +
-        s"rename($tmp) returned false; the prior snapshot is intact " +
-        "and the landed files are unreferenced orphans (vacuumOrphans " +
-        "reclaims them)")
-    next
+      live: Live, files: Seq[String],
+      batches: Map[String, Long] = Map.empty,
+      schema: Option[String] = None): Live = {
+    val next = live.n + 1L
+    if (live.snapshots.isEmpty) fsOf(spark, snapDir(path)).mkdirs(snapDir(path))
+    val sorted = files.sorted
+    writeManifest(spark, path, next,
+      batches.toSeq.sortBy(_._1).map { case (sid, b) => s"#batch=$sid:$b" } ++
+        schema.map(j => s"#schema=$j") ++ sorted)
+    Live(live.snapshots :+ next, sorted, batches, schema)
   }
 
   private def isDataFile(name: String): Boolean =
@@ -519,22 +450,27 @@ object SnapshotEventStore {
     * silently dropping every column that exists only in the adopted
     * pre-seal files (the exact vanish the explicit-schema read was
     * built to prevent). An init over an empty directory has no files
-    * to derive from and publishes headerless — the first append's
-    * header takes over. */
+    * to derive from and carries the live header, if any — on a fresh
+    * store the first append's header takes over. */
   def init(spark: SparkSession, path: String): Long =
     Bucketing.withIndexLease(spark, leaseKey(path), "snapInit") {
-      if (currentSnapshot(spark, path).isEmpty) restoreAsides(spark, path)
-      val files = listLive(spark, path)
-      val header =
-        if (files.isEmpty) Seq.empty[String]
-        else schemaHeader(
-          spark.read.option("mergeSchema", "true")
-            .option("basePath", path)
-            .parquet(files.map(f => s"$path/$f"): _*),
-          spark, path)
-      publish(spark, path, files,
-        header = headerFor(currentBatchTags(spark, path)) ++ header)
+      seal(spark, path, liveOf(spark, path)).n
     }
+
+  /** [[init]]'s body under the caller's lease, from the live snapshot
+    * the caller resolved. */
+  private def seal(spark: SparkSession, path: String, live: Live): Live = {
+    if (live.snapshots.isEmpty) restoreAsides(spark, path)
+    val files = listLive(spark, path)
+    val schema =
+      if (files.isEmpty) live.schema
+      else Some(schemaHeader(
+        spark.read.option("mergeSchema", "true")
+          .option("basePath", path)
+          .parquet(files.map(f => s"$path/$f"): _*),
+        live.schema))
+    publish(spark, path, live, files, live.batches, schema)
+  }
 
   /** Scan exactly `rels` under the manifest's declared schema: the
     * carried `#schema=` header, when present, is applied explicitly —
@@ -632,17 +568,16 @@ object SnapshotEventStore {
     * store's entries, and a rebuilt store's manifests are new files
     * either way. Memory: one file list per session and store.
     *
-    * Readers hold no lease, so a concurrent retire can delete a
-    * DELTA chain's ancestor mid-resolve (the flat format's single
-    * never-deleted live file had no such window) — the resolve
-    * RETRIES on FileNotFound: the live snapshot only moves forward,
-    * and the retry re-resolves through the freshly-materialized
-    * checkpoint. Scope: the retry covers driver-side MANIFEST
-    * resolution only — the returned DataFrame scans its parquet
-    * lazily, so a retire that deletes this snapshot's replaced files
-    * AFTER read() returns still fails the in-flight scan (which is
-    * why every retiring caller keeps the default one-cycle
-    * `keepSnapshots = 1` reader grace). A memoized scan changes
+    * Readers hold no lease, so the manifest a reader listed as live
+    * can be retired before the reader opens it (two publishes and a
+    * retire later, under the default grace) — the resolve RETRIES on
+    * FileNotFound: the live snapshot only moves forward, and the
+    * retry lists again and finds the newer one. Scope: the retry
+    * covers driver-side MANIFEST resolution only — the returned
+    * DataFrame scans its parquet lazily, so a retire that deletes
+    * this snapshot's replaced files AFTER read() returns still fails
+    * the in-flight scan (which is why every retiring caller keeps the
+    * default one-cycle `keepSnapshots = 1` reader grace). A memoized scan changes
     * nothing here: it is only served while its snapshot is live. */
   def read(spark: SparkSession, path: String): DataFrame =
     readIfSealed(spark, path).getOrElse(throw new IllegalStateException(
@@ -687,8 +622,8 @@ object SnapshotEventStore {
       s"snapshot $n of store '$path' is retired or never existed — " +
         s"live snapshot is ${currentSnapshot(spark, path)}")
     val m = manifests(spark, path).find(_.n == n).getOrElse(retired())
-    // the FileNotFound catch also covers a racing retire deleting a
-    // DELTA chain's ancestor mid-resolve
+    // the FileNotFound catch covers a retire deleting the manifest
+    // between the listing and its read
     try scanOf(spark, path, m)
     catch { case _: java.io.FileNotFoundException => retired() }
   }
@@ -703,14 +638,13 @@ object SnapshotEventStore {
     * unreferenced files). Returns files deleted. */
   def vacuumOrphans(spark: SparkSession, path: String): Int =
     Bucketing.withIndexLease(spark, leaseKey(path), "snapVacuum") {
-      val d = snapDir(path)
-      val fs = fsOf(spark, d)
-      val nums = snapshotNumbers(spark, path)
-      val chains = foldChains(spark, path, nums)
-      requireLiveResolved(chains, nums, path, "vacuumOrphans")
-      val referenced: Set[String] = chains.values.flatten.toSet
-      val orphans = listLive(spark, path).filterNot(referenced)
       val root = new Path(path)
+      val fs = fsOf(spark, root)
+      val nums = lockedNumbers(spark, path)
+      val resolved = readManifests(spark, path, nums)
+      requireLiveResolved(resolved, nums, path, "vacuumOrphans")
+      val referenced: Set[String] = resolved.values.flatten.toSet
+      val orphans = listLive(spark, path).filterNot(referenced)
       orphans.foreach(r => fs.delete(new Path(root, r), false))
       orphans.size
     }
@@ -741,37 +675,53 @@ object SnapshotEventStore {
   }
 
   /** The live snapshot under the caller's lease, sealing an
-    * un-sealed store first. The seal goes through [[init]], NOT a bare
-    * publish: init derives the `#schema=` header from any adopted
-    * files' merged parquet footers — a headerless seal would let the
-    * first append's batch-only schema header silently drop columns
-    * that exist only in the pre-seal files (the A20 vanish init
-    * prevents). The lease is re-entrant, so the nested init shares the
-    * caller's, and two writers on a fresh store cannot both seal it. */
-  private def sealedSnapshot(spark: SparkSession, path: String): Long =
-    currentSnapshot(spark, path).getOrElse(init(spark, path))
+    * un-sealed store first through [[init]]'s [[seal]], NOT a bare
+    * publish: a headerless seal would let the first append's
+    * batch-only schema drop columns only the pre-seal files carry
+    * (the A20 vanish). Under the caller's lease, so two writers on a
+    * fresh store cannot both seal it. */
+  private def sealedLive(spark: SparkSession, path: String): Live = {
+    val live = liveOf(spark, path)
+    if (live.snapshots.isEmpty) seal(spark, path, live) else live
+  }
+
+  /** The live snapshot under a maintenance verb's lease. */
+  private def requireSealed(spark: SparkSession, path: String): Live = {
+    val live = liveOf(spark, path)
+    if (live.snapshots.isEmpty)
+      throw new IllegalStateException(s"un-sealed store '$path' — init first")
+    live
+  }
+
+  /** Publish `files` as the snapshot after `live`, then retire below
+    * it, reading only the manifests neither snapshot holds — the last
+    * two steps of every write verb. Returns the published snapshot. */
+  private def commit(spark: SparkSession, path: String, live: Live,
+      files: Seq[String], batches: Map[String, Long],
+      schema: Option[String], keepSnapshots: Int): Long = {
+    val next = publish(spark, path, live, files, batches, schema)
+    retireBelow(spark, path, keepSnapshots, next.snapshots,
+      Map(live.n -> live.files, next.n -> next.files))
+    next.n
+  }
 
   /** The shared body of [[append]] and [[appendBatch]], under their
     * lease: land under an invisible temp root, move into the live
-    * tree, publish snapshot `n`'s files plus the new ones with `tags`
+    * tree, publish the live files plus the new ones with `batches`
     * as the batch watermarks. A crash before publish leaves only
     * unreferenced orphans — the prior snapshot is untouched. */
-  private def land(events: DataFrame, path: String, n: Long,
-      tags: Map[String, Long], maxRecordsPerFile: Int,
+  private def land(events: DataFrame, path: String, live: Live,
+      batches: Map[String, Long], maxRecordsPerFile: Int,
       sortWithin: Seq[String], keepSnapshots: Int): Long = {
     val spark = events.sparkSession
-    requireCompatibleSchema(events, spark, path)
-    val prev = manifestFiles(spark, path, n)
+    requireCompatibleSchema(events, path, live.schema)
     val tmp = new Path(path, ".snap_append_tmp")
     val fs = fsOf(spark, tmp)
     if (fs.exists(tmp)) fs.delete(tmp, true)
     EventStore.write(events, tmp.toString, maxRecordsPerFile, sortWithin)
     val moved = moveIntoLive(spark, tmp, new Path(path))
-    val snap = publish(spark, path, prev ++ moved,
-      headerFor(tags) ++ schemaHeader(events, spark, path),
-      prevFiles = Some(prev))
-    retire(spark, path, keepSnapshots)
-    snap
+    commit(spark, path, live, live.files ++ moved, batches,
+      Some(schemaHeader(events, live.schema)), keepSnapshots)
   }
 
   /** Append a batch and publish it as the next snapshot. Auto-seals an
@@ -783,9 +733,9 @@ object SnapshotEventStore {
       keepSnapshots: Int = 1): Long = {
     val spark = events.sparkSession
     Bucketing.withIndexLease(spark, leaseKey(path), "snapAppend") {
-      val n = sealedSnapshot(spark, path)
-      land(events, path, n, committedBatches(spark, path, n),
-        maxRecordsPerFile, sortWithin, keepSnapshots)
+      val live = sealedLive(spark, path)
+      land(events, path, live, live.batches, maxRecordsPerFile,
+        sortWithin, keepSnapshots)
     }
   }
 
@@ -811,10 +761,9 @@ object SnapshotEventStore {
       "streamId must not contain newlines (it lives in the manifest)")
     val spark = events.sparkSession
     Bucketing.withIndexLease(spark, leaseKey(path), "snapAppendBatch") {
-      val n = sealedSnapshot(spark, path)
-      val tags = committedBatches(spark, path, n)
-      if (tags.get(streamId).exists(_ >= batchId)) n
-      else land(events, path, n, tags + (streamId -> batchId),
+      val live = sealedLive(spark, path)
+      if (live.batches.get(streamId).exists(_ >= batchId)) live.n
+      else land(events, path, live, live.batches + (streamId -> batchId),
         maxRecordsPerFile, sortWithin, keepSnapshots)
     }
   }
@@ -831,10 +780,6 @@ object SnapshotEventStore {
       .toInstant.toEpochMilli + hour * 3600000L
   }
 
-  private def readFiles(spark: SparkSession, path: String,
-      rels: Seq[String]): DataFrame =
-    scanFiles(spark, path, rels, schemaTagOf(spark, path))
-
   /** Rewrite `replaced` as `transform` of their rows, landing new
     * files invisibly and publishing `keep − replaced + new`. The
     * shared shape of compact / retention / realm-clear.
@@ -843,16 +788,15 @@ object SnapshotEventStore {
     * cap and within-file clustering the appends established (the
     * min/max-stats file skipping on `sortWithin` columns survives
     * maintenance). */
-  private def rewriteFiles(spark: SparkSession, path: String,
+  private def rewriteFiles(spark: SparkSession, path: String, live: Live,
       all: Seq[String], replaced: Seq[String],
       transform: DataFrame => DataFrame, keepSnapshots: Int,
-      maxRecordsPerFile: Int, sortWithin: Seq[String],
-      prevLive: Seq[String]): Long = {
+      maxRecordsPerFile: Int, sortWithin: Seq[String]): Long = {
     val tmp = new Path(path, ".snap_rewrite_tmp")
     val fs = fsOf(spark, tmp)
     if (fs.exists(tmp)) fs.delete(tmp, true)
     val moved = if (replaced.isEmpty) Seq.empty[String] else {
-      val clustered = transform(readFiles(spark, path, replaced))
+      val clustered = transform(scanFiles(spark, path, replaced, live.schema))
         .repartition(col("dt"), col("hour"))
       val arranged =
         if (sortWithin.isEmpty) clustered
@@ -863,13 +807,8 @@ object SnapshotEventStore {
         .partitionBy("dt", "hour").parquet(tmp.toString)
       moveIntoLive(spark, tmp, new Path(path))
     }
-    val snap = publish(spark, path,
-      all.diff(replaced) ++ moved,
-      headerFor(currentBatchTags(spark, path)) ++
-        schemaTagOf(spark, path).map(j => s"#schema=$j").toSeq,
-      prevFiles = Some(prevLive))
-    retire(spark, path, keepSnapshots)
-    snap
+    commit(spark, path, live, all.diff(replaced) ++ moved, live.batches,
+      live.schema, keepSnapshots)
   }
 
   /** Compact fragmented partitions: any hour with more than
@@ -884,16 +823,15 @@ object SnapshotEventStore {
       maxRecordsPerFile: Int = 1000000,
       sortWithin: Seq[String] = Nil): Int =
     Bucketing.withIndexLease(spark, leaseKey(path), "snapCompact") {
-      val n = currentSnapshot(spark, path).getOrElse(throw
-        new IllegalStateException(s"un-sealed store '$path' — init first"))
-      val all = manifestFiles(spark, path, n)
+      val live = requireSealed(spark, path)
+      val all = live.files
       val oversized = all.groupBy(r => partitionOf(r))
         .filter(_._2.size > maxFilesPerPartition)
       if (oversized.isEmpty) 0
       else {
-        rewriteFiles(spark, path, all, oversized.values.flatten.toSeq,
-          identity, keepSnapshots, maxRecordsPerFile, sortWithin,
-          prevLive = all)
+        rewriteFiles(spark, path, live, all,
+          oversized.values.flatten.toSeq, identity, keepSnapshots,
+          maxRecordsPerFile, sortWithin)
         oversized.size
       }
     }
@@ -911,9 +849,8 @@ object SnapshotEventStore {
       maxRecordsPerFile: Int = 1000000,
       sortWithin: Seq[String] = Nil): Int =
     Bucketing.withIndexLease(spark, leaseKey(path), "snapRetention") {
-      val n = currentSnapshot(spark, path).getOrElse(throw
-        new IllegalStateException(s"un-sealed store '$path' — init first"))
-      val all = manifestFiles(spark, path, n)
+      val live = requireSealed(spark, path)
+      val all = live.files
       val dropped = all.filter(r => partitionStartMs(r) + 3600000L <= olderThanMs)
       val boundary = all.filter { r =>
         val s = partitionStartMs(r)
@@ -921,10 +858,9 @@ object SnapshotEventStore {
       }
       if (dropped.isEmpty && boundary.isEmpty) 0
       else {
-        val afterDrop = all.diff(dropped)
-        rewriteFiles(spark, path, afterDrop, boundary,
+        rewriteFiles(spark, path, live, all.diff(dropped), boundary,
           _.filter(col("time") >= olderThanMs), keepSnapshots,
-          maxRecordsPerFile, sortWithin, prevLive = all)
+          maxRecordsPerFile, sortWithin)
         dropped.map(partitionOf).distinct.size
       }
     }
@@ -944,14 +880,13 @@ object SnapshotEventStore {
       maxRecordsPerFile: Int = 1000000,
       sortWithin: Seq[String] = Nil): Int =
     Bucketing.withIndexLease(spark, leaseKey(path), "snapRealmClear") {
-      val n = currentSnapshot(spark, path).getOrElse(throw
-        new IllegalStateException(s"un-sealed store '$path' — init first"))
-      val all = manifestFiles(spark, path, n)
+      val live = requireSealed(spark, path)
+      val all = live.files
       val doomed = olderThanMs.foldLeft(col("realmid") === realmId) {
         (p, cut) => p && col("time") < cut
       }
       val touched = if (all.isEmpty) Set.empty[(String, Int)]
-        else readFiles(spark, path, all)
+        else scanFiles(spark, path, all, live.schema)
           .filter(doomed)
           .select(col("dt").cast("string").as("dt"),
             col("hour").cast("int").as("hour"))
@@ -961,9 +896,9 @@ object SnapshotEventStore {
       if (touched.isEmpty) 0
       else {
         val replaced = all.filter(r => touched.contains(partitionOf(r)))
-        rewriteFiles(spark, path, all, replaced,
+        rewriteFiles(spark, path, live, all, replaced,
           _.filter(not(coalesce(doomed, lit(false)))), keepSnapshots,
-          maxRecordsPerFile, sortWithin, prevLive = all)
+          maxRecordsPerFile, sortWithin)
         touched.size
       }
     }
@@ -1005,9 +940,9 @@ object SnapshotEventStore {
   def snapshotStoreStats(spark: SparkSession, path: String,
       maxFilesPerPartition: Int = 4): DataFrame = {
     import spark.implicits._
-    val nums = snapshotNumbers(spark, path)
+    val nums = manifests(spark, path).map(_.n)
     val live = nums.lastOption
-    val resolved = foldChains(spark, path, nums)
+    val resolved = readManifests(spark, path, nums)
     val liveFiles = live.flatMap(resolved.get)
       .map(_.toSet).getOrElse(Set.empty)
     val allRef = resolved.values.flatten.toSet
@@ -1030,70 +965,53 @@ object SnapshotEventStore {
 
   /** Reclaim space: drop every snapshot older than the
     * `keepSnapshots` most recent BEHIND the live one, delete the
-    * physical files only they reference, prune emptied partition
-    * dirs. Run automatically by every write verb with the default
-    * one-cycle grace; callable directly with a larger horizon for
-    * stores whose queries outlive a maintenance cycle. Returns files
-    * deleted. */
+    * physical files only they reference, prune the partition dirs
+    * those deletions emptied. Run automatically by every write verb
+    * with the default one-cycle grace; callable directly with a
+    * larger horizon for stores whose queries outlive a maintenance
+    * cycle. Returns files deleted. */
   def retire(spark: SparkSession, path: String,
       keepSnapshots: Int = 1): Int =
     Bucketing.withIndexLease(spark, leaseKey(path), "snapRetire") {
-      val d = snapDir(path)
-      val fs = fsOf(spark, d)
-      val nums = snapshotNumbers(spark, path)
-      val retired = if (nums.isEmpty) Seq.empty[Long]
-        else nums.filter(_ < nums.last - keepSnapshots)
-      if (retired.isEmpty) 0
-      else {
-        val kept = nums.filter(_ >= nums.last - keepSnapshots)
-        // resolve EVERYTHING before any deletion (the delta chains
-        // still need their ancestors), in ONE forward fold — and
-        // TOLERANTLY: an unresolvable number (a dangling delta from a
-        // crashed retire) is skipped, never a wedge
-        val resolved = foldChains(spark, path, nums)
-        requireLiveResolved(resolved, nums, path, "retire")
-        val keepFiles = kept.flatMap(resolved.get).flatten.toSet
-        val doomed = retired.flatMap(resolved.get).flatten
-          .distinct.filterNot(keepFiles)
-        // MATERIALIZE the oldest kept snapshot as a FULL checkpoint
-        // before deleting below it: a kept delta whose base is about
-        // to retire would otherwise be unresolvable forever. Write
-        // tmp → rename (atomic; resolution prefers the full form when
-        // both exist, so a crash between the rename and the delta
-        // delete is benign), then drop the superseded delta.
-        val oldest = kept.head
-        if (fs.exists(deltaPath(path, oldest)) &&
-          !fs.exists(fullPath(path, oldest)) &&
-          resolved.contains(oldest)) {
-          val lines = headerLines(spark, path, oldest) ++ resolved(oldest)
-          val tmp = new Path(d, s".$SnapPrefix$oldest.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(lines.mkString("\n").getBytes("UTF-8"))
-          finally out.close()
-          require(fs.rename(tmp, fullPath(path, oldest)),
-            s"failed to materialize checkpoint $oldest of '$path'")
-        }
-        if (fs.exists(fullPath(path, oldest)))
-          fs.delete(deltaPath(path, oldest), false)
-        val root = new Path(path)
-        doomed.foreach(r => fs.delete(new Path(root, r), false))
-        // DESCENDING order: children (deltas) die before their bases,
-        // so a crash mid-loop can never leave a delta whose base is
-        // already gone
-        retired.sorted.reverse.foreach { v =>
-          fs.delete(new Path(d, s"$SnapPrefix$v"), false)
-          fs.delete(new Path(d, s"$DeltaPrefix$v"), false)
-        }
-        // prune partition dirs the deletions emptied
-        for (dt <- fs.listStatus(root).toSeq
-             if dt.isDirectory && dt.getPath.getName.startsWith("dt=")) {
-          for (hour <- fs.listStatus(dt.getPath).toSeq
-               if hour.isDirectory && hour.getPath.getName.startsWith("hour=")
-               if fs.listStatus(hour.getPath).isEmpty)
-            fs.delete(hour.getPath, true)
-          if (fs.listStatus(dt.getPath).isEmpty) fs.delete(dt.getPath, true)
-        }
-        doomed.size
-      }
+      retireBelow(spark, path, keepSnapshots, lockedNumbers(spark, path),
+        Map.empty)
     }
+
+  /** [[retire]]'s body under the caller's lease, over the snapshot
+    * numbers `nums` the caller holds; `known` holds file lists the
+    * caller already resolved, so only the rest are read. */
+  private def retireBelow(spark: SparkSession, path: String,
+      keepSnapshots: Int, nums: Seq[Long],
+      known: Map[Long, Seq[String]]): Int = {
+    val retired = if (nums.isEmpty) Seq.empty[Long]
+      else nums.filter(_ < nums.last - keepSnapshots)
+    if (retired.isEmpty) 0
+    else {
+      val kept = nums.filter(_ >= nums.last - keepSnapshots)
+      // resolve everything before any deletion, and TOLERANTLY: a
+      // number that does not resolve is skipped, never a wedge
+      val resolved = known ++
+        readManifests(spark, path, nums.filterNot(known.contains))
+      requireLiveResolved(resolved, nums, path, "retire")
+      val keepFiles = kept.flatMap(resolved.get).flatten.toSet
+      val doomed = retired.flatMap(resolved.get).flatten
+        .distinct.filterNot(keepFiles)
+      val root = new Path(path)
+      val fs = fsOf(spark, root)
+      doomed.foreach(r => fs.delete(new Path(root, r), false))
+      retired.foreach(v => fs.delete(fullPath(path, v), false))
+      // prune the hour, then the dt, directory each deletion emptied —
+      // never a listing of the whole store
+      def emptied(dir: Path): Boolean =
+        try fs.listStatus(dir).isEmpty
+        catch { case _: java.io.FileNotFoundException => false }
+      doomed.map(r => new Path(root, r).getParent).distinct.foreach { hour =>
+        if (emptied(hour)) {
+          fs.delete(hour, true)
+          if (emptied(hour.getParent)) fs.delete(hour.getParent, true)
+        }
+      }
+      doomed.size
+    }
+  }
 }

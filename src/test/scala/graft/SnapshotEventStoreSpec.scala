@@ -351,17 +351,17 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
     // rewrites the full live-file list and every resolve re-reads it.
     // The receipt (printed below, recorded in SURVEY §11m) shows the
     // driver-side cost is ms-scale through 1e5 lines — the
-    // retention×compaction-bounded regime — and the scaladoc names
-    // the delta-manifest escape hatch beyond it. Ceilings are
-    // deliberately loose (CI-safe); the printed numbers are the data.
+    // retention×compaction-bounded regime. Ceilings are deliberately
+    // loose (CI-safe); the printed numbers are the data.
     val dir = freshDir()
+    var live = SnapshotEventStore.liveOf(spark, dir)
     for (n <- Seq(1000, 10000, 100000)) {
       val files = (0 until n).map(i =>
         f"dt=2024-01-01/hour=${i % 24}/part-$i%06d.parquet")
       val t0 = System.nanoTime()
-      val snap = SnapshotEventStore.publish(spark, dir, files)
+      live = SnapshotEventStore.publish(spark, dir, live, files)
       val t1 = System.nanoTime()
-      val got = SnapshotEventStore.manifestFiles(spark, dir, snap)
+      val got = SnapshotEventStore.manifestFiles(spark, dir, live.n)
       val t2 = System.nanoTime()
       assert(got.size == n)
       info(f"n=$n%6d publish=${(t1 - t0) / 1e6}%8.1f ms " +
@@ -369,87 +369,127 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
       assert((t1 - t0) / 1e9 < 10.0 && (t2 - t1) / 1e9 < 10.0,
         s"manifest arithmetic blew the loose ceiling at n=$n")
     }
-    // the DELTA side: a 10-file append against the 1e5-file store
-    // WRITES O(changes) bytes (a ~KB delta instead of a ~5 MB full
-    // list — the storage/IO term that accumulates per micro-batch);
-    // publish LATENCY stays resolve-bound (it must diff against the
-    // previous list), same tens-of-ms class as the flat publish
-    val big = SnapshotEventStore
-      .manifestFiles(spark, dir,
-        SnapshotEventStore.currentSnapshot(spark, dir).get)
-    val appended = big ++ (0 until 10).map(i =>
-      f"dt=2024-01-02/hour=0/part-extra-$i%02d.parquet")
-    val t0 = System.nanoTime()
-    val snap = SnapshotEventStore.publish(spark, dir, appended)
-    val t1 = System.nanoTime()
-    assert(SnapshotEventStore.manifestFiles(spark, dir, snap).size
-      == big.size + 10)
-    info(f"delta publish (+10 vs 1e5 live)=${(t1 - t0) / 1e6}%8.1f ms")
-    assert(new java.io.File(s"$dir/_graft_snapshots/snapd_$snap").exists(),
-      "a 10-file change against 1e5 live files must publish as a delta")
   }
 
-  test("delta manifests: chain resolution, checkpoint cadence, retire materializes") {
+  /** Store-relative data files on disk, whatever the manifests say. */
+  private def dataFiles(dir: String): Set[String] = {
+    val root = new java.io.File(dir)
+    root.listFiles.filter(d => d.isDirectory && d.getName.startsWith("dt="))
+      .flatMap(dt => dt.listFiles.filter(_.isDirectory).flatMap(h =>
+        h.listFiles.filter(f => f.isFile && !f.getName.startsWith(".") &&
+          !f.getName.startsWith("_"))
+          .map(f => s"${dt.getName}/${h.getName}/${f.getName}"))).toSet
+  }
+
+  private def snapshotNames(dir: String): Seq[String] =
+    new java.io.File(s"$dir/_graft_snapshots").listFiles.map(_.getName)
+      .filterNot(_.startsWith(".")).sorted.toSeq // `.crc` sidecars
+
+  private def plant(dir: String, name: String, lines: Seq[String]): Unit = {
+    val w = new java.io.FileWriter(s"$dir/_graft_snapshots/$name")
+    try w.write(lines.mkString("\n")) finally w.close()
+  }
+
+  test("one manifest per write: 20 appends leave exactly the live and the kept full manifest") {
     val dir = freshDir()
-    SnapshotEventStore.init(spark, dir) // snap 1, full
-    // appends against a growing store publish as deltas (small change
-    // sets); results identical to the flat discipline throughout
-    SnapshotEventStore.append(events(2, 6), dir, keepSnapshots = 30)
-    (1 to 3).foreach(k => SnapshotEventStore.append(
-      events(1, 4, idOffset = 1000L * k), dir, keepSnapshots = 30))
-    assert(SnapshotEventStore.read(spark, dir).count() == 24L)
-    val snapDir = new java.io.File(s"$dir/_graft_snapshots")
-    assert(snapDir.listFiles.exists(_.getName.startsWith("snapd_")),
-      "small appends must publish as deltas")
-    // exactly-once watermarks and schema headers ride the deltas
-    SnapshotEventStore.appendBatch(events(1, 2, idOffset = 9000L), dir,
-      batchId = 0L, keepSnapshots = 30)
-    SnapshotEventStore.appendBatch(events(1, 2, idOffset = 9000L), dir,
-      batchId = 0L, keepSnapshots = 30)
-    assert(SnapshotEventStore.read(spark, dir).count() == 26L,
-      "the replay watermark must survive delta publishes")
-    // time travel through the chain
-    assert(SnapshotEventStore.readSnapshot(spark, dir, 2L).count() == 12L)
-    // maintenance (compact rewrites most files → publishes full or
-    // delta, either way equivalent) and RETIRE: the oldest kept
-    // snapshot materializes as a full checkpoint so its chain never
-    // dangles
-    SnapshotEventStore.compact(spark, dir, maxFilesPerPartition = 1,
-      keepSnapshots = 30)
+    (0 until 20).foreach(k =>
+      SnapshotEventStore.append(events(1, 2, idOffset = 100L * k), dir))
     val live = SnapshotEventStore.currentSnapshot(spark, dir).get
-    SnapshotEventStore.retire(spark, dir, keepSnapshots = 1)
-    assert(new java.io.File(
-      s"$dir/_graft_snapshots/snap_${live - 1}").exists(),
-      "retire must leave the oldest kept snapshot as a FULL checkpoint")
-    assert(SnapshotEventStore.read(spark, dir).count() == 26L)
-    assert(SnapshotEventStore.readSnapshot(spark, dir, live - 1)
-      .count() == 26L)
-    // a long append run crosses the checkpoint cadence: at least one
-    // LATER full checkpoint appears mid-chain and reads stay exact
-    (1 to 18).foreach(k => SnapshotEventStore.append(
-      events(1, 1, idOffset = 20000L + k), dir, keepSnapshots = 40))
-    assert(SnapshotEventStore.read(spark, dir).count() == 44L)
-    val fulls = snapDir.listFiles.map(_.getName)
-      .filter(_.startsWith("snap_"))
-      .map(_.stripPrefix("snap_").toLong).sorted
-    assert(fulls.exists(_ > live),
-      s"the checkpoint cadence must force a full manifest; saw $fulls")
-    // a DANGLING delta (the crashed-retire shape: a retired delta
-    // whose base is gone) must never wedge the maintenance verbs —
-    // plant one below the live chain and prove retire/vacuum/stats
-    // skip it while the live read stays exact
-    val liveCount = SnapshotEventStore.read(spark, dir).count()
-    val orphanDelta = new java.io.File(snapDir, "snapd_1")
-    val w = new java.io.FileWriter(orphanDelta)
-    try w.write("+dt=2024-01-01/hour=0/ghost.parquet")
-    finally w.close()
-    assert(SnapshotEventStore.read(spark, dir).count() == liveCount)
-    SnapshotEventStore.vacuumOrphans(spark, dir)
+    assert(snapshotNames(dir) == Seq(s"snap_${live - 1}", s"snap_$live"))
+    assert(SnapshotEventStore.read(spark, dir).count() == 40L)
+  }
+
+  test("retire prunes only the partition directories its deletions emptied") {
+    val dir = freshDir()
+    // hours 0..25: all of 2024-01-01 and hours 0, 1 of 2024-01-02
+    SnapshotEventStore.append(events(26, 2), dir)
+    // an empty partition directory no deletion empties stays as it is
+    new java.io.File(s"$dir/dt=2024-01-03/hour=5").mkdirs()
+    // sweep the first day and 2024-01-02 hour 0 (metadata-only), then
+    // retire the snapshots that still reference them
+    assert(SnapshotEventStore.clearExpired(spark, dir,
+      Base + 25 * 3600000L) == 25)
+    assert(new java.io.File(s"$dir/dt=2024-01-01/hour=0").exists())
+    SnapshotEventStore.retire(spark, dir, keepSnapshots = 0)
+    def exists(rel: String) = new java.io.File(s"$dir/$rel").exists()
+    assert(!exists("dt=2024-01-01"), "the emptied day must be pruned")
+    assert(!exists("dt=2024-01-02/hour=0"), "the emptied hour must be pruned")
+    assert(exists("dt=2024-01-02/hour=1"))
+    assert(exists("dt=2024-01-03/hour=5"),
+      "retire pruned a directory its deletions did not empty")
+    assert(dataFiles(dir).forall(_.startsWith("dt=2024-01-02/hour=1/")))
+    assert(SnapshotEventStore.read(spark, dir).count() == 2L)
+  }
+
+  test("legacy delta manifests: read unchanged, adopted as full manifests by the first write") {
+    val dir = freshDir()
+    // land three batches' files (a: hours 0-1, b: hour 0, c: hours
+    // 0-2), then replace the manifests with the delta format earlier
+    // releases wrote: full snap_1 = a, snapd_2 = +b, snapd_3 = +c
+    // minus a's hour-0 files
+    def landed(df: DataFrame): Seq[String] = {
+      val before = dataFiles(dir)
+      SnapshotEventStore.append(df, dir, keepSnapshots = 10)
+      (dataFiles(dir) -- before).toSeq.sorted
+    }
+    val a = landed(events(2, 5))                     // ids 0..9
+    val b = landed(events(1, 4, idOffset = 100L))    // ids 100..103
+    val c = landed(events(3, 2, idOffset = 300L))    // ids 300..305
+    val schema = new java.io.File(s"$dir/_graft_snapshots").listFiles
+      .filter(_.getName.startsWith("snap_")).flatMap { f =>
+        val src = scala.io.Source.fromFile(f)
+        try src.getLines().toList finally src.close()
+      }.find(_.startsWith("#schema=")).get
+    new java.io.File(s"$dir/_graft_snapshots").listFiles.foreach(_.delete())
+    val aHour0 = a.filter(_.contains("/hour=0/"))
+    plant(dir, "snap_1", Seq("#batch=s:0", schema) ++ a)
+    plant(dir, "snapd_2", Seq("#batch=s:1", schema) ++ b.map("+" + _))
+    plant(dir, "snapd_3", Seq("#batch=s:2", schema) ++ c.map("+" + _) ++
+      aHour0.map("-" + _))
+    def ids(df: DataFrame) =
+      df.select("id").collect().map(_.getString(0).toLong).toSet
+    val snap2 = (0L to 9L).toSet ++ (100L to 103L)
+    val snap3 = (5L to 9L).toSet ++ (100L to 103L) ++ (300L to 305L)
+    // a lease-free reader resolves the deltas before any write
+    assert(ids(SnapshotEventStore.read(spark, dir)) == snap3)
+    assert(ids(SnapshotEventStore.readSnapshot(spark, dir, 2L)) == snap2)
+    assert(SnapshotEventStore.committedBatches(spark, dir, 3L) ==
+      Map("s" -> 2L))
+    // the first write adopts: no delta survives it, reads stay exact
+    SnapshotEventStore.appendBatch(events(1, 2, idOffset = 900L), dir,
+      batchId = 3L, streamId = "s")
+    assert(!snapshotNames(dir).exists(_.startsWith("snapd_")),
+      s"a delta survived the first write: ${snapshotNames(dir)}")
+    val live = snap3 ++ Set(900L, 901L)
+    assert(ids(SnapshotEventStore.read(spark, dir)) == live)
+    assert(ids(SnapshotEventStore.readSnapshot(spark, dir, 3L)) == snap3)
+    // the carried watermarks still screen replays
+    SnapshotEventStore.appendBatch(events(1, 2, idOffset = 800L), dir,
+      batchId = 2L, streamId = "s")
+    SnapshotEventStore.appendBatch(events(1, 2, idOffset = 900L), dir,
+      batchId = 3L, streamId = "s")
+    assert(ids(SnapshotEventStore.read(spark, dir)) == live,
+      "a replay of a carried batch id landed rows")
+    // a DANGLING non-live delta (a crashed retire's leftover: its base
+    // is gone) never wedges stats and is swept by the next write verb
+    plant(dir, "snapd_1", Seq("+dt=2024-01-01/hour=0/ghost.parquet"))
     SnapshotEventStore.snapshotStoreStats(spark, dir).head()
-    SnapshotEventStore.retire(spark, dir, keepSnapshots = 1)
-    assert(!orphanDelta.exists(),
-      "retire must sweep the dangling delta, not wedge on it")
-    assert(SnapshotEventStore.read(spark, dir).count() == liveCount)
+    SnapshotEventStore.vacuumOrphans(spark, dir)
+    assert(!snapshotNames(dir).contains("snapd_1"),
+      "the dangling delta must be swept, not wedge the verb")
+    assert(ids(SnapshotEventStore.read(spark, dir)) == live)
+    // a dangling LIVE delta: retire and vacuum refuse, deleting nothing
+    val n = SnapshotEventStore.currentSnapshot(spark, dir).get
+    plant(dir, s"snapd_${n + 2}", Seq("+dt=2024-01-01/hour=0/ghost.parquet"))
+    val onDisk = dataFiles(dir)
+    intercept[IllegalArgumentException](
+      SnapshotEventStore.retire(spark, dir, keepSnapshots = 0))
+    intercept[IllegalArgumentException](
+      SnapshotEventStore.vacuumOrphans(spark, dir))
+    assert(dataFiles(dir) == onDisk, "a refusing verb deleted data files")
+    assert(snapshotNames(dir).contains(s"snapd_${n + 2}"))
+    new java.io.File(s"$dir/_graft_snapshots/snapd_${n + 2}").delete()
+    assert(ids(SnapshotEventStore.read(spark, dir)) == live)
   }
 
   test("crash leftovers are invisible: orphan files and tmp roots never surface") {
