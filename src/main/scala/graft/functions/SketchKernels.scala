@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The tight-loop bodies of the sketch expressions, as one static
@@ -239,6 +240,59 @@ object SketchKernels {
     }
     s
   }
+
+  /** Σ v[s+i]·w[s+i] in double, left to right, for i below `dsub` and
+    * both lengths, skipping null elements of `v`: [[FloatVecDot]] of
+    * SQL `slice(v, s + 1, dsub)` against `w`'s same slice. */
+  private def subDot(v: ArrayData, s: Int, dsub: Int, w: Array[Float]): Double = {
+    val n = math.min(math.min(dsub, v.numElements() - s), w.length - s)
+    var dot = 0.0
+    var i = 0
+    while (i < n) {
+      if (!v.isNullAt(s + i)) dot += v.getFloat(s + i).toDouble * w(s + i).toDouble
+      i += 1
+    }
+    dot
+  }
+
+  /** See [[PqEncode]]: per subspace j, the code c minimizing
+    * ||c_j||² − 2·(v_j·c_j), ties to the smaller code, doubles
+    * compared in Spark's order (NaN largest, −0.0 == 0.0). A null `v`
+    * encodes to all zeros (every score null, so the smallest code
+    * wins). */
+  def pqEncode(v: ArrayData, cents: Array[Array[Float]],
+      c2: Array[Array[Double]], m: Int, dsub: Int): ArrayData = {
+    val codes = new Array[Int](m)
+    var j = 0
+    while (v != null && j < m) {
+      var bestD = 0.0
+      var c = 0
+      while (c < cents.length) {
+        val d = c2(c)(j) - 2.0 * subDot(v, j * dsub, dsub, cents(c))
+        if (c == 0 || SQLOrderingUtil.compareDoubles(d, bestD) < 0) {
+          codes(j) = c
+          bestD = d
+        }
+        c += 1
+      }
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(codes)
+  }
+
+  /** See [[PqLut]]: lut[j][c] = ||q_j||² − 2·(q_j·c_j) + ||c_j||², in
+    * that evaluation order; a null `q` gives null entries. */
+  def pqLut(q: ArrayData, cents: Array[Array[Float]],
+      c2: Array[Array[Double]], m: Int, dsub: Int): ArrayData =
+    new GenericArrayData(Array.tabulate[Any](m) { j =>
+      if (q == null) new GenericArrayData(new Array[Any](cents.length))
+      else {
+        val s = j * dsub
+        val q2 = subDot(q, s, dsub, q.toFloatArray())
+        UnsafeArrayData.fromPrimitiveArray(Array.tabulate(cents.length)(c =>
+          q2 - 2.0 * subDot(q, s, dsub, cents(c)) + c2(c)(j)))
+      }
+    })
 
   /** See [[MinHash64]]. */
   def minhash64(arr: ArrayData, numPerms: Int): ArrayData = {

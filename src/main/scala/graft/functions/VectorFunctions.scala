@@ -3,9 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -433,6 +434,80 @@ case class PqAdc(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** A product-quantization projection of a float vector against a
+  * literal codebook: `cents` holds the kEff full-dim centroids whose
+  * j-th dsub-slice is subspace j's centroid. One kernel loop per row
+  * ([[SketchKernels]]) in place of m·kEff scalar expressions, which
+  * overflowed the generated method's size limit and fell back to
+  * interpreted execution. ||c_j||² is summed left to right in double,
+  * like [[FloatVecDot]]. Never null. */
+sealed abstract class PqBookExpression extends UnaryExpression {
+  def cents: Array[Array[Float]]
+  def m: Int
+  def dsub: Int
+  protected def kernel: String
+  protected def run(v: ArrayData): ArrayData
+
+  @transient protected lazy val c2: Array[Array[Double]] = cents.map { c =>
+    Array.tabulate(m) { j =>
+      var acc = 0.0
+      var i = j * dsub
+      while (i < math.min(c.length, (j + 1) * dsub)) {
+        acc += c(i).toDouble * c(i).toDouble
+        i += 1
+      }
+      acc
+    }
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<float>, got ${other.simpleString}")
+  }
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any =
+    run(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = child.genCode(ctx)
+    val centsRef = ctx.addReferenceObj("pqCents", cents, "float[][]")
+    val c2Ref = ctx.addReferenceObj("pqC2", c2, "double[][]")
+    ev.copy(code = code"""
+      |${v.code}
+      |ArrayData ${ev.value} = graft.functions.SketchKernels.$kernel(
+      |  ${v.isNull} ? null : ${v.value}, $centsRef, $c2Ref, $m, $dsub);
+      """.stripMargin, isNull = FalseLiteral)
+  }
+}
+
+/** PQ ENCODE: one code per subspace, the centroid nearest the
+  * vector's subvector in squared L2, ties to the smaller code. */
+case class PqEncode(child: Expression, cents: Array[Array[Float]],
+    m: Int, dsub: Int) extends PqBookExpression {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override protected def kernel: String = "pqEncode"
+  override protected def run(v: ArrayData): ArrayData =
+    SketchKernels.pqEncode(v, cents, c2, m, dsub)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The per-query ADC table [[PqAdc]] reads: lut[j][c] = the exact
+  * squared L2 between the query's j-th subvector and subspace j's
+  * centroid c. */
+case class PqLut(child: Expression, cents: Array[Array[Float]],
+    m: Int, dsub: Int) extends PqBookExpression {
+  override def dataType: DataType =
+    ArrayType(ArrayType(DoubleType, containsNull = true), containsNull = false)
+  override protected def kernel: String = "pqLut"
+  override protected def run(v: ArrayData): ArrayData =
+    SketchKernels.pqLut(v, cents, c2, m, dsub)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object VectorFunctions {
   /** Column API for [[FloatVecDot]]. */
   def vecDot(a: Column, b: Column): Column = Bridge.column(
@@ -441,6 +516,16 @@ object VectorFunctions {
   /** Column API for [[PqAdc]]. */
   def pqAdc(codes: Column, lut: Column): Column = Bridge.column(
     PqAdc(Bridge.expression(codes), Bridge.expression(lut)))
+
+  /** Column API for [[PqEncode]]. */
+  def pqEncode(vec: Column, cents: Array[Array[Float]], m: Int,
+      dsub: Int): Column =
+    Bridge.column(PqEncode(Bridge.expression(vec), cents, m, dsub))
+
+  /** Column API for [[PqLut]]. */
+  def pqLut(vec: Column, cents: Array[Array[Float]], m: Int,
+      dsub: Int): Column =
+    Bridge.column(PqLut(Bridge.expression(vec), cents, m, dsub))
 
   /** L2 norm of a float-array column (codegen'd). */
   def vecNorm(a: Column): Column = {

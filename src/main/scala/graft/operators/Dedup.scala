@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SketchFunctions
@@ -684,15 +684,28 @@ object Dedup {
           .select(md5(col(textCol)).as("ch")).distinct(),
         s"${name}_ch", "ch", numBuckets))
     finally sig.unpersist()
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    Bucketing.writeTable(
-      Seq((shingleK, numPerms, bands, md5Sig, shhBasisOf(md5Sig),
-        numBuckets, tokenizer))
-        .toDF("shingle_k", "num_perms", "bands", "md5_sig", "shh_basis",
-          "num_buckets", "tokenizer"),
-      s"${name}_meta")
+    IndexFamily.writeMeta(corpus.sparkSession, metaRow(shingleK, numPerms,
+      bands, md5Sig, numBuckets, tokenizer), s"${name}_meta")
     }
+  }
+
+  private val MetaSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "shingle_k INT, num_perms INT, bands INT, md5_sig BOOLEAN, " +
+      "shh_basis STRING, num_buckets INT, tokenizer STRING")
+
+  /** A dedup index's `_meta` row in the current format. */
+  private def metaRow(shingleK: Int, numPerms: Int, bands: Int,
+      md5Sig: Boolean, numBuckets: Int, tokenizer: String): Row =
+    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      Array(shingleK, numPerms, bands, md5Sig, shhBasisOf(md5Sig),
+        numBuckets, tokenizer), MetaSchema)
+
+  /** [[indexMeta]] as a current-format row: the descriptor's meta
+    * reader ([[IndexFamily.dedup]]). */
+  private[operators] def dedupMetaRow(spark: org.apache.spark.sql.SparkSession,
+      name: String): Row = {
+    val (k, p, b, m, nb, t) = indexMeta(spark, name)
+    metaRow(k, p, b, m, nb, t)
   }
 
   /** The per-shingle hash basis the index's stored `_docs.shh` sets
@@ -847,40 +860,21 @@ object Dedup {
     }
   }
 
-  /** Reconciles a dedup index against the LANDED corpus — the
-    * [[graft.operators.Retrieval.reconcileBm25Index]] verb for this
-    * family, and what makes [[graft.operators.OpsCard]]'s drift
-    * column actionable here: landed docs absent from `_docs` (a
-    * crashed fold-in, an index enabled after the corpus landed, an
-    * abandoned stream's last window) fold in through the normal
-    * append, count surfaced, idempotent (a second run finds
-    * nothing). Replay-safety note: [[appendToDedupIndex]] writes
-    * bands → docs → ch, and unlike BM25 postings this order is SAFE
-    * under re-append of a partially-appended doc — the screen's
-    * semantics are EXISTENTIAL (a duplicate band/ch row can only
-    * re-produce the same candidate, which the verification
-    * re-rejects or re-confirms identically), so the one residual
-    * window (death between bands and docs) heals right here by
-    * re-running. COST, disclosed: one landed-corpus scan against
-    * the narrow `_docs` id projection — a repair verb, not a
-    * per-batch one. */
+  /** Reconciles a dedup index against the LANDED corpus
+    * ([[IndexFamily.reconcile]]): landed docs absent from `_docs`
+    * fold in through [[appendToDedupIndex]]. Replay-safety note:
+    * the append writes bands and ch before docs, and unlike BM25
+    * postings that order is SAFE under re-append of a partially
+    * appended doc — the screen's semantics are EXISTENTIAL (a
+    * duplicate band/ch row can only re-produce the same candidate,
+    * which the verification re-rejects or re-confirms identically),
+    * so the one residual window (death before docs) heals right here
+    * by re-running. */
   def reconcileDedupIndex(landed: DataFrame, idCol: String,
-      textCol: String, name: String): Long = {
-    val spark = landed.sparkSession
-    Bucketing.withIndexLease(spark, name, "reconcileDedupIndex") {
-      // eager pin: counted AND appended, and the append mutates the
-      // tables the anti-join reads (the reconcileBm25Index lesson)
-      val missing = landed
-        .filter(col(idCol).isNotNull && col(textCol).isNotNull)
-        .join(spark.table(s"${name}_docs")
-          .select(col("doc_id").as("__seen_id")),
-          col(idCol) === col("__seen_id"), "left_anti")
-        .localCheckpoint(true)
-      val n = missing.count()
-      if (n > 0) appendToDedupIndex(missing, idCol, textCol, name)
-      n
-    }
-  }
+      textCol: String, name: String): Long =
+    IndexFamily.reconcile(IndexFamily.dedup,
+      landed.filter(col(idCol).isNotNull && col(textCol).isNotNull),
+      col(idCol), name)(appendToDedupIndex(_, idCol, textCol, name))
 
   /** Keep-one dedup WITHIN one batch, with the SAME sketch
     * arithmetic as a [[buildDedupIndex]] index (parameters read from
@@ -946,103 +940,25 @@ object Dedup {
     dropNearDuplicates(exactKept, idCol, pairs)
   }
 
-  /** Maintenance pass for a [[buildDedupIndex]] index that has
-    * accreted appends: rewrites each of the three tables to one file
-    * per bucket (each [[appendToDedupIndex]] adds a file per bucket,
-    * so after K batches every screen opens K× the files), and
-    * re-distincts `_ch` (per-batch appends are batch-distinct, not
-    * globally distinct — harmless for anti-join semantics, but
-    * compaction is the natural place to shed the duplicates). Each
-    * table is a [[graft.sources.Bucketing.compactBucketed]]
-    * generation swap: the live table is re-pointed only after its
-    * compacted copy fully exists, and a reader pinned before the swap
-    * keeps scanning the old files. */
+  /** [[IndexFamily.compact]] for a [[buildDedupIndex]] index: `_bands`
+    * and `_docs` rewrite to one file per bucket, and `_ch` also sheds
+    * the duplicates per-batch appends leave (each append is
+    * batch-distinct, not globally distinct — harmless for anti-join
+    * semantics). */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    Bucketing.withIndexLease(spark, name, "compactDedupIndex") {
-      val (_, _, _, _, numBuckets, _) = indexMeta(spark, name)
-      Bucketing.compactBucketed()(spark, s"${name}_bands", "band_hash",
-        numBuckets)
-      Bucketing.compactBucketed()(spark, s"${name}_docs", "doc_id",
-        numBuckets)
-      Bucketing.compactBucketed(_.distinct())(spark, s"${name}_ch", "ch",
-        numBuckets)
-    }
+    IndexFamily.compact(spark, IndexFamily.dedup, name)
 
-  /** Merge disjoint dedup-index SHARDS into one — the BM25 shard
-    * merge's pattern ([[graft.operators.Retrieval.mergeBm25Indexes]],
-    * the Lucene segment-merge shape) for the MinHash family: the
-    * 100 TB ingest builds small indexes near the data and
-    * consolidates off the hot path. Band rows and doc sets union
-    * re-bucketed once (per-doc rows — no merge arithmetic); `_ch`
-    * unions DEDUPED (exact content legitimately repeats across
-    * shards, and the set semantics must survive the merge) through
-    * an explicit repartition — the co-bucketed-union planner hazard
-    * (same key in one partition PER CHILD satisfying the clustering
-    * requirement) bites any keyed aggregate over unioned co-bucketed
-    * scans. Refuses loudly: different sketch geometries / tokenizer
-    * families / hash bases (merged band rows would mean two things —
-    * reband or rebuild the odd one out first) and overlapping doc
-    * ids (their bands would double). Holds EVERY participant's lease
-    * — sources too, so a concurrent append cannot land between the
-    * merge's read passes. */
+  /** Merge disjoint dedup-index SHARDS into one ([[IndexFamily.merge]]):
+    * band rows and doc sets union re-bucketed once (per-doc rows — no
+    * merge arithmetic); `_ch` unions DEDUPED (exact content
+    * legitimately repeats across shards). Refuses different sketch
+    * geometries / tokenizer families / hash bases (merged band rows
+    * would mean two things — reband or rebuild the odd one out
+    * first) and overlapping doc ids (their bands would double). */
   def mergeDedupIndexes(spark: org.apache.spark.sql.SparkSession,
-      target: String, sources: Seq[String], numBuckets: Int = 8): Unit = {
-    require(sources.size >= 2,
-      s"mergeDedupIndexes: need at least 2 sources, got ${sources.size}")
-    Bucketing.withIndexLeases(spark, target +: sources,
-      "mergeDedupIndexes") {
-      // geometry reads INSIDE the leases: validated-then-leased would
-      // let a concurrent rebuild land between the check and the lock,
-      // merging rows under a geometry the check never saw (TOCTOU).
-      // Per-source `_meta` heads are independent — overlapped
-      // (guide §2.6)
-      val metas = new Array[(Int, Int, Int, Boolean, Int, String)](
-        sources.size)
-      graft.Par.run(sources.zipWithIndex.map { case (s, i) => () =>
-        metas(i) = indexMeta(spark, s)
-      }: _*)
-      val geoms = metas.toSeq
-        .map(m => (m._1, m._2, m._3, m._4, m._6)).distinct
-      require(geoms.size == 1,
-        s"mergeDedupIndexes: sources carry different sketch geometries / " +
-          s"families $geoms — merged band rows would mean two things; " +
-          "reband or rebuild the odd one out first")
-      val docsAll = sources
-        .map(s => spark.table(s"${s}_docs"))
-        .reduce(_ unionByName _)
-      val chk = docsAll.repartition(col("doc_id"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("doc_id")).as("nd")).head()
-      require(chk.getLong(0) == chk.getLong(1),
-        s"mergeDedupIndexes: sources share ${chk.getLong(0) - chk.getLong(1)} " +
-          "doc id(s) — their band rows would double; retire the " +
-          "duplicates from one source first")
-      // the three merged tables read only the (lease-frozen) sources —
-      // independent writes, overlapped (the buildDedupIndex shape);
-      // `_meta` stays LAST, the existence readers key on
-      graft.Par.run(
-        () => Bucketing.writeBucketed(
-          sources.map(s => spark.table(s"${s}_bands"))
-            .reduce(_ unionByName _),
-          s"${target}_bands", "band_hash", numBuckets),
-        () => Bucketing.writeBucketed(docsAll, s"${target}_docs", "doc_id",
-          numBuckets),
-        () => Bucketing.writeBucketed(
-          sources.map(s => spark.table(s"${s}_ch"))
-            .reduce(_ unionByName _)
-            .repartition(col("ch")) // LOAD-BEARING: see scaladoc
-            .distinct(),
-          s"${target}_ch", "ch", numBuckets))
-      val (k, p, b, m, _, t) = metas.head
-      import spark.implicits._
-      Bucketing.writeTable(
-        Seq((k, p, b, m, shhBasisOf(m), numBuckets, t))
-          .toDF("shingle_k", "num_perms", "bands", "md5_sig",
-            "shh_basis", "num_buckets", "tokenizer"),
-        s"${target}_meta")
-    }
-  }
+      target: String, sources: Seq[String], numBuckets: Int = 8): Unit =
+    IndexFamily.merge(spark, IndexFamily.dedup, target, sources, numBuckets)
 
   /** INGEST-DRIFT card for a dedup index vs an INCOMING batch — the
     * MinHash sibling of [[graft.operators.Retrieval
@@ -1105,28 +1021,12 @@ object Dedup {
           .as("new_hash_share"))
   }
 
-  /** Merge URL-frontier SHARDS — the same consolidation verb for the
-    * crawl frontier: canonical-URL keys union DEDUPED (two shards
-    * remembering one URL is the normal case, not an error — the
-    * frontier is a set) through the same load-bearing repartition,
-    * re-bucketed once. Holds every participant's lease. */
+  /** Merge URL-frontier SHARDS ([[IndexFamily.merge]]): canonical-URL
+    * keys union DEDUPED — two shards remembering one URL is the
+    * normal case, not an error, since the frontier is a set. */
   def mergeUrlIndexes(spark: org.apache.spark.sql.SparkSession,
-      target: String, sources: Seq[String], numBuckets: Int = 8): Unit = {
-    require(sources.size >= 2,
-      s"mergeUrlIndexes: need at least 2 sources, got ${sources.size}")
-    Bucketing.withIndexLeases(spark, target +: sources,
-      "mergeUrlIndexes") {
-      Bucketing.writeBucketed(
-        sources.map(s => spark.table(s"${s}_url"))
-          .reduce(_ unionByName _)
-          .repartition(col("uh")) // the co-bucketed-union hazard again
-          .distinct(),
-        s"${target}_url", "uh", numBuckets)
-      import spark.implicits._
-      Bucketing.writeTable(Seq(numBuckets).toDF("num_buckets"),
-        s"${target}_meta")
-    }
-  }
+      target: String, sources: Seq[String], numBuckets: Int = 8): Unit =
+    IndexFamily.merge(spark, IndexFamily.url, target, sources, numBuckets)
 
   /** INGEST-DRIFT card for a perceptual SIGNATURE index vs an
     * incoming batch of sigs — [[dedupIngestDriftCard]]'s sibling for
@@ -1188,93 +1088,17 @@ object Dedup {
           .as("new_chunk_share"))
   }
 
-  /** Merge perceptual SIGNATURE-index shards — the fifth family's
-    * consolidation verb, completing the build-small-near-the-data
-    * story for every persistent index. Chunk rows union re-bucketed
-    * once (doc-disjoint shards → no merge arithmetic); the OPTIONAL
-    * video evidence sides (`_vchunks`/`_vframes`) union DEDUPED from
-    * whichever sources carry them — evidence is a SET, and the
-    * video screen is dup-tolerant by contract, so a vid remembered
-    * by two shards merges to its distinct rows. Every distinct here
-    * runs through an explicit repartition: the sources' bucketed
-    * scans report a partitioning on the BUCKET column that satisfies
-    * the distinct's clustering requirement ({bucket col} ⊆ {all
-    * cols}), so without a real exchange the same row would survive
-    * once PER CHILD — the d140 co-bucketed-union planner hazard.
-    * Refuses different hamming geometries (maxDist is the chunk
-    * fold's shape — merged chunk rows would mean two things;
-    * rechunk first) and overlapping doc ids. Holds every
-    * participant's lease. */
+  /** Merge perceptual SIGNATURE-index shards ([[IndexFamily.merge]]):
+    * chunk rows union re-bucketed once (doc-disjoint shards → no
+    * merge arithmetic); the OPTIONAL video evidence sides
+    * (`_vchunks`/`_vframes`) union DEDUPED from whichever sources
+    * carry them — evidence is a SET, and the video screen is
+    * dup-tolerant by contract. Refuses different hamming geometries
+    * (maxDist is the chunk fold's shape — merged chunk rows would
+    * mean two things; rechunk first) and overlapping doc ids. */
   def mergeSimIndexes(spark: org.apache.spark.sql.SparkSession,
-      target: String, sources: Seq[String], numBuckets: Int = 8): Unit = {
-    require(sources.size >= 2,
-      s"mergeSimIndexes: need at least 2 sources, got ${sources.size}")
-    Bucketing.withIndexLeases(spark, target +: sources,
-      "mergeSimIndexes") {
-      // geometry reads INSIDE the leases (the merge-verb TOCTOU rule);
-      // per-source `_meta` heads are independent — overlapped
-      val metaArr = new Array[Int](sources.size)
-      graft.Par.run(sources.zipWithIndex.map { case (s, i) => () =>
-        metaArr(i) = simIndexMeta(spark, s)._1
-      }: _*)
-      val geoms = metaArr.toSeq.distinct
-      require(geoms.size == 1,
-        s"mergeSimIndexes: sources carry different hamming geometries " +
-          s"(maxDist $geoms) — merged chunk rows would mean two things; " +
-          "rechunkSimIndex the odd one out first")
-      // ONE aggregate proves disjointness (the sibling verbs' form):
-      // rows of the union-of-per-source-DISTINCTs count the sum of
-      // per-shard doc sets, countDistinct the union — equal iff
-      // disjoint. Chunks repeat doc_id per doc, hence the inner
-      // distincts; the repartition is the co-bucketed-union guard.
-      val chk = sources.map(s =>
-        spark.table(s"${s}_chunks")
-          .select(col("doc_id")).distinct())
-        .reduce(_ unionByName _)
-        .repartition(col("doc_id"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("doc_id")).as("nd")).head()
-      require(chk.getLong(0) == chk.getLong(1),
-        s"mergeSimIndexes: sources share ${chk.getLong(0) - chk.getLong(1)} " +
-          "doc id(s) — their chunk rows would double; retire the " +
-          "duplicates from one source first")
-      // video evidence: union whatever exists (lazily created)
-      val withVChunks = sources.filter(s =>
-        spark.catalog.tableExists(s"${s}_vchunks"))
-      val withVFrames = sources.filter(s =>
-        spark.catalog.tableExists(s"${s}_vframes"))
-      Bucketing.dropTableAndDir(spark, s"${target}_vchunks")
-      Bucketing.dropTableAndDir(spark, s"${target}_vframes")
-      // the merged tables read only the (lease-frozen) sources —
-      // independent writes, overlapped (guide §2.6); `_meta` last
-      graft.Par.run(
-        () => Bucketing.writeBucketed(
-          sources.map(s => spark.table(s"${s}_chunks"))
-            .reduce(_ unionByName _),
-          s"${target}_chunks", "chunk_hash", numBuckets),
-        () => if (withVChunks.nonEmpty)
-          Bucketing.writeBucketed(
-            withVChunks.map(s => spark.table(s"${s}_vchunks"))
-              .reduce(_ unionByName _)
-              .repartition(col("chunk_hash"))
-              .distinct(),
-            s"${target}_vchunks", "chunk_hash", numBuckets),
-        () => if (withVFrames.nonEmpty)
-          Bucketing.writeBucketed(
-            withVFrames.map(s => spark.table(s"${s}_vframes"))
-              .reduce(_ unionByName _)
-              .repartition(col("vid"))
-              .distinct(),
-            s"${target}_vframes", "vid", numBuckets))
-      import spark.implicits._
-      Bucketing.writeTable(
-        Seq((geoms.head, numBuckets)).toDF("max_dist", "num_buckets"),
-        s"${target}_meta")
-    }
-  }
-
-  private def rebandMarker(name: String): String =
-    s"${name.toLowerCase}__reband_pending"
+      target: String, sources: Seq[String], numBuckets: Int = 8): Unit =
+    IndexFamily.merge(spark, IndexFamily.sim, target, sources, numBuckets)
 
   /** RE-BAND actuator for a [[buildDedupIndex]] index — the verb
     * behind [[dedupIndexStats]]'s band histogram (stats with no
@@ -1300,21 +1124,12 @@ object Dedup {
     *
     * Crash safety — `_bands` and `_meta` must change TOGETHER (the
     * band rows are only interpretable through meta's bands/numPerms),
-    * so the write order is the [[graft.operators.Similarity
-    * .rebalanceAnnIndex]] stage→marker→promote→clear discipline:
-    * (1) the new band rows and new meta stage durably under
-    * `_bands_stage`/`_meta_stage`; (2) a durable filesystem marker
-    * declares the staged state the truth; (3) both tables promote
-    * (plain overwrites re-runnable from the intact stage); (4)
-    * marker, then stages, clear. Pre-marker a leftover stage drops —
-    * the live index was never touched. Post-marker recovery ROLLS
-    * FORWARD from the stage; [[openDedupIndex]] runs the same
-    * recovery, so a death at ANY point leaves a fresh session one
-    * open() from consistent. */
+    * so both stage and promote through [[IndexFamily.promote]]'s
+    * stage→marker→promote→clear protocol; [[IndexFamily.open]] rolls
+    * an interruption forward past the marker or drops it before. */
   def rebandDedupIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, bands: Int, numPerms: Int): Unit =
-    Bucketing.withIndexLease(spark, name, "rebandDedupIndex") {
-    finishInterruptedReband(spark, name)
+    IndexFamily.promote(spark, IndexFamily.dedup, name, "rebandDedupIndex") {
     val (shingleK, _, _, md5Sig, numBuckets, tokenizer) =
       indexMeta(spark, name)
     require(md5Sig,
@@ -1329,20 +1144,13 @@ object Dedup {
       .select(col("doc_id"), col("sz"),
         SketchFunctions.md5Minhash30FromHashes(col("shh"), numPerms)
           .as("sig"))
-    import spark.implicits._
     // the two stage writes are independent (pre-marker leftovers are
     // simply dropped) — overlapped (guide §2.6)
     graft.Par.run(
       () => Bucketing.writeBucketed(bandRowsFromSig(sigRows, bands, r),
-        s"${name}_bands_stage", "band_hash", numBuckets),
-      () => Bucketing.writeTable(
-        Seq((shingleK, numPerms, bands, md5Sig, shhBasisOf(md5Sig),
-          numBuckets, tokenizer))
-          .toDF("shingle_k", "num_perms", "bands", "md5_sig", "shh_basis",
-            "num_buckets", "tokenizer"),
-        s"${name}_meta_stage"))
-    Bucketing.createMarker(spark, rebandMarker(name))
-    completeReband(spark, name)
+        IndexFamily.stageName(name, "_bands"), "band_hash", numBuckets),
+      () => IndexFamily.writeMeta(spark, metaRow(shingleK, numPerms, bands,
+        md5Sig, numBuckets, tokenizer), IndexFamily.stageName(name, "_meta")))
     }
 
   /** The DECISION input between [[dedupIndexStats]] (what the index
@@ -1391,54 +1199,15 @@ object Dedup {
     }.reduce(_ unionByName _)
   }
 
-  /** Roll-forward tail shared by [[rebandDedupIndex]] and its crash
-    * recovery — precondition: both stages exist and the marker is
-    * set. Both promotions are plain overwrites from the intact
-    * stage, so re-running after a death anywhere inside is safe. */
-  private def completeReband(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    val bandsStage = s"${name}_bands_stage"
-    val metaStage = s"${name}_meta_stage"
-    Bucketing.registerExisting(spark, metaStage, None)
-    val numBuckets = spark.table(metaStage).head().getAs[Int]("num_buckets")
-    Bucketing.registerExisting(spark, bandsStage,
-      Some(("band_hash", numBuckets)))
-    // both promotions are plain overwrites from the intact stages
-    // (re-runnable after a death anywhere inside — the scaladoc
-    // contract), so they overlap; marker and stages survive until
-    // after both land. The mixed-table read window for a lease-free
-    // reader is the same one the serial order already had.
-    graft.Par.run(
-      () => Bucketing.writeBucketed(spark.table(bandsStage),
-        s"${name}_bands", "band_hash", numBuckets),
-      () => Bucketing.writeTable(spark.table(metaStage), s"${name}_meta"))
-    Bucketing.deleteMarker(spark, rebandMarker(name))
-    Bucketing.dropTableAndDir(spark, bandsStage)
-    Bucketing.dropTableAndDir(spark, metaStage)
-  }
-
-  private def finishInterruptedReband(
-      spark: org.apache.spark.sql.SparkSession, name: String): Unit = {
-    if (!Bucketing.markerExists(spark, rebandMarker(name))) {
-      // pre-marker death: the staged tables never became the truth —
-      // the live index is untouched; drop the leftovers
-      Bucketing.dropTableAndDir(spark, s"${name}_bands_stage")
-      Bucketing.dropTableAndDir(spark, s"${name}_meta_stage")
-      return
-    }
-    completeReband(spark, name)
-  }
-
   /** RETIREMENT — the lifecycle verb the other five (build, append,
     * compact, open, screen) leave open, and at 100 TB a mandatory
     * one: a takedown/right-to-be-forgotten request must remove a
     * document's near-dup EVIDENCE (its band rows and shingle-set
-    * row) from the persistent index without a corpus rebuild. Rides
-    * [[graft.sources.Bucketing.compactBucketed]]'s generation swap
-    * verbatim — the rewrite is an anti-join filter over each bucketed
-    * table, built completely in the next generation before the
-    * catalog re-points, so a crash anywhere inside it leaves the live
-    * generation serving, exactly like an interrupted compaction.
+    * row) from the persistent index without a corpus rebuild:
+    * [[IndexFamily.retire]] over `_bands` and `_docs`, whose
+    * compact-with-filter generation swap leaves the live generation
+    * serving after a crash anywhere inside, exactly like an
+    * interrupted compaction.
     *
     * CONTENT hashes are a separate decision, so they take the
     * removed docs' TEXTS and a flag: with `dropContentHashes =
@@ -1474,57 +1243,26 @@ object Dedup {
     * their clustering intact. */
   def retireFromDedupIndex(docs: DataFrame, idCol: String,
       textCol: String, name: String,
-      dropContentHashes: Boolean = false): Unit = {
-    val spark = docs.sparkSession
-    Bucketing.withIndexLease(spark, name, "retireFromDedupIndex") {
-    val (_, _, _, _, numBuckets, _) = indexMeta(spark, name)
-    val ids = docs.filter(col(idCol).isNotNull)
-      .select(col(idCol).cast("long").as("__rid")).distinct()
-    Bucketing.compactBucketed(
-      _.join(broadcast(ids), col("doc_id") === col("__rid"),
-        "left_anti"))(spark, s"${name}_bands", "band_hash", numBuckets)
-    Bucketing.compactBucketed(
-      _.join(broadcast(ids), col("doc_id") === col("__rid"),
-        "left_anti"))(spark, s"${name}_docs", "doc_id", numBuckets)
-    if (dropContentHashes) {
-      val hashes = docs
-        .filter(col(idCol).isNotNull && col(textCol).isNotNull)
-        .select(md5(col(textCol)).as("__rch")).distinct()
-      Bucketing.compactBucketed(
-        _.join(broadcast(hashes), col("ch") === col("__rch"),
-          "left_anti").distinct())(spark, s"${name}_ch", "ch", numBuckets)
+      dropContentHashes: Boolean = false): Unit =
+    Bucketing.withIndexLease(docs.sparkSession, name,
+      "retireFromDedupIndex") {
+      IndexFamily.retire(IndexFamily.dedup, docs, col(idCol).cast("long"),
+        name)
+      if (dropContentHashes) {
+        val hashes = docs
+          .filter(col(idCol).isNotNull && col(textCol).isNotNull)
+          .select(md5(col(textCol)).as("__rch")).distinct()
+        Bucketing.compactBucketed(
+          _.join(broadcast(hashes), col("ch") === col("__rch"),
+            "left_anti").distinct())(docs.sparkSession, s"${name}_ch", "ch",
+          IndexFamily.numBuckets(docs.sparkSession, IndexFamily.dedup, name))
+      }
     }
-    }
-  }
 
-  /** Re-opens a [[buildDedupIndex]] index in a FRESH session: the
-    * default in-memory catalog forgets every managed table on
-    * restart, but the index's bucketed parquet directories (bucket
-    * ids encoded in the file names) persist in the warehouse. This
-    * re-registers all four tables from their surviving directories —
-    * bucket specs restored from `<name>_meta`, which is registered
-    * first. [[graft.sources.Bucketing.registerExisting]] resolves each
-    * table's live generation (and adopts the crash state an earlier
-    * release's staged compaction swap could leave). Idempotent; a
-    * table the catalog already knows is only re-pointed to its live
-    * generation. */
+  /** [[IndexFamily.open]] for a [[buildDedupIndex]] index. */
   def openDedupIndex(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    // an interrupted REBAND recovers FIRST (post-marker, the live
-    // meta may be mid-overwrite — the staged meta is the truth and
-    // completeReband reads only the stage); pre-marker it just
-    // clears never-promoted leftovers
-    finishInterruptedReband(spark, name)
-    require(Bucketing.registerExisting(spark, s"${name}_meta", None),
-      s"no persisted dedup index named '$name' in the warehouse")
-    val (_, _, _, _, numBuckets, _) = indexMeta(spark, name)
-    Seq(s"${name}_bands" -> "band_hash", s"${name}_docs" -> "doc_id",
-      s"${name}_ch" -> "ch").foreach { case (table, bucketCol) =>
-      require(Bucketing.registerExisting(spark, table,
-        Some((bucketCol, numBuckets))),
-        s"dedup index '$name' is missing its $table table")
-    }
-  }
+      name: String): Unit =
+    IndexFamily.open(spark, IndexFamily.dedup, name)
 
   /** Occupancy/cardinality report for a [[buildDedupIndex]] index —
     * the dedup family's counterpart of
@@ -1587,6 +1325,13 @@ object Dedup {
     (m.getAs[Int]("max_dist"), m.getAs[Int]("num_buckets"))
   }
 
+  private def writeSimMeta(spark: org.apache.spark.sql.SparkSession,
+      maxDist: Int, numBuckets: Int, table: String): Unit = {
+    import spark.implicits._
+    Bucketing.writeTable(
+      Seq((maxDist, numBuckets)).toDF("max_dist", "num_buckets"), table)
+  }
+
   /** Builds a persistent signature index over `(doc_id: long,
     * sim: long)` rows — pigeonhole chunk rows bucketed by chunk_hash
     * plus a meta table the screen and append paths read `maxDist`
@@ -1610,10 +1355,7 @@ object Dedup {
     // corpus or fail the next lazy create on the leftover location
     Bucketing.dropTableAndDir(spark, s"${name}_vchunks")
     Bucketing.dropTableAndDir(spark, s"${name}_vframes")
-    import spark.implicits._
-    Bucketing.writeTable(
-      Seq((maxDist, numBuckets)).toDF("max_dist", "num_buckets"),
-      s"${name}_meta")
+    writeSimMeta(spark, maxDist, numBuckets, s"${name}_meta")
     }
   }
 
@@ -1654,49 +1396,25 @@ object Dedup {
     }
   }
 
-  /** Reconciles a signature index against the LANDED signature set —
-    * the [[reconcileDedupIndex]] verb for the perceptual family:
-    * landed (doc_id, sim) rows whose doc_id holds no chunk rows
-    * append through the normal verb, count surfaced, idempotent.
-    * COST, disclosed: one doc_id-distinct pass over `_chunks`
-    * (column-pruned) against the landed sigs — a repair verb. The
+  /** Reconciles a signature index against the LANDED signature set
+    * ([[IndexFamily.reconcile]]): landed (doc_id, sim) rows whose
+    * doc_id holds no chunk rows append through the normal verb. The
     * caller passes SIGNATURES (the cheap, already-decoded
     * projection), never media payloads: reconciliation must not
     * become a re-decode. */
-  def reconcileSimIndex(landedSigs: DataFrame, name: String): Long = {
-    val spark = landedSigs.sparkSession
-    Bucketing.withIndexLease(spark, name, "reconcileSimIndex") {
-      val missing = landedSigs
-        .filter(col("doc_id").isNotNull && col("sim").isNotNull)
-        .join(spark.table(s"${name}_chunks").select(col("doc_id"))
-          .distinct().select(col("doc_id").as("__seen_id")),
-          col("doc_id") === col("__seen_id"), "left_anti")
-        .localCheckpoint(true)
-      val n = missing.count()
-      if (n > 0) appendToSimIndex(missing, name)
-      n
-    }
-  }
+  def reconcileSimIndex(landedSigs: DataFrame, name: String): Long =
+    IndexFamily.reconcile(IndexFamily.sim,
+      landedSigs.filter(col("doc_id").isNotNull && col("sim").isNotNull),
+      col("doc_id"), name)(appendToSimIndex(_, name))
 
-  /** Maintenance: rewrites the chunk table to one file per bucket
-    * after K appends ([[compactDedupIndex]]'s contract). The optional
+  /** [[IndexFamily.compact]] for a signature index. The optional
     * video-frame tables compact too when present — with distinct(),
     * since a replayed [[appendVideoFramesToSimIndex]] legally lands
     * duplicate rows the screen tolerates but a compaction should
     * shed. */
   def compactSimIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    Bucketing.withIndexLease(spark, name, "compactSimIndex") {
-      val (_, numBuckets) = simIndexMeta(spark, name)
-      Bucketing.compactBucketed()(spark, s"${name}_chunks", "chunk_hash",
-        numBuckets)
-      if (spark.catalog.tableExists(s"${name}_vchunks"))
-        Bucketing.compactBucketed(_.distinct())(spark, s"${name}_vchunks",
-          "chunk_hash", numBuckets)
-      if (spark.catalog.tableExists(s"${name}_vframes"))
-        Bucketing.compactBucketed(_.distinct())(spark, s"${name}_vframes",
-          "vid", numBuckets)
-    }
+    IndexFamily.compact(spark, IndexFamily.sim, name)
 
   // ---------------------------------------------------------------
   // Per-frame NEAR video screening for the signature index. A video
@@ -1805,9 +1523,6 @@ object Dedup {
       col("doc_id") === col("bvid"), "left_anti")
   }
 
-  private def rechunkMarker(name: String): String =
-    s"${name.toLowerCase}__rechunk_pending"
-
   /** RE-CHUNK actuator for the signature index — the [[
     * rebandDedupIndex]] symmetry for the perceptual family, closing
     * the last geometry frozen at build: `maxDist` fixes the
@@ -1824,132 +1539,48 @@ object Dedup {
     * (frame chunks use the same maxDist); `_vframes` is geometry-
     * independent and stays.
     *
-    * Crash safety: the [[rebandDedupIndex]] stage→marker→promote→
-    * clear discipline over `_chunks`(+`_vchunks`)+`_meta` — staged
-    * fully, declared by a durable marker, promoted by re-runnable
-    * overwrites; [[openSimIndex]] finishes an interruption in either
-    * direction. As a side effect the distinct() absorbs any
-    * duplicate rows a replayed append accreted (the compact verb's
-    * posture). */
+    * Crash safety: `_chunks`(+`_vchunks`)+`_meta` stage and promote
+    * through [[IndexFamily.promote]]; [[IndexFamily.open]] finishes
+    * an interruption in either direction. As a side effect the
+    * distinct() absorbs any duplicate rows a replayed append
+    * accreted (the compact verb's posture). */
   def rechunkSimIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, maxDist: Int): Unit =
-    Bucketing.withIndexLease(spark, name, "rechunkSimIndex") {
-    finishInterruptedRechunk(spark, name)
+    IndexFamily.promote(spark, IndexFamily.sim, name, "rechunkSimIndex") {
     require(maxDist >= 0 && maxDist <= 63,
       s"maxDist must be in [0, 63], got $maxDist")
     val (_, numBuckets) = simIndexMeta(spark, name)
     val sigs = spark.table(s"${name}_chunks")
       .select(col("doc_id"), col("sim")).distinct()
-    import spark.implicits._
     // the stage writes are independent (pre-marker leftovers are
     // simply dropped) — overlapped (guide §2.6)
     graft.Par.run(
       () => Bucketing.writeBucketed(simChunkRows(sigs, maxDist),
-        s"${name}_chunks_stage", "chunk_hash", numBuckets),
+        IndexFamily.stageName(name, "_chunks"), "chunk_hash", numBuckets),
       () => if (spark.catalog.tableExists(s"${name}_vchunks")) {
         val vsigs = spark.table(s"${name}_vchunks")
           .select(col("doc_id"), col("sim")).distinct()
         Bucketing.writeBucketed(simChunkRows(vsigs, maxDist),
-          s"${name}_vchunks_stage", "chunk_hash", numBuckets)
+          IndexFamily.stageName(name, "_vchunks"), "chunk_hash", numBuckets)
       },
-      () => Bucketing.writeTable(
-        Seq((maxDist, numBuckets)).toDF("max_dist", "num_buckets"),
-        s"${name}_meta_stage"))
-    Bucketing.createMarker(spark, rechunkMarker(name))
-    completeRechunk(spark, name)
+      () => writeSimMeta(spark, maxDist, numBuckets,
+        IndexFamily.stageName(name, "_meta")))
     }
 
-  /** Roll-forward tail of [[rechunkSimIndex]] and its recovery —
-    * precondition: stages exist, marker set. A staged `_vchunks`
-    * beside the chunks means the video side re-chunked too (the
-    * completeRebalance staged-book pattern). */
-  private def completeRechunk(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    val metaStage = s"${name}_meta_stage"
-    Bucketing.registerExisting(spark, metaStage, None)
-    val numBuckets = spark.table(metaStage).head().getAs[Int]("num_buckets")
-    Bucketing.registerExisting(spark, s"${name}_chunks_stage",
-      Some(("chunk_hash", numBuckets)))
-    val hasVStage = Bucketing.registerExisting(spark,
-      s"${name}_vchunks_stage", Some(("chunk_hash", numBuckets)))
-    // plain overwrites from intact stages, re-runnable after a death
-    // anywhere inside (the scaladoc contract) — overlapped; marker
-    // and stages survive until after all land
-    graft.Par.run(
-      () => Bucketing.writeBucketed(
-        spark.table(s"${name}_chunks_stage"),
-        s"${name}_chunks", "chunk_hash", numBuckets),
-      () => if (hasVStage)
-        Bucketing.writeBucketed(
-          spark.table(s"${name}_vchunks_stage"),
-          s"${name}_vchunks", "chunk_hash", numBuckets),
-      () => Bucketing.writeTable(spark.table(metaStage), s"${name}_meta"))
-    Bucketing.deleteMarker(spark, rechunkMarker(name))
-    Bucketing.dropTableAndDir(spark, s"${name}_chunks_stage")
-    Bucketing.dropTableAndDir(spark, s"${name}_vchunks_stage")
-    Bucketing.dropTableAndDir(spark, metaStage)
-  }
-
-  private def finishInterruptedRechunk(
-      spark: org.apache.spark.sql.SparkSession, name: String): Unit = {
-    if (!Bucketing.markerExists(spark, rechunkMarker(name))) {
-      Bucketing.dropTableAndDir(spark, s"${name}_chunks_stage")
-      Bucketing.dropTableAndDir(spark, s"${name}_vchunks_stage")
-      Bucketing.dropTableAndDir(spark, s"${name}_meta_stage")
-      return
-    }
-    completeRechunk(spark, name)
-  }
-
-  /** Retirement for the signature index — [[retireFromDedupIndex]]'s
-    * takedown verb without its content-hash ambiguity: every chunk
-    * row carries its doc_id, so removing the ids removes the
-    * document's entire screening footprint in one crash-safe
-    * compact-with-filter rewrite. */
+  /** Retirement for the signature index ([[IndexFamily.retire]]) —
+    * [[retireFromDedupIndex]]'s takedown verb without its
+    * content-hash ambiguity: every chunk row carries its doc_id (and
+    * every video-frame row its vid), so removing the ids removes the
+    * document's entire screening footprint. */
   def retireFromSimIndex(ids: DataFrame, idCol: String,
-      name: String): Unit = {
-    val spark = ids.sparkSession
-    Bucketing.withIndexLease(spark, name, "retireFromSimIndex") {
-    val (_, numBuckets) = simIndexMeta(spark, name)
-    val rids = ids.filter(col(idCol).isNotNull)
-      .select(col(idCol).cast("long").as("__rid")).distinct()
-    Bucketing.compactBucketed(
-      _.join(broadcast(rids), col("doc_id") === col("__rid"),
-        "left_anti"))(spark, s"${name}_chunks", "chunk_hash", numBuckets)
-    // video-frame side: composite keys retire by their vid half
-    val M = Multimodal.MaxSampledFrames
-    if (spark.catalog.tableExists(s"${name}_vchunks"))
-      Bucketing.compactBucketed(
-        _.join(broadcast(rids), expr(s"doc_id div $M") === col("__rid"),
-          "left_anti"))(spark, s"${name}_vchunks", "chunk_hash", numBuckets)
-    if (spark.catalog.tableExists(s"${name}_vframes"))
-      Bucketing.compactBucketed(
-        _.join(broadcast(rids), col("vid") === col("__rid"),
-          "left_anti"))(spark, s"${name}_vframes", "vid", numBuckets)
-    }
-  }
+      name: String): Unit =
+    IndexFamily.retire(IndexFamily.sim, ids, col(idCol).cast("long"), name)
 
-  /** Re-opens a [[buildSimIndex]] index in a fresh session from its
-    * surviving warehouse directories ([[openDedupIndex]]'s
-    * contract). */
+  /** [[IndexFamily.open]] for a [[buildSimIndex]] index; the optional
+    * video-frame side re-registers when present. */
   def openSimIndex(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    // an interrupted RECHUNK recovers FIRST — mid-promotion the live
-    // meta may be mid-overwrite; the staged meta is the truth
-    finishInterruptedRechunk(spark, name)
-    require(Bucketing.registerExisting(spark, s"${name}_meta", None),
-      s"no persisted signature index named '$name' in the warehouse")
-    val (_, numBuckets) = simIndexMeta(spark, name)
-    require(Bucketing.registerExisting(spark, s"${name}_chunks",
-      Some(("chunk_hash", numBuckets))),
-      s"signature index '$name' is missing its chunks table")
-    // the video-frame side is OPTIONAL (lazily created on the first
-    // appendVideoFramesToSimIndex) — re-register when present
-    Bucketing.registerExisting(spark, s"${name}_vchunks",
-      Some(("chunk_hash", numBuckets)))
-    Bucketing.registerExisting(spark, s"${name}_vframes",
-      Some(("vid", numBuckets)))
-  }
+      name: String): Unit =
+    IndexFamily.open(spark, IndexFamily.sim, name)
 
   /** Occupancy/cardinality report for a [[buildSimIndex]] index —
     * the signature family's [[dedupIndexStats]]: one row with
@@ -1987,10 +1618,6 @@ object Dedup {
   // verbatim: distinct hashes, no ownership, append-only with
   // crash-safe compaction, and the same takedown contract.
   // ---------------------------------------------------------------
-
-  private def urlIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      name: String): Int =
-    spark.table(s"${name}_meta").head().getAs[Int]("num_buckets")
 
   private def urlKeys(docs: DataFrame, urlCol: String): DataFrame =
     docs.filter(col(urlCol).isNotNull)
@@ -2038,72 +1665,41 @@ object Dedup {
       name: String): Unit =
     Bucketing.withIndexLease(docs.sparkSession, name,
       "appendToUrlIndex") {
-      val numBuckets = urlIndexMeta(docs.sparkSession, name)
-      Bucketing.appendBucketed(urlKeys(docs, urlCol),
-        s"${name}_url", "uh", numBuckets)
+      Bucketing.appendBucketed(urlKeys(docs, urlCol), s"${name}_url", "uh",
+        IndexFamily.numBuckets(docs.sparkSession, IndexFamily.url, name))
     }
 
-  /** Reconciles a url frontier against the LANDED rows — the
-    * [[reconcileDedupIndex]] verb for the frontier: landed canonical
-    * keys absent from `_url` append as new per-bucket files, count
-    * surfaced (distinct missing keys), idempotent. One narrow
-    * key anti-join; a repair verb. */
+  /** Reconciles a url frontier against the LANDED rows
+    * ([[IndexFamily.reconcile]]): landed canonical keys absent from
+    * `_url` append as new per-bucket files, count surfaced (distinct
+    * missing keys). */
   def reconcileUrlIndex(landed: DataFrame, urlCol: String,
-      name: String): Long = {
-    val spark = landed.sparkSession
-    Bucketing.withIndexLease(spark, name, "reconcileUrlIndex") {
-      val numBuckets = urlIndexMeta(spark, name)
-      val missing = urlKeys(landed, urlCol)
-        .join(spark.table(s"${name}_url").select(col("uh").as("__seen")),
-          col("uh") === col("__seen"), "left_anti")
-        .select(col("uh"))
-        .localCheckpoint(true)
-      val n = missing.count()
-      if (n > 0)
-        Bucketing.appendBucketed(missing, s"${name}_url", "uh", numBuckets)
-      n
-    }
-  }
+      name: String): Long =
+    IndexFamily.reconcile(IndexFamily.url, urlKeys(landed, urlCol),
+      col("uh"), name)(missing => Bucketing.appendBucketed(missing,
+      s"${name}_url", "uh",
+      IndexFamily.numBuckets(landed.sparkSession, IndexFamily.url, name)))
 
-  /** Maintenance: rewrites the url table to one file per bucket
-    * ([[compactDedupIndex]]'s contract), deduplicating the appended
-    * key files. */
+  /** [[IndexFamily.compact]] for a url frontier, deduplicating the
+    * appended key files. */
   def compactUrlIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    Bucketing.withIndexLease(spark, name, "compactUrlIndex") {
-      val numBuckets = urlIndexMeta(spark, name)
-      Bucketing.compactBucketed(_.distinct())(spark, s"${name}_url",
-        "uh", numBuckets)
-    }
+    IndexFamily.compact(spark, IndexFamily.url, name)
 
-  /** Takedown verb: removes the given URLs' canonical keys so they
-    * can be re-crawled fresh. Keys are DISTINCT with no ownership
-    * (same layout as `_ch`), but unlike content hashes a canonical
-    * URL is its own identity — no shared-key collateral exists. */
+  /** Takedown verb ([[IndexFamily.retire]]): removes the given URLs'
+    * canonical keys so they can be re-crawled fresh. Keys are
+    * DISTINCT with no ownership (same layout as `_ch`), but unlike
+    * content hashes a canonical URL is its own identity — no
+    * shared-key collateral exists. */
   def retireFromUrlIndex(docs: DataFrame, urlCol: String,
-      name: String): Unit = {
-    val spark = docs.sparkSession
-    Bucketing.withIndexLease(spark, name, "retireFromUrlIndex") {
-      val numBuckets = urlIndexMeta(spark, name)
-      val gone = urlKeys(docs, urlCol).select(col("uh").as("__ruh"))
-      Bucketing.compactBucketed(
-        _.join(broadcast(gone), col("uh") === col("__ruh"),
-          "left_anti").distinct())(spark, s"${name}_url", "uh",
-        numBuckets)
-    }
-  }
+      name: String): Unit =
+    IndexFamily.retire(IndexFamily.url, docs,
+      md5(TextAnalysis.canonicalizeUrl(col(urlCol))), name)
 
-  /** Re-opens a [[buildUrlIndex]] frontier in a fresh session
-    * ([[openDedupIndex]]'s contract). */
+  /** [[IndexFamily.open]] for a [[buildUrlIndex]] frontier. */
   def openUrlIndex(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    require(Bucketing.registerExisting(spark, s"${name}_meta", None),
-      s"no persisted url index named '$name' in the warehouse")
-    val numBuckets = urlIndexMeta(spark, name)
-    require(Bucketing.registerExisting(spark, s"${name}_url",
-      Some(("uh", numBuckets))),
-      s"url index '$name' is missing its url table")
-  }
+      name: String): Unit =
+    IndexFamily.open(spark, IndexFamily.url, name)
 
   /** Cardinality report for a [[buildUrlIndex]] frontier — the
     * family's [[dedupIndexStats]]. The frontier is a distinct key

@@ -94,34 +94,18 @@ object OpsCard {
       .agg(count(lit(1)).as(nOut),
         expr("coalesce(bit_xor(__h), 0)").as(dOut))
 
-  /** (n_items, idx_digest) for the family's index table. The sim
-    * slot counts DISTINCT signatures: appendToSimIndex is
-    * replay-tolerant by design and accretes duplicate chunk rows
-    * until compactSimIndex runs, so a fixed chunks/(maxDist+1)
-    * ratio would inflate after a replayed append — exactly the
-    * false alarm (or masked real drift) the card exists to avoid. */
-  private def nItemsOf(spark: SparkSession, e: Entry): DataFrame = {
-    val (table, idc) = e.family match {
-      case "dedup" => (s"${e.name}_docs", "doc_id")
-      case "bm25"  => (s"${e.name}_docs", "doc_id")
-      case "ann"   => (s"${e.name}_vectors", "vec_id")
-      case "sim"   => (s"${e.name}_chunks", "doc_id")
-      case "url"   => (s"${e.name}_url", "uh")
-      case other => throw new IllegalArgumentException(
-        s"indexOpsCard: unknown family '$other' — one of " +
-          "dedup/ann/sim/bm25/url")
-    }
-    countAndDigest(spark.table(table).select(col(idc)).distinct(),
-      col(idc), "n_items", "idx_digest")
-  }
-
-  /** The landed side's comparable key: families keyed by the row id
-    * itself, except the url frontier, whose identity is the md5 of
-    * the CANONICAL url (buildUrlIndex's `uh`). */
-  private def landedKey(e: Entry): Column = e.family match {
-    case "url" => md5(TextAnalysis.canonicalizeUrl(col(e.idCol)))
-    case _     => col(e.idCol)
-  }
+  /** (n_items, idx_digest) over the family's declared item table
+    * ([[IndexFamily]]). Ids count DISTINCT: the sim family's chunks
+    * repeat each doc_id, and appendToSimIndex is replay-tolerant by
+    * design and accretes duplicate chunk rows until compactSimIndex
+    * runs, so a fixed chunks/(maxDist+1) ratio would inflate after a
+    * replayed append — exactly the false alarm (or masked real
+    * drift) the card exists to avoid. */
+  private def nItemsOf(spark: SparkSession, fam: IndexFamily,
+      e: Entry): DataFrame =
+    countAndDigest(spark.table(s"${e.name}${fam.itemTable}")
+      .select(col(fam.itemId)).distinct(),
+      col(fam.itemId), "n_items", "idx_digest")
 
   private def numBucketsOf(spark: SparkSession, e: Entry): Int =
     spark.table(s"${e.name}_meta").head().getAs[Int]("num_buckets")
@@ -138,8 +122,9 @@ object OpsCard {
     * the card) when the family has no side tables or none exist yet
     * (no video evidence is a healthy state); Some(false) when one
     * exists without the other — the torn crash state itself. */
-  private def sideDigestOf(spark: SparkSession, e: Entry): Option[Boolean] = {
-    if (e.family != "sim") return None
+  private def sideDigestOf(spark: SparkSession, fam: IndexFamily,
+      e: Entry): Option[Boolean] = {
+    if (fam ne IndexFamily.sim) return None
     val hasChunks = spark.catalog.tableExists(s"${e.name}_vchunks")
     val hasFrames = spark.catalog.tableExists(s"${e.name}_vframes")
     if (!hasChunks && !hasFrames) None
@@ -166,31 +151,22 @@ object OpsCard {
 
   /** What is in flight or interrupted on the index, by descending
     * urgency: a live lease names a RUNNING (or crashed-holding)
-    * verb; a maintenance marker names an interrupted two-table
-    * promotion the next open()/verb will roll forward; a swap
-    * marker, an unfinished compaction. `idle` otherwise. */
-  private def pendingVerbOf(spark: SparkSession, e: Entry): String = {
+    * verb; the family's promotion marker names an interrupted
+    * multi-table promotion the next open()/verb will roll forward; a
+    * legacy swap marker on any declared table, an unfinished
+    * compaction of an earlier release. `idle` otherwise. */
+  private def pendingVerbOf(spark: SparkSession, fam: IndexFamily,
+      e: Entry): String = {
     val n = e.name.toLowerCase
     Bucketing.leaseHolder(spark, n).map(v => s"lease:$v").getOrElse {
-      val markers = Seq(
-        s"${n}__reband_pending" -> "reband_pending",
-        s"${n}__rebalance_pending" -> "rebalance_pending",
-        s"${n}__rechunk_pending" -> "rechunk_pending")
-      markers.collectFirst {
-        case (tag, label)
-          if Bucketing.maintenanceMarkerExists(spark, tag) => label
-      }.getOrElse {
-        val tables = e.family match {
-          case "dedup" => Seq("_bands", "_docs", "_ch")
-          case "bm25"  => Seq("_postings", "_df", "_docs")
-          case "ann"   => Seq("_vectors")
-          case "sim"   => Seq("_chunks", "_vchunks", "_vframes")
-          case "url"   => Seq("_url")
+      fam.promotion
+        .filter(p => Bucketing.maintenanceMarkerExists(spark, p.marker(n)))
+        .map(_.pending)
+        .getOrElse {
+          if (fam.tables.exists(t => Bucketing.maintenanceMarkerExists(
+            spark, s"$n${t.suffix}__swap_pending"))) "compact_swap_pending"
+          else "idle"
         }
-        if (tables.exists(t => Bucketing.maintenanceMarkerExists(
-          spark, s"$n${t}__swap_pending"))) "compact_swap_pending"
-        else "idle"
-      }
     }
   }
 
@@ -373,23 +349,24 @@ object OpsCard {
     // stitched back in entry order
     val rows = new Array[DataFrame](entries.size)
     graft.Par.run(entries.zipWithIndex.map { case (e, i) => () =>
+      val fam = IndexFamily.named(e.family, "indexOpsCard")
       val landedN = countAndDigest(
         e.landed.filter(col(e.idCol).isNotNull)
-          .select(landedKey(e).as("__k")).distinct(),
+          .select(fam.landedKey(e.idCol).as("__k")).distinct(),
         col("__k"), "n_landed", "landed_digest")
-      rows(i) = nItemsOf(spark, e)
+      rows(i) = nItemsOf(spark, fam, e)
         .crossJoin(broadcast(landedN))
         .select(
           lit(e.family).as("family"),
           lit(e.name).as("index_name"),
           col("n_items"),
           lit(numBucketsOf(spark, e)).as("n_buckets"),
-          lit(pendingVerbOf(spark, e)).as("pending_verb"),
+          lit(pendingVerbOf(spark, fam, e)).as("pending_verb"),
           col("n_landed"),
           (col("n_landed") - col("n_items")).as("drift_vs_landed"),
           (col("idx_digest") === col("landed_digest"))
             .as("ids_digest_match"),
-          sideDigestOf(spark, e).map(lit(_)).getOrElse(lit(null))
+          sideDigestOf(spark, fam, e).map(lit(_)).getOrElse(lit(null))
             .cast("boolean").as("side_digest_match"),
           when(col("n_landed") > col("n_items"), lit("reconcile"))
             .when(col("n_landed") < col("n_items"), lit("retire"))

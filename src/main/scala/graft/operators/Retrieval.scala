@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SketchFunctions
@@ -89,12 +89,18 @@ object Retrieval {
     * forced rebuild here would be pure cost, not safety). */
   private def bm25Meta(spark: SparkSession,
       name: String): (Int, String) = {
+    val row = bm25MetaRow(spark, name)
+    (row.getAs[Int]("num_buckets"), row.getAs[String]("tokenizer"))
+  }
+
+  /** The `_meta` row with the format default filled in: the
+    * descriptor's meta reader ([[IndexFamily.bm25]]). */
+  private[operators] def bm25MetaRow(spark: SparkSession, name: String): Row = {
     val row = spark.table(s"${name}_meta").head()
-    val tok =
-      if (row.schema.fieldNames.contains("tokenizer"))
-        row.getAs[String]("tokenizer")
-      else "ws"
-    (row.getAs[Int]("num_buckets"), tok)
+    if (row.schema.fieldNames.contains("tokenizer")) row
+    else new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      row.toSeq.toArray :+ "ws",
+      row.schema.add("tokenizer", org.apache.spark.sql.types.StringType))
   }
 
   /** The serving-side half of the family contract: the caller says
@@ -396,21 +402,17 @@ object Retrieval {
     * of the positional index. Derived data: always re-derivable from
     * `_postings` ([[reconcileBm25Index]] does, closing the crash
     * window between the two appends). */
-  private def byDocProjection(post: DataFrame): DataFrame =
+  private[operators] def byDocProjection(post: DataFrame): DataFrame =
     post.select(col("doc_id"), col("term"), col("tf"))
 
   /** The `_postings_bydoc` table if this index has one — indexes
     * persisted before the projection existed legitimately lack it
     * (their PRF mining falls back to the full-scan path, disclosed),
     * and every build/append/merge since maintains it. */
-  private def byDocTable(spark: SparkSession, name: String,
-      numBuckets: Int): Option[DataFrame] = {
-    val t = s"${name}_postings_bydoc"
-    if (spark.catalog.tableExists(t) ||
-        Bucketing.registerExisting(spark, t, Some(("doc_id", numBuckets))))
-      Some(spark.table(t))
-    else None
-  }
+  private[operators] def byDocTable(spark: SparkSession, name: String,
+      numBuckets: Int): Option[DataFrame] =
+    IndexFamily.tableIfPresent(spark, IndexFamily.bm25, name,
+      "_postings_bydoc", numBuckets)
 
   def buildBm25Index(docs: DataFrame, idCol: String, textCol: String,
       name: String, numBuckets: Int = 8,
@@ -457,7 +459,7 @@ object Retrieval {
   /** (n_docs, sum_dl) recomputed from the `_docs` table — the single
     * source every maintenance verb re-derives `_meta` from, so the
     * stats can never drift from the doc set they describe. */
-  private def writeBm25Meta(spark: SparkSession, name: String,
+  private[operators] def writeBm25Meta(spark: SparkSession, name: String,
       numBuckets: Int, tokenizer: String): Unit =
     // ONE Spark job: the aggregate row is written directly with the
     // literals appended — the previous head()-then-re-create shape
@@ -532,44 +534,23 @@ object Retrieval {
     if (byDocTable(spark, name, numBuckets).isDefined)
       Bucketing.appendBucketed(byDocProjection(post),
         s"${name}_postings_bydoc", "doc_id", numBuckets)
-    val batchDf = post.groupBy(col("term")).agg(count(lit(1)).as("df_t"))
-    // repartition before the merge aggregate: if the bucketed old
-    // scan and the batch's shuffle output ever report the SAME
-    // term-hash partitioning (numBuckets == shuffle partitions),
-    // the union "satisfies" the clustering requirement while each
-    // term still lives in two partitions, and the sum silently emits
-    // two rows per term — the mergeBm25Indexes hazard, closed here
-    // defensively (vocabulary-sized exchange, noise-level cost)
-    Bucketing.compactBucketed(old =>
-      old.unionByName(batchDf).repartition(col("term"))
-        .groupBy(col("term"))
-        .agg(sum(col("df_t")).as("df_t")))(
+    // the old bucketed scan and the batch's shuffle output may report
+    // the SAME term-hash partitioning (numBuckets == shuffle
+    // partitions), so the sum is [[summedDf]]'s repartitioned one
+    // (vocabulary-sized exchange, noise-level cost)
+    Bucketing.compactBucketed(old => summedDf(Seq(old,
+      post.groupBy(col("term")).agg(count(lit(1)).as("df_t")))))(
       spark, s"${name}_df", "term", numBuckets)
     writeBm25Meta(spark, name, numBuckets, tokenizer)
     }
   }
 
-  /** Maintenance pass for a BM25 index that has accreted appends:
-    * rewrites the three bucketed tables to one file per bucket (each
-    * [[appendToBm25Index]] adds a file per bucket; after K batches
-    * every serving scan opens K× the files). Each table is a
-    * [[graft.sources.Bucketing.compactBucketed]] generation swap —
-    * the live table is re-pointed only after the compacted copy fully
-    * exists, and a reader pinned before the swap keeps scanning the
-    * old files. `_df`/`_meta` are value-unchanged by compaction and
-    * stay. */
+  /** [[IndexFamily.compact]] for a BM25 index: the bucketed tables
+    * rewrite to one file per bucket (each [[appendToBm25Index]] adds
+    * a file per bucket; after K batches every serving scan opens K×
+    * the files). `_df`/`_meta` are value-unchanged by compaction. */
   def compactBm25Index(spark: SparkSession, name: String): Unit =
-    Bucketing.withIndexLease(spark, name, "compactBm25Index") {
-      val (numBuckets, _) = bm25Meta(spark, name)
-      Bucketing.compactBucketed()(spark, s"${name}_postings", "term",
-        numBuckets)
-      Bucketing.compactBucketed()(spark, s"${name}_df", "term", numBuckets)
-      Bucketing.compactBucketed()(spark, s"${name}_docs", "doc_id",
-        numBuckets)
-      if (byDocTable(spark, name, numBuckets).isDefined)
-        Bucketing.compactBucketed()(spark, s"${name}_postings_bydoc",
-          "doc_id", numBuckets)
-    }
+    IndexFamily.compact(spark, IndexFamily.bm25, name)
 
   /** The ids of `batch` rows NOT yet in the index — the idempotence
     * screen a streaming composition runs before
@@ -608,9 +589,10 @@ object Retrieval {
     *
     * Two passes, both idempotent (a second run finds nothing):
     * (1) landed docs absent from `_docs` entirely append through the
-    * normal verb; (2) `_docs` rows with dl > 0 but no postings row
-    * (the dl > 0 guard keeps zero-token norm-family docs from
-    * re-flagging forever — they legitimately have no postings) get
+    * normal verb ([[IndexFamily.reconcile]]); (2) `_docs` rows with
+    * dl > 0 but no postings row (the dl > 0 guard keeps zero-token
+    * norm-family docs from re-flagging forever — they legitimately
+    * have no postings) get
     * their postings re-derived from the landed text, then df/meta
     * re-derive via [[repairBm25Stats]]. COST, disclosed: one scan of
     * the landed corpus against the narrow `_docs` projection plus
@@ -623,13 +605,8 @@ object Retrieval {
     Bucketing.withIndexLease(spark, name, "reconcileBm25Index") {
     val (numBuckets, tokenizer) = bm25Meta(spark, name)
     val live = landed.filter(col(idCol).isNotNull && col(textCol).isNotNull)
-    // eager pin: counted AND appended — and the append mutates the
-    // very tables the anti-join reads (the appendToBm25Index
-    // cache-invalidation lesson)
-    val missing = screenNewForBm25Index(live, idCol, name)
-      .localCheckpoint(true)
-    val nMissing = missing.count()
-    if (nMissing > 0) appendToBm25Index(missing, idCol, textCol, name)
+    val nMissing = IndexFamily.reconcile(IndexFamily.bm25, live, col(idCol),
+      name)(appendToBm25Index(_, idCol, textCol, name))
     // pass 2 reads the post-pass-1 tables fresh: pass 1's appends
     // carry complete postings, so they can never surface as holes
     val holeIds = spark.table(s"${name}_docs")
@@ -681,148 +658,64 @@ object Retrieval {
       writeBm25Meta(spark, name, numBuckets, tokenizer)
     }
 
-  /** Takedown for the BM25 index — [[graft.operators.Dedup
-    * .retireFromDedupIndex]]'s verb for postings: removes the ids'
-    * rows from `_postings` and `_docs` in crash-safe compact-with-
-    * filter rewrites, then re-derives `_df` from the surviving
-    * postings (a term whose last document retires disappears — the
-    * rebuilt index equals a fresh build over the survivors, no
-    * tombstones) and `_meta` from the surviving docs. */
+  /** Takedown for the BM25 index ([[IndexFamily.retire]]): removes
+    * the ids' rows from `_postings`, `_docs` and `_postings_bydoc`
+    * in crash-safe compact-with-filter rewrites, then re-derives
+    * `_df` from the surviving postings (a term whose last document
+    * retires disappears — the rebuilt index equals a fresh build
+    * over the survivors, no tombstones) and `_meta` from the
+    * surviving docs ([[repairBm25Stats]]). */
   def retireFromBm25Index(ids: DataFrame, idCol: String,
-      name: String): Unit = {
-    val spark = ids.sparkSession
-    Bucketing.withIndexLease(spark, name, "retireFromBm25Index") {
-    val (numBuckets, _) = bm25Meta(spark, name)
-    val rids = ids.filter(col(idCol).isNotNull)
-      .select(col(idCol).as("__rid")).distinct()
-    Bucketing.compactBucketed(
-      _.join(broadcast(rids), col("doc_id") === col("__rid"), "left_anti"))(
-      spark, s"${name}_postings", "term", numBuckets)
-    Bucketing.compactBucketed(
-      _.join(broadcast(rids), col("doc_id") === col("__rid"), "left_anti"))(
-      spark, s"${name}_docs", "doc_id", numBuckets)
-    if (byDocTable(spark, name, numBuckets).isDefined)
-      Bucketing.compactBucketed(
-        _.join(broadcast(rids), col("doc_id") === col("__rid"), "left_anti"))(
-        spark, s"${name}_postings_bydoc", "doc_id", numBuckets)
-    repairBm25Stats(spark, name)
-    }
-  }
+      name: String): Unit =
+    IndexFamily.retire(IndexFamily.bm25, ids, col(idCol), name)
 
-  /** Re-registers a persisted BM25 index's tables from their
-    * warehouse directories in a fresh session ([[graft.operators.Dedup
-    * .openDedupIndex]]'s contract). */
-  def openBm25Index(spark: SparkSession, name: String): Unit = {
-    require(Bucketing.registerExisting(spark, s"${name}_meta", None),
-      s"no persisted BM25 index named '$name' in the warehouse")
-    val (numBuckets, _) = bm25Meta(spark, name)
-    Seq(("_postings", "term"), ("_df", "term"), ("_docs", "doc_id"))
-      .foreach { case (suffix, bucketCol) =>
-        require(Bucketing.registerExisting(spark, s"$name$suffix",
-          Some((bucketCol, numBuckets))),
-          s"BM25 index '$name' is missing its $name$suffix table")
-      }
-    // optional: indexes persisted before the doc-keyed projection
-    // existed lack it (PRF mining falls back to the full-scan path)
-    Bucketing.registerExisting(spark, s"${name}_postings_bydoc",
-      Some(("doc_id", numBuckets)))
-    ()
-  }
+  /** [[IndexFamily.open]] for a persisted BM25 index; the doc-keyed
+    * projection is optional (indexes persisted before it existed
+    * lack it, and their PRF mining falls back to the full-scan
+    * path). */
+  def openBm25Index(spark: SparkSession, name: String): Unit =
+    IndexFamily.open(spark, IndexFamily.bm25, name)
 
-  /** MERGES source BM25 indexes into one `target` index — the shard
-    * consolidation verb (the Lucene segment-merge / per-day-index →
-    * monthly-index shape a 100 TB ingest actually runs: build small
-    * indexes near the data, merge them off the hot path). All
-    * sources must share one tokenizer family (meta state, refused
-    * loudly on mismatch) and DISJOINT doc-id sets — enforced here
-    * with one narrow count-vs-distinct pass over the unioned `_docs`
-    * ids (disclosed cost: a silent overlap would double the
-    * overlapped docs' postings and quietly inflate every score,
-    * exactly the wrong-answer class worth one id-column scan).
+  /** MERGES source BM25 indexes into one `target` index
+    * ([[IndexFamily.merge]]). All sources must share one tokenizer
+    * family (meta state, refused loudly on mismatch) and DISJOINT
+    * doc-id sets (a silent overlap would double the overlapped docs'
+    * postings and quietly inflate every score, exactly the
+    * wrong-answer class worth one id-column scan).
     *
     * Scale shape: postings and docs merge as pure UNIONS re-bucketed
     * once (the write-side shuffle every build pays); `_df` merges as
-    * the SUM of the sources' vocabulary-sized df tables — never a
-    * postings re-scan; `_meta` re-derives from the merged `_docs`
-    * (the one-source-of-stats rule shared with repairBm25Stats).
-    * Crash mid-merge leaves a partial TARGET only — sources are
-    * never touched — and a re-run overwrites it whole (idempotent by
-    * rerun, the build-verb contract). */
+    * the SUM of the sources' vocabulary-sized df tables
+    * ([[summedDf]]) — never a postings re-scan; the doc-keyed
+    * projection from each source's own ([[mergedByDoc]]); `_meta`
+    * re-derives from the merged `_docs` (the one-source-of-stats
+    * rule shared with repairBm25Stats). */
   def mergeBm25Indexes(spark: SparkSession, target: String,
-      sources: Seq[String], numBuckets: Int = 8): Unit = {
-    require(sources.size >= 2,
-      s"mergeBm25Indexes: need at least 2 sources, got ${sources.size}")
-    // every SOURCE's lease too, not just the target's: the merge
-    // reads each source across several Spark actions (family check,
-    // overlap check, three table writes) on lazy plans — an un-leased
-    // concurrent append/rebuild on a source could land between them,
-    // merging postings, df and meta that disagree (and passing a
-    // check on state the later unions no longer see). The family
-    // read itself sits INSIDE the leases for the same reason.
-    Bucketing.withIndexLeases(spark, target +: sources,
-      "mergeBm25Indexes") {
-      // per-source `_meta` heads are independent bounded reads —
-      // overlapped (guide §2.6), read ONCE for both the family gate
-      // and the bydoc merge's bucket counts below
-      val metas = new Array[(Int, String)](sources.size)
-      graft.Par.run(sources.zipWithIndex.map { case (s, i) => () =>
-        metas(i) = bm25Meta(spark, s)
-      }: _*)
-      val fams = metas.toSeq.map(_._2).distinct
-      require(fams.size == 1,
-        s"mergeBm25Indexes: sources were built with different tokenizer " +
-          s"families $fams — merged postings would mean two things; " +
-          "rebuild the odd one out first")
-      val docsAll = sources
-        .map(s => spark.table(s"${s}_docs"))
-        .reduce(_ unionByName _)
-      // repartition for the SAME reason as the _df merge below:
-      // count(DISTINCT) plans a keyed first stage, and a union of
-      // co-bucketed scans lets it run exchange-free with each doc_id
-      // split across children — an overlap would go undetected
-      val chk = docsAll.repartition(col("doc_id"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("doc_id")).as("nd")).head()
-      require(chk.getLong(0) == chk.getLong(1),
-        s"mergeBm25Indexes: sources share ${chk.getLong(0) - chk.getLong(1)} " +
-          "doc id(s) — merging would double their postings; retire the " +
-          "duplicates from one source first")
-      // the four merged tables read only the (lease-frozen) sources —
-      // independent writes, overlapped (the buildBm25Index shape);
-      // `_meta` stays LAST, the existence readers key on
-      graft.Par.run(
-        () => Bucketing.writeBucketed(
-          sources.map(s => spark.table(s"${s}_postings"))
-            .reduce(_ unionByName _),
-          s"${target}_postings", "term", numBuckets),
-        () => Bucketing.writeBucketed(docsAll, s"${target}_docs", "doc_id",
-          numBuckets),
-        // the doc-keyed projection merges from each source's own bydoc
-        // table when it has one, deriving from its postings otherwise
-        // (pre-projection shards stay mergeable) — a union re-bucketed
-        // once, same shape as the postings merge
-        () => Bucketing.writeBucketed(
-          sources.zipWithIndex.map { case (s, i) =>
-            byDocTable(spark, s, metas(i)._1).getOrElse(
-              byDocProjection(spark.table(s"${s}_postings")))
-          }.reduce(_ unionByName _),
-          s"${target}_postings_bydoc", "doc_id", numBuckets),
-        // the explicit repartition is LOAD-BEARING: a union of
-        // co-bucketed scans reports a term-hash partitioning that
-        // satisfies the aggregation's clustering requirement, but the
-        // same term lives in one partition PER CHILD — without a real
-        // exchange the final aggregate emits one row per source
-        // (observed on Spark 4.1.2; MergeDbgSpec-shape plan had
-        // HashAggregate directly over Union, no Exchange)
-        () => Bucketing.writeBucketed(
-          sources.map(s => spark.table(s"${s}_df"))
-            .reduce(_ unionByName _)
-            .repartition(col("term"))
-            .groupBy(col("term")).agg(sum(col("df_t")).as("df_t")),
-          s"${target}_df", "term", numBuckets))
-      writeBm25Meta(spark, target, numBuckets, fams.head)
-    }
-  }
+      sources: Seq[String], numBuckets: Int = 8): Unit =
+    IndexFamily.merge(spark, IndexFamily.bm25, target, sources, numBuckets)
+
+  /** The per-term sum of `_df` rows — the merged `_df`, and an
+    * append's refreshed one. The explicit repartition is
+    * LOAD-BEARING: a union of co-bucketed scans reports a term-hash
+    * partitioning that satisfies the aggregation's clustering
+    * requirement, but the same term lives in one partition PER CHILD
+    * — without a real exchange the final aggregate emits one row per
+    * source (observed on Spark 4.1.2: HashAggregate directly over
+    * Union, no Exchange). */
+  private[operators] def summedDf(dfs: Seq[DataFrame]): DataFrame =
+    dfs.reduce(_ unionByName _).repartition(col("term"))
+      .groupBy(col("term")).agg(sum(col("df_t")).as("df_t"))
+
+  /** The merged doc-keyed projection: each source's own bydoc table
+    * when it has one, derived from its postings otherwise
+    * (pre-projection shards stay mergeable) — a union re-bucketed
+    * once, the postings merge's shape. */
+  private[operators] def mergedByDoc(spark: SparkSession,
+      sources: Seq[String], metas: Seq[Row]): DataFrame =
+    sources.zip(metas).map { case (s, m) =>
+      byDocTable(spark, s, m.getAs[Int]("num_buckets")).getOrElse(
+        byDocProjection(spark.table(s"${s}_postings")))
+    }.reduce(_ unionByName _)
 
   /** BM25 with PSEUDO-RELEVANCE-FEEDBACK query expansion (RM3-lite,
     * Lavrenko & Croft's relevance-model shape without the term
@@ -949,36 +842,18 @@ object Retrieval {
       .limit(topK)
   }
 
-  /** Runs `body` with Spark's DisableUnnecessaryBucketedScan rule
-    * off: the rule keeps a bucketed scan only when its output
-    * PARTITIONING is exploited downstream, but the mining aggregate
-    * is term-keyed over a doc_id-bucketed table — the bucketing's
-    * value there is bucket PRUNING of the IN filter, which the rule
-    * does not account for and silently discards (observed on Spark
-    * 4.1.2: "Bucketed: false (disabled by query planner)", full-table
-    * read). Scoped to the action and restored after. The toggle is a
-    * SESSION-global SQL conf, so callers are serialized under a
-    * per-session monitor: two overlapping calls could otherwise
-    * interleave save/restore and leave the planner optimization
-    * permanently off for the whole session. */
-  private[graft] def withForcedBucketedScan[T](spark: SparkSession)(
-      body: => T): T = spark.sessionState.conf.synchronized {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
-
   /** The mining AGGREGATE over an explicit feedback-id set — split
     * out so the plan-shape spec can pin the scan it takes: on an
     * index with the `_postings_bydoc` projection the ids are an IN
     * filter on the bucket column (doc_id), so the scan BUCKET-PRUNES
     * to the feedback docs' buckets and `_postings` appears nowhere in
-    * the plan — PRF mining serves like every other indexed verb
-    * (evaluate under [[withForcedBucketedScan]] or the planner drops
-    * the pruning). The fallback for pre-projection indexes is the r19
-    * shape, disclosed: one full narrow scan of `_postings`
-    * semi-joined to the ids. */
+    * the plan — PRF mining serves like every other indexed verb. The
+    * planner's DisableUnnecessaryBucketedScan rule turns the scan's
+    * bucketed OUTPUT off (the term-keyed aggregate does not use it),
+    * but Spark (SPARK-32985) still prunes the files to the selected
+    * buckets in the non-bucketed read. The fallback for
+    * pre-projection indexes is the r19 shape, disclosed: one full
+    * narrow scan of `_postings` semi-joined to the ids. */
   private[graft] def minePrfCandidatesFromIndex(spark: SparkSession,
       name: String, fbIds: Seq[Any],
       queryTerms: Seq[String], numBuckets: Int): DataFrame = {
@@ -1014,12 +889,9 @@ object Retrieval {
       .select(col("doc_id"))
       .collect().map(_.get(0)).toSeq // bounded: fbDocs rows
     if (fbIds.isEmpty) return Seq.empty
-    withForcedBucketedScan(spark) {
-      minePrfCandidatesFromIndex(spark, name, fbIds, queryTerms,
-        numBuckets)
-        .limit(fbTerms)
-        .collect().map(_.getString(0)).toSeq
-    }
+    minePrfCandidatesFromIndex(spark, name, fbIds, queryTerms, numBuckets)
+      .limit(fbTerms)
+      .collect().map(_.getString(0)).toSeq
   }
 
   /** [[bm25PrfTopK]] served from a persistent index — both scored

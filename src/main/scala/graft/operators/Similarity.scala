@@ -486,41 +486,18 @@ object Similarity {
 
   /** A trained PQ codebook as column-expression factories: `cents`
     * holds kEff full-dim vectors whose j-th dsub-slice is subspace
-    * j's centroid. All expressions embed the book as literals, so
-    * encode and LUT construction are map-only projections. */
+    * j's centroid. Both projections embed the book as a literal, so
+    * encode and LUT construction are map-only, one native kernel per
+    * row ([[graft.functions.PqEncode]], [[graft.functions.PqLut]]). */
   private case class PqBook(cents: IndexedSeq[IndexedSeq[Float]],
       m: Int, dsub: Int) {
-    val kEff: Int = cents.size
     def subCent(c: Int, j: Int): Seq[Float] =
       cents(c).slice(j * dsub, (j + 1) * dsub)
-    // ||centroid||² in the same left-to-right double order as vecDot
-    def c2(c: Int, j: Int): Double = {
-      val s = subCent(c, j); var acc = 0.0; var i = 0
-      while (i < s.length) { acc += s(i).toDouble * s(i).toDouble; i += 1 }
-      acc
-    }
-    // ENCODE: per subspace, argmin over struct(||c||² − 2·v_j·c,
-    // code) — the ||v_j||² term is constant within a subspace and
-    // drops out of the argmin; ties break to the smaller code by
-    // struct ordering.
-    def codesOf(vv: Column): Column = array((0 until m).map { j =>
-      val sub = slice(vv, j * dsub + 1, dsub)
-      array_min(array((0 until kEff).map { c =>
-        struct(
-          (lit(c2(c, j)) - lit(2.0) * vecDot(sub, typedLit(subCent(c, j))))
-            .as("d"),
-          lit(c).as("code"))
-      }: _*)).getField("code")
-    }: _*)
+    private def literal = cents.map(_.toArray).toArray
+    def codesOf(vv: Column): Column = VectorFunctions.pqEncode(vv, literal, m, dsub)
     // per-query ADC table: lut[j][c] = exact squared L2 between the
     // query's j-th subvector and subspace j's centroid c
-    def lutOf(qv: Column): Column = array((0 until m).map { j =>
-      val sub = slice(qv, j * dsub + 1, dsub)
-      val q2 = vecDot(sub, sub)
-      array((0 until kEff).map { c =>
-        q2 - lit(2.0) * vecDot(sub, typedLit(subCent(c, j))) + lit(c2(c, j))
-      }: _*)
-    }: _*)
+    def lutOf(qv: Column): Column = VectorFunctions.pqLut(qv, literal, m, dsub)
   }
 
   /** Samples and (optionally) refines a [[PqBook]] — see [[pqTopK]]
@@ -1240,41 +1217,18 @@ object Similarity {
     val spark = corpus.sparkSession
     graft.sources.Bucketing.withIndexLease(spark, name,
       "buildAnnIndex") {
-    val sampleOrd =
-      if (md5Sig) Dedup.md5Hash60(col(idCol).cast("long").cast("string"))
-      else xxhash64(col(idCol).cast("long"))
-    val iters = if (md5Sig) 0 else refineIters
-    // the two trainings read the same corpus but share no state —
-    // overlapped (graft.Par, guide §2.6), so the PQ book's sample
-    // jobs back-fill the executors the cell refinement's job tails
-    // leave idle
-    var cellCents: IndexedSeq[(Long, IndexedSeq[Float])] = null
-    var book: PqBook = null
-    graft.Par.run(
-      () => cellCents = trainL2CellCents(corpus, idCol, vecCol, nlist,
-        iters, refineSampleMod, sampleOrd),
-      () => book = trainPqBook(corpus, idCol, vecCol, m, ksub, iters,
-        refineSampleMod, sampleOrd))
+    val (cellCents, book) = trainAnn(corpus, idCol, vecCol, nlist, m, ksub,
+      md5Sig, refineIters, refineSampleMod, withBook = true)
     import spark.implicits._
     // ONE corpus projection — nearest cell + codes + the vector
     // itself (kept for the exact re-rank; readers that only ADC-scan
-    // prune it at the scan). The three driver-side side tables are
+    // prune it at the scan). The driver-side side tables are
     // independent of it and of each other — overlapped; `_meta` stays
     // LAST, the existence readers key on.
-    graft.Par.run(
-      () => graft.sources.Bucketing.writeBucketed(
-        corpus.select(col(idCol).cast("long").as("vec_id"),
-          array_min(array(l2CellStructs(cellCents, col(vecCol)): _*))
-            .getField("cell_id").as("cell_id"),
-          book.codesOf(col(vecCol)).as("codes"),
-          col(vecCol).as("vec")),
-        s"${name}_vectors", "cell_id", numBuckets),
-      () => graft.sources.Bucketing.writeTable(
-        cellCents.map { case (cid, v) => (cid, v.toSeq) }
-          .toDF("cell_id", "cvec"), s"${name}_cents"),
-      () => graft.sources.Bucketing.writeTable(
-        book.cents.zipWithIndex.map { case (v, c) => (c, v.toSeq) }
-          .toDF("code", "cvec"), s"${name}_book"))
+    graft.Par.run((() => graft.sources.Bucketing.writeBucketed(
+      annRows(corpus, idCol, vecCol, cellCents, book.get),
+      s"${name}_vectors", "cell_id", numBuckets)) +:
+      geometryWrites(spark, cellCents, book, s => s"$name$s"): _*)
     graft.sources.Bucketing.writeTable(
       Seq((nlist, m, ksub, md5Sig, numBuckets))
         .toDF("nlist", "m", "ksub", "md5_sig", "num_buckets"),
@@ -1318,14 +1272,59 @@ object Similarity {
         s"appendToAnnIndex('$name'): batch vector dims " +
           s"[${dims.getInt(0)}, ${dims.getInt(1)}] != index dim $indexDim")
     graft.sources.Bucketing.appendBucketed(
-      batch.select(col(idCol).cast("long").as("vec_id"),
-        array_min(array(l2CellStructs(cellCents, col(vecCol)): _*))
-          .getField("cell_id").as("cell_id"),
-        book.codesOf(col(vecCol)).as("codes"),
-        col(vecCol).as("vec")),
+      annRows(batch, idCol, vecCol, cellCents, book),
       s"${name}_vectors", "cell_id", numBuckets)
     }
   }
+
+  /** An ANN geometry trained over `corpus`: cell centroids and, when
+    * `withBook`, the PQ codebook. The two trainings read the same
+    * corpus but share no state — overlapped (graft.Par, guide §2.6),
+    * so the book's sample jobs back-fill the executors the cell
+    * refinement's job tails leave idle. `md5Sig` trains the
+    * engine-reproducible twin: md5-order sampling, no refinement. */
+  private def trainAnn(corpus: DataFrame, idCol: String, vecCol: String,
+      nlist: Int, m: Int, ksub: Int, md5Sig: Boolean, refineIters: Int,
+      refineSampleMod: Long, withBook: Boolean)
+      : (IndexedSeq[(Long, IndexedSeq[Float])], Option[PqBook]) = {
+    val sampleOrd =
+      if (md5Sig) Dedup.md5Hash60(col(idCol).cast("long").cast("string"))
+      else xxhash64(col(idCol).cast("long"))
+    val iters = if (md5Sig) 0 else refineIters
+    var cellCents: IndexedSeq[(Long, IndexedSeq[Float])] = null
+    var book: Option[PqBook] = None
+    graft.Par.run((() => cellCents = trainL2CellCents(corpus, idCol, vecCol,
+      nlist, iters, refineSampleMod, sampleOrd)) +:
+      Option.when(withBook)(() => book = Some(trainPqBook(corpus, idCol,
+        vecCol, m, ksub, iters, refineSampleMod, sampleOrd))).toSeq: _*)
+    (cellCents, book)
+  }
+
+  /** The writes of a trained geometry, `table(suffix)` naming the
+    * `_cents` (and `_book`) tables — independent, for graft.Par. */
+  private def geometryWrites(spark: org.apache.spark.sql.SparkSession,
+      cellCents: IndexedSeq[(Long, IndexedSeq[Float])],
+      book: Option[PqBook], table: String => String): Seq[() => Unit] = {
+    import spark.implicits._
+    (() => graft.sources.Bucketing.writeTable(
+      cellCents.map { case (cid, v) => (cid, v.toSeq) }
+        .toDF("cell_id", "cvec"), table("_cents"))) +:
+      book.map(b => () => graft.sources.Bucketing.writeTable(
+        b.cents.zipWithIndex.map { case (v, c) => (c, v.toSeq) }
+          .toDF("code", "cvec"), table("_book"))).toSeq
+  }
+
+  private def nearestCell(cellCents: IndexedSeq[(Long, IndexedSeq[Float])],
+      vec: Column): Column =
+    array_min(array(l2CellStructs(cellCents, vec): _*)).getField("cell_id")
+
+  /** `_vectors` rows: (vec_id, nearest cell, PQ codes, the vector). */
+  private def annRows(df: DataFrame, idCol: String, vecCol: String,
+      cellCents: IndexedSeq[(Long, IndexedSeq[Float])],
+      book: PqBook): DataFrame =
+    df.select(col(idCol).cast("long").as("vec_id"),
+      nearestCell(cellCents, col(vecCol)).as("cell_id"),
+      book.codesOf(col(vecCol)).as("codes"), col(vecCol).as("vec"))
 
   /** Opens an EMPTY shard on an existing index's trained geometry —
     * the codebook-sharing half of the shard-merge story: a 100 TB
@@ -1358,9 +1357,8 @@ object Similarity {
         s"${shard}_meta")
     }
 
-  /** Merge ANN index SHARDS that share ONE trained geometry — the
-    * [[graft.operators.Retrieval.mergeBm25Indexes]] consolidation
-    * verb for the dense family, with the precondition that makes it
+  /** Merge ANN index SHARDS that share ONE trained geometry
+    * ([[IndexFamily.merge]]), with the precondition that makes it
     * sound: cell assignments and PQ codes are meaningful only
     * against the codebook that produced them, so the sources'
     * `_cents` AND `_book` must be bit-identical (refused loudly
@@ -1368,103 +1366,46 @@ object Similarity {
     * rebuild one index over the union, or re-encode shards from one
     * shared geometry via [[shardFromAnnIndex]]). With one geometry
     * the merge is pure metadata + one union: `_vectors` re-bucketed
-    * once, geometry tables copied, ids refused on overlap. The
-    * codebook comparison is a BOUNDED collect (nlist + m·ksub rows —
-    * the centroid-pull class). No repartition guard is needed on the
-    * overlap check here: `_vectors` buckets on cell_id, so a
-    * vec_id-keyed aggregate over the union can never be wrongly
-    * exchange-elided (the clustering is genuinely unsatisfied). */
+    * once, geometry tables copied, ids refused on overlap. */
   def mergeAnnIndexes(spark: org.apache.spark.sql.SparkSession,
-      target: String, sources: Seq[String], numBuckets: Int = 8): Unit = {
-    require(sources.size >= 2,
-      s"mergeAnnIndexes: need at least 2 sources, got ${sources.size}")
-    graft.sources.Bucketing.withIndexLeases(spark, target +: sources,
-      "mergeAnnIndexes") {
-      // geometry/codebook reads INSIDE the leases: a concurrent
-      // rebuild on a source landing between a pre-lease check and the
-      // lease would merge vectors encoded against a NEW book under
-      // the OLD book copied as target geometry — silently wrong
-      // distances on every serve, the exact corruption the refusal
-      // exists to prevent (TOCTOU). The per-source pulls (meta +
-      // cents + book per source) are independent bounded reads —
-      // overlapped across sources (guide §2.6): one driver latency
-      // instead of 3·|sources| serial jobs.
-      val srcGeoms = new Array[AnnGeom](sources.size)
-      graft.Par.run(sources.zipWithIndex.map { case (s, i) => () =>
-        srcGeoms(i) = annGeom(spark, s)
-      }: _*)
-      val geoms = srcGeoms.toSeq.map(g => (g.nlist, g.m,
-        g.meta.getAs[Int]("ksub"), g.meta.getAs[Boolean]("md5_sig")))
-        .distinct
-      require(geoms.size == 1,
-        s"mergeAnnIndexes: sources carry different geometries $geoms — " +
-          "rebuild one index over the union instead")
-      def geometryOf(i: Int): (Seq[(Long, Seq[Float])], Seq[Seq[Float]]) = (
-        srcGeoms(i).cellCents.map { case (c, v) => (c, v: Seq[Float]) }.toSeq,
-        srcGeoms(i).bookCents.map(v => v: Seq[Float]).toSeq)
-      val baseGeom = geometryOf(0)
-      sources.indices.tail.foreach { i =>
-        require(geometryOf(i) == baseGeom,
-          s"mergeAnnIndexes: '${sources(i)}' was trained with a different " +
-            s"codebook than '${sources.head}' — cell assignments and PQ " +
-            "codes are not mergeable across books; rebuild one index over " +
-            "the union (buildAnnIndex/rebuildAnnIndex), or produce shards " +
-            "from one shared geometry with shardFromAnnIndex")
-      }
-      val vecAll = sources
-        .map(s => spark.table(s"${s}_vectors"))
-        .reduce(_ unionByName _)
-      val chk = vecAll
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("vec_id")).as("nd")).head()
-      require(chk.getLong(0) == chk.getLong(1),
-        s"mergeAnnIndexes: sources share ${chk.getLong(0) - chk.getLong(1)} " +
-          "vec id(s) — the merged index would serve them twice; retire " +
-          "the duplicates from one source first")
-      // three independent target writes — overlapped (guide §2.6);
-      // `_meta` stays LAST, the existence readers key on
-      graft.Par.run(
-        () => graft.sources.Bucketing.writeBucketed(vecAll,
-          s"${target}_vectors", "cell_id", numBuckets),
-        () => graft.sources.Bucketing.writeTable(
-          spark.table(s"${sources.head}_cents"),
-          s"${target}_cents"),
-        () => graft.sources.Bucketing.writeTable(
-          spark.table(s"${sources.head}_book"),
-          s"${target}_book"))
-      import spark.implicits._
-      val g = geoms.head
-      graft.sources.Bucketing.writeTable(
-        Seq((g._1, g._2, g._3, g._4, numBuckets))
-          .toDF("nlist", "m", "ksub", "md5_sig", "num_buckets"),
-        s"${target}_meta")
+      target: String, sources: Seq[String], numBuckets: Int = 8): Unit =
+    IndexFamily.merge(spark, IndexFamily.ann, target, sources, numBuckets)
+
+  /** The ann merge gate ([[IndexFamily.ann]]): every source carries
+    * the first source's centroids and codebook. The per-source pulls
+    * are independent BOUNDED collects (nlist + m·ksub rows — the
+    * centroid-pull class), overlapped across sources (guide §2.6). */
+  private[operators] def requireOneCodebook(
+      spark: org.apache.spark.sql.SparkSession, sources: Seq[String]): Unit = {
+    val srcGeoms = new Array[AnnGeom](sources.size)
+    graft.Par.run(sources.zipWithIndex.map { case (s, i) => () =>
+      srcGeoms(i) = annGeom(spark, s)
+    }: _*)
+    def geometryOf(i: Int): (Seq[(Long, Seq[Float])], Seq[Seq[Float]]) = (
+      srcGeoms(i).cellCents.map { case (c, v) => (c, v: Seq[Float]) }.toSeq,
+      srcGeoms(i).bookCents.map(v => v: Seq[Float]).toSeq)
+    val baseGeom = geometryOf(0)
+    sources.indices.tail.foreach { i =>
+      require(geometryOf(i) == baseGeom,
+        s"mergeAnnIndexes: '${sources(i)}' was trained with a different " +
+          s"codebook than '${sources.head}' — cell assignments and PQ " +
+          "codes are not mergeable across books; rebuild one index over " +
+          "the union (buildAnnIndex/rebuildAnnIndex), or produce shards " +
+          "from one shared geometry with shardFromAnnIndex")
     }
   }
 
-  /** Reconciles an ANN index against the LANDED vector set — the
-    * [[graft.operators.Dedup.reconcileDedupIndex]] verb for this
-    * family: landed vectors whose id holds no `_vectors` row encode
-    * through the normal append (against the index's OWN stored
-    * centroids and book — reconciliation ingests, it does not
-    * retrain; pair with [[rebuildAnnIndex]] when the healed mass is
-    * large enough to have drifted the distribution), count surfaced,
-    * idempotent. COST, disclosed: one landed scan against the narrow
-    * `_vectors` id projection — a repair verb. */
+  /** Reconciles an ANN index against the LANDED vector set
+    * ([[IndexFamily.reconcile]]): landed vectors whose id holds no
+    * `_vectors` row encode through the normal append (against the
+    * index's OWN stored centroids and book — reconciliation ingests,
+    * it does not retrain; pair with [[rebuildAnnIndex]] when the
+    * healed mass is large enough to have drifted the
+    * distribution). */
   def reconcileAnnIndex(landed: DataFrame, idCol: String,
-      vecCol: String, name: String): Long = {
-    val spark = landed.sparkSession
-    graft.sources.Bucketing.withIndexLease(spark, name,
-      "reconcileAnnIndex") {
-      val missing = landed.filter(col(idCol).isNotNull)
-        .join(spark.table(s"${name}_vectors")
-          .select(col("vec_id").as("__seen_id")),
-          col(idCol).cast("long") === col("__seen_id"), "left_anti")
-        .localCheckpoint(true)
-      val n = missing.count()
-      if (n > 0) appendToAnnIndex(missing, idCol, vecCol, name)
-      n
-    }
-  }
+      vecCol: String, name: String): Long =
+    IndexFamily.reconcile(IndexFamily.ann, landed.filter(col(idCol).isNotNull),
+      col(idCol).cast("long"), name)(appendToAnnIndex(_, idCol, vecCol, name))
 
   /** Ops observability for the ANN index — the occupancy histogram
     * that drives the retrain/re-balance decision (a cell holding 10×
@@ -1517,15 +1458,12 @@ object Similarity {
   def annIngestDriftCard(spark: org.apache.spark.sql.SparkSession,
       name: String, batch: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    val cellCents = spark.table(s"${name}_cents").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toIndexedSeq))
-      .sortBy(_._1).toIndexedSeq
+    val cellCents = centsOf(spark, s"${name}_cents")
     val idx = spark.table(s"${name}_vectors")
       .groupBy(col("cell_id")).agg(count(lit(1)).as("__ni"))
     val bat = batch
       .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .select(array_min(array(l2CellStructs(cellCents, col(vecCol)): _*))
-        .getField("cell_id").as("cell_id"))
+      .select(nearestCell(cellCents, col(vecCol)).as("cell_id"))
       .groupBy(col("cell_id")).agg(count(lit(1)).as("__nb"))
     val ti = idx.agg(coalesce(sum(col("__ni")), lit(0L)).as("__ti"))
     val tb = bat.agg(coalesce(sum(col("__nb")), lit(0L)).as("__tb"))
@@ -1555,9 +1493,6 @@ object Similarity {
       .orderBy(col("cell_id"))
   }
 
-  private def rebalanceMarker(name: String): String =
-    s"${name.toLowerCase}__rebalance_pending"
-
   /** Re-balance actuator for the ANN index — the verb behind
     * [[annIndexStats]]'s occupancy histogram (stats with no actuator
     * is half a lifecycle): retrains the cell centroids from the
@@ -1574,100 +1509,66 @@ object Similarity {
     * [[rebuildAnnIndex]], not a rebalance). Serving needs no change:
     * the query path reads centroids back from `_cents` per batch.
     *
-    * Crash safety — TWO tables must change together, so the write
-    * order makes every window recoverable: (1) the new centroids
-    * stage durably under `_cents_stage`; (2) a durable marker in the
-    * warehouse directory declares the staged centroids the truth;
-    * (3) the vectors rewrite is its own generation swap
-    * ([[graft.sources.Bucketing.compactBucketed]]); (4) the stage
-    * promotes over `_cents`; (5) marker, then stage, clear. Pre-marker a
-    * leftover stage is simply dropped — the live index was never
-    * touched. Post-marker, recovery ROLLS FORWARD: the rewrite is
-    * idempotent (cell_id is recomputed from the stored vec against
-    * the staged centroids, so re-running over fully- or partially-
-    * rewritten contents yields the same table) and the promotion is
-    * a plain overwrite. [[openAnnIndex]] runs the same recovery, so
-    * a process death at ANY point leaves a fresh session one open()
-    * from consistent. */
+    * Crash safety — TWO tables must change together, so the new
+    * centroids stage under `_cents_stage` and promote through
+    * [[IndexFamily.promote]], with [[reassignVectors]] as the
+    * promotion's rewrite of `_vectors`. Post-marker recovery ROLLS
+    * FORWARD: the rewrite is idempotent (cell_id is recomputed from
+    * the stored vec against the staged centroids, so re-running over
+    * fully- or partially-rewritten contents yields the same table)
+    * and the promotion is a plain overwrite. [[IndexFamily.open]]
+    * runs the same recovery, so a process death at ANY point leaves
+    * a fresh session one open() from consistent. */
   def rebalanceAnnIndex(spark: org.apache.spark.sql.SparkSession,
       name: String,
       refineIters: Int = 2,
       refineSampleMod: Long = 4): Unit =
-    graft.sources.Bucketing.withIndexLease(spark, name,
-      "rebalanceAnnIndex") {
-    finishInterruptedRebalance(spark, name)
-    val meta = spark.table(s"${name}_meta").head()
-    val nlist = meta.getAs[Int]("nlist")
-    val md5Sig = meta.getAs[Boolean]("md5_sig")
-    val contents = spark.table(s"${name}_vectors")
-    val sampleOrd =
-      if (md5Sig) Dedup.md5Hash60(col("vec_id").cast("long").cast("string"))
-      else xxhash64(col("vec_id").cast("long"))
-    val iters = if (md5Sig) 0 else refineIters
-    val cellCents = trainL2CellCents(contents, "vec_id", "vec", nlist,
-      iters, refineSampleMod, sampleOrd)
-    import spark.implicits._
-    graft.sources.Bucketing.writeTable(
-      cellCents.map { case (cid, v) => (cid, v.toSeq) }
-        .toDF("cell_id", "cvec"), s"${name}_cents_stage")
-    graft.sources.Bucketing.createMarker(spark, rebalanceMarker(name))
-    completeRebalance(spark, name)
+    retrainAnn(spark, name, "rebalanceAnnIndex", refineIters,
+      refineSampleMod, withBook = false)
+
+  /** Stages a geometry retrained from the index's own `_vectors` —
+    * centroids, and the book when `withBook` — and promotes it
+    * ([[IndexFamily.promote]]). */
+  private def retrainAnn(spark: org.apache.spark.sql.SparkSession,
+      name: String, verb: String, refineIters: Int, refineSampleMod: Long,
+      withBook: Boolean): Unit =
+    IndexFamily.promote(spark, IndexFamily.ann, name, verb) {
+      val meta = spark.table(s"${name}_meta").head()
+      val (cellCents, book) = trainAnn(spark.table(s"${name}_vectors"),
+        "vec_id", "vec", meta.getAs[Int]("nlist"), meta.getAs[Int]("m"),
+        meta.getAs[Int]("ksub"), meta.getAs[Boolean]("md5_sig"),
+        refineIters, refineSampleMod, withBook)
+      graft.Par.run(geometryWrites(spark, cellCents, book,
+        IndexFamily.stageName(name, _)): _*)
     }
 
-  /** Roll-forward tail shared by [[rebalanceAnnIndex]],
-    * [[rebuildAnnIndex]] and their crash recovery — precondition:
-    * staged centroids exist and the marker is set (the staged state
-    * is the declared truth). A staged BOOK beside them means a
-    * rebuild: codes re-encode against it and it promotes too;
-    * without one (a rebalance) codes carry over bit-unchanged. */
-  private def completeRebalance(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    val stage = s"${name}_cents_stage"
-    val bookStage = s"${name}_book_stage"
-    // three independent bounded pulls (meta head, staged centroids,
-    // staged-book probe+collect) — overlapped (guide §2.6)
+  /** The ann promotion's rewrite ([[IndexFamily.ann]]): every stored
+    * vector reassigned against the staged centroids. A staged BOOK
+    * beside them means a rebuild: codes re-encode against it (and it
+    * promotes too); without one (a rebalance) codes carry over
+    * bit-unchanged. The three bounded pulls (meta head, staged
+    * centroids, staged book) overlap (guide §2.6). */
+  private[operators] def reassignVectors(
+      spark: org.apache.spark.sql.SparkSession, name: String,
+      numBuckets: Int): Unit = {
+    val bookStage = IndexFamily.stageName(name, "_book")
     var metaRow: org.apache.spark.sql.Row = null
     var cellCents: IndexedSeq[(Long, IndexedSeq[Float])] = null
     var stagedBookCents: Option[IndexedSeq[IndexedSeq[Float]]] = None
     graft.Par.run(
       () => metaRow = spark.table(s"${name}_meta").head(),
-      () => cellCents = spark.table(stage).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toIndexedSeq))
-        .sortBy(_._1).toIndexedSeq,
-      () => stagedBookCents =
-        if (!graft.sources.Bucketing.registerExisting(spark, bookStage,
-          None)) None
-        else Some(spark.table(bookStage).collect()
-          .sortBy(_.getInt(0)).map(_.getSeq[Float](1).toIndexedSeq)
-          .toIndexedSeq))
-    val numBuckets = metaRow.getAs[Int]("num_buckets")
+      () => cellCents = centsOf(spark, IndexFamily.stageName(name, "_cents")),
+      () => stagedBookCents = Option.when(
+        spark.catalog.tableExists(bookStage))(bookOf(spark, bookStage)))
     val m = metaRow.getAs[Int]("m")
     val stagedBook: Option[PqBook] =
       stagedBookCents.map(bc => PqBook(bc, m, bc.head.size / m))
-    // the vectors rewrite and the cents/book promotions are
-    // independent writes off the SAME staged truth — overlapped
-    // (guide §2.6). Crash-safe in any interleaving: the marker and
-    // the stage tables survive until AFTER all three land, and
-    // post-marker recovery rolls the whole tail forward idempotently
-    // (every output is a pure function of the staged tables); the
-    // pre-change order already exposed the same mixed-table window
-    // to lease-free readers (new vectors before promoted cents).
-    graft.Par.run(
-      () => graft.sources.Bucketing.compactBucketed(df => df.select(
-        col("vec_id"),
-        array_min(array(l2CellStructs(cellCents, col("vec")): _*))
-          .getField("cell_id").as("cell_id"),
-        stagedBook.map(b => b.codesOf(col("vec")).as("codes"))
-          .getOrElse(col("codes")),
-        col("vec")))(
-        spark, s"${name}_vectors", "cell_id", numBuckets),
-      () => graft.sources.Bucketing.writeTable(spark.table(stage),
-        s"${name}_cents"),
-      () => stagedBook.foreach(_ => graft.sources.Bucketing.writeTable(
-        spark.table(bookStage), s"${name}_book")))
-    graft.sources.Bucketing.deleteMarker(spark, rebalanceMarker(name))
-    graft.sources.Bucketing.dropTableAndDir(spark, stage)
-    graft.sources.Bucketing.dropTableAndDir(spark, bookStage)
+    graft.sources.Bucketing.compactBucketed(df => df.select(
+      col("vec_id"), nearestCell(cellCents, col("vec")).as("cell_id"),
+      stagedBook.map(b => b.codesOf(col("vec")).as("codes"))
+        .getOrElse(col("codes")),
+      col("vec")))(
+      spark, s"${name}_vectors", "cell_id", numBuckets)
   }
 
   /** Full REBUILD from the index's current contents — the verb
@@ -1690,110 +1591,34 @@ object Similarity {
     * to the direct full-corpus computation (the d58 twin SQL,
     * verbatim).
     *
-    * Crash safety: the [[rebalanceAnnIndex]] stage→marker→rewrite→
-    * promote→clear discipline with the BOOK staged beside the
-    * centroids; post-marker recovery rolls forward (codes and cells
-    * are both pure functions of (stored vec, staged tables), so the
-    * rewrite is idempotent). [[openAnnIndex]] finishes either verb's
-    * interruption — the marker records which tables were staged. */
+    * Crash safety: [[rebalanceAnnIndex]]'s promotion with the BOOK
+    * staged beside the centroids; post-marker recovery rolls forward
+    * (codes and cells are both pure functions of (stored vec, staged
+    * tables), so the rewrite is idempotent). [[IndexFamily.open]]
+    * finishes either verb's interruption — the stages present record
+    * which tables were staged. */
   def rebuildAnnIndex(spark: org.apache.spark.sql.SparkSession,
       name: String,
       refineIters: Int = 2,
       refineSampleMod: Long = 4): Unit =
-    graft.sources.Bucketing.withIndexLease(spark, name,
-      "rebuildAnnIndex") {
-    finishInterruptedRebalance(spark, name)
-    val meta = spark.table(s"${name}_meta").head()
-    val nlist = meta.getAs[Int]("nlist")
-    val m = meta.getAs[Int]("m")
-    val ksub = meta.getAs[Int]("ksub")
-    val md5Sig = meta.getAs[Boolean]("md5_sig")
-    val contents = spark.table(s"${name}_vectors")
-    val sampleOrd =
-      if (md5Sig) Dedup.md5Hash60(col("vec_id").cast("long").cast("string"))
-      else xxhash64(col("vec_id").cast("long"))
-    val iters = if (md5Sig) 0 else refineIters
-    // independent trainings, then independent stage writes —
-    // overlapped (graft.Par, guide §2.6), the buildAnnIndex shape
-    var cellCents: IndexedSeq[(Long, IndexedSeq[Float])] = null
-    var book: PqBook = null
-    graft.Par.run(
-      () => cellCents = trainL2CellCents(contents, "vec_id", "vec",
-        nlist, iters, refineSampleMod, sampleOrd),
-      () => book = trainPqBook(contents, "vec_id", "vec", m, ksub,
-        iters, refineSampleMod, sampleOrd))
-    import spark.implicits._
-    graft.Par.run(
-      () => graft.sources.Bucketing.writeTable(
-        cellCents.map { case (cid, v) => (cid, v.toSeq) }
-          .toDF("cell_id", "cvec"), s"${name}_cents_stage"),
-      () => graft.sources.Bucketing.writeTable(
-        book.cents.zipWithIndex.map { case (v, c) => (c, v.toSeq) }
-          .toDF("code", "cvec"), s"${name}_book_stage"))
-    graft.sources.Bucketing.createMarker(spark, rebalanceMarker(name))
-    completeRebalance(spark, name)
-    }
+    retrainAnn(spark, name, "rebuildAnnIndex", refineIters,
+      refineSampleMod, withBook = true)
 
-  private def finishInterruptedRebalance(
-      spark: org.apache.spark.sql.SparkSession, name: String): Unit = {
-    val stage = s"${name}_cents_stage"
-    if (!graft.sources.Bucketing.markerExists(spark, rebalanceMarker(name))) {
-      // pre-marker crash: the staged tables never became the truth —
-      // the live index is untouched; drop the leftovers
-      graft.sources.Bucketing.dropTableAndDir(spark, stage)
-      graft.sources.Bucketing.dropTableAndDir(spark, s"${name}_book_stage")
-      return
-    }
-    graft.sources.Bucketing.registerExisting(spark, stage, None)
-    completeRebalance(spark, name)
-  }
-
-  /** Retirement for the ANN index — [[graft.operators.Dedup
-    * .retireFromDedupIndex]]'s takedown verb for vectors: removes
-    * the ids' (cell_id, codes, vec) rows in one compact-with-filter
-    * generation swap (the filtered copy is complete before the catalog
-    * re-points; a pinned reader keeps the old files); centroids and codebooks are statistics over the
-    * historical corpus and deliberately stay — a takedown removes
-    * the DOCUMENT, not the trained quantizer (re-training on
-    * retirement would re-encode the entire index for every
-    * takedown, the exact cost the index exists to avoid). */
+  /** Retirement for the ANN index ([[IndexFamily.retire]]): removes
+    * the ids' (cell_id, codes, vec) rows; centroids and codebooks
+    * are statistics over the historical corpus and deliberately
+    * stay — a takedown removes the DOCUMENT, not the trained
+    * quantizer (re-training on retirement would re-encode the entire
+    * index for every takedown, the exact cost the index exists to
+    * avoid). */
   def retireFromAnnIndex(ids: DataFrame, idCol: String,
-      name: String): Unit = {
-    val spark = ids.sparkSession
-    graft.sources.Bucketing.withIndexLease(spark, name,
-      "retireFromAnnIndex") {
-      val numBuckets = spark.table(s"${name}_meta").head()
-        .getAs[Int]("num_buckets")
-      val rids = ids.filter(col(idCol).isNotNull)
-        .select(col(idCol).cast("long").as("__rid")).distinct()
-      graft.sources.Bucketing.compactBucketed(
-        _.join(broadcast(rids), col("vec_id") === col("__rid"),
-          "left_anti"))(spark, s"${name}_vectors", "cell_id", numBuckets)
-    }
-  }
+      name: String): Unit =
+    IndexFamily.retire(IndexFamily.ann, ids, col(idCol).cast("long"), name)
 
-  /** Re-registers a persisted ANN index's tables from their
-    * warehouse directories in a fresh session (the index outlives
-    * the in-memory catalog — [[graft.operators.Dedup
-    * .openDedupIndex]]'s contract). */
+  /** [[IndexFamily.open]] for a persisted ANN index. */
   def openAnnIndex(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    import graft.sources.Bucketing
-    require(Bucketing.registerExisting(spark, s"${name}_meta", None),
-      s"no persisted ANN index named '$name' in the warehouse")
-    val numBuckets = spark.table(s"${name}_meta").head()
-      .getAs[Int]("num_buckets")
-    require(Bucketing.registerExisting(spark, s"${name}_vectors",
-      Some(("cell_id", numBuckets))),
-      s"ANN index '$name' is missing its _vectors table")
-    Seq(s"${name}_cents", s"${name}_book").foreach { t =>
-      require(Bucketing.registerExisting(spark, t, None),
-        s"ANN index '$name' is missing its $t table")
-    }
-    // an interrupted REBALANCE rolls forward (marker set) or
-    // clears its never-promoted stage (no marker)
-    finishInterruptedRebalance(spark, name)
-  }
+      name: String): Unit =
+    IndexFamily.open(spark, IndexFamily.ann, name)
 
   /** RECALL sweep for a [[buildAnnIndex]] index — the ops card
     * behind choosing `nprobe` (and the number that tells you when a
@@ -1991,14 +1816,23 @@ object Similarity {
     var bc: IndexedSeq[IndexedSeq[Float]] = null
     graft.Par.run(
       () => meta = spark.table(s"${name}_meta").head(),
-      () => cc = spark.table(s"${name}_cents").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toIndexedSeq))
-        .sortBy(_._1).toIndexedSeq,
-      () => bc = spark.table(s"${name}_book").collect()
-        .sortBy(_.getInt(0)).map(_.getSeq[Float](1).toIndexedSeq)
-        .toIndexedSeq)
+      () => cc = centsOf(spark, s"${name}_cents"),
+      () => bc = bookOf(spark, s"${name}_book"))
     AnnGeom(meta, cc, bc)
   }
+
+  /** A `_cents` table's centroids, by cell id (a bounded pull). */
+  private def centsOf(spark: org.apache.spark.sql.SparkSession,
+      table: String): IndexedSeq[(Long, IndexedSeq[Float])] =
+    spark.table(table).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toIndexedSeq))
+      .sortBy(_._1).toIndexedSeq
+
+  /** A `_book` table's codebook, by code (a bounded pull). */
+  private def bookOf(spark: org.apache.spark.sql.SparkSession,
+      table: String): IndexedSeq[IndexedSeq[Float]] =
+    spark.table(table).collect().sortBy(_.getInt(0))
+      .map(_.getSeq[Float](1).toIndexedSeq).toIndexedSeq
 
   /** Probe assignment for one query batch: (query_id, lut, __rank,
     * cell_id) with __rank the 1-based probe order (nearest cell

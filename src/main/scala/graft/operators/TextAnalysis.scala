@@ -903,7 +903,7 @@ object TextAnalysis {
   }
 
   /** Re-registers a persisted NB model's tables in a fresh session
-    * (the openDedupIndex contract). */
+    * ([[graft.operators.IndexFamily.open]]'s contract). */
   def openNbModel(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
     Seq(s"${name}_weights", s"${name}_meta").foreach { t =>

@@ -32,7 +32,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   // session-global conf toggle: serialized under the per-session
-  // monitor (the withForcedBucketedScan discipline) — with graft.Par
+  // conf monitor — with graft.Par
   // making intra-driver concurrency routine, two overlapping loads
   // could interleave save/restore and leave the flag wrong for the
   // whole session

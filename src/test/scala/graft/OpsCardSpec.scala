@@ -142,6 +142,24 @@ class OpsCardSpec extends AnyFunSuite {
     assert(cardRow(e, "dedup").getAs[String]("pending_verb") == "idle")
   }
 
+  test("pending_verb sees a legacy swap marker on bm25's _postings_bydoc") {
+    Retrieval.buildBm25Index(docs, "doc_id", "text", "card_bydoc",
+      numBuckets = 2)
+    val e = Seq(OpsCard.Entry("bm25", "card_bydoc", docs, "doc_id"))
+    assert(cardRow(e, "bm25").getAs[String]("pending_verb") == "idle")
+    // an earlier release's staged compaction swap died on the
+    // doc-keyed projection: the index must not read idle, or a tick
+    // would act on it
+    val p = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"),
+      "card_bydoc_postings_bydoc__swap_pending")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(p, true).close()
+    try assert(cardRow(e, "bm25").getAs[String]("pending_verb")
+      == "compact_swap_pending")
+    finally fs.delete(p, false)
+  }
+
   test("maintenance loop: planted drift + store orphan healed end-to-end, one verb per tick") {
     import graft.sources.SnapshotEventStore
     // planted state 1: a BM25 index missing half the landed corpus

@@ -294,6 +294,25 @@ class PipelineOpsSpec extends AnyFunSuite {
       s"prefilter not below the exchange:\n${plan.take(3000)}")
   }
 
+  test("PQ encode and ADC tables compile under whole-stage codegen: pqTopK, buildAnnIndex, annTopKAgainstIndex") {
+    // a failed compile must surface instead of silently falling back
+    // to the interpreted path (set for this test only)
+    val key = "spark.sql.codegen.fallback"
+    spark.conf.set(key, "false")
+    try {
+      val emb = spark.read
+        .parquet(s"${TestSpark.sf}/embeddings.parquet")
+      val queries = emb.filter(col("vec_id") < 20)
+      assert(Similarity.pqTopK(queries, emb, "vec_id", "embedding",
+        k = 10, m = 16, ksub = 32).count() > 0)
+      Similarity.buildAnnIndex(emb, "vec_id", "embedding", "t_pq_codegen",
+        nlist = 4, m = 16, ksub = 32, numBuckets = 2)
+      assert(spark.table("t_pq_codegen_vectors").count() == emb.count())
+      assert(Similarity.annTopKAgainstIndex(queries, "vec_id", "embedding",
+        name = "t_pq_codegen", k = 5, nprobe = 2).count() > 0)
+    } finally spark.conf.unset(key)
+  }
+
   test("pqTopK: exact on a corpus of codebook vectors; deterministic; sane recall vs brute force") {
     import spark.implicits._
     import graft.operators.Similarity

@@ -142,25 +142,52 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("d149 mining: PRF term mining bucket-prunes the doc-keyed projection; full postings absent") {
     import spark.implicits._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.{BucketingUtils, FileScanRDD}
+    import org.apache.spark.sql.functions.{hash, lit, pmod}
     import graft.operators.Retrieval
     val corpus = (1 to 40).map(i =>
       (i.toLong, s"document $i about spark catalyst planning topic$i"))
       .toDF("doc_id", "text")
     Retrieval.buildBm25Index(corpus, "doc_id", "text", "ps_prf",
       numBuckets = 8)
-    val p = Retrieval.withForcedBucketedScan(spark) {
-      val mining = Retrieval.minePrfCandidatesFromIndex(spark, "ps_prf",
-        Seq(3L, 7L, 11L), Seq("spark"), numBuckets = 8)
-      assert(mining.collect().nonEmpty)
-      mining.queryExecution.executedPlan.toString
+    val fbIds = Seq(3L, 7L, 11L)
+    val mining = Retrieval.minePrfCandidatesFromIndex(spark, "ps_prf",
+      fbIds, Seq("spark"), numBuckets = 8)
+    assert(mining.collect().nonEmpty)
+    val plan = mining.queryExecution.executedPlan
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case o => o.children.flatMap(scans)
     }
-    // the feedback ids are an IN filter on the bydoc table's bucket
-    // column: the scan selects at most fbDocs buckets
-    assert(p.contains("SelectedBucketsCount") && !p.contains("8 out of 8"),
-      s"mining scan did not bucket-prune:\n${p.take(2000)}")
+    // the files the scan actually reads: the feedback ids are an IN
+    // filter on the bydoc table's bucket column, so the read keeps
+    // only the files of the buckets those ids hash to — also where
+    // the planner turns the scan's bucketed output off
+    val read = scans(plan).flatMap(_.inputRDDs()).flatMap {
+      case f: FileScanRDD =>
+        f.filePartitions.flatMap(_.files.map(_.filePath.toString))
+      case other => fail(s"unexpected scan RDD ${other.getClass}")
+    }.distinct.map(_.split('/').last)
+    val buckets = fbIds.map(id => spark.range(1)
+      .select(pmod(hash(lit(id)), lit(8))).head().getInt(0)).toSet
+    val dir = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("ps_prf_postings_bydoc"))
+      .location)
+    val all = dir.listFiles.map(_.getName).filter(_.startsWith("part-"))
+    val inBuckets = all.filter(f =>
+      BucketingUtils.getBucketId(f).exists(buckets.contains))
+    assert(read.nonEmpty && read.forall(inBuckets.contains) &&
+      read.size < all.length,
+      s"mining scan did not bucket-prune: read ${read.size} of " +
+        s"${all.length} files, ${inBuckets.length} in buckets $buckets")
     // the TERM-bucketed postings table appears nowhere — the r19
     // full-scan mining floor is gone (every ps_prf_postings mention
     // must be the _bydoc projection)
+    val p = plan.toString
     assert(!"ps_prf_postings(?!_bydoc)".r.findFirstIn(p).isDefined,
       s"mining plan still scans the full postings table:\n${p.take(2000)}")
   }
