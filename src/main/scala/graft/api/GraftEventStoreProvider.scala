@@ -80,13 +80,15 @@ final class GraftEventStoreProvider(
       availableNow = true)
 
   /** Attach the source with ID-KEYED redelivery safety: each
-    * micro-batch is anti-joined against the live snapshot before the
-    * exactly-once append ([[StreamingIngest.toSnapshotUpsertSink]]),
-    * so an id lands once and keeps its first payload. The batch
-    * watermark alone covers only Spark's own replays, not a source
-    * retrying an id in a later batch or a pipeline restarted after
-    * checkpoint loss, which are exactly the cases this mode exists
-    * for. */
+    * micro-batch is anti-joined by id against the live snapshot inside
+    * the exactly-once append, under the store's writer lease
+    * ([[StreamingIngest.toSnapshotUpsertSink]]), so an id lands once
+    * in the store, whichever stream delivers it, and keeps its first
+    * payload. The batch watermark alone covers only Spark's own
+    * replays, not a source retrying an id in a later batch or a
+    * pipeline restarted after checkpoint loss, which are exactly the
+    * cases this mode exists for. A second writer that finds the lease
+    * busy fails its batch at once. */
   def startIngestUpsert(jsonLines: Dataset[String], checkpoint: String): StreamingQuery =
     StreamingIngest.toSnapshotUpsertSink(
       StreamingIngest.fromJsonLines(jsonLines), eventsPath, checkpoint)

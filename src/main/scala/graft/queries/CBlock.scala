@@ -162,7 +162,7 @@ object CBlock {
 
     // C8: upsert-sink replay idempotence, physically. The two-day
     // slice is split at its midpoint and played through
-    // StreamingIngest.upsertSnapshotBatch (the foreachBatch body of
+    // SnapshotEventStore.upsertBatch (the per-batch verb of
     // toSnapshotUpsertSink) as b1@0, b2@1 — then b2 AGAIN under a new
     // batch id (a source retry after checkpoint loss: only the id
     // screen can stop it) and b1 AGAIN under a covered id (Spark's own
@@ -184,7 +184,7 @@ object CBlock {
         val b2 = slice.filter(col("time") >= mid)
         val store = s"$base/store"
         def play(b: DataFrame, batchId: Long): Unit =
-          graft.streaming.StreamingIngest.upsertSnapshotBatch(
+          graft.sources.SnapshotEventStore.upsertBatch(
             b, store, batchId, streamId = "c8")
         play(b1, 0L)
         play(b2, 1L)

@@ -75,9 +75,9 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType,
   * the physical directories legitimately hold replaced-but-not-yet-
   * retired files a raw directory read would double-count. A plain
   * dt/hour directory (one written before the store had manifests)
-  * is adopted by [[init]], which the first [[append]] or
-  * [[appendBatch]] runs on an un-sealed store; a streaming sink joins
-  * by appending through [[appendBatch]] in `foreachBatch`. A store
+  * is adopted by [[init]], which the first write verb runs on an
+  * un-sealed store; a streaming sink joins by appending through
+  * [[appendBatch]] or [[upsertBatch]] in `foreachBatch`. A store
   * whose manifests an earlier release wrote as deltas (`snapd_<N>`)
   * reads unchanged, and its first write verb rewrites them as full
   * manifests ([[adoptLegacyDeltas]]).
@@ -439,9 +439,10 @@ object SnapshotEventStore {
     * plain dt/hour directory written before the store had manifests
     * is ADOPTED: on an un-sealed store, interrupted directory swaps
     * are finished first ([[restoreAsides]]), then every data file in
-    * the partition directories becomes the first snapshot. [[append]]
-    * and [[appendBatch]] run it on an un-sealed store, and the
-    * provider runs it when it opens an un-sealed store holding data.
+    * the partition directories becomes the first snapshot. [[append]],
+    * [[appendBatch]] and [[upsertBatch]] run it on an un-sealed store,
+    * and the provider runs it when it opens an un-sealed store holding
+    * data.
     *
     * The seal PUBLISHES a `#schema=` header derived from the adopted
     * files' merged parquet footers: without it the first append's
@@ -705,7 +706,7 @@ object SnapshotEventStore {
     next.n
   }
 
-  /** The shared body of [[append]] and [[appendBatch]], under their
+  /** The shared body of [[append]] and [[landBatch]], under their
     * lease: land under an invisible temp root, move into the live
     * tree, publish the live files plus the new ones with `batches`
     * as the batch watermarks. A crash before publish leaves only
@@ -756,14 +757,59 @@ object SnapshotEventStore {
       maxRecordsPerFile: Int = 1000000,
       sortWithin: Seq[String] = Nil,
       keepSnapshots: Int = 1,
-      streamId: String = "default"): Long = {
+      streamId: String = "default"): Long =
+    landBatch(events, path, batchId, streamId, "snapAppendBatch",
+      maxRecordsPerFile, sortWithin, keepSnapshots)(_ => events)
+
+  /** ID-KEYED exactly-once streaming append: [[appendBatch]] that
+    * lands only the batch's ids the store does not hold yet. In-batch
+    * duplicates collapse to one row, and the rest is anti-joined by
+    * `idCol` against the live snapshot's files, so an id lands at most
+    * once in the whole store and keeps its FIRST payload (events are
+    * immutable facts: insert-if-absent is the event-store upsert). The
+    * `#batch=` watermark still covers Spark's own replays; the screen
+    * covers a source re-delivering an id in a later batch and a
+    * pipeline restarted after checkpoint loss (a new stream identity).
+    *
+    * The whole batch runs under the store's writer lease, against the
+    * one live snapshot that lease resolved: seal an un-sealed store
+    * first (so adopted rows are screened too), return `live.n` for a
+    * covered batch id before any Spark work, then land the screened
+    * rows (the anti-join evaluates inside the write job). So two
+    * writers on one store cannot both land an id, and no retire can
+    * delete the screened snapshot's files mid-screen. A writer that
+    * meets the lease busy fails at once with IllegalStateException,
+    * like every other write verb; it does not wait. Cost: one scan of
+    * the live snapshot's id column per fresh batch. */
+  def upsertBatch(events: DataFrame, path: String, batchId: Long,
+      streamId: String, idCol: String = "id",
+      sortWithin: Seq[String] = Nil,
+      keepSnapshots: Int = 1): Long =
+    landBatch(events, path, batchId, streamId, "snapUpsertBatch",
+      1000000, sortWithin, keepSnapshots) { live =>
+      val deduped = events.dropDuplicates(idCol)
+      if (live.files.isEmpty) deduped
+      else deduped.join(
+        scanFiles(events.sparkSession, path, live.files, live.schema)
+          .select(col(idCol).as("__landed_id")),
+        col(idCol) === col("__landed_id"), "left_anti")
+    }
+
+  /** The shared body of [[appendBatch]] and [[upsertBatch]] under one
+    * lease: resolve the live snapshot once (sealing an un-sealed
+    * store), skip a batch id the stream's watermark covers, else land
+    * `rows` of that snapshot under the advanced watermark. */
+  private def landBatch(events: DataFrame, path: String, batchId: Long,
+      streamId: String, verb: String, maxRecordsPerFile: Int,
+      sortWithin: Seq[String], keepSnapshots: Int)(
+      rows: Live => DataFrame): Long = {
     require(!streamId.contains("\n"),
       "streamId must not contain newlines (it lives in the manifest)")
     val spark = events.sparkSession
-    Bucketing.withIndexLease(spark, leaseKey(path), "snapAppendBatch") {
+    Bucketing.withIndexLease(spark, leaseKey(path), verb) {
       val live = sealedLive(spark, path)
       if (live.batches.get(streamId).exists(_ >= batchId)) live.n
-      else land(events, path, live, live.batches + (streamId -> batchId),
+      else land(rows(live), path, live, live.batches + (streamId -> batchId),
         maxRecordsPerFile, sortWithin, keepSnapshots)
     }
   }

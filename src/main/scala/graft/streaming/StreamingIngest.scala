@@ -95,23 +95,19 @@ object StreamingIngest {
     // standard recovery of a new checkpoint dir — which is a new
     // identity here, so batches land again.
     val sid = streamId.getOrElse(checkpoint)
-    val base = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.SnapshotEventStore.appendBatch(
-          batch, path, batchId, sortWithin = sortWithin,
-          keepSnapshots = keepSnapshots, streamId = sid)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
     // availableNow = the scheduled-ingest deployment mode: process
     // everything the source holds NOW (across as many micro-batches
     // as needed), then stop; each run resumes from the checkpoint and
     // occupies the cluster only while there is backlog. Exactly-once
     // either way — the manifest watermark does not care about the
     // trigger
-    (if (availableNow) base.trigger(Trigger.AvailableNow()) else base)
-      .start()
+    foreachBatchQuery(events, checkpoint,
+      if (availableNow) Trigger.AvailableNow() else DefaultTrigger) {
+      (batch, batchId) =>
+        graft.sources.SnapshotEventStore.appendBatch(
+          batch, path, batchId, sortWithin = sortWithin,
+          keepSnapshots = keepSnapshots, streamId = sid)
+    }
   }
 
   /** ID-KEYED redelivery safety for the snapshot store: safe under
@@ -121,86 +117,45 @@ object StreamingIngest {
     * delivering an already-landed event id in a LATER batch — the
     * Firehose retry shape — or a restarted pipeline after checkpoint
     * LOSS (new stream identity by design) would land duplicates. Here
-    * each micro-batch ([[upsertSnapshotBatch]]) is additionally
-    * anti-joined by id against the live snapshot before the
-    * exactly-once append, so both windows close: an id lands at most
-    * once for a SINGLE writing stream (the spec-pinned contract; with
-    * two concurrent streams writing the same ids to one store the
-    * screen resolves its snapshot outside the append lease, so a
-    * window exists where both anti-joins miss each other's in-flight
-    * ids — serialize writers per store for the strict claim). Events
-    * are immutable facts, so insert-if-absent IS the event-store
-    * upsert: a replayed id keeps its FIRST payload.
-    * Cost: the screen's snapshot side is pre-filtered to the BATCH'S
-    * OWN id range before the anti-join — ids outside
-    * [min(batch), max(batch)] cannot match any batch row, so the
-    * filter preserves the join result exactly while parquet row-group
-    * min/max stats prune the scan; with the id-ordered layout
-    * (`sortWithin = Seq("id")`) that makes the per-batch read
-    * O(files overlapping the batch's range), not O(store). The range
-    * probe itself is one batch-sized aggregate.
-    * Residual cost, disclosed: a batch whose ids straddle the whole
-    * id space still scans the full (columnar, id-only) column. */
+    * each micro-batch goes through
+    * [[graft.sources.SnapshotEventStore.upsertBatch]]: in-batch
+    * duplicates collapse and the rest is anti-joined by id against
+    * the live snapshot, under the store's writer lease and against
+    * the one snapshot that lease resolved, so both windows close: an
+    * id lands at most once in the whole store, also with several
+    * streams writing it (a writer that meets the lease busy fails the
+    * batch, and so its query, at once; a restart from the checkpoint
+    * re-runs that batch). Events are immutable facts, so
+    * insert-if-absent IS the event-store upsert: a replayed id keeps
+    * its FIRST payload. */
   def toSnapshotUpsertSink(events: DataFrame, path: String,
       checkpoint: String, idCol: String = "id",
       sortWithin: Seq[String] = Nil,
       keepSnapshots: Int = 1,
       streamId: Option[String] = None): StreamingQuery = {
     val sid = streamId.getOrElse(checkpoint)
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertSnapshotBatch(batch, path, batchId, sid, idCol,
-          sortWithin, keepSnapshots)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    foreachBatchQuery(events, checkpoint, DefaultTrigger) {
+      (batch, batchId) =>
+        graft.sources.SnapshotEventStore.upsertBatch(batch, path, batchId,
+          sid, idCol, sortWithin, keepSnapshots)
+    }
   }
 
-  /** One micro-batch of [[toSnapshotUpsertSink]]: drop in-batch id
-    * duplicates, screen out ids the live snapshot already holds, and
-    * land the rest through the exactly-once
-    * [[graft.sources.SnapshotEventStore.appendBatch]] under
-    * (`streamId`, `batchId`). Returns the published (or
-    * already-covering) snapshot. */
-  def upsertSnapshotBatch(batch: DataFrame, path: String, batchId: Long,
-      streamId: String, idCol: String = "id",
-      sortWithin: Seq[String] = Nil,
-      keepSnapshots: Int = 1): Long = {
-    val spark = batch.sparkSession
-    val deduped = batch.dropDuplicates(idCol)
-    // an un-sealed store SEALS FIRST (init adopts whatever the
-    // directory already holds), so the anti-join below sees adopted
-    // rows too: skipping it for batch 0 would let a crashed earlier
-    // pipeline's redelivered last batch land twice, exactly the
-    // duplicate this sink exists to prevent
-    if (graft.sources.SnapshotEventStore
-      .currentSnapshot(spark, path).isEmpty)
-      graft.sources.SnapshotEventStore.init(spark, path)
-    val existing = graft.sources.SnapshotEventStore
-      .read(spark, path)
-    // the batch's id range, one batch-sized aggregate: snapshot
-    // ids OUTSIDE it cannot match any batch row, so the range
-    // filter below preserves the anti-join result exactly while
-    // letting parquet min/max stats (id-sorted files under
-    // `sortWithin = Seq("id")`) skip everything else
-    val bounds =
-      if (existing.columns.isEmpty) null
-      else deduped.agg(min(col(idCol)), max(col(idCol))).head()
-    val fresh =
-      if (existing.columns.isEmpty) deduped // empty sealed store
-      else if (bounds.isNullAt(0)) deduped  // empty batch
-      else deduped.join(
-        existing
-          .filter(col(idCol)
-            .between(lit(bounds.get(0)), lit(bounds.get(1))))
-          .select(col(idCol).as("__landed_id")),
-        col(idCol) === col("__landed_id"), "left_anti")
-    graft.sources.SnapshotEventStore.appendBatch(
-      fresh, path, batchId, sortWithin = sortWithin,
-      keepSnapshots = keepSnapshots, streamId = streamId)
-  }
+  /** Spark's own default trigger: the next micro-batch as soon as the
+    * previous one ends. */
+  private val DefaultTrigger = Trigger.ProcessingTime(0L)
+
+  /** The snapshot sinks' shared scaffold: an append-mode
+    * `foreachBatch` query over `events` under `trigger`, checkpointed
+    * at `checkpoint`, running `perBatch` on each micro-batch. */
+  private def foreachBatchQuery(events: DataFrame, checkpoint: String,
+      trigger: Trigger)(perBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    events.writeStream
+      .outputMode("append")
+      .foreachBatch(perBatch)
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .start()
 
   /** The full streaming ingestion-dedup loop over a PERSISTENT index
     * ([[graft.operators.Dedup.buildDedupIndex]]): per micro-batch,

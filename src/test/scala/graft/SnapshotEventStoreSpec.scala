@@ -7,6 +7,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
@@ -210,6 +211,83 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
     SnapshotEventStore.appendBatch(events(2, 5, idOffset = 200L), dir,
       batchId = 0L, streamId = "pipeline-b")
     assert(SnapshotEventStore.read(spark, dir).count() == 30L)
+  }
+
+  test("upsertBatch screens under the writer lease: two writers never both land an id") {
+    val dir = freshDir()
+    SnapshotEventStore.append(events(1, 5), dir)
+    val x = events(1, 1, idOffset = 900L)
+    // writer A's id passes a gate that blocks the first time Spark
+    // evaluates it, so A stops mid-batch wherever its batch is first
+    // computed
+    val gated = udf((id: String) => { UpsertGate.pass(); id })
+      .asNondeterministic()
+    @volatile var outcomeA: scala.util.Try[Long] = null
+    val writerA = new Thread(() => outcomeA = scala.util.Try(
+      SnapshotEventStore.upsertBatch(x.withColumn("id", gated(col("id"))),
+        dir, 0L, "stream-a")))
+    writerA.start()
+    try {
+      assert(UpsertGate.entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "writer A never evaluated its batch")
+      // A is blocked inside its batch: B, delivering the same id from
+      // another stream, must meet A's lease instead of landing X
+      val busy = intercept[IllegalStateException](
+        SnapshotEventStore.upsertBatch(x, dir, 0L, "stream-b"))
+      assert(busy.getMessage.contains("snapUpsertBatch"), busy.getMessage)
+    } finally UpsertGate.release.countDown()
+    writerA.join(120000L)
+    assert(outcomeA != null && outcomeA.isSuccess, s"writer A failed: $outcomeA")
+    // B's retry screens against A's published snapshot
+    SnapshotEventStore.upsertBatch(x, dir, 0L, "stream-b")
+    val back = SnapshotEventStore.read(spark, dir)
+    assert(back.filter(col("id") === "900").count() == 1L,
+      "id 900 landed more than once")
+    assert(back.count() == 6L)
+  }
+
+  test("upsertBatch job count: a covered batch id runs no Spark job, a fresh batch runs 4") {
+    val sc = spark.sparkContext
+    val dir = freshDir()
+    // one file per hour, past the file count from which Spark lists a
+    // scan's files with a job
+    val threshold = spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    SnapshotEventStore.append(events(threshold + 8, 2).coalesce(1), dir)
+    val started = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add((e.properties.getProperty("spark.jobGroup.id"),
+          Option(e.properties.getProperty("spark.job.description"))
+            .getOrElse("")))
+    }
+    /** Descriptions of the jobs `body` ran under job group `group`. A
+      * marker job run after it is delivered to the listener after
+      * every event `body` posted. */
+    def jobsOf(group: String)(body: => Unit): Seq[String] = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!started.asScala.exists(_._1 == s"$group-marker") &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20L)
+      started.asScala.filter(_._1 == group).map(_._2).toSeq
+    }
+    sc.addSparkListener(listener)
+    try {
+      val fresh = jobsOf("graft-upsert-fresh")(SnapshotEventStore
+        .upsertBatch(events(1, 3, idOffset = 10000L), dir, 0L, "s"))
+      val replay = jobsOf("graft-upsert-replay")(SnapshotEventStore
+        .upsertBatch(events(1, 3, idOffset = 20000L), dir, 0L, "s"))
+      assert(replay.isEmpty, s"a covered batch id ran jobs: $replay")
+      // one listing of the live files the screen scans, then the
+      // screened write's own three; no aggregate before the lease and
+      // no second resolve
+      assert(fresh.size == 4, s"a fresh upsert batch ran: $fresh")
+    } finally sc.removeSparkListener(listener)
+    assert(SnapshotEventStore.read(spark, dir).count() ==
+      (threshold + 8) * 2L + 3L)
   }
 
   test("a fully-swept store still reads with its SCHEMA (typed empty frame)") {
@@ -661,4 +739,18 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
       Seq("id", "eventtype", "realmid", "userid", "time", "dt", "hour"),
       s"the empty snapshot took the live schema: ${back.columns.mkString(",")}")
   }
+}
+
+/** The gate writer A's batch passes in the two-writer upsert spec: the
+  * first evaluation signals `entered` and blocks until `release`. */
+object UpsertGate {
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
+  private val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+
+  def pass(): Unit =
+    if (first.getAndSet(false)) {
+      entered.countDown()
+      release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+    }
 }

@@ -89,16 +89,16 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("snapshot upsert sink: the id-range pre-filter preserves the screen exactly") {
+  test("snapshot upsert sink: ids outside and inside the batch range get exact verdicts") {
     import spark.implicits._
     val t0 = 1704067200000L
     val out = Files.createTempDirectory("graft_ups_range_").toString
     val ckpt = Files.createTempDirectory("graft_ups_range_ck_").toString
     // pre-seal a store whose ids sit far OUTSIDE (1, 10^6) and INSIDE
-    // (500) the coming batch's id range: the screen pre-filters its
-    // snapshot side to [min(batch), max(batch)] for file skipping,
-    // and the out-of-range ids must neither break the scan nor change
-    // any verdict
+    // (500) the coming batch's id range, in id-clustered files: the
+    // screen anti-joins the batch against every live id, and the
+    // out-of-range ids must neither break the scan nor change any
+    // verdict
     graft.sources.SnapshotEventStore.init(spark, out)
     graft.sources.SnapshotEventStore.append(
       Seq((1L, t0), (500L, t0 + 3600000L), (1000000L, t0))
@@ -117,8 +117,8 @@ class StreamingSpec extends AnyFunSuite {
         .select(org.apache.spark.sql.functions.col("id"))
         .as[Long].collect().sorted.toSeq
       assert(ids == Seq(1L, 400L, 500L, 600L, 1000000L),
-        s"range-screened upsert verdicts drifted: $ids")
-      // an EMPTY micro-batch must be a no-op, not a null-bounds crash
+        s"upsert verdicts drifted: $ids")
+      // an EMPTY micro-batch must be a no-op, not a crash
       src.addData()
       q.processAllAvailable()
       assert(graft.sources.SnapshotEventStore.read(spark, out)
@@ -167,7 +167,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(landed.select("id").distinct().count() == lines.size)
   }
 
-  test("upsertSnapshotBatch is insert-if-absent: a replayed id keeps its first payload") {
+  test("upsertBatch is insert-if-absent: a replayed id keeps its first payload") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val out = Files.createTempDirectory("graft_upsert_out_").toString
@@ -175,7 +175,7 @@ class StreamingSpec extends AnyFunSuite {
     def batch(rows: (String, String, Long)*) =
       rows.toDF("id", "error", "time")
     def play(b: org.apache.spark.sql.DataFrame, batchId: Long) =
-      StreamingIngest.upsertSnapshotBatch(b, out, batchId, "s")
+      SnapshotEventStore.upsertBatch(b, out, batchId, "s")
     play(batch(("e1", "v1", t0), ("e2", "v1", t0 + 1000)), 0L)
     // e2 redelivered with a new payload in a LATER batch, plus a new
     // id in another hour: the id screen lands only e3
