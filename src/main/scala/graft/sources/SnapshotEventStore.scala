@@ -3,13 +3,20 @@ package graft.sources
 import java.lang.ref.SoftReference
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  LogicalRelation}
+  LogicalRelation, NoopCache, PartitionPath, PartitionSpec,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, DateType, IntegerType,
-  StructField, StructType}
+  StringType, StructField, StructType}
 
 /** The dt/hour event store's one discipline: snapshot manifests.
   *
@@ -27,17 +34,19 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType,
   * Iceberg/Delta manifest discipline over the dt/hour layout
   * ([[EventStore]]):
   *
-  *  - a MANIFEST (`_graft_snapshots/snap_<N>`, one store-relative
-  *    file path per line) is the table: readers resolve max N from
-  *    one listing of `_graft_snapshots` and scan exactly those files,
-  *    never a directory listing;
+  *  - a MANIFEST (`_graft_snapshots/snap_<N>`, one line per live
+  *    file: its store-relative path, length and modification time) is
+  *    the table AND its file index: readers resolve max N from one
+  *    listing of `_graft_snapshots` and plan the scan from the
+  *    manifest's lines alone ([[scanFiles]]) — never a directory
+  *    listing, and never Spark's listing of the named files (the
+  *    Structured Streaming file-sink reader's discipline: resolve the
+  *    metadata log, do not list);
   *  - the resolved scan is MEMOIZED per session and store, keyed by
   *    the live manifest's identity (N, file name, length, modification
   *    time): a reader whose live manifest is unchanged reuses the
-  *    scan instead of re-reading the manifest and having Spark
-  *    re-list its files (the Structured Streaming file-sink reader's
-  *    discipline: resolve the metadata log, do not list). Any publish
-  *    or [[EventStore.clearAll]] invalidates the entry; memory is one
+  *    scan instead of re-reading the manifest. Any publish or
+  *    [[EventStore.clearAll]] invalidates the entry; memory is one
   *    file list per session and store ([[read]]);
   *  - every write verb resolves the live manifest ONCE under its
   *    lease (one listing, one read: [[Live]]), lands files INVISIBLY
@@ -68,8 +77,9 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType,
   * Writers serialize through the single-writer lease
   * ([[Bucketing.withIndexLease]], keyed by the store path); readers
   * take no lease and never block. Partition pruning survives: the
-  * scan is handed the file list WITH `basePath`, so dt/hour stay
-  * partition columns and time predicates prune as before.
+  * manifest's index types dt/hour from each file's path, so they
+  * stay partition columns and time predicates prune at planning
+  * time.
   *
   * Contract: the store must be READ through this face ([[read]]) —
   * the physical directories legitimately hold replaced-but-not-yet-
@@ -80,7 +90,10 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType,
   * [[appendBatch]] or [[upsertBatch]] in `foreachBatch`. A store
   * whose manifests an earlier release wrote as deltas (`snapd_<N>`)
   * reads unchanged, and its first write verb rewrites them as full
-  * manifests ([[adoptLegacyDeltas]]).
+  * manifests ([[adoptLegacyDeltas]]). A manifest line that carries
+  * only the path (every manifest an earlier release wrote) costs one
+  * `getFileStatus` per file when resolved, and the next publish
+  * writes its length and modification time ([[Entry]]).
   */
 object SnapshotEventStore {
 
@@ -145,9 +158,30 @@ object SnapshotEventStore {
     raw.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
-  /** Snapshot `n`'s manifest lines: headers + one store-relative file
-    * path per line. A full manifest is read verbatim. A legacy delta
-    * carries its own complete headers and resolves its file list
+  /** One live file as its manifest line records it:
+    * `<rel>\t<len>\t<mtime>`, the store-relative path and the length
+    * and modification time of the file there — the status a scan
+    * plans from, so planning never lists. A path-only line (every
+    * manifest an earlier release wrote) has neither, -1, until a
+    * resolve stats the file ([[statted]]); the next publish writes
+    * both. Retire, vacuum and stats compare `rel` only. */
+  private[graft] final case class Entry(rel: String, len: Long = -1L,
+      mtime: Long = -1L) {
+    def known: Boolean = len >= 0L
+    def line: String = if (known) s"$rel\t$len\t$mtime" else rel
+  }
+
+  private def entryOf(line: String): Entry = line.split('\t') match {
+    case Array(rel, len, mtime) => Entry(rel, len.toLong, mtime.toLong)
+    case _ => Entry(line)
+  }
+
+  private def entriesOf(lines: Seq[String]): Seq[Entry] =
+    lines.filterNot(_.startsWith("#")).map(entryOf)
+
+  /** Snapshot `n`'s manifest lines: headers + one file line per live
+    * file ([[Entry]]). A full manifest is read verbatim. A legacy
+    * delta carries its own complete headers and resolves its file list
     * against snapshot n−1. A snapshot that exists in neither form
     * throws FileNotFoundException — retired, callers translate. */
   private def manifestLines(spark: SparkSession, path: String,
@@ -159,12 +193,14 @@ object SnapshotEventStore {
         val adds = lines.filter(_.startsWith("+")).map(_.drop(1))
         val dels = lines.filter(_.startsWith("-")).map(_.drop(1)).toSet
         lines.filter(_.startsWith("#")) ++
-          (manifestFiles(spark, path, n - 1).filterNot(dels) ++ adds).sorted
+          (manifestLines(spark, path, n - 1).filterNot(_.startsWith("#"))
+            .filterNot(l => dels(entryOf(l).rel)) ++ adds).sorted
     }
 
+  /** Snapshot `n`'s store-relative file paths. */
   private[graft] def manifestFiles(spark: SparkSession, path: String,
       n: Long): Seq[String] =
-    manifestLines(spark, path, n).filterNot(_.startsWith("#"))
+    entriesOf(manifestLines(spark, path, n)).map(_.rel)
 
   /** Each of `nums`' file lists (retire/vacuum/stats). A snapshot
     * that does not resolve — retired under a lease-free caller's
@@ -242,23 +278,42 @@ object SnapshotEventStore {
   }
 
   /** The live snapshot as a write verb resolves it, once, under its
-    * lease: the snapshot numbers on disk, and the live one's files,
-    * batch watermarks and `#schema=` json. [[publish]] takes it and
-    * returns the next one. */
+    * lease: the snapshot numbers on disk, and the live one's files
+    * (with their statuses), batch watermarks and `#schema=` json.
+    * [[publish]] takes it and returns the next one. */
   private[graft] final case class Live(snapshots: Seq[Long],
-      files: Seq[String], batches: Map[String, Long],
+      entries: Seq[Entry], batches: Map[String, Long],
       schema: Option[String]) {
     /** The live snapshot number, 0 on an un-sealed store. */
     def n: Long = snapshots.lastOption.getOrElse(0L)
+    lazy val files: Seq[String] = entries.map(_.rel)
   }
 
   private[graft] def liveOf(spark: SparkSession, path: String): Live = {
     val nums = lockedNumbers(spark, path)
     val lines = nums.lastOption.map(manifestLines(spark, path, _))
       .getOrElse(Nil)
-    Live(nums, lines.filterNot(_.startsWith("#")), batchTags(lines),
+    Live(nums, statted(spark, path, entriesOf(lines)), batchTags(lines),
       schemaTag(lines))
   }
+
+  /** `entries` with each path-only line's length and modification
+    * time filled in, one `getFileStatus` per such file; a manifest a
+    * publish wrote has none, and costs no file-system call. */
+  private def statted(spark: SparkSession, path: String,
+      entries: Seq[Entry]): Seq[Entry] =
+    if (entries.forall(_.known)) entries
+    else {
+      val root = new Path(path)
+      val fs = fsOf(spark, root)
+      entries.map { e =>
+        if (e.known) e
+        else {
+          val s = fs.getFileStatus(new Path(root, e.rel))
+          Entry(e.rel, s.getLen, s.getModificationTime)
+        }
+      }
+    }
 
   /** The streaming-commit tags carried by snapshot `n` — one
     * `#batch=<streamId>:<id>` header line PER STREAM, published
@@ -369,8 +424,9 @@ object SnapshotEventStore {
 
   /** Publish `files` as the snapshot after `live`, with `batches` as
     * its watermarks and `schema` as its `#schema=` header: one full
-    * manifest, staged and renamed ([[writeManifest]]). Returns the new
-    * live snapshot. (private[graft] for the receipt spec.)
+    * manifest, staged and renamed ([[writeManifest]]), one line per
+    * file ([[Entry.line]]). Returns the new live snapshot.
+    * (private[graft] for the receipt spec.)
     *
     * SIZING, measured (SnapshotEventStoreSpec's receipt, local FS):
     * every publish rewrites the live-file list — ~ms at 10³ files,
@@ -378,26 +434,24 @@ object SnapshotEventStore {
     * memory per resolve (~MB at 10⁵ lines); size retention and
     * compaction so live files stay ≲10⁶. */
   private[graft] def publish(spark: SparkSession, path: String,
-      live: Live, files: Seq[String],
+      live: Live, files: Seq[Entry],
       batches: Map[String, Long] = Map.empty,
       schema: Option[String] = None): Live = {
     val next = live.n + 1L
     if (live.snapshots.isEmpty) fsOf(spark, snapDir(path)).mkdirs(snapDir(path))
-    val sorted = files.sorted
+    val sorted = files.sortBy(_.rel)
     writeManifest(spark, path, next,
       batches.toSeq.sortBy(_._1).map { case (sid, b) => s"#batch=$sid:$b" } ++
-        schema.map(j => s"#schema=$j") ++ sorted)
+        schema.map(j => s"#schema=$j") ++ sorted.map(_.line))
     Live(live.snapshots :+ next, sorted, batches, schema)
   }
 
   private def isDataFile(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
 
-  /** Store-relative data-file paths currently in the live partition
-    * directories (the directory-defined view: what [[init]] adopts
-    * and what [[vacuumOrphans]] checks against the manifests). */
-  private def listLive(spark: SparkSession, path: String): Seq[String] = {
-    val root = new Path(path)
+  /** The data files under `root`'s dt/hour tree, store-relative, with
+    * the statuses the listing returned. */
+  private def listTree(spark: SparkSession, root: Path): Seq[Entry] = {
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return Seq.empty
     for {
@@ -407,8 +461,16 @@ object SnapshotEventStore {
       if hour.isDirectory && hour.getPath.getName.startsWith("hour=")
       f <- fs.listStatus(hour.getPath).toSeq
       if f.isFile && isDataFile(f.getPath.getName)
-    } yield s"${dt.getPath.getName}/${hour.getPath.getName}/${f.getPath.getName}"
+    } yield Entry(
+      s"${dt.getPath.getName}/${hour.getPath.getName}/${f.getPath.getName}",
+      f.getLen, f.getModificationTime)
   }
+
+  /** The data files currently in the live partition directories (the
+    * directory-defined view: what [[init]] adopts and what
+    * [[vacuumOrphans]] checks against the manifests). */
+  private def listLive(spark: SparkSession, path: String): Seq[Entry] =
+    listTree(spark, new Path(path))
 
   /** Finish the partition swaps a crashed directory-swap sweep left
     * in an un-sealed directory, so adoption does not drop them: such a
@@ -468,30 +530,77 @@ object SnapshotEventStore {
       else Some(schemaHeader(
         spark.read.option("mergeSchema", "true")
           .option("basePath", path)
-          .parquet(files.map(f => s"$path/$f"): _*),
+          .parquet(files.map(f => s"$path/${f.rel}"): _*),
         live.schema))
     publish(spark, path, live, files, live.batches, schema)
   }
 
-  /** Scan exactly `rels` under the manifest's declared schema: the
+  /** A scan's file index built from manifest entries: each file's
+    * status is its [[Entry]], each partition's values are its
+    * `dt=`/`hour=` path segments cast to the types in `partitions`, so
+    * neither planning nor pruning makes a file-system call — Spark's
+    * own index would list the files the manifest already names, with
+    * a Spark job past `parallelPartitionDiscovery.threshold` files.
+    * Nothing is cached across scans ([[NoopCache]]), and there is
+    * nothing to refresh: a published manifest never changes. */
+  private final class ManifestFileIndex(spark: SparkSession, root: Path,
+      entries: Seq[Entry], partitions: StructType)
+      extends PartitioningAwareFileIndex(spark, Map.empty, None, NoopCache) {
+
+    override protected val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
+      mutable.LinkedHashMap.from(entries.map { e =>
+        val p = new Path(root, e.rel)
+        p -> new FileStatus(e.len, false, 0, 0L, e.mtime, p)
+      })
+
+    override protected val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+      leafFiles.values.toArray.groupBy(_.getPath.getParent)
+
+    private val spec = {
+      val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+      PartitionSpec(partitions,
+        leafDirToChildrenFiles.keys.toSeq.sortBy(_.toString).map { d =>
+          val values = Seq(d.getParent.getName, d.getName).map(_.split("=", 2)(1))
+          PartitionPath(InternalRow.fromSeq(partitions.fields.toSeq.zip(values)
+            .map { case (f, v) =>
+              val raw = if (v == "__HIVE_DEFAULT_PARTITION__") null else v
+              Cast(Literal.create(raw, StringType), f.dataType, tz).eval()
+            }), d)
+        })
+    }
+
+    override def partitionSpec(): PartitionSpec = spec
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def refresh(): Unit = ()
+  }
+
+  /** Scan exactly `files` under the manifest's declared schema: the
     * carried `#schema=` header, when present, is applied explicitly —
     * on an EVOLVED store (appends added a column, the A14 scenario)
     * parquet inference would otherwise resolve to whichever file it
-    * samples and the new column could silently vanish from a scan.
+    * samples and the new column could silently vanish from a scan —
+    * and the scan plans from the entries alone ([[ManifestFileIndex]]):
+    * no listing, and dt/hour typed by the header with no inference.
     * Headerless manifests (written by an [[init]] that predates the
-    * adoption header) fall back to `mergeSchema` reconciliation.
-    * `basePath` keeps dt/hour partition columns and planning-time
-    * pruning either way. */
+    * adoption header) fall back to a `mergeSchema` read, which lists.
+    * dt/hour stay partition columns and prune at planning time either
+    * way. `files` must carry their statuses ([[statted]]). */
   private def scanFiles(spark: SparkSession, path: String,
-      rels: Seq[String],
-      header: Option[String]): DataFrame = {
-    val reader = header.flatMap(parseSchema) match {
-      case Some(s) => spark.read.schema(s)
-      case None => spark.read.option("mergeSchema", "true")
+      files: Seq[Entry],
+      header: Option[String]): DataFrame =
+    header.flatMap(parseSchema).map(Bridge.asNullable) match {
+      case Some(s) =>
+        val partitions = StructType(Seq("dt" -> DateType, "hour" -> IntegerType)
+          .map { case (n, t) => s.find(_.name == n).getOrElse(StructField(n, t)) })
+        val root = fsOf(spark, new Path(path)).makeQualified(new Path(path))
+        spark.baseRelationToDataFrame(HadoopFsRelation(
+          new ManifestFileIndex(spark, root, files, partitions), partitions,
+          StructType(s.filterNot(f => partitions.fieldNames.contains(f.name))),
+          None, new ParquetFileFormat, Map("basePath" -> path))(spark))
+      case None =>
+        spark.read.option("mergeSchema", "true").option("basePath", path)
+          .parquet(files.map(f => s"$path/${f.rel}"): _*)
     }
-    reader.option("basePath", path)
-      .parquet(rels.map(f => s"$path/$f"): _*)
-  }
 
   /** One memoized scan: the manifest it was resolved from and the
     * relation Spark built over that manifest's files. The relation
@@ -522,12 +631,12 @@ object SnapshotEventStore {
 
   /** Snapshot `m`'s scan. A hit — this session last resolved exactly
     * `m` for this store — is a fresh plan over the memoized relation:
-    * no manifest read, no file listing, and new attribute ids, so two
-    * reads stay two relations in a join. A miss reads the manifest
-    * once (file list and `#schema=` header together), scans its files
-    * ([[scanFiles]]; Spark lists them), and makes that relation the
-    * store's entry. An empty snapshot is its own header's typed empty
-    * frame and clears the entry. */
+    * no manifest read, and new attribute ids, so two reads stay two
+    * relations in a join. A miss reads the manifest once (file lines
+    * and `#schema=` header together), scans its files from their lines
+    * ([[scanFiles]]: no listing), and makes that relation the store's
+    * entry. An empty snapshot is its own header's typed empty frame
+    * and clears the entry. */
   private def scanOf(spark: SparkSession, path: String,
       m: Manifest): DataFrame = {
     val byStore = resolvedIn(spark)
@@ -537,7 +646,7 @@ object SnapshotEventStore {
       case None =>
         val lines = manifestLines(spark, path, m.n)
         val header = schemaTag(lines)
-        val files = lines.filterNot(_.startsWith("#"))
+        val files = statted(spark, path, entriesOf(lines))
         if (files.isEmpty) {
           byStore.remove(path)
           typedEmpty(spark, header)
@@ -552,17 +661,17 @@ object SnapshotEventStore {
   }
 
   /** Snapshot-isolated read: resolve the live manifest, scan exactly
-    * its files under the carried schema ([[scanFiles]]). `basePath`
-    * keeps dt/hour as partition columns, so time predicates prune
-    * partitions exactly as on the raw store.
+    * its files under the carried schema ([[scanFiles]]). dt/hour stay
+    * partition columns, so time predicates prune partitions exactly
+    * as on the raw store.
     *
-    * MEMOIZED per (session, store, live manifest): a reader makes one
-    * `_graft_snapshots` listing, and when the live manifest's identity
-    * (number, file name, length, modification time) is the one this
-    * session resolved last, it reuses that scan — no manifest read
-    * and none of Spark's file listing, which on a store past
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files is
-    * a Spark job. Safe because a published manifest never changes and
+    * A reader makes one `_graft_snapshots` listing and, on a miss, one
+    * manifest read; the scan plans from the manifest's lines and runs
+    * no listing job at any store size. MEMOIZED per (session, store,
+    * live manifest): when the live manifest's identity (number, file
+    * name, length, modification time) is the one this session
+    * resolved last, it reuses that scan with no manifest read. Safe
+    * because a published manifest never changes and
     * the files it names are never overwritten, nor retired while it
     * is live. Every write verb publishes a new manifest, so the next
     * read misses and re-resolves; [[EventStore.clearAll]] drops the
@@ -645,31 +754,23 @@ object SnapshotEventStore {
       val resolved = readManifests(spark, path, nums)
       requireLiveResolved(resolved, nums, path, "vacuumOrphans")
       val referenced: Set[String] = resolved.values.flatten.toSet
-      val orphans = listLive(spark, path).filterNot(referenced)
+      val orphans = listLive(spark, path).map(_.rel).filterNot(referenced)
       orphans.foreach(r => fs.delete(new Path(root, r), false))
       orphans.size
     }
 
   /** Move every data file under `tmpRoot`'s dt/hour tree into the
     * live tree (names are Spark-generated UUIDs — collision-free),
-    * returning the store-relative paths that landed. */
+    * returning the files that landed with their listed statuses (a
+    * rename keeps a file's length). */
   private def moveIntoLive(spark: SparkSession, tmpRoot: Path,
-      root: Path): Seq[String] = {
+      root: Path): Seq[Entry] = {
     val fs = fsOf(spark, tmpRoot)
-    if (!fs.exists(tmpRoot)) return Seq.empty
-    val moved = for {
-      dt <- fs.listStatus(tmpRoot).toSeq
-      if dt.isDirectory && dt.getPath.getName.startsWith("dt=")
-      hour <- fs.listStatus(dt.getPath).toSeq
-      if hour.isDirectory && hour.getPath.getName.startsWith("hour=")
-      f <- fs.listStatus(hour.getPath).toSeq
-      if f.isFile && isDataFile(f.getPath.getName)
-    } yield {
-      val rel = s"${dt.getPath.getName}/${hour.getPath.getName}/${f.getPath.getName}"
-      val target = new Path(root, rel)
+    val moved = listTree(spark, tmpRoot)
+    moved.foreach { e =>
+      val target = new Path(root, e.rel)
       fs.mkdirs(target.getParent)
-      fs.rename(f.getPath, target)
-      rel
+      fs.rename(new Path(tmpRoot, e.rel), target)
     }
     fs.delete(tmpRoot, true)
     moved
@@ -698,7 +799,7 @@ object SnapshotEventStore {
     * it, reading only the manifests neither snapshot holds — the last
     * two steps of every write verb. Returns the published snapshot. */
   private def commit(spark: SparkSession, path: String, live: Live,
-      files: Seq[String], batches: Map[String, Long],
+      files: Seq[Entry], batches: Map[String, Long],
       schema: Option[String], keepSnapshots: Int): Long = {
     val next = publish(spark, path, live, files, batches, schema)
     retireBelow(spark, path, keepSnapshots, next.snapshots,
@@ -721,7 +822,7 @@ object SnapshotEventStore {
     if (fs.exists(tmp)) fs.delete(tmp, true)
     EventStore.write(events, tmp.toString, maxRecordsPerFile, sortWithin)
     val moved = moveIntoLive(spark, tmp, new Path(path))
-    commit(spark, path, live, live.files ++ moved, batches,
+    commit(spark, path, live, live.entries ++ moved, batches,
       Some(schemaHeader(events, live.schema)), keepSnapshots)
   }
 
@@ -779,8 +880,10 @@ object SnapshotEventStore {
     * writers on one store cannot both land an id, and no retire can
     * delete the screened snapshot's files mid-screen. A writer that
     * meets the lease busy fails at once with IllegalStateException,
-    * like every other write verb; it does not wait. Cost: one scan of
-    * the live snapshot's id column per fresh batch. */
+    * like every other write verb; it does not wait. Cost per fresh
+    * batch: one sort-merge anti-join against a scan of the live
+    * snapshot's id column, planned from the resolved manifest (no
+    * listing job) — two shuffle stages and the write, three jobs. */
   def upsertBatch(events: DataFrame, path: String, batchId: Long,
       streamId: String, idCol: String = "id",
       sortWithin: Seq[String] = Nil,
@@ -789,9 +892,13 @@ object SnapshotEventStore {
       1000000, sortWithin, keepSnapshots) { live =>
       val deduped = events.dropDuplicates(idCol)
       if (live.files.isEmpty) deduped
+      // a sort-merge join: its memory is task memory, released when
+      // the tasks end and spillable at any store size, where a
+      // broadcast keeps the store's ids in the driver's block manager
+      // until a GC lets the context cleaner drop them
       else deduped.join(
-        scanFiles(events.sparkSession, path, live.files, live.schema)
-          .select(col(idCol).as("__landed_id")),
+        scanFiles(events.sparkSession, path, live.entries, live.schema)
+          .select(col(idCol).as("__landed_id")).hint("merge"),
         col(idCol) === col("__landed_id"), "left_anti")
     }
 
@@ -835,13 +942,13 @@ object SnapshotEventStore {
     * min/max-stats file skipping on `sortWithin` columns survives
     * maintenance). */
   private def rewriteFiles(spark: SparkSession, path: String, live: Live,
-      all: Seq[String], replaced: Seq[String],
+      all: Seq[Entry], replaced: Seq[Entry],
       transform: DataFrame => DataFrame, keepSnapshots: Int,
       maxRecordsPerFile: Int, sortWithin: Seq[String]): Long = {
     val tmp = new Path(path, ".snap_rewrite_tmp")
     val fs = fsOf(spark, tmp)
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    val moved = if (replaced.isEmpty) Seq.empty[String] else {
+    val moved = if (replaced.isEmpty) Seq.empty[Entry] else {
       val clustered = transform(scanFiles(spark, path, replaced, live.schema))
         .repartition(col("dt"), col("hour"))
       val arranged =
@@ -870,8 +977,8 @@ object SnapshotEventStore {
       sortWithin: Seq[String] = Nil): Int =
     Bucketing.withIndexLease(spark, leaseKey(path), "snapCompact") {
       val live = requireSealed(spark, path)
-      val all = live.files
-      val oversized = all.groupBy(r => partitionOf(r))
+      val all = live.entries
+      val oversized = all.groupBy(e => partitionOf(e.rel))
         .filter(_._2.size > maxFilesPerPartition)
       if (oversized.isEmpty) 0
       else {
@@ -896,10 +1003,10 @@ object SnapshotEventStore {
       sortWithin: Seq[String] = Nil): Int =
     Bucketing.withIndexLease(spark, leaseKey(path), "snapRetention") {
       val live = requireSealed(spark, path)
-      val all = live.files
-      val dropped = all.filter(r => partitionStartMs(r) + 3600000L <= olderThanMs)
-      val boundary = all.filter { r =>
-        val s = partitionStartMs(r)
+      val all = live.entries
+      val dropped = all.filter(e => partitionStartMs(e.rel) + 3600000L <= olderThanMs)
+      val boundary = all.filter { e =>
+        val s = partitionStartMs(e.rel)
         s < olderThanMs && s + 3600000L > olderThanMs
       }
       if (dropped.isEmpty && boundary.isEmpty) 0
@@ -907,7 +1014,7 @@ object SnapshotEventStore {
         rewriteFiles(spark, path, live, all.diff(dropped), boundary,
           _.filter(col("time") >= olderThanMs), keepSnapshots,
           maxRecordsPerFile, sortWithin)
-        dropped.map(partitionOf).distinct.size
+        dropped.map(e => partitionOf(e.rel)).distinct.size
       }
     }
 
@@ -927,7 +1034,7 @@ object SnapshotEventStore {
       sortWithin: Seq[String] = Nil): Int =
     Bucketing.withIndexLease(spark, leaseKey(path), "snapRealmClear") {
       val live = requireSealed(spark, path)
-      val all = live.files
+      val all = live.entries
       val doomed = olderThanMs.foldLeft(col("realmid") === realmId) {
         (p, cut) => p && col("time") < cut
       }
@@ -941,7 +1048,7 @@ object SnapshotEventStore {
           .map(r => (r.getString(0), r.getInt(1))).toSet
       if (touched.isEmpty) 0
       else {
-        val replaced = all.filter(r => touched.contains(partitionOf(r)))
+        val replaced = all.filter(e => touched.contains(partitionOf(e.rel)))
         rewriteFiles(spark, path, live, all, replaced,
           _.filter(not(coalesce(doomed, lit(false)))), keepSnapshots,
           maxRecordsPerFile, sortWithin)
@@ -992,7 +1099,7 @@ object SnapshotEventStore {
     val liveFiles = live.flatMap(resolved.get)
       .map(_.toSet).getOrElse(Set.empty)
     val allRef = resolved.values.flatten.toSet
-    val onDisk = listLive(spark, path).toSet
+    val onDisk = listLive(spark, path).map(_.rel).toSet
     val nGrace = (onDisk & (allRef -- liveFiles)).size.toLong
     val nOrphan = (onDisk -- allRef).size.toLong
     val nFragmented = liveFiles.groupBy(partitionOf)

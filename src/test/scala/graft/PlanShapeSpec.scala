@@ -530,6 +530,45 @@ class PlanShapeSpec extends AnyFunSuite {
       s"keep-one join-back must hash-build:\n${p.take(3000)}")
   }
 
+  test("c21: the upsert screen is a sort-merge anti-join, never a broadcast") {
+    // a broadcast of the store's ids stays in the driver's block
+    // manager until a GC lets the context cleaner drop it; a sort-merge
+    // join's memory is task memory, freed when the tasks end and
+    // spillable at any store size
+    import spark.implicits._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.sources.SnapshotEventStore
+    val dir = java.nio.file.Files.createTempDirectory("psp_upsert_").toString
+    def batch(from: Int) = (from until from + 20)
+      .map(i => (i.toString, "LOGIN", "r", 1704067200000L + i * 60000L))
+      .toDF("id", "eventtype", "realmid", "time")
+    SnapshotEventStore.append(batch(0), dir)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SnapshotEventStore.upsertBatch(batch(10), dir, 0L, "psp")
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!plans.toArray.exists(_.toString.contains("LeftAnti")) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20L)
+    } finally spark.listenerManager.unregister(listener)
+    val p = plans.toArray.map(_.toString).find(_.contains("LeftAnti"))
+      .getOrElse(fail(s"no anti-join among the upsert's plans: $plans"))
+    assert(p.linesIterator.exists(l =>
+      l.contains("SortMergeJoin") && l.contains("LeftAnti")),
+      s"the upsert screen is not a sort-merge anti-join:\n${p.take(3000)}")
+    assert(count(p, "BroadcastExchange") == 0 &&
+      count(p, "BroadcastHashJoin") == 0,
+      s"the upsert screen broadcasts:\n${p.take(3000)}")
+    assert(SnapshotEventStore.read(spark, dir).count() == 30L)
+  }
+
   test("d63/d64: perceptual media pairing stays bucketed — no all-pairs join, no window") {
     // video/audio near-dedup candidates must come from the
     // chunk-bucket equi-join (64-bit sigs only), never an all-pairs

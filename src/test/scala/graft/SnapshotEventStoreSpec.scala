@@ -246,14 +246,11 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
     assert(back.count() == 6L)
   }
 
-  test("upsertBatch job count: a covered batch id runs no Spark job, a fresh batch runs 4") {
+  /** Descriptions of the jobs `body` ran under job group `group`. A
+    * marker job run after it is delivered to the listener after every
+    * event `body` posted. */
+  private def jobsOf(group: String)(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
-    val dir = freshDir()
-    // one file per hour, past the file count from which Spark lists a
-    // scan's files with a job
-    val threshold = spark.conf
-      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
-    SnapshotEventStore.append(events(threshold + 8, 2).coalesce(1), dir)
     val started = new ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -261,10 +258,8 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
           Option(e.properties.getProperty("spark.job.description"))
             .getOrElse("")))
     }
-    /** Descriptions of the jobs `body` ran under job group `group`. A
-      * marker job run after it is delivered to the listener after
-      * every event `body` posted. */
-    def jobsOf(group: String)(body: => Unit): Seq[String] = {
+    sc.addSparkListener(listener)
+    try {
       sc.setJobGroup(group, group)
       try body finally sc.clearJobGroup()
       sc.setJobGroup(s"$group-marker", "marker")
@@ -273,21 +268,117 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
       while (!started.asScala.exists(_._1 == s"$group-marker") &&
         System.currentTimeMillis() < deadline) Thread.sleep(20L)
       started.asScala.filter(_._1 == group).map(_._2).toSeq
-    }
-    sc.addSparkListener(listener)
-    try {
-      val fresh = jobsOf("graft-upsert-fresh")(SnapshotEventStore
-        .upsertBatch(events(1, 3, idOffset = 10000L), dir, 0L, "s"))
-      val replay = jobsOf("graft-upsert-replay")(SnapshotEventStore
-        .upsertBatch(events(1, 3, idOffset = 20000L), dir, 0L, "s"))
-      assert(replay.isEmpty, s"a covered batch id ran jobs: $replay")
-      // one listing of the live files the screen scans, then the
-      // screened write's own three; no aggregate before the lease and
-      // no second resolve
-      assert(fresh.size == 4, s"a fresh upsert batch ran: $fresh")
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Spark's parallel listing of a scan's files. */
+  private def listing(description: String): Boolean =
+    description.startsWith("Listing leaf files")
+
+  /** The file count from which Spark lists a scan's files with a job. */
+  private def listingThreshold: Int = spark.conf
+    .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+
+  test("upsertBatch job count: a covered batch id runs no Spark job, a fresh batch runs 3") {
+    val dir = freshDir()
+    // one file per hour, past the listing threshold
+    SnapshotEventStore.append(events(listingThreshold + 8, 2).coalesce(1), dir)
+    val fresh = jobsOf("graft-upsert-fresh")(SnapshotEventStore
+      .upsertBatch(events(1, 3, idOffset = 10000L), dir, 0L, "s"))
+    val replay = jobsOf("graft-upsert-replay")(SnapshotEventStore
+      .upsertBatch(events(1, 3, idOffset = 20000L), dir, 0L, "s"))
+    assert(replay.isEmpty, s"a covered batch id ran jobs: $replay")
+    // the screened write's own three: the batch's and the store's id
+    // shuffles and the write; the screen's scan plans from the
+    // manifest, so no listing, no aggregate and no second resolve
+    assert(fresh.size == 3 && !fresh.exists(listing),
+      s"a fresh upsert batch ran: $fresh")
     assert(SnapshotEventStore.read(spark, dir).count() ==
-      (threshold + 8) * 2L + 3L)
+      (listingThreshold + 8) * 2L + 3L)
+  }
+
+  test("compact and clearRealm scan from the manifest: no listing job past the threshold") {
+    val dir = freshDir()
+    val hours = listingThreshold + 8
+    // two files per hour: every partition is over a cap of one
+    SnapshotEventStore.append(events(hours, 2).coalesce(1), dir)
+    SnapshotEventStore.append(events(hours, 2, idOffset = 100000L)
+      .coalesce(1), dir)
+    var compacted = 0
+    val compactJobs = jobsOf("graft-compact") {
+      compacted = SnapshotEventStore.compact(spark, dir,
+        maxFilesPerPartition = 1)
+    }
+    assert(compacted == hours)
+    assert(compactJobs.nonEmpty && !compactJobs.exists(listing),
+      s"compact ran: $compactJobs")
+    var touched = 0
+    val clearJobs = jobsOf("graft-clear-realm") {
+      touched = SnapshotEventStore.clearRealm(spark, dir, "realm-0")
+    }
+    assert(touched == hours)
+    assert(clearJobs.nonEmpty && !clearJobs.exists(listing),
+      s"clearRealm ran: $clearJobs")
+    val back = SnapshotEventStore.read(spark, dir)
+    // i = 0 is the one realm-0 row per hour per append
+    assert(back.count() == hours * 2L)
+    assert(back.filter(col("realmid") === "realm-0").count() == 0L)
+  }
+
+  test("a path-only manifest reads the same rows with typed dt/hour, prunes, and the next write records statuses") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.types.{DateType, IntegerType}
+    val dir = freshDir()
+    SnapshotEventStore.append(events(6, 5).repartition(2), dir)
+    val want = SnapshotEventStore.read(spark, dir)
+    val wantRows = want.collect().map(_.toString).sorted.toSeq
+    val n = SnapshotEventStore.currentSnapshot(spark, dir).get
+    // rewrite the live manifest as an earlier release wrote it: the
+    // headers, then one store-relative path per line
+    val p = new Path(dir, s"_graft_snapshots/snap_$n")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(p)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().toSeq finally in.close()
+    assert(lines.filterNot(_.startsWith("#")).forall(_.split('\t').length == 3),
+      s"a publish writes length and modification time: $lines")
+    val out = fs.create(p, true)
+    try out.write(lines.map(_.split('\t')(0)).mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+
+    val back = SnapshotEventStore.read(spark, dir)
+    assert(back.schema == want.schema)
+    assert(back.schema("dt").dataType == DateType &&
+      back.schema("hour").dataType == IntegerType)
+    assert(back.collect().map(_.toString).sorted.toSeq == wantRows)
+    // a dt/hour predicate prunes to exactly that partition's files
+    val q = back.filter(col("dt") === "2024-01-01" && col("hour") === 2)
+    val scan = q.queryExecution.sparkPlan.collectFirst {
+      case s: FileSourceScanExec => s
+    }.get
+    val scanned = scan.relation.location
+      .listFiles(scan.partitionFilters, Nil).flatMap(_.files)
+      .map(_.getPath.getName).sorted
+    val inHour = SnapshotEventStore.manifestFiles(spark, dir, n)
+      .filter(_.startsWith("dt=2024-01-01/hour=2/")).map(_.split('/').last)
+    assert(inHour.nonEmpty && scanned == inHour.sorted,
+      s"pruned scan read $scanned, the hour holds $inHour")
+    assert(q.count() == 5L)
+
+    // the next write verb's manifest carries every file's real status
+    SnapshotEventStore.append(events(1, 5, idOffset = 1000L), dir)
+    val next = SnapshotEventStore.currentSnapshot(spark, dir).get
+    val in2 = fs.open(new Path(dir, s"_graft_snapshots/snap_$next"))
+    val written = try scala.io.Source.fromInputStream(in2, "UTF-8")
+      .getLines().filterNot(_.startsWith("#")).toSeq finally in2.close()
+    assert(written.size == SnapshotEventStore.manifestFiles(spark, dir, next).size)
+    written.foreach { l =>
+      val Array(rel, len, mtime) = l.split('\t')
+      val st = fs.getFileStatus(new Path(dir, rel))
+      assert(len.toLong == st.getLen && mtime.toLong == st.getModificationTime, l)
+    }
+    assert(SnapshotEventStore.read(spark, dir).count() == 35L)
   }
 
   test("a fully-swept store still reads with its SCHEMA (typed empty frame)") {
@@ -434,8 +525,9 @@ class SnapshotEventStoreSpec extends AnyFunSuite {
     val dir = freshDir()
     var live = SnapshotEventStore.liveOf(spark, dir)
     for (n <- Seq(1000, 10000, 100000)) {
-      val files = (0 until n).map(i =>
-        f"dt=2024-01-01/hour=${i % 24}/part-$i%06d.parquet")
+      val files = (0 until n).map(i => SnapshotEventStore.Entry(
+        f"dt=2024-01-01/hour=${i % 24}/part-$i%06d.parquet", 1024L,
+        Base + i))
       val t0 = System.nanoTime()
       live = SnapshotEventStore.publish(spark, dir, live, files)
       val t1 = System.nanoTime()
